@@ -7,9 +7,13 @@ dot products via zip_with + aggregate fold over double-cast elements,
 deterministic and engine-portable.
 
 Scale notes: brute force is O(Q·N) — fine when the query side is small
-and broadcast; for N×N near-dup search use the LSH variant (or IVF with
-k-means coarse quantizer — future work). At 100TB the embedding table is
-bucketed by LSH key on write so candidate joins are shuffle-free.
+and broadcast; for N×N near-dup search use the LSH variant. The ANN
+path is ONE integer-grid index stack: ``grid_ivf`` / ``grid_pq`` train,
+the collected-rows map folds (``grid_assign_map`` /
+``grid_pq_encode_map``) assign and encode, and ``ivf_topk`` /
+``pq_topk`` / ``ivf_pq_topk`` compose them into search. At 100TB the
+embedding table is bucketed by LSH key (or written by IVF cell) so
+candidate joins are shuffle-free.
 """
 
 from __future__ import annotations
@@ -45,6 +49,25 @@ def as_double_array(col: Column | str) -> Column:
     return F.transform(c, lambda x: x.cast("double"))
 
 
+def grid_quantize(vec: Column | str, grid: float = 1_000_000.0) -> Column:
+    """Floor-quantize a vector onto the integer grid: ``floor(x · grid)``
+    as longs — floor, never round (round on a full-mantissa double
+    disagrees across engines at half-way points). The one quantization
+    every integer-grid operator and its SQL oracle share."""
+    return F.transform(
+        as_double_array(vec), lambda x: F.floor(x * F.lit(grid)).cast("long")
+    )
+
+
+def _fresh_name(df: DataFrame, base: str) -> str:
+    """``base`` prefixed with underscores until absent from
+    ``df.columns`` — the broadcast arm's crossJoined helper column must
+    never collide with a caller column (the literal arm adds none)."""
+    while base in df.columns:
+        base = "_" + base
+    return base
+
+
 def _one_row_broadcast(spark, cols) -> DataFrame:
     """One-row frame carrying index arrays as DATA (createDataFrame),
     not as parsed plan literals — the above-budget arm of the
@@ -75,10 +98,11 @@ def _attach_centers(df: DataFrame, rows) -> tuple[DataFrame, Column]:
     both-arms-bit-equal in tests/test_wave48.py)."""
     if sum(1 + len(r["cv"]) for r in rows) <= _FOLD_LITERAL_MAX_ELEMS:
         return df, _centers_sql_array(rows)
+    name = _fresh_name(df, "__centers")
     one = _one_row_broadcast(
-        df.sparkSession, [("__centers", _CENTERS_DDL, _centers_payload(rows))]
+        df.sparkSession, [(name, _CENTERS_DDL, _centers_payload(rows))]
     )
-    return df.crossJoin(F.broadcast(one)), F.col("__centers")
+    return df.crossJoin(F.broadcast(one)), F.col(name)
 
 
 def _centers_frame(spark, rows) -> DataFrame:
@@ -114,10 +138,11 @@ def _attach_books(df: DataFrame, by_j: dict, m: int) -> tuple[DataFrame, Column]
     n = sum(1 + len(r["bv"]) for rows in by_j.values() for r in rows)
     if n <= _FOLD_LITERAL_MAX_ELEMS:
         return df, _books_sql_array(by_j, m)
+    name = _fresh_name(df, "__books")
     one = _one_row_broadcast(
-        df.sparkSession, [("__books", _BOOKS_DDL, _books_payload(by_j, m))]
+        df.sparkSession, [(name, _BOOKS_DDL, _books_payload(by_j, m))]
     )
-    return df.crossJoin(F.broadcast(one)), F.col("__books")
+    return df.crossJoin(F.broadcast(one)), F.col(name)
 
 
 def _books_frame(spark, by_j: dict, m: int) -> DataFrame:
@@ -231,6 +256,21 @@ def cosine_safe(a: Column, b: Column) -> Column:
     ).otherwise(dot(a, b) / (F.sqrt(na2) * F.sqrt(nb2)))
 
 
+def _topk(
+    scored: DataFrame, k: int, query_key: str, key: str, score: str
+) -> DataFrame:
+    """The ``k`` best rows per query by (score desc, key asc) — the one
+    deterministic ranking every top-k surface here shares."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy(query_key).orderBy(F.col(score).desc(), F.col(key))
+    return (
+        scored.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= k)
+        .drop("__rn")
+    )
+
+
 def brute_force_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -251,8 +291,6 @@ def brute_force_topk(
 
     Output: (q_id, vec_id, cos) — k rows per query.
     """
-    from pyspark.sql import Window
-
     q = queries.select(
         F.col(query_key).alias("__q"), as_double_array(vec).alias("__qv")
     )
@@ -266,175 +304,36 @@ def brute_force_topk(
     )
     if exclude_self:
         scored = scored.filter(F.col(query_key) != F.col(corpus_key))
-    w = Window.partitionBy(query_key).orderBy(F.col("cos").desc(), F.col(corpus_key))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
+    return _topk(scored, k, query_key, corpus_key, "cos")
+
+
+def _cell_sims(k: Column, centers_arr: Column) -> Column:
+    """array<struct<c, s>>: the exact integer-grid cosine (zero-norm
+    sentinel, :func:`cosine_safe`) of grid vector ``k`` against every
+    (cell, cv) center of ``centers_arr``, in the array's cell order."""
+    return F.transform(
+        centers_arr,
+        lambda ctr: F.struct(
+            ctr.getField("cell").alias("c"),
+            cosine_safe(
+                as_double_array(k), as_double_array(ctr.getField("cv"))
+            ).alias("s"),
+        ),
     )
 
 
-def _train_cells(c: DataFrame, n_cells: int, kmeans_iters: int) -> DataFrame:
-    """Coarse quantizer shared by the IVF family: Lloyd over (__c, __cv)
-    with deterministic lowest-key seeds; returns (cell, cv). Tiny
-    (n_cells rows) — consumers always broadcast it."""
-    from pyspark.sql import Window
-
-    centers = (
-        c.orderBy("__c").limit(n_cells)
-        .select(F.row_number().over(Window.orderBy("__c")).alias("cell"), F.col("__cv").alias("cv"))
-    )
-    for _ in range(kmeans_iters):
-        assigned = _assign_cells(c, centers)
-        # element-wise centroid mean via posexplode (dimension-agnostic)
-        centers = (
-            assigned.select("cell", F.posexplode("__cv").alias("pos", "v"))
-            .groupBy("cell", "pos")
-            .agg(F.avg("v").alias("v"))
-            .groupBy("cell")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "v"))).alias("pv"))
-            .select("cell", F.transform("pv", lambda s: s["v"]).alias("cv"))
-        )
-        centers = centers.localCheckpoint(eager=True)
-    return centers
-
-
-def _assign_cells(c: DataFrame, centers: DataFrame) -> DataFrame:
-    """Nearest-centroid assignment, tie-broken by cell id: (__c, __cv,
-    cell). One broadcast join — the corpus never shuffles to train."""
-    from pyspark.sql import Window
-
-    return (
-        c.crossJoin(F.broadcast(centers))
-        .select("__c", "__cv", "cell", cosine(F.col("__cv"), F.col("cv")).alias("sim"))
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("__c").orderBy(F.col("sim").desc(), F.col("cell"))
-            ),
-        )
-        .filter(F.col("rn") == 1)
-        .select("__c", "__cv", "cell")
-    )
-
-
-def ivf_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    kmeans_iters: int = 5,
-    query_key: str = "q_id",
-    corpus_key: str = "vec_id",
-    vec: str = "embedding",
-) -> DataFrame:
-    """IVF (inverted-file) approximate top-k — the ANN scale path.
-
-    Train: a coarse quantizer (k-means over the corpus, deterministic
-    lowest-key seeds) assigns every corpus vector to its nearest of
-    ``n_cells`` centroids — at 100TB the corpus is *written* partitioned
-    by cell, so the probe join below is a partition-pruned scan, not a
-    shuffle. Search: each query scores only the vectors in its ``n_probe``
-    nearest cells (≈ n_probe/n_cells of the corpus), exact cosine within.
-
-    Approximate by design (recall < 1 when true neighbors live outside
-    probed cells); deterministic given the seeds. Output like
-    brute_force_topk: (q_id, vec_id, cos).
-    """
-    from pyspark.sql import Window
-
-    c = corpus.select(F.col(corpus_key).alias("__c"), as_double_array(vec).alias("__cv"))
-    c = c.persist()
-
-    centers = _train_cells(c, n_cells, kmeans_iters)
-    # assign corpus to cells (the "write bucketed by cell" step)
-    cells = _assign_cells(c, centers)
-
-    # --- probe: each query searches its n_probe nearest cells ------------
-    q = queries.select(F.col(query_key).alias("__q"), as_double_array(vec).alias("__qv"))
-    probes = (
-        F.broadcast(q).crossJoin(F.broadcast(centers))
-        .select("__q", "__qv", "cell", cosine(F.col("__qv"), F.col("cv")).alias("sim"))
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("__q").orderBy(F.col("sim").desc(), F.col("cell"))
-            ),
-        )
-        .filter(F.col("rn") <= n_probe)
-        .select("__q", "__qv", "cell")
-    )
-    scored = probes.join(cells, on="cell").select(
-        F.col("__q").alias(query_key),
-        F.col("__c").alias(corpus_key),
-        cosine(F.col("__qv"), F.col("__cv")).alias("cos"),
-    )
-    w = Window.partitionBy(query_key).orderBy(F.col("cos").desc(), F.col(corpus_key))
-    out = (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
-    c.unpersist()
-    return out
-
-
-def _assign_grid(e: DataFrame, centers: DataFrame) -> DataFrame:
-    """Nearest-frozen-center assignment of a pre-quantized grid frame
-    ``e`` (__c, __k array<long>) against broadcast ``centers`` (cell,
-    cv array<long>): rank by the exact integer-grid cosine (zero-norm
-    sentinel), ties to the smallest cell id — the single arithmetic
-    every IVF surface (training rounds, final layout, incremental
-    delta maintenance) shares. Returns (__c, __k, cell)."""
-    from pyspark.sql import Window
-
-    return (
-        e.crossJoin(F.broadcast(centers))
-        .select(
-            "__c",
-            "__k",
-            "cell",
-            cosine_safe(as_double_array("__k"), as_double_array("cv")).alias(
-                "__sim"
-            ),
-        )
-        .withColumn(
-            "__rn",
-            F.row_number().over(
-                Window.partitionBy("__c").orderBy(
-                    F.col("__sim").desc(), "cell"
-                )
-            ),
-        )
-        .filter(F.col("__rn") == 1)
-        .select("__c", "__k", "cell")
-    )
-
-
-def grid_assign(
-    corpus: DataFrame,
-    centers: DataFrame,
-    grid: float = 1_000_000.0,
-    key: str = "vec_id",
-    vec: str = "embedding",
-) -> DataFrame:
-    """Assign vectors to FROZEN IVF centers — the index-maintenance
-    primitive: appending a delta batch to a 100 TB by-cell layout is
-    this map-only pass (centers broadcast, corpus never shuffles, each
-    row's cell decided locally), NOT a re-train. Same quantization and
-    ranking arithmetic as :func:`grid_ivf`'s training assignment (the
-    shared :func:`_assign_grid`), so incremental ≡ batch assignment by
-    construction (law-pinned in tests/test_wave41.py). Returns
-    (key, cell)."""
-    e = corpus.select(
-        F.col(key).alias("__c"),
-        F.transform(
-            as_double_array(vec),
-            lambda x: F.floor(x * F.lit(grid)).cast("long"),
-        ).alias("__k"),
-    )
-    return _assign_grid(e, centers).select(F.col("__c").alias(key), "cell")
+def _nearest_cell(k: Column, centers_arr: Column) -> Column:
+    """The nearest-cell fold: walk :func:`_cell_sims` in ascending cell
+    id keeping only STRICT improvements, so equal similarities keep the
+    smaller cell — the (sim desc, cell asc) ROW_NUMBER pick as one
+    expression (no join, no window, no shuffle). Returns the cell id."""
+    return F.aggregate(
+        _cell_sims(k, centers_arr),
+        F.struct(F.lit(-1).alias("c"), F.lit(-3.0).alias("s")),
+        lambda acc, x: F.when(x.getField("s") > acc.getField("s"), x).otherwise(
+            acc
+        ),
+    ).getField("c")
 
 
 def grid_assign_map(
@@ -444,48 +343,32 @@ def grid_assign_map(
     key: str = "vec_id",
     vec: str = "embedding",
 ) -> DataFrame:
-    """Frozen-center assignment as a PURE MAP: the centers arrive as
+    """Assign vectors to FROZEN IVF centers as a PURE MAP — the
+    index-maintenance primitive: appending a delta batch to a by-cell
+    layout is this map-only pass, NOT a re-train. The centers arrive as
     collected rows (bounded — n_cells of them) and are embedded as a
-    literal (cell, cv) array, so each row's cell is an expression-level
-    argmax fold with NO join, NO window, NO shuffle. This is the form
-    that runs under Structured Streaming (window functions and
-    arbitrary joins are off-limits there) — a live stream of new
-    vectors lands in its by-cell partitions through exactly this map.
+    literal (cell, cv) array (a one-row broadcast above the element
+    budget), so each row's cell is :func:`_nearest_cell` with NO join,
+    NO window, NO shuffle. This is also the form that runs under
+    Structured Streaming (window functions and arbitrary joins are
+    off-limits there) — a live stream of new vectors lands in its
+    by-cell partitions through exactly this map.
 
-    Semantics match :func:`grid_assign` bit-for-bit (law-pinned in
-    tests/test_wave41.py): same floor quantization, same cosine_safe,
-    and the fold walks cells in ascending id keeping only STRICT
-    improvements — equal similarities keep the earlier (smaller) cell,
-    reproducing the (sim desc, cell asc) ROW_NUMBER tie-break. Returns
-    (key, cell)."""
+    Same quantization and fold as :func:`grid_ivf`'s training
+    assignment, so incremental ≡ batch assignment by construction; its
+    law reference is the broadcast-join + window form in
+    tests/ann_join_reference.py (pinned bit-equal in
+    tests/test_wave41.py). Returns (key, cell)."""
     if not centers_rows:
         # Centers are n_cells rows by design; an empty list is a caller
         # bug. Without this check the fold never improves on the init
-        # accumulator and every row silently lands in cell=-1, while the
-        # join form (grid_assign) would return no rows — fail loudly
-        # instead of letting the two forms diverge (ADVICE r07).
+        # accumulator and every row silently lands in cell=-1 — fail
+        # loudly instead (ADVICE r07).
         raise ValueError("grid_assign_map: centers_rows is empty")
     df, arr = _attach_centers(df, centers_rows)
-    k = F.transform(
-        as_double_array(vec), lambda x: F.floor(x * F.lit(grid)).cast("long")
+    return df.select(
+        F.col(key), _nearest_cell(grid_quantize(vec, grid), arr).alias("cell")
     )
-    sims = F.transform(
-        arr,
-        lambda ctr: F.struct(
-            ctr.getField("cell").alias("c"),
-            cosine_safe(
-                as_double_array(k), as_double_array(ctr.getField("cv"))
-            ).alias("s"),
-        ),
-    )
-    best = F.aggregate(
-        sims,
-        F.struct(F.lit(-1).alias("c"), F.lit(-3.0).alias("s")),
-        lambda acc, x: F.when(x.getField("s") > acc.getField("s"), x).otherwise(
-            acc
-        ),
-    )
-    return df.select(F.col(key), best.getField("c").alias("cell"))
 
 
 def grid_ivf(
@@ -496,15 +379,15 @@ def grid_ivf(
     key: str = "vec_id",
     vec: str = "embedding",
 ) -> tuple[DataFrame, DataFrame]:
-    """Integer-grid IVF coarse quantizer — the cross-engine-REPLAYABLE
-    twin of ``ivf_topk``'s float k-means, built so the full Lloyd
-    iteration can be value-checked by an unrolled SQL oracle (the
+    """Integer-grid IVF coarse quantizer — the engine's one IVF trainer
+    (:func:`ivf_topk`, the recall/maintenance rows and the semantic
+    screens all train through it), built so the full Lloyd iteration
+    can be value-checked by an unrolled SQL oracle (the
     ``q_embed_cov_profile`` integer-grid exactness recipe, extended from
     one aggregation to a whole iterative algorithm):
 
     - vectors are floor-quantized to a micro-unit integer grid
-      (``floor(x · grid)`` as longs — floor, never round: round on a
-      full-mantissa double disagrees across engines at half-way points);
+      (:func:`grid_quantize`);
     - centroids are integer TRUNCATED means (``sum div count`` on longs
       — both Spark's ``div`` and DuckDB's ``//`` truncate toward zero),
       never float averages, so no fold-order or rounding divergence can
@@ -520,23 +403,15 @@ def grid_ivf(
 
     Scale shape (optimization round 12 — guide §2.4 remove shuffles
     outright): every assignment, including the per-iteration training
-    ones, is the :func:`grid_assign_map` PURE-MAP fold over the current
-    centers collected to the driver (bounded — n_cells rows per
-    iteration, the same rows the old broadcast join shipped) and
-    re-embedded as ONE F.expr-parsed literal array — the corpus NEVER
-    shuffles and no window ranks it (the old ``_assign_grid`` path paid
-    a corpus-wide hash exchange + sort per iteration plus one more for
-    the final assignment). Literal construction must be the single
-    F.expr parse: a per-element F.lit tree costs a py4j round trip PER
-    LITERAL (~2.4 s at 8 cells × 64 dims vs 4 ms, measured — the cost
-    the assign-strategy probe initially misread as Catalyst planning).
-    The only per-iteration exchange left is the centroid recompute's
-    d·n_cells map-side-combined partial sums, and the per-iteration
-    eager checkpoint is gone (the collect itself cuts the lineage).
-    Arithmetic is bit-identical by the map ≡ window law
-    (tests/test_wave41.py): same floor quantization, same cosine_safe,
-    strict-improvement walk over ascending cell ids ≡ the
-    (sim desc, cell asc) ROW_NUMBER pick.
+    ones, is :func:`grid_assign_map`'s nearest-cell fold over the
+    current centers collected to the driver (bounded — n_cells rows per
+    iteration) and re-embedded as ONE F.expr-parsed literal array — the
+    corpus NEVER shuffles and no window ranks it. Literal construction
+    must be the single F.expr parse: a per-element F.lit tree costs a
+    py4j round trip PER LITERAL (~2.4 s at 8 cells × 64 dims vs 4 ms,
+    measured). The only per-iteration exchange left is the centroid
+    recompute's d·n_cells map-side-combined partial sums; the collect
+    itself cuts the lineage.
     """
     from incubator_flink_old_spark.operators.text import _spread_narrow
 
@@ -546,20 +421,14 @@ def grid_ivf(
     # map over e, so without this the whole Lloyd loop serializes in
     # one task while the cluster idles.
     e = _spread_narrow(corpus).select(
-        F.col(key).alias("__c"),
-        F.transform(
-            as_double_array(vec),
-            lambda x: F.floor(x * F.lit(grid)).cast("long"),
-        ).alias("__k"),
+        F.col(key).alias("__c"), grid_quantize(vec, grid).alias("__k")
     )
 
     # Lowest-key seeds (bounded collect: n_cells rows) — cell ids 1..n
-    # in __c order, exactly the old ROW_NUMBER-over-__c seeding.
+    # in __c order.
     seeds = e.orderBy("__c").limit(n_cells).collect()
     if not seeds:
-        # Empty corpus: the join-form trainer returned empty frames
-        # (crossJoin with zero centers); preserve that instead of the
-        # map fold's cell=-1 sentinel rows.
+        # Empty corpus: empty frames, not the fold's cell=-1 sentinel.
         empty_cells = e.select(
             F.col("__c").alias(key), F.lit(1).cast("int").alias("cell")
         ).filter(F.lit(False))
@@ -574,35 +443,15 @@ def grid_ivf(
     ]
 
     def assign_map(rows) -> DataFrame:
-        # grid_assign_map's fold on the pre-quantized frame, keeping __k.
-        # The centers arrive as ONE F.expr-parsed literal array
-        # (_centers_sql_array): a per-element F.lit tree costs a py4j
-        # round trip PER LITERAL (~2.4 s at 8 cells × 64 dims, measured),
-        # the single parse ~4 ms — and the pure map keeps the plan free
-        # of joins, windows and exchanges. Past the element budget the
-        # same values ride a one-row broadcast frame instead
-        # (_attach_centers — VERDICT r12 item 1: a production-sized
-        # index must not render a multi-MB plan literal).
+        # grid_assign_map's fold on the pre-quantized frame, keeping __k
+        # for the centroid recompute; past the element budget the
+        # centers ride a one-row broadcast frame (_attach_centers —
+        # VERDICT r12 item 1).
         src, arr = _attach_centers(e, rows)
-        sims = F.transform(
-            arr,
-            lambda ctr: F.struct(
-                ctr.getField("cell").alias("c"),
-                cosine_safe(
-                    as_double_array("__k"),
-                    as_double_array(ctr.getField("cv")),
-                ).alias("s"),
-            ),
-        )
-        best = F.aggregate(
-            sims,
-            F.struct(F.lit(-1).alias("c"), F.lit(-3.0).alias("s")),
-            lambda acc, x: F.when(
-                x.getField("s") > acc.getField("s"), x
-            ).otherwise(acc),
-        )
         return src.select(
-            "__c", "__k", best.getField("c").cast("int").alias("cell")
+            "__c",
+            "__k",
+            _nearest_cell(F.col("__k"), arr).cast("int").alias("cell"),
         )
 
     for _ in range(iters):
@@ -631,6 +480,44 @@ def grid_ivf(
     return cells, centers
 
 
+def grid_probes(
+    queries: DataFrame,
+    centers: DataFrame,
+    n_probe: int = 3,
+    grid: float = 1_000_000.0,
+    key: str = "q_id",
+    vec: str = "embedding",
+) -> DataFrame:
+    """Top-``n_probe`` cells per query vector by integer-grid cosine —
+    the IVF probe every search surface shares (:func:`ivf_topk`,
+    :func:`ivf_pq_topk`, the recall rows and their layouts). Ranked
+    (sim desc, cell asc), the same order as the training assignment, so
+    a corpus vector used as a query always probes its own cell first.
+    Both sides are broadcast-sized (queries × n_cells). Returns
+    (key, cell); ``n_probe = n_cells`` admits every cell (the
+    all-cells ≡ unpruned law)."""
+    from pyspark.sql import Window
+
+    qg = queries.select(key, grid_quantize(vec, grid).alias("qk"))
+    return (
+        F.broadcast(qg)
+        .crossJoin(F.broadcast(centers))
+        .select(
+            key,
+            "cell",
+            cosine_safe(as_double_array("qk"), as_double_array("cv")).alias("__sim"),
+        )
+        .withColumn(
+            "rn",
+            F.row_number().over(
+                Window.partitionBy(key).orderBy(F.col("__sim").desc(), "cell")
+            ),
+        )
+        .filter(F.col("rn") <= n_probe)
+        .select(key, "cell")
+    )
+
+
 def grid_sqdist(a: Column, b: Column) -> Column:
     """Squared L2 distance between two integer-grid vectors (as double
     arrays) via the dot-product identity ||a−b||² = a·a − 2a·b + b·b.
@@ -640,89 +527,112 @@ def grid_sqdist(a: Column, b: Column) -> Column:
     return dot(a, a) - 2 * dot(a, b) + dot(b, b)
 
 
-def grid_pq(
-    corpus: DataFrame,
-    m: int = 4,
-    n_centroids: int = 8,
-    iters: int = 1,
-    dim: int = 64,
-    grid: float = 1_000_000.0,
-    key: str = "vec_id",
-    vec: str = "embedding",
-) -> tuple[DataFrame, DataFrame]:
-    """Integer-grid PRODUCT quantizer — the cross-engine-replayable twin
-    of ``pq_codebooks``/``pq_encode``, extending the ``grid_ivf`` recipe
-    to per-subspace k-means: vectors are floor-quantized to the integer
-    grid, split into ``m`` subvectors of dim/m, and each subspace trains
-    its own codebook (lowest-key seeds, exact-integer squared-L2
-    assignment tie-broken by centroid id, truncated-mean centroids).
-    Every arithmetic step is integer-exact on both engines, so the FULL
-    trainer + encoder replays value-level in an unrolled SQL oracle
-    (q_ann_recall_pq) — including ADC search, whose distance tables and
-    lookup sums are again exact integers.
-
-    Returns ``(codes, books)``: codes = (key, j, code) — m rows per
-    vector, the 64×-compressed representation; books = (j, cid, bv
-    array<long>) — m·n_centroids rows, always broadcast-sized.
-
-    Scale shape (optimization round 12 — guide §2.4, the grid_ivf
-    trainer treatment): every assignment, including the per-iteration
-    training ones, is :func:`grid_pq_encode_map`'s PURE-MAP argmin fold
-    over the current books collected to the driver (bounded —
-    m·n_centroids rows per iteration, the same rows the old broadcast
-    join shipped) and re-embedded as ONE F.expr-parsed literal array
-    (the grid_ivf py4j-construction lesson) — the subvector frame never
-    shuffles and no (__c, j) window ranks it (the old path paid a
-    corpus-wide hash exchange + sort per iteration plus one more for
-    the final codes). The only per-iteration exchange left is the
-    codebook recompute's map-side-combined partial sums, and the
-    per-iteration eager checkpoint is gone (the collect itself cuts the
-    lineage). Arithmetic is bit-identical by the encode map ≡ window law
-    (tests/test_wave42.py): same slicing, same exact-integer squared
-    L2, strict-improvement walk over ascending cids ≡ the (d asc,
-    cid asc) ROW_NUMBER pick. Encoding stays a map-only rewrite; ADC
-    scans codes (m small ints per vector instead of the d-float
-    payload) with a broadcast distance table — the compressed-domain
-    linear scan that makes billion-vector rerank tiers memory-resident.
-    """
-    from incubator_flink_old_spark.operators.text import _spread_narrow
-
-    assert dim % m == 0
-    sub = dim // m
-    spark = corpus.sparkSession
-    # Narrow-scan spread: the grid_ivf rationale (pure-map training
-    # passes otherwise serialize in one task at fixture widths).
-    e = _spread_narrow(corpus).select(
-        F.col(key).alias("__c"),
-        F.transform(
-            as_double_array(vec),
-            lambda x: F.floor(x * F.lit(grid)).cast("long"),
-        ).alias("__k"),
-    )
-    # long-format subvectors: one row per (vector, subspace)
-    subs = e.select(
-        "__c",
+def _subspace_rows(
+    df: DataFrame, key: str, k: Column, m: int, sub: int
+) -> DataFrame:
+    """Long-format subvectors of grid vector ``k``: one (key, j, sv) row
+    per (vector, subspace), sv = the j-th contiguous ``sub``-dim slice."""
+    return df.select(
+        F.col(key),
         F.explode(
             F.array(
                 *[
                     F.struct(
                         F.lit(j).alias("j"),
-                        F.slice("__k", j * sub + 1, sub).alias("sv"),
+                        F.slice(k, j * sub + 1, sub).alias("sv"),
                     )
                     for j in range(m)
                 ]
             )
         ).alias("js"),
-    ).select("__c", F.col("js.j").alias("j"), F.col("js.sv").alias("sv"))
+    ).select(key, F.col("js.j").alias("j"), F.col("js.sv").alias("sv"))
 
-    # Lowest-key seeds (bounded collect: n_centroids rows): every __c
-    # contributes one row per subspace, so the per-j ROW_NUMBER ≤
-    # n_centroids seed set of the old window form IS the first
-    # n_centroids keys' slices, cid = the key's rank.
+
+def _nearest_code(books_arr: Column) -> Column:
+    """The nearest-code fold over a (j, sv) subvector row: walk subspace
+    j's codebook in ascending cid keeping only STRICT improvements of
+    the exact integer squared L2, so equal distances keep the smaller
+    cid — the (d asc, cid asc) ROW_NUMBER pick as one expression.
+    Returns struct<c: cid, d: distance>."""
+    return F.aggregate(
+        F.transform(
+            F.element_at(books_arr, F.col("j") + 1),
+            lambda b: F.struct(
+                b.getField("cid").alias("c"),
+                grid_sqdist(
+                    as_double_array(F.col("sv")),
+                    as_double_array(b.getField("bv")),
+                ).alias("d"),
+            ),
+        ),
+        F.struct(F.lit(-1).alias("c"), F.lit(float("inf")).alias("d")),
+        lambda acc, x: F.when(x.getField("d") < acc.getField("d"), x).otherwise(
+            acc
+        ),
+    )
+
+
+def _books_by_j(rows) -> dict:
+    """Codebook rows (dicts or Rows) grouped by subspace j."""
+    by_j: dict[int, list] = {}
+    for r in rows:
+        by_j.setdefault(int(r["j"]), []).append(r)
+    return by_j
+
+
+def grid_pq(
+    corpus: DataFrame,
+    m: int = 4,
+    n_centroids: int = 8,
+    iters: int = 1,
+    grid: float = 1_000_000.0,
+    key: str = "vec_id",
+    vec: str = "embedding",
+) -> tuple[DataFrame, DataFrame]:
+    """Integer-grid PRODUCT quantizer — the engine's one PQ trainer
+    (:func:`pq_topk`, :func:`ivf_pq_topk`, the recall and maintenance
+    rows), extending the :func:`grid_ivf` recipe to per-subspace
+    k-means: vectors are floor-quantized to the integer grid, split into
+    ``m`` subvectors of d/m (d is read from the seed rows), and each
+    subspace trains its own codebook (lowest-key seeds, exact-integer
+    squared-L2 assignment tie-broken by centroid id, truncated-mean
+    centroids). Every arithmetic step is integer-exact on both engines,
+    so the FULL trainer + encoder replays value-level in an unrolled SQL
+    oracle (q_ann_recall_pq) — including ADC search, whose distance
+    tables and lookup sums are again exact integers.
+
+    Returns ``(codes, books)``: codes = (key, j, code) — m rows per
+    vector, the 64×-compressed representation; books = (j, cid, bv
+    array<long>) — m·n_centroids rows, always broadcast-sized. Raises
+    ``ValueError`` when d is not divisible by ``m``.
+
+    Scale shape (optimization round 12 — the grid_ivf trainer
+    treatment): every assignment, including the per-iteration training
+    ones, is :func:`grid_pq_encode_map`'s nearest-code fold over the
+    current books collected to the driver (bounded — m·n_centroids rows
+    per iteration) and re-embedded as ONE F.expr-parsed literal array —
+    the subvector frame never shuffles and no (__c, j) window ranks it.
+    The only per-iteration exchange left is the codebook recompute's
+    map-side-combined partial sums; the collect itself cuts the lineage.
+    ADC then scans codes (m small ints per vector instead of the d-float
+    payload) against broadcast distance tables (:func:`grid_adc_topk`).
+    """
+    from incubator_flink_old_spark.operators.text import _spread_narrow
+
+    spark = corpus.sparkSession
+    # Narrow-scan spread: the grid_ivf rationale (pure-map training
+    # passes otherwise serialize in one task at fixture widths).
+    e = _spread_narrow(corpus).select(
+        F.col(key).alias("__c"), grid_quantize(vec, grid).alias("__k")
+    )
+    # Lowest-key seeds (bounded collect: n_centroids rows): the first
+    # n_centroids keys' slices, cid = the key's rank, in every subspace.
     seeds = e.orderBy("__c").limit(n_centroids).collect()
     if not seeds:
-        empty_codes = subs.select(
-            F.col("__c").alias(key), "j", F.lit(1).cast("int").alias("code")
+        empty_codes = e.select(
+            F.col("__c").alias(key),
+            F.lit(0).alias("j"),
+            F.lit(1).cast("int").alias("code"),
         ).filter(F.lit(False))
         empty_books = spark.range(0).select(
             F.lit(0).cast("int").alias("j"),
@@ -730,6 +640,11 @@ def grid_pq(
             F.array(F.lit(0).cast("long")).alias("bv"),
         )
         return empty_codes, empty_books
+    d = len(seeds[0]["__k"])
+    if d % m:
+        raise ValueError(f"grid_pq: d={d} dims do not split into m={m} subspaces")
+    sub = d // m
+    subs = _subspace_rows(e, "__c", F.col("__k"), m, sub)
     books_rows = [
         {
             "j": j,
@@ -742,33 +657,14 @@ def grid_pq(
 
     def assign_map(rows) -> DataFrame:
         # grid_pq_encode_map's fold on the pre-sliced long format,
-        # keeping sv for the codebook recompute; the books arrive as
-        # ONE F.expr-parsed literal array (the grid_ivf py4j lesson),
-        # or as a one-row broadcast frame past the element budget
-        # (_attach_books — VERDICT r12 item 1).
-        by_j: dict[int, list] = {}
-        for r in rows:
-            by_j.setdefault(int(r["j"]), []).append(r)
-        src, books_arr = _attach_books(subs, by_j, m)
-        cand = F.transform(
-            F.element_at(books_arr, F.col("j") + 1),
-            lambda b: F.struct(
-                b.getField("cid").alias("c"),
-                grid_sqdist(
-                    as_double_array(F.col("sv")),
-                    as_double_array(b.getField("bv")),
-                ).alias("d"),
-            ),
-        )
-        best = F.aggregate(
-            cand,
-            F.struct(F.lit(-1).alias("c"), F.lit(float("inf")).alias("d")),
-            lambda acc, x: F.when(
-                x.getField("d") < acc.getField("d"), x
-            ).otherwise(acc),
-        )
+        # keeping sv for the codebook recompute (one-row broadcast past
+        # the element budget — _attach_books, VERDICT r12 item 1).
+        src, books_arr = _attach_books(subs, _books_by_j(rows), m)
         return src.select(
-            "__c", "j", "sv", best.getField("c").cast("int").alias("code")
+            "__c",
+            "j",
+            "sv",
+            _nearest_code(books_arr).getField("c").cast("int").alias("code"),
         )
 
     for _ in range(iters):
@@ -797,125 +693,48 @@ def grid_pq(
             )
         ]
     codes = assign_map(books_rows).select(F.col("__c").alias(key), "j", "code")
-    final_by_j: dict[int, list] = {}
-    for r in books_rows:
-        final_by_j.setdefault(int(r["j"]), []).append(r)
-    books = _books_frame(spark, final_by_j, m)
+    books = _books_frame(spark, _books_by_j(books_rows), m)
     return codes, books
-
-
-def grid_pq_encode(
-    corpus: DataFrame,
-    books: DataFrame,
-    m: int = 4,
-    dim: int = 64,
-    grid: float = 1_000_000.0,
-    key: str = "vec_id",
-    vec: str = "embedding",
-) -> DataFrame:
-    """Encode vectors against FROZEN product-quantizer codebooks — the
-    PQ member of the index-maintenance family (grid_assign is the IVF
-    analog, _sq_codes(bounds=...) the SQ8 analog): delta batches are
-    absorbed by a broadcast-join assignment whose cost scales with the
-    DELTA, never the corpus, while the codebooks stay the base
-    training's. Exactly :func:`grid_pq`'s assignment arithmetic
-    (integer squared-L2, tie-break by centroid id), factored so the
-    incremental ≡ batch law is structural: encoding is per-row pure
-    given frozen books, so any split of the input encodes identically.
-
-    Returns (key, j, code, qerr) — qerr is the EXACT integer squared-L2
-    between the subvector and its chosen centroid, the per-row
-    quantization-error audit whose per-(j, code) sums say how far a
-    delta's distribution has walked from the frozen codebooks (the PQ
-    twin of q_sq8_incremental's clamp counts)."""
-    from pyspark.sql import Window
-
-    assert dim % m == 0
-    sub = dim // m
-    e = corpus.select(
-        F.col(key).alias("__c"),
-        F.transform(
-            as_double_array(vec),
-            lambda x: F.floor(x * F.lit(grid)).cast("long"),
-        ).alias("__k"),
-    )
-    subs = e.select(
-        "__c",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("j"),
-                        F.slice("__k", j * sub + 1, sub).alias("sv"),
-                    )
-                    for j in range(m)
-                ]
-            )
-        ).alias("js"),
-    ).select("__c", F.col("js.j").alias("j"), F.col("js.sv").alias("sv"))
-    return (
-        subs.join(F.broadcast(books), on="j")
-        .select(
-            "__c",
-            "j",
-            "sv",
-            "cid",
-            grid_sqdist(as_double_array("sv"), as_double_array("bv")).alias(
-                "__d"
-            ),
-        )
-        .withColumn(
-            "__rn",
-            F.row_number().over(
-                Window.partitionBy("__c", "j").orderBy("__d", "cid")
-            ),
-        )
-        .filter(F.col("__rn") == 1)
-        .select(
-            F.col("__c").alias(key),
-            "j",
-            F.col("cid").alias("code"),
-            F.col("__d").cast("long").alias("qerr"),
-        )
-    )
 
 
 def grid_pq_encode_map(
     df: DataFrame,
     books_rows,
     m: int = 4,
-    dim: int = 64,
     grid: float = 1_000_000.0,
     key: str = "vec_id",
     vec: str = "embedding",
 ) -> DataFrame:
-    """Frozen-codebook PQ encoding as a PURE MAP — the streaming form of
-    :func:`grid_pq_encode`, exactly as :func:`grid_assign_map` is the
-    streaming form of :func:`grid_assign`: the codebooks arrive as
-    collected rows (bounded — m·n_centroids of them) and are embedded
-    as a literal array-of-arrays indexed by subspace, so each row's m
-    codes are expression-level argmin folds with NO join, NO window, NO
-    shuffle — the only shape Structured Streaming admits for a stateless
-    per-row transform.
+    """Encode vectors against FROZEN product-quantizer codebooks as a
+    PURE MAP — the PQ member of the index-maintenance family
+    (:func:`grid_assign_map` is the IVF analog, :func:`sq8_encode_map`
+    the SQ8 one): delta batches are absorbed at a cost that scales with
+    the DELTA, never the corpus, while the codebooks stay the base
+    training's. The codebooks arrive as collected rows (bounded —
+    m·n_centroids of them; d is read from them) and are embedded as a
+    literal array-of-arrays indexed by subspace, so each row's m codes
+    are :func:`_nearest_code` folds with NO join, NO window, NO shuffle —
+    the only shape Structured Streaming admits for a stateless per-row
+    transform.
 
-    Semantics match grid_pq_encode bit-for-bit (law-pinned in
-    tests/test_wave42.py): same floor quantization and subvector
-    slicing, same exact-integer squared-L2, and the fold walks
-    centroids in ascending cid keeping only STRICT improvements —
-    equal distances keep the earlier (smaller) cid, reproducing the
-    (d asc, cid asc) ROW_NUMBER tie-break. Returns (key, j, code,
-    qerr) — m rows per vector."""
+    Exactly :func:`grid_pq`'s assignment arithmetic (same quantization
+    and slicing, same fold), so incremental ≡ batch encoding is
+    structural: encoding is per-row pure given frozen books, so any
+    split of the input encodes identically. Its law reference is the
+    broadcast-join + window form in tests/ann_join_reference.py (pinned
+    bit-equal in tests/test_wave42.py).
+
+    Returns (key, j, code, qerr) — m rows per vector; qerr is the EXACT
+    integer squared-L2 between the subvector and its chosen centroid,
+    the per-row quantization-error audit whose per-(j, code) sums say
+    how far a delta's distribution has walked from the frozen codebooks
+    (the PQ twin of q_sq8_incremental's clamp counts)."""
     if not books_rows:
         # Books are m·n_centroids rows by design; an empty list is a
         # caller bug — fail loudly instead of emitting code=-1 rows
-        # while the join form would return nothing (the
-        # grid_assign_map discipline).
+        # (the grid_assign_map discipline).
         raise ValueError("grid_pq_encode_map: books_rows is empty")
-    assert dim % m == 0
-    sub = dim // m
-    by_j: dict[int, list] = {}
-    for r in books_rows:
-        by_j.setdefault(int(r.j), []).append(r)
+    by_j = _books_by_j(books_rows)
     missing = [j for j in range(m) if not by_j.get(j)]
     if missing:
         # A subspace with no codebook rows would make its literal array
@@ -927,43 +746,16 @@ def grid_pq_encode_map(
             f"grid_pq_encode_map: no codebook rows for subspace(s) "
             f"{missing} (expected all of 0..{m - 1})"
         )
-    k = F.transform(
-        as_double_array(vec), lambda x: F.floor(x * F.lit(grid)).cast("long")
-    )
-    rows = df.select(
-        F.col(key),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("j"),
-                        F.slice(k, j * sub + 1, sub).alias("sv"),
-                    )
-                    for j in range(m)
-                ]
-            )
-        ).alias("js"),
-    ).select(key, F.col("js.j").alias("j"), F.col("js.sv").alias("sv"))
+    sub = len(books_rows[0]["bv"])
+    d = sub * len(by_j)
+    if d % m or d // m != sub:
+        raise ValueError(
+            f"grid_pq_encode_map: books of d={d} dims in {len(by_j)} "
+            f"subspaces do not split into m={m} subspaces"
+        )
+    rows = _subspace_rows(df, key, grid_quantize(vec, grid), m, sub)
     rows, books_arr = _attach_books(rows, by_j, m)
-    cand = F.transform(
-        F.element_at(books_arr, F.col("j") + 1),
-        lambda b: F.struct(
-            b.getField("cid").alias("c"),
-            grid_sqdist(
-                as_double_array(F.col("sv")),
-                as_double_array(b.getField("bv")),
-            ).alias("d"),
-        ),
-    )
-    best = F.aggregate(
-        cand,
-        F.struct(
-            F.lit(-1).alias("c"), F.lit(float("inf")).alias("d")
-        ),
-        lambda acc, x: F.when(
-            x.getField("d") < acc.getField("d"), x
-        ).otherwise(acc),
-    )
+    best = _nearest_code(books_arr)
     return rows.select(
         F.col(key),
         "j",
@@ -1016,18 +808,17 @@ def sq8_encode_map(
         # Above the literal budget the quantizer table rides a one-row
         # broadcast frame (VERDICT r12 item 1) — same values, same
         # element_at lookups.
+        lo, hi = _fresh_name(df, "__lo"), _fresh_name(df, "__hi")
         one = _one_row_broadcast(
             df.sparkSession,
             [
-                ("__lo", "array<bigint>", [int(r.lo) for r in ordered]),
-                ("__hi", "array<bigint>", [int(r.hi) for r in ordered]),
+                (lo, "array<bigint>", [int(r.lo) for r in ordered]),
+                (hi, "array<bigint>", [int(r.hi) for r in ordered]),
             ],
         )
-        src, extra = df.crossJoin(F.broadcast(one)), ("__lo", "__hi")
-        lo_arr, hi_arr = F.col("__lo"), F.col("__hi")
-    k = F.transform(
-        as_double_array(vec), lambda x: F.floor(x * F.lit(grid)).cast("long")
-    )
+        src, extra = df.crossJoin(F.broadcast(one)), (lo, hi)
+        lo_arr, hi_arr = F.col(lo), F.col(hi)
+    k = grid_quantize(vec, grid)
     # Vectors longer than the bounds table would read past the literal
     # arrays (element_at → NULL lo/hi → silent NULL codes); raise
     # in-plan so a short table fails the batch instead of corrupting
@@ -1089,9 +880,7 @@ def prefix_encode_map(
     Returns (key, pk array<long>)."""
     if prefix < 1:
         raise ValueError(f"prefix_encode_map: prefix must be >= 1, got {prefix}")
-    k = F.transform(
-        as_double_array(vec), lambda x: F.floor(x * F.lit(grid)).cast("long")
-    )
+    k = grid_quantize(vec, grid)
     guarded = F.when(
         F.size(k) < F.lit(prefix),
         F.raise_error(
@@ -1376,177 +1165,113 @@ def centroid_outliers(
     )
 
 
-def pq_codebooks(
+def cosine_rerank_topk(
+    cand: DataFrame,
+    queries: DataFrame,
     corpus: DataFrame,
-    m: int = 8,
-    k: int = 16,
-    kmeans_iters: int = 3,
+    k: int = 5,
+    query_key: str = "q_id",
     corpus_key: str = "vec_id",
     vec: str = "embedding",
 ) -> DataFrame:
-    """Train product-quantization codebooks: the d-dim space splits into
-    ``m`` contiguous subspaces and each learns ``k`` centroids by Lloyd
-    iterations — all subspaces train TOGETHER in one DataFrame (sub is
-    just another grouping key), so the m trainings cost one job chain,
-    not m. Deterministic: lowest-key seeds, fixed iterations, L2
-    assignment tie-broken by centroid id. Vectors are L2-normalized
-    first so inner-product ADC ranks like cosine.
-
-    Returns (sub, cid, cv): m·k rows, each centroid a d/m-dim array —
-    tiny (m·k·d/m = k·d doubles) and always broadcast by consumers.
-    """
-    c = corpus.select(
-        F.col(corpus_key).alias("__c"), as_double_array(vec).alias("__v")
-    ).select(
-        "__c",
-        F.transform("__v", lambda x: x / norm(F.col("__v"))).alias("__v"),
-    )
-    d_over_m = F.floor(F.size("__v") / m).cast("int")
-    subs = c.select(
-        "__c",
-        "__v",
-        F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("sub"),
-    ).select(
-        "__c",
-        "sub",
-        F.slice(
-            F.col("__v"), F.col("sub") * d_over_m + 1, d_over_m
-        ).alias("sv"),
-    )
-    subs = subs.persist()
-    try:
-        from pyspark.sql import Window
-
-        # seeds: the k lowest-key vectors' slices, shared across subspaces
-        centers = (
-            subs.withColumn(
-                "cid",
-                F.dense_rank().over(Window.partitionBy("sub").orderBy("__c")),
-            )
-            .filter(F.col("cid") <= k)
-            .select("sub", "cid", F.col("sv").alias("cv"))
-        )
-        l2 = F.aggregate(
-            F.zip_with(F.col("sv"), F.col("cv"), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        for _ in range(kmeans_iters):
-            assigned = (
-                subs.join(F.broadcast(centers), on="sub")
-                .select("__c", "sub", "sv", "cid", l2.alias("d2"))
-                .withColumn(
-                    "rn",
-                    F.row_number().over(
-                        Window.partitionBy("__c", "sub").orderBy("d2", "cid")
-                    ),
-                )
-                .filter(F.col("rn") == 1)
-            )
-            centers = (
-                assigned.select("sub", "cid", F.posexplode("sv").alias("pos", "x"))
-                .groupBy("sub", "cid", "pos")
-                .agg(F.avg("x").alias("x"))
-                .groupBy("sub", "cid")
-                .agg(F.array_sort(F.collect_list(F.struct("pos", "x"))).alias("px"))
-                .select(
-                    "sub", "cid", F.transform("px", lambda s: s["x"]).alias("cv")
-                )
-            )
-            centers = centers.localCheckpoint(eager=True)
-        return centers
-    finally:
-        subs.unpersist()
-
-
-def _adc_dtab(qsubs, books, query_key: str, m: int, n_centroids: int):
-    """Per-query ADC distance table, densified to exactly m·n_centroids
-    slots. Codebooks may be SPARSE — a subspace trains fewer than
-    n_centroids centroids when the corpus is smaller than n_centroids, or
-    a centroid loses every member during Lloyd — so flattening by sorted
-    collect_list position would misalign every later subspace's lookups.
-    Instead build a (idx → d) map and project it onto the full grid;
-    missing slots default to 0.0 and are never referenced, because
-    pq_encode assigns codes by joining the same codebook frame (a code
-    for a nonexistent centroid cannot be emitted)."""
-    return (
-        qsubs.join(F.broadcast(books), on="sub")
+    """Exact raw-double cosine top-k over candidate (query_key,
+    corpus_key) pairs — the within-probed-cells rerank of IVF search
+    (:func:`ivf_topk`, the IVF recall rows). Same cosine and tie-break as
+    :func:`brute_force_topk`, so an unpruned candidate set reproduces it.
+    Output: (q_id, vec_id, cos)."""
+    qv = queries.select(query_key, as_double_array(vec).alias("__qv"))
+    cv = corpus.select(corpus_key, as_double_array(vec).alias("__cv"))
+    scored = (
+        cand.select(query_key, corpus_key)
+        .join(qv, on=query_key)
+        .join(cv, on=corpus_key)
         .select(
             query_key,
-            (F.col("sub") * n_centroids + F.col("cid") - 1)
-            .cast("int")
-            .alias("idx"),
-            dot(F.col("qsv"), F.col("cv")).alias("d"),
-        )
-        .groupBy(query_key)
-        .agg(F.map_from_entries(F.collect_list(F.struct("idx", "d"))).alias("dm"))
-        .select(
-            query_key,
-            F.transform(
-                F.sequence(F.lit(0), F.lit(m * n_centroids - 1)),
-                lambda i: F.coalesce(
-                    F.element_at(F.col("dm"), i.cast("int")), F.lit(0.0)
-                ),
-            ).alias("dtab"),
-        )
-    )
-
-
-def pq_encode(
-    corpus: DataFrame,
-    codebooks: DataFrame,
-    m: int = 8,
-    corpus_key: str = "vec_id",
-    vec: str = "embedding",
-) -> DataFrame:
-    """Encode each (normalized) vector as its per-subspace nearest
-    centroid ids — (vec_id, codes array<int>), the 4-bit-per-subspace
-    compressed representation stored instead of raw floats at scale
-    (d·4 bytes → m·log2(k) bits; 64-dim float32 → 8 nibbles = 64×
-    smaller here). One broadcast join against the m·k codebook rows and
-    one combinable per-vector fold — no shuffle of the corpus beyond the
-    groupBy on its own key."""
-    from pyspark.sql import Window
-
-    c = corpus.select(
-        F.col(corpus_key).alias(corpus_key), as_double_array(vec).alias("__v")
-    ).select(
-        corpus_key,
-        F.transform("__v", lambda x: x / norm(F.col("__v"))).alias("__v"),
-    )
-    d_over_m = F.floor(F.size("__v") / m).cast("int")
-    subs = c.select(
-        corpus_key,
-        "__v",
-        F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("sub"),
-    ).select(
-        corpus_key,
-        "sub",
-        F.slice(F.col("__v"), F.col("sub") * d_over_m + 1, d_over_m).alias("sv"),
-    )
-    l2 = F.aggregate(
-        F.zip_with(F.col("sv"), F.col("cv"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    best = (
-        subs.join(F.broadcast(codebooks), on="sub")
-        .select(corpus_key, "sub", "cid", l2.alias("d2"))
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy(corpus_key, "sub").orderBy("d2", "cid")
-            ),
-        )
-        .filter(F.col("rn") == 1)
-    )
-    return (
-        best.groupBy(corpus_key)
-        .agg(F.array_sort(F.collect_list(F.struct("sub", "cid"))).alias("sc"))
-        .select(
             corpus_key,
-            F.transform("sc", lambda s: s["cid"].cast("int")).alias("codes"),
+            cosine(F.col("__qv"), F.col("__cv")).alias("cos"),
         )
+    )
+    return _topk(scored, k, query_key, corpus_key, "cos")
+
+
+def grid_adc_topk(
+    qg: DataFrame,
+    codes: DataFrame,
+    books: DataFrame,
+    k: int = 5,
+    cand: DataFrame | None = None,
+    query_key: str = "q_id",
+    corpus_key: str = "vec_id",
+) -> DataFrame:
+    """ADC (asymmetric distance computation) top-k over :func:`grid_pq`
+    codes — the memory-bound scan of PQ search: each query's distance
+    table holds the exact integer squared L2 from its subvectors (sliced
+    by the codebook width) to every centroid, and a corpus vector's
+    distance is its m table lookups summed. The tables broadcast over
+    the code stream, so the corpus is read as m small ints per vector
+    and never shuffles for scoring.
+
+    ``qg`` = (query_key, qk) grid-quantized queries; ``cand`` =
+    optional (query_key, corpus_key) pairs (the IVF probe prune) — only
+    those pairs score. Output: (q_id, vec_id, score), score = −(exact
+    ADC distance): higher is better and ties are exact integers, broken
+    by corpus key."""
+    width = F.size("bv")
+    dtab = (
+        F.broadcast(qg)
+        .crossJoin(F.broadcast(books))
+        .select(
+            query_key,
+            "j",
+            F.col("cid").alias("code"),
+            grid_sqdist(
+                as_double_array(F.slice("qk", F.col("j") * width + 1, width)),
+                as_double_array("bv"),
+            ).alias("d"),
+        )
+    )
+    on = ["j", "code"]
+    if cand is not None:
+        codes = codes.join(F.broadcast(cand), on=corpus_key)
+        on.append(query_key)
+    scored = (
+        codes.join(F.broadcast(dtab), on=on)
+        .groupBy(query_key, corpus_key)
+        .agg((F.lit(0.0) - F.sum("d")).alias("score"))
+    )
+    return _topk(scored, k, query_key, corpus_key, "score")
+
+
+def ivf_topk(
+    queries: DataFrame,
+    corpus: DataFrame,
+    k: int = 5,
+    n_cells: int = 16,
+    n_probe: int = 4,
+    kmeans_iters: int = 5,
+    query_key: str = "q_id",
+    corpus_key: str = "vec_id",
+    vec: str = "embedding",
+) -> DataFrame:
+    """IVF (inverted-file) approximate top-k — the ANN scale path:
+    :func:`grid_ivf` trains ``n_cells`` centers (``kmeans_iters`` Lloyd
+    rounds) and assigns every corpus vector to a cell — at scale the
+    corpus is *written* partitioned by cell, so the probe join below is
+    a partition-pruned scan, not a shuffle. Each query scores only the
+    vectors in its ``n_probe`` nearest cells (:func:`grid_probes`),
+    exact cosine within (:func:`cosine_rerank_topk`).
+
+    Approximate by design (recall < 1 when true neighbors live outside
+    probed cells); deterministic given the lowest-key seeds and the
+    tie-breaks. Output like brute_force_topk: (q_id, vec_id, cos)."""
+    cells, centers = grid_ivf(
+        corpus, n_cells=n_cells, iters=kmeans_iters, key=corpus_key, vec=vec
+    )
+    cand = grid_probes(queries, centers, n_probe, key=query_key, vec=vec).join(
+        cells, on="cell"
+    )
+    return cosine_rerank_topk(
+        cand, queries, corpus, k, query_key, corpus_key, vec
     )
 
 
@@ -1561,66 +1286,23 @@ def pq_topk(
     corpus_key: str = "vec_id",
     vec: str = "embedding",
 ) -> DataFrame:
-    """Product-quantization approximate top-k by asymmetric distance
-    computation (ADC) — the memory-bound ANN path: the corpus is scanned
-    as codes (m small ints per vector, 64× smaller than raw floats
-    here), never as raw vectors.
-
-    Each query precomputes an m·n_centroids table of exact
-    query-subvector · centroid inner products (flattened to one array);
-    a corpus vector's approximate cosine is then m array lookups summed
-    — `aggregate(sequence, dtab[sub·K + code])`, pure JVM HOFs, no
-    Python. The query side (10s-1000s of rows × m·K doubles) broadcasts;
-    the corpus side streams codes map-side; per-query top-k is the same
-    windowed TakeOrdered as the exact path. At 100 TB: codes live
-    columnar next to doc ids, raw vectors stay cold — ADC reads ~1/64th
-    the bytes of brute force, and composes with the IVF cell layout
-    (probe cells first, ADC within).
+    """Product-quantization approximate top-k: :func:`grid_pq` trains
+    ``m`` per-subspace codebooks of ``n_centroids`` (``kmeans_iters``
+    Lloyd rounds) and encodes the corpus; :func:`grid_adc_topk` scans
+    the codes. At scale codes live columnar next to the ids and raw
+    vectors stay cold — ADC reads ~1/64th the bytes of brute force, and
+    composes with the IVF cell layout (:func:`ivf_pq_topk`).
 
     Approximate by design (quantization error); deterministic given the
-    lowest-key seeds and tie-breaks. Output: (q_id, vec_id, score) —
-    score approximates the cosine of L2-normalized vectors.
-    """
-    from pyspark.sql import Window
-
-    books = pq_codebooks(corpus, m, n_centroids, kmeans_iters, corpus_key, vec)
-    books = books.localCheckpoint(eager=True)  # reused by encode + dtab
-    codes = pq_encode(corpus, books, m, corpus_key, vec)
-
-    q = queries.select(
-        F.col(query_key).alias(query_key), as_double_array(vec).alias("__qv")
-    ).select(
-        query_key,
-        F.transform("__qv", lambda x: x / norm(F.col("__qv"))).alias("__qv"),
+    lowest-key seeds and tie-breaks. Output: (q_id, vec_id, score),
+    score = −(exact ADC squared grid distance)."""
+    codes, books = grid_pq(
+        corpus, m=m, n_centroids=n_centroids, iters=kmeans_iters,
+        key=corpus_key, vec=vec,
     )
-    d_over_m = F.floor(F.size("__qv") / m).cast("int")
-    qsubs = q.select(
-        query_key,
-        "__qv",
-        F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("sub"),
-    ).select(
-        query_key,
-        "sub",
-        F.slice(F.col("__qv"), F.col("sub") * d_over_m + 1, d_over_m).alias("qsv"),
-    )
-    dtab = _adc_dtab(qsubs, books, query_key, m, n_centroids)
-    score = F.aggregate(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        F.lit(0.0),
-        lambda acc, i: acc
-        + F.element_at(
-            F.col("dtab"),
-            (i * n_centroids + F.element_at(F.col("codes"), i + 1)).cast("int"),
-        ),
-    )
-    scored = codes.join(F.broadcast(dtab)).select(
-        query_key, corpus_key, score.alias("score")
-    )
-    w = Window.partitionBy(query_key).orderBy(F.col("score").desc(), F.col(corpus_key))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
+    qg = queries.select(query_key, grid_quantize(vec).alias("qk"))
+    return grid_adc_topk(
+        qg, codes, books, k, query_key=query_key, corpus_key=corpus_key
     )
 
 
@@ -1637,106 +1319,34 @@ def ivf_pq_topk(
     corpus_key: str = "vec_id",
     vec: str = "embedding",
 ) -> DataFrame:
-    """IVF+PQ — the composed billion-scale ANN layout: an IVF coarse
-    quantizer prunes WHICH vectors are scanned (n_probe/n_cells of the
-    corpus, partition-pruned when the code table is written partitioned
-    by cell) and PQ/ADC compresses HOW each is scanned (m code lookups
-    against a broadcast distance table instead of a d-dim float read).
+    """IVF+PQ — the composed billion-scale ANN layout: the
+    :func:`grid_ivf` probe prunes WHICH vectors are scanned (n_probe of
+    n_cells cells, partition-pruned when the code table is written by
+    cell) and :func:`grid_pq`/ADC compresses HOW each is scanned (m code
+    lookups against a broadcast distance table instead of a d-dim read).
+    ``kmeans_iters`` drives both trainers.
 
-    Simplification vs textbook IVF-PQ, documented deliberately: codes
-    quantize the (normalized) vector itself, not the residual
-    v − centroid(cell) — residual encoding couples the codebooks to the
-    cell layout (re-encode the corpus on any re-clustering) for accuracy
-    this fixture cannot measure (its neighbor structure is a noise floor
-    beyond identity). The composition points — probe prune, equi-join on
-    cell, ADC within — are identical either way.
-
-    Deterministic: lowest-key seeds everywhere, fixed Lloyd iterations,
-    (score desc, vec_id) tie-break. A corpus query vector always probes
-    its own cell (it is its top-1 cell by construction), so
-    self-retrieval is exact. Output: (q_id, vec_id, score).
-    """
-    from pyspark.sql import Window
-
-    c = corpus.select(
-        F.col(corpus_key).alias("__c"), as_double_array(vec).alias("__cv")
-    ).persist()
-    try:
-        centers = _train_cells(c, n_cells, kmeans_iters)
-        cells = _assign_cells(c, centers).select(
-            F.col("__c").alias(corpus_key), "cell"
-        )
-
-        books = pq_codebooks(corpus, m, n_centroids, kmeans_iters, corpus_key, vec)
-        books = books.localCheckpoint(eager=True)
-        codes = pq_encode(corpus, books, m, corpus_key, vec).join(
-            cells, on=corpus_key
-        )
-
-        q = queries.select(
-            F.col(query_key).alias("__q"), as_double_array(vec).alias("__qv")
-        )
-        probes = (
-            F.broadcast(q).crossJoin(F.broadcast(centers))
-            .select(
-                "__q", "__qv", "cell", cosine(F.col("__qv"), F.col("cv")).alias("sim")
-            )
-            .withColumn(
-                "rn",
-                F.row_number().over(
-                    Window.partitionBy("__q").orderBy(
-                        F.col("sim").desc(), F.col("cell")
-                    )
-                ),
-            )
-            .filter(F.col("rn") <= n_probe)
-            .select(F.col("__q").alias(query_key), "cell")
-        )
-
-        qn = q.select(
-            F.col("__q").alias(query_key),
-            F.transform("__qv", lambda x: x / norm(F.col("__qv"))).alias("__qv"),
-        )
-        d_over_m = F.floor(F.size("__qv") / m).cast("int")
-        qsubs = qn.select(
-            query_key,
-            "__qv",
-            F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("sub"),
-        ).select(
-            query_key,
-            "sub",
-            F.slice(F.col("__qv"), F.col("sub") * d_over_m + 1, d_over_m).alias(
-                "qsv"
-            ),
-        )
-        dtab = _adc_dtab(qsubs, books, query_key, m, n_centroids)
-        score = F.aggregate(
-            F.sequence(F.lit(0), F.lit(m - 1)),
-            F.lit(0.0),
-            lambda acc, i: acc
-            + F.element_at(
-                F.col("dtab"),
-                (i * n_centroids + F.element_at(F.col("codes"), i + 1)).cast(
-                    "int"
-                ),
-            ),
-        )
-        # the probe prune IS the join: only codes in probed cells score —
-        # equi-join on cell (partition-pruned under a by-cell layout)
-        scored = codes.join(
-            F.broadcast(probes.join(dtab, on=query_key)), on="cell"
-        ).select(query_key, corpus_key, score.alias("score"))
-        w = Window.partitionBy(query_key).orderBy(
-            F.col("score").desc(), F.col(corpus_key)
-        )
-        out = (
-            scored.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= k)
-            .drop("__rn")
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        c.unpersist()
+    Codes quantize the vector itself, not the residual v − centroid(cell)
+    — residual encoding couples the codebooks to the cell layout
+    (re-encode the corpus on any re-clustering); the composition points
+    — probe prune, equi-join on cell, ADC within — are identical either
+    way. A corpus vector used as a query probes its own cell first and
+    its own codes are its nearest, so self-retrieval is exact. Output:
+    (q_id, vec_id, score), score = −(exact ADC squared grid distance)."""
+    cells, centers = grid_ivf(
+        corpus, n_cells=n_cells, iters=kmeans_iters, key=corpus_key, vec=vec
+    )
+    codes, books = grid_pq(
+        corpus, m=m, n_centroids=n_centroids, iters=kmeans_iters,
+        key=corpus_key, vec=vec,
+    )
+    cand = (
+        grid_probes(queries, centers, n_probe, key=query_key, vec=vec)
+        .join(cells, on="cell")
+        .select(query_key, corpus_key)
+    )
+    qg = queries.select(query_key, grid_quantize(vec).alias("qk"))
+    return grid_adc_topk(qg, codes, books, k, cand, query_key, corpus_key)
 
 
 def embedding_covariance(
@@ -1767,13 +1377,7 @@ def embedding_covariance(
     from incubator_flink_old_spark.operators.text import _spread_narrow
 
     df = _spread_narrow(df)
-    e = df.select(
-        F.col(key),
-        F.transform(
-            as_double_array(vec),
-            lambda x: F.floor(x * F.lit(1000000.0)).cast("long"),
-        ).alias("__k"),
-    )
+    e = df.select(F.col(key), grid_quantize(vec).alias("__k"))
     sums = (
         e.select(F.posexplode("__k").alias("j", "k"))
         .groupBy("j")
@@ -2011,7 +1615,7 @@ def semantic_screen_events_map(
     ``corpus_cells`` is the standing (key, cell) assignment and
     ``corpus_emb`` the standing vectors — the frozen serve artifacts
     (the caller pins them DISK_ONLY for stream-static reads and absorbs
-    deltas via :func:`grid_assign`).
+    deltas via :func:`grid_assign_map`).
 
     Scale: per arrival O(n_cells) literal-array work map-side, then a
     partition-pruned fetch of ``n_probe`` cells' candidates —
@@ -2047,10 +1651,7 @@ def semantic_screen_events_map(
     qg = new_emb.select(
         F.col(key).alias("doc_a"),
         *[F.col(c) for c in carry],
-        F.transform(
-            as_double_array(vec),
-            lambda x: F.floor(x * F.lit(grid)).cast("long"),
-        ).alias("qk"),
+        grid_quantize(vec, grid).alias("qk"),
     )
     # Stage the query-side squared norm ONCE per arrival (it is exact —
     # integer-valued doubles below 2^53 — so the staged value is
@@ -2064,15 +1665,7 @@ def semantic_screen_events_map(
         ),
     )
     qg, arr = _attach_centers(qg, centers_rows)
-    sims = F.transform(
-        arr,
-        lambda ctr: F.struct(
-            ctr.getField("cell").alias("c"),
-            cosine_safe(
-                as_double_array("qk"), as_double_array(ctr.getField("cv"))
-            ).alias("s"),
-        ),
-    )
+    sims = _cell_sims(F.col("qk"), arr)
     # Total order (s desc, c asc) — the window form's ORDER BY verbatim;
     # doubles here are grid cosines or the -2.0 sentinel, never NaN, so
     # the three-way comparison is total.
@@ -2100,11 +1693,7 @@ def semantic_screen_events_map(
         .select("doc_a", *carry, "qk", "__qn2", "cell")
     )
     eg = corpus_emb.select(
-        F.col(key).alias("doc_b"),
-        F.transform(
-            as_double_array(vec),
-            lambda x: F.floor(x * F.lit(grid)).cast("long"),
-        ).alias("ck"),
+        F.col(key).alias("doc_b"), grid_quantize(vec, grid).alias("ck")
     ).withColumn(
         # corpus-side squared norm, once per corpus vector (see __qn2)
         "__cn2",

@@ -195,9 +195,15 @@ def minhash_bands(
     supplies that staged (key, __dt distinct-token array) frame directly
     — the round-13 share point: a caller that also verifies (the pair
     pipelines) persists ONE tokenize and feeds it to both the bands and
-    the verify token sets."""
+    the verify token sets. Passing ``_dtoks`` together with ``_sigs`` or
+    ``_toksets`` raises ``ValueError``: that arm would ignore the staged
+    tokens and tokenize ``df`` again."""
     assert num_hashes % band_size == 0
     n_bands = num_hashes // band_size
+    if _dtoks is not None and (_sigs is not None or _toksets is not None):
+        raise ValueError(
+            "minhash_bands: _dtoks cannot be combined with _sigs or _toksets"
+        )
     if _sigs is None and _toksets is None:
         staged = (
             _dtoks

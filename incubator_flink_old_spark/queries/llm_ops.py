@@ -319,12 +319,11 @@ def q_sim_ivf_topk(spark, sf_dir):
     query vectors, (a) the query itself is its own top-1 hit (it lives in
     the probed cell by construction) and (b) IVF's top-5 overlaps exact
     brute-force top-5 in ≥ 3 of 5 slots. Probe breadth is sized to the
-    contract ACROSS fixtures, not just the driver's sf: measured per-query
-    overlap at n_probe=4 is 5/5 everywhere at sf0.01 but min 2/5 at sf0.1
-    (denser neighbor structure splits true neighbors across cells); at
-    n_probe=6 the sf0.1 minimum is 4/5 — so 6 probes keep margin on both.
-    The approximation itself is deterministic: lowest-key seeds, fixed
-    Lloyd iterations, tie-broken rankings — see
+    contract ACROSS fixtures, not just one scale factor (denser neighbor
+    structure splits true neighbors across cells): at n_probe=6 the
+    measured per-query overlap is 5/5 at sf0.001 and sf0.01 and min 4/5
+    at sf0.1. The approximation itself is deterministic: integer-grid
+    Lloyd (grid_ivf) from lowest-key seeds, tie-broken rankings — see
     operators/similarity.ivf_topk for the 100 TB layout (corpus written
     bucketed by cell → partition-pruned probes)."""
     emb = t(spark, sf_dir, "embeddings")

@@ -291,70 +291,17 @@ def _recall_tail_sql(cand_cte: str) -> str:
     """
 
 
-def _grid_probes(queries, centers, n_probe: int = _N_PROBE):
-    """Top-``n_probe`` cells per query vector by integer-grid cosine —
-    the probe set every IVF recall row (plain, by-cell layout, and the
-    quantized compositions) shares. ``n_probe`` defaults to the family
-    constant; the composition LAW tests pass n_probe=n_cells to prove
-    all-cells ≡ unpruned."""
-    from incubator_flink_old_spark.operators.similarity import (
-        as_double_array,
-        cosine_safe,
-    )
-
-    qg = queries.select(
-        "q_id",
-        F.transform(
-            as_double_array("embedding"),
-            lambda x: F.floor(x * F.lit(1_000_000.0)).cast("long"),
-        ).alias("qk"),
-    )
-    return (
-        F.broadcast(qg)
-        .crossJoin(F.broadcast(centers))
-        .select(
-            "q_id",
-            "cell",
-            cosine_safe(as_double_array("qk"), as_double_array("cv")).alias("__sim"),
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("q_id").orderBy(F.col("__sim").desc(), "cell")
-            ),
-        )
-        .filter(F.col("rn") <= n_probe)
-        .select("q_id", "cell")
-    )
-
-
 def _recall_vs_brute(cand, queries, emb):
     """Rank candidate (q_id, vec_id) pairs by raw-double cosine, take
     top-k, count the overlap with brute-force top-k → (q_id, hits,
     recall). The Spark twin of ``_recall_tail_sql``."""
     from incubator_flink_old_spark.operators.similarity import (
-        as_double_array,
         brute_force_topk,
-        cosine,
+        cosine_rerank_topk,
     )
 
-    qv = queries.select("q_id", as_double_array("embedding").alias("qv"))
-    cvec = emb.select("vec_id", as_double_array("embedding").alias("v"))
-    approx_top = (
-        cand.select("q_id", "vec_id")
-        .join(qv, on="q_id")
-        .join(cvec, on="vec_id")
-        .select("q_id", "vec_id", cosine(F.col("qv"), F.col("v")).alias("cos"))
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("q_id").orderBy(
-                    F.col("cos").desc(), "vec_id"
-                )
-            ),
-        )
-        .filter(F.col("rn") <= _TOPK)
-        .select("q_id", "vec_id")
+    approx_top = cosine_rerank_topk(cand, queries, emb, k=_TOPK).select(
+        "q_id", "vec_id"
     )
     brute = brute_force_topk(queries, emb, k=_TOPK).select("q_id", "vec_id")
     return (
@@ -409,14 +356,17 @@ def q_ann_recall_ivf(spark, sf_dir):
     an equi-join on cell — partition-pruned under a by-cell layout
     (q_ann_recall_ivf_layout driver-checks exactly that)."""
 
-    from incubator_flink_old_spark.operators.similarity import grid_ivf
+    from incubator_flink_old_spark.operators.similarity import (
+        grid_ivf,
+        grid_probes,
+    )
 
     emb = t(spark, sf_dir, "embeddings")
     cells, centers = grid_ivf(emb, n_cells=_N_CELLS, iters=_ITERS)
     queries = emb.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("q_id"), "embedding"
     )
-    probes = _grid_probes(queries, centers)
+    probes = grid_probes(queries, centers, n_probe=_N_PROBE)
     cand = probes.join(cells, on="cell").select("q_id", "vec_id")
     return _recall_vs_brute(cand, queries, emb)
 
@@ -643,7 +593,10 @@ def q_ann_recall_ivf_layout(spark, sf_dir):
     cells), never a corpus scan."""
     import tempfile
 
-    from incubator_flink_old_spark.operators.similarity import grid_ivf
+    from incubator_flink_old_spark.operators.similarity import (
+        grid_ivf,
+        grid_probes,
+    )
 
     emb = t(spark, sf_dir, "embeddings")
     cells, centers = grid_ivf(emb, n_cells=_N_CELLS, iters=_ITERS)
@@ -658,7 +611,7 @@ def q_ann_recall_ivf_layout(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("q_id"), "embedding"
     )
-    probes = _grid_probes(queries, centers)
+    probes = grid_probes(queries, centers, n_probe=_N_PROBE)
     cand = stored.join(probes, on="cell").select("q_id", "vec_id")
     return _recall_vs_brute(cand, queries, emb)
 
@@ -781,80 +734,16 @@ def _recall_pq_oracle() -> str:
     """
 
 
-@register("q_ann_recall_pq", oracle=_recall_pq_oracle())
-def q_ann_recall_pq(spark, sf_dir):
-    """MEASURED PQ recall@5 — the compression-accuracy trade of
-    product-quantized search as a value: each vector is reduced to m=4
-    subspace codes (64× smaller than the float payload), queries scan
-    the compressed codes via ADC (per-subspace distance tables, lookup
-    sums), and the row reports how many of the exact top-5 survive. The
-    ENTIRE pipeline — per-subspace k-means training, encoding, distance
-    tables, ADC sums, and the exact-L2 baseline — is integer-grid exact
-    (squared L2 on floor-quantized vectors; truncated-mean centroids),
-    so the SQL oracle replays it value-level, extending the grid_ivf
-    recipe to the operators/similarity.grid_pq product quantizer. The
-    exact baseline ranks by full-dimension integer squared L2, so both
-    rankings live in the same metric. Scale: ADC is a broadcast-dtab
-    scan over m small ints per vector — the memory-resident rerank tier
-    at billion scale."""
+def _recall_vs_exact_l2(approx_top, qg, eg):
+    """Count the overlap of approximate (q_id, vec_id) top-k pairs with
+    the exact top-k by full-dimension integer squared L2 over the grid
+    vectors → (q_id, hits, recall): the PQ recall rows' shared tail
+    (``qg`` = (q_id, qk) queries, ``eg`` = (vec_id, k) corpus)."""
     from incubator_flink_old_spark.operators.similarity import (
         as_double_array,
-        grid_pq,
         grid_sqdist,
     )
 
-    emb = t(spark, sf_dir, "embeddings")
-    codes, books = grid_pq(
-        emb, m=_PQ_M, n_centroids=_PQ_CENTROIDS, iters=_PQ_ITERS, dim=_DIM
-    )
-    eg = emb.select(
-        "vec_id",
-        F.transform(
-            as_double_array("embedding"),
-            lambda x: F.floor(x * F.lit(1_000_000.0)).cast("long"),
-        ).alias("k"),
-    )
-    qg = eg.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("k").alias("qk")
-    )
-    qsubs = qg.select(
-        "q_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("j"),
-                        F.slice("qk", j * _PQ_SUB + 1, _PQ_SUB).alias("sv"),
-                    )
-                    for j in range(_PQ_M)
-                ]
-            )
-        ).alias("js"),
-    ).select("q_id", F.col("js.j").alias("j"), F.col("js.sv").alias("sv"))
-    dtab = qsubs.join(F.broadcast(books), on="j").select(
-        "q_id",
-        "j",
-        "cid",
-        grid_sqdist(as_double_array("sv"), as_double_array("bv")).alias("d"),
-    )
-    adist = (
-        codes.join(
-            F.broadcast(dtab),
-            on=[codes["j"] == dtab["j"], codes["code"] == dtab["cid"]],
-        )
-        .groupBy("q_id", "vec_id")
-        .agg(F.sum("d").alias("ad"))
-    )
-    approx_top = (
-        adist.withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("q_id").orderBy("ad", "vec_id")
-            ),
-        )
-        .filter(F.col("rn") <= _TOPK)
-        .select("q_id", "vec_id")
-    )
     exact_top = (
         F.broadcast(qg)
         .crossJoin(eg)
@@ -886,3 +775,39 @@ def q_ann_recall_pq(spark, sf_dir):
             ),
         )
     )
+
+
+@register("q_ann_recall_pq", oracle=_recall_pq_oracle())
+def q_ann_recall_pq(spark, sf_dir):
+    """MEASURED PQ recall@5 — the compression-accuracy trade of
+    product-quantized search as a value: each vector is reduced to m=4
+    subspace codes (64× smaller than the float payload), queries scan
+    the compressed codes via ADC (per-subspace distance tables, lookup
+    sums), and the row reports how many of the exact top-5 survive. The
+    ENTIRE pipeline — per-subspace k-means training, encoding, distance
+    tables, ADC sums, and the exact-L2 baseline — is integer-grid exact
+    (squared L2 on floor-quantized vectors; truncated-mean centroids),
+    so the SQL oracle replays it value-level, extending the grid_ivf
+    recipe to the operators/similarity.grid_pq product quantizer. The
+    exact baseline ranks by full-dimension integer squared L2, so both
+    rankings live in the same metric. Scale: ADC is a broadcast-dtab
+    scan over m small ints per vector — the memory-resident rerank tier
+    at billion scale."""
+    from incubator_flink_old_spark.operators.similarity import (
+        grid_adc_topk,
+        grid_pq,
+        grid_quantize,
+    )
+
+    emb = t(spark, sf_dir, "embeddings")
+    codes, books = grid_pq(
+        emb, m=_PQ_M, n_centroids=_PQ_CENTROIDS, iters=_PQ_ITERS
+    )
+    eg = emb.select("vec_id", grid_quantize("embedding").alias("k"))
+    qg = eg.filter(F.col("vec_id") < _N_QUERIES).select(
+        F.col("vec_id").alias("q_id"), F.col("k").alias("qk")
+    )
+    approx_top = grid_adc_topk(qg, codes, books, k=_TOPK).select(
+        "q_id", "vec_id"
+    )
+    return _recall_vs_exact_l2(approx_top, qg, eg)

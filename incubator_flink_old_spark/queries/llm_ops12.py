@@ -204,121 +204,47 @@ def q_ann_recall_ivfpq(spark, sf_dir):
     corpus size; nothing rescans the full corpus but the one-time
     training/encoding pass."""
     from incubator_flink_old_spark.operators.similarity import (
-        as_double_array,
+        grid_adc_topk,
         grid_ivf,
         grid_pq,
-        grid_sqdist,
+        grid_probes,
+        grid_quantize,
     )
     from incubator_flink_old_spark.queries.llm_ops11 import (
-        _DIM,
         _ITERS,
         _N_CELLS,
+        _N_PROBE,
         _N_QUERIES,
         _PQ_CENTROIDS,
         _PQ_ITERS,
         _PQ_M,
-        _PQ_SUB,
         _TOPK,
-        _grid_probes,
+        _recall_vs_exact_l2,
     )
-    from pyspark.sql import Window
 
     emb = t(spark, sf_dir, "embeddings")
     cells, centers = grid_ivf(emb, n_cells=_N_CELLS, iters=_ITERS)
     codes, books = grid_pq(
-        emb, m=_PQ_M, n_centroids=_PQ_CENTROIDS, iters=_PQ_ITERS, dim=_DIM
+        emb, m=_PQ_M, n_centroids=_PQ_CENTROIDS, iters=_PQ_ITERS
     )
-    eg = emb.select(
-        "vec_id",
-        F.transform(
-            as_double_array("embedding"),
-            lambda x: F.floor(x * F.lit(1_000_000.0)).cast("long"),
-        ).alias("k"),
-    )
+    eg = emb.select("vec_id", grid_quantize("embedding").alias("k"))
     qg = eg.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("k").alias("qk")
     )
     queries = emb.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("q_id"), "embedding"
     )
-    # coarse prune: candidates = vectors in the probed cells
-    probes = _grid_probes(queries, centers)
-    cand = probes.join(cells, on="cell").select("q_id", "vec_id")
-    # ADC over the pruned set only
-    qsubs = qg.select(
-        "q_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("j"),
-                        F.slice("qk", j * _PQ_SUB + 1, _PQ_SUB).alias("sv"),
-                    )
-                    for j in range(_PQ_M)
-                ]
-            )
-        ).alias("js"),
-    ).select("q_id", F.col("js.j").alias("j"), F.col("js.sv").alias("sv"))
-    dtab = qsubs.join(F.broadcast(books), on="j").select(
-        "q_id",
-        "j",
-        "cid",
-        grid_sqdist(as_double_array("sv"), as_double_array("bv")).alias("d"),
-    )
-    adist = (
-        codes.join(F.broadcast(cand), on="vec_id")
-        .join(
-            F.broadcast(dtab),
-            on=[
-                codes["j"] == dtab["j"],
-                codes["code"] == dtab["cid"],
-                cand["q_id"] == dtab["q_id"],
-            ],
-        )
-        .groupBy(cand["q_id"].alias("q_id"), "vec_id")
-        .agg(F.sum("d").alias("ad"))
-    )
-    approx_top = (
-        adist.withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("q_id").orderBy("ad", "vec_id")
-            ),
-        )
-        .filter(F.col("rn") <= _TOPK)
+    # coarse prune: candidates = vectors in the probed cells; ADC scores
+    # the pruned set only
+    cand = (
+        grid_probes(queries, centers, n_probe=_N_PROBE)
+        .join(cells, on="cell")
         .select("q_id", "vec_id")
     )
-    exact_top = (
-        F.broadcast(qg)
-        .crossJoin(eg)
-        .select(
-            "q_id",
-            "vec_id",
-            grid_sqdist(as_double_array("qk"), as_double_array("k")).alias("d"),
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("q_id").orderBy("d", "vec_id")
-            ),
-        )
-        .filter(F.col("rn") <= _TOPK)
-        .select("q_id", "vec_id")
+    approx_top = grid_adc_topk(qg, codes, books, k=_TOPK, cand=cand).select(
+        "q_id", "vec_id"
     )
-    return (
-        exact_top.join(
-            approx_top.withColumn("__hit", F.lit(1)),
-            on=["q_id", "vec_id"],
-            how="left",
-        )
-        .groupBy("q_id")
-        .agg(
-            F.count("__hit").alias("hits"),
-            (F.count("__hit").cast("double") / F.lit(float(_TOPK))).alias(
-                "recall"
-            ),
-        )
-    )
+    return _recall_vs_exact_l2(approx_top, qg, eg)
 
 
 # --------------------------------------------------------------------------

@@ -92,6 +92,7 @@ def _ivfsq8_recall_df(spark, sf_dir, n_probe: int | None = None):
     calls it with n_probe=n_cells (all cells probed ≡ plain SQ8)."""
     from incubator_flink_old_spark.operators.similarity import (
         grid_ivf,
+        grid_probes,
         grid_sqdist,
     )
     from incubator_flink_old_spark.queries.llm_ops11 import (
@@ -100,7 +101,6 @@ def _ivfsq8_recall_df(spark, sf_dir, n_probe: int | None = None):
         _N_PROBE,
         _N_QUERIES,
         _TOPK,
-        _grid_probes,
     )
     from incubator_flink_old_spark.queries.llm_ops18 import (
         _grid_vec,
@@ -116,7 +116,7 @@ def _ivfsq8_recall_df(spark, sf_dir, n_probe: int | None = None):
         F.col("vec_id").alias("q_id"), "embedding"
     )
     # coarse prune: candidates = vectors in each query's probed cells
-    probes = _grid_probes(queries, centers, n_probe=n_probe)
+    probes = grid_probes(queries, centers, n_probe=n_probe)
     cand = probes.join(cells, on="cell").select("q_id", "vec_id")
     # rank the pruned set by int8-code distance (ONE equi-join on
     # vec_id; the tiny query-code side broadcasts)

@@ -185,7 +185,7 @@ def _hybrid_topk(
     ``n_probe`` widened to n_cells makes the dense arm an unpruned scan
     (the all-cells composition law). ``index`` injects a PREBUILT
     (cells, centers) pair — in production the IVF index is a table
-    maintained by grid_assign deltas (q_ivf_incremental), amortized
+    maintained by grid_assign_map deltas (q_ivf_incremental), amortized
     across every query, not rebuilt per query; None retrains inline
     (the self-contained driver-row form). ``codes`` likewise injects a
     prebuilt (codes_df, bounds) SQ8 pair (maintained by
@@ -508,19 +508,18 @@ def _refine_ranked(
     shortlist tails below depend on (n_probe, refine_c)."""
     from pyspark.sql import Window
 
-    from incubator_flink_old_spark.operators.similarity import grid_sqdist
-    from incubator_flink_old_spark.queries.llm_ops11 import (
-        _N_PROBE,
-        _TOPK,
-        _grid_probes,
+    from incubator_flink_old_spark.operators.similarity import (
+        grid_probes,
+        grid_sqdist,
     )
+    from incubator_flink_old_spark.queries.llm_ops11 import _N_PROBE, _TOPK
 
     n_probe = _N_PROBE if n_probe is None else n_probe
     if artifacts is None:
         artifacts = _serve_artifacts(spark, sf_dir)
     cells, centers = artifacts["cells"], artifacts["centers"]
     codes, qcodes = artifacts["codes"], artifacts["qcodes"]
-    probes = _grid_probes(artifacts["queries"], centers, n_probe=n_probe)
+    probes = grid_probes(artifacts["queries"], centers, n_probe=n_probe)
     cand = probes.join(cells, on="cell").select("q_id", "vec_id")
     # stage A: compressed scan — rank the probed pool by int8 codes,
     # keep the refine_c shortlist (the only corpus-shaped work, at 8x
@@ -658,7 +657,7 @@ def q_ivf_incremental(spark, sf_dir):
     analog for the ANN layout: the coarse quantizer is trained on the
     base corpus only (vec_id % 5 != 4), then a 20% delta batch of
     newly-arrived vectors is absorbed by assigning each to its nearest
-    FROZEN center (operators/similarity.grid_assign — the same
+    FROZEN center (operators/similarity.grid_assign_map — the same
     quantization and ranking arithmetic training used, so incremental ≡
     batch assignment by construction, law-pinned in
     tests/test_wave41.py). The row reports per cell how the delta
@@ -675,7 +674,7 @@ def q_ivf_incremental(spark, sf_dir):
     on the filtered base plus the frozen-center assignment of the full
     table, value-exactly."""
     from incubator_flink_old_spark.operators.similarity import (
-        grid_assign,
+        grid_assign_map,
         grid_ivf,
     )
     from incubator_flink_old_spark.queries.llm_ops11 import (
@@ -688,8 +687,9 @@ def q_ivf_incremental(spark, sf_dir):
     base = emb.filter(is_base)
     delta = emb.filter(~is_base)
     _, centers = grid_ivf(base, n_cells=_N_CELLS, iters=_ITERS)
-    ab = grid_assign(base, centers).withColumn("is_base", F.lit(True))
-    ad = grid_assign(delta, centers).withColumn("is_base", F.lit(False))
+    rows = centers.collect()  # bounded: n_cells rows
+    ab = grid_assign_map(base, rows).withColumn("is_base", F.lit(True))
+    ad = grid_assign_map(delta, rows).withColumn("is_base", F.lit(False))
     return (
         ab.unionByName(ad)
         .groupBy("cell")

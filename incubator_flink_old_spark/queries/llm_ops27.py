@@ -152,12 +152,12 @@ def _pq_incremental_oracle() -> str:
 @register("q_pq_incremental", oracle=_pq_incremental_oracle())
 def q_pq_incremental(spark, sf_dir):
     """PQ index maintenance — delta vectors encoded against FROZEN
-    codebooks (operators/similarity.grid_pq_encode), completing the
+    codebooks (operators/similarity.grid_pq_encode_map), completing the
     maintenance matrix: IVF frozen-center assign (q_ivf_incremental),
     BM25 stats merge (q_bm25_incremental), SQ8 frozen-bounds encode
     (q_sq8_incremental), and now the PQ codebook tier. The codebooks
     train on the 80% base corpus only; the 20% delta is absorbed by a
-    broadcast-join assignment — cost scales with the delta, never the
+    map-only nearest-code fold — cost scales with the delta, never the
     corpus (the absorb-vs-retrain shape tools/maintenance_probe.py
     measures FLAT under 16x growth for the siblings).
 
@@ -173,13 +173,12 @@ def q_pq_incremental(spark, sf_dir):
     qerr sums ride BIGINT on both engines (per-row d < 2^53 but the
     SUM may not be — the dot_long lesson).
 
-    Scale: books are m·n_centroids rows, always broadcast; the delta
-    encode is map-shaped (no shuffle of the corpus, one row_number per
-    (vector, subspace) over an m·n_centroids-wide candidate set); the
-    audit output is ≤ m·n_centroids rows."""
+    Scale: books are m·n_centroids rows, collected and embedded in the
+    plan; the delta encode is a pure map (no join, no window, no
+    shuffle of the corpus); the audit output is ≤ m·n_centroids rows."""
     from incubator_flink_old_spark.operators.similarity import (
         grid_pq,
-        grid_pq_encode,
+        grid_pq_encode_map,
     )
     from incubator_flink_old_spark.queries.llm_ops11 import (
         _PQ_CENTROIDS,
@@ -195,7 +194,7 @@ def q_pq_incremental(spark, sf_dir):
         n_centroids=_PQ_CENTROIDS,
         iters=_PQ_ITERS,
     )
-    denc = grid_pq_encode(emb.filter(~is_base), books, m=_PQ_M)
+    denc = grid_pq_encode_map(emb.filter(~is_base), books.collect(), m=_PQ_M)
     return denc.groupBy("j", "code").agg(
         F.count(F.lit(1)).alias("n_delta"),
         F.sum("qerr").alias("qerr"),
@@ -339,7 +338,7 @@ def q_retrieval_lifecycle(spark, sf_dir):
     against the maintained index over the full union:
 
     - IVF: centers train on base (grid_ivf); delta vectors land in
-      their cells via grid_assign against the FROZEN centers
+      their cells via grid_assign_map against the FROZEN centers
       (q_ivf_incremental's absorb path).
     - SQ8: quantizer bounds freeze on base (_sq_bounds); the union
       encodes against them with boundary clamping (q_sq8_incremental).
@@ -366,7 +365,7 @@ def q_retrieval_lifecycle(spark, sf_dir):
         merge_bm25_stats,
     )
     from incubator_flink_old_spark.operators.similarity import (
-        grid_assign,
+        grid_assign_map,
         grid_ivf,
     )
     from incubator_flink_old_spark.queries.llm_ops11 import _ITERS, _N_CELLS
@@ -388,7 +387,7 @@ def q_retrieval_lifecycle(spark, sf_dir):
         emb.filter(is_base), n_cells=_N_CELLS, iters=_ITERS
     )
     mcells = bcells.select("vec_id", "cell").unionByName(
-        grid_assign(emb.filter(~is_base), centers)
+        grid_assign_map(emb.filter(~is_base), centers.collect())
     )
 
     # SQ8 maintained: frozen base bounds, clamped union encode
@@ -817,14 +816,15 @@ def _prefix_refine_recall_df(spark, sf_dir, refine_c=None, prefix=None):
 
     from incubator_flink_old_spark.operators.similarity import (
         grid_ivf,
+        grid_probes,
         grid_sqdist,
     )
     from incubator_flink_old_spark.queries.llm_ops11 import (
         _ITERS,
         _N_CELLS,
+        _N_PROBE,
         _N_QUERIES,
         _TOPK,
-        _grid_probes,
     )
     from incubator_flink_old_spark.queries.llm_ops18 import _grid_vec
     from incubator_flink_old_spark.queries.llm_ops26 import _REFINE_C
@@ -837,7 +837,7 @@ def _prefix_refine_recall_df(spark, sf_dir, refine_c=None, prefix=None):
     queries = emb.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("q_id"), "embedding"
     )
-    probes = _grid_probes(queries, centers)
+    probes = grid_probes(queries, centers, n_probe=_N_PROBE)
     cand = probes.join(cells, on="cell").select("q_id", "vec_id")
     # stage A: prefix-dim scan — the only corpus-shaped read, at
     # (prefix/dim)x the bytes of the full vectors

@@ -54,10 +54,10 @@ def _drift_retrain_df(spark, sf_dir, shift=_DRIFT_SHIFT):
     """Shared body of q_drift_retrain; the law tests call it with
     shift=0.0 to prove the gate does NOT trip in-distribution."""
     from incubator_flink_old_spark.operators.similarity import (
-        grid_assign,
+        grid_assign_map,
         grid_ivf,
         grid_pq,
-        grid_pq_encode,
+        grid_pq_encode_map,
     )
     from incubator_flink_old_spark.queries.llm_ops11 import (
         _ITERS,
@@ -82,7 +82,7 @@ def _drift_retrain_df(spark, sf_dir, shift=_DRIFT_SHIFT):
     # Frozen coarse tier + maintained assignment (the absorb path)
     bcells, centers = grid_ivf(base, n_cells=_N_CELLS, iters=_ITERS)
     ma = bcells.select("vec_id", "cell").unionByName(
-        grid_assign(delta, centers)
+        grid_assign_map(delta, centers.collect())
     )
 
     # Audit 1 — cell skew over the maintained assignment: worst
@@ -118,8 +118,9 @@ def _drift_retrain_df(spark, sf_dir, shift=_DRIFT_SHIFT):
     _, books = grid_pq(
         base, m=_PQ_M, n_centroids=_PQ_CENTROIDS, iters=_PQ_ITERS
     )
-    benc = grid_pq_encode(base, books, m=_PQ_M)
-    denc = grid_pq_encode(delta, books, m=_PQ_M)
+    books_rows = books.collect()  # bounded: m·n_centroids rows
+    benc = grid_pq_encode_map(base, books_rows, m=_PQ_M)
+    denc = grid_pq_encode_map(delta, books_rows, m=_PQ_M)
     dq = denc.agg(F.sum("qerr").alias("ds"), F.count(F.lit(1)).alias("dn"))
     bq = benc.agg(F.sum("qerr").alias("bs"), F.count(F.lit(1)).alias("bn"))
     # 1-row frame, pinned for the same double-execution reason (its

@@ -70,19 +70,16 @@ def _dense_mrr(spark, sf_dir, n_probe: int = _N_PROBE, mask_mod=_DENSE_MASK_MOD)
         as_double_array,
         cosine,
         grid_ivf,
+        grid_probes,
     )
-    from incubator_flink_old_spark.queries.llm_ops11 import _grid_probes
 
     emb = t(spark, sf_dir, "embeddings")
     cells, centers = grid_ivf(emb, n_cells=_N_CELLS, iters=_ITERS)
     queries = _masked_queries(emb, mask_mod)
-    # the house probe recipe verbatim (_grid_probes quantizes and ranks
-    # the "embedding" column) — the masked qv IS this row's embedding
-    probes = _grid_probes(
-        queries.select("q_id", F.col("qv").alias("embedding")),
-        centers,
-        n_probe=n_probe,
-    ).join(queries, on="q_id")
+    # the house probe recipe over the masked query vector qv
+    probes = grid_probes(queries, centers, n_probe=n_probe, vec="qv").join(
+        queries, on="q_id"
+    )
     cvec = emb.select("vec_id", as_double_array("embedding").alias("v"))
     ranked = (
         probes.join(cells, on="cell")
@@ -1020,14 +1017,15 @@ def _rp_recall_df(spark, sf_dir, refine_c=None):
     refine_c ≥ pool to prove exact-over-cells."""
     from incubator_flink_old_spark.operators.similarity import (
         grid_ivf,
+        grid_probes,
         grid_sqdist,
     )
     from incubator_flink_old_spark.queries.llm_ops11 import (
         _ITERS,
         _N_CELLS,
+        _N_PROBE,
         _N_QUERIES,
         _TOPK,
-        _grid_probes,
     )
     from incubator_flink_old_spark.queries.llm_ops18 import _grid_vec
     from incubator_flink_old_spark.queries.llm_ops26 import _REFINE_C
@@ -1039,7 +1037,7 @@ def _rp_recall_df(spark, sf_dir, refine_c=None):
     queries = emb.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("q_id"), "embedding"
     )
-    probes = _grid_probes(queries, centers)
+    probes = grid_probes(queries, centers, n_probe=_N_PROBE)
     cand = probes.join(cells, on="cell").select("q_id", "vec_id")
     # stage A: 16-dim RP-sketch scan over the probed pool
     rp = eg.select("vec_id", _rp_vec(F.col("k")).alias("r"))

@@ -262,7 +262,7 @@ def _sem_absorb_cte_block() -> str:
     against the corpus0-trained index (the _grid_ivf_ctes replay); the
     oracle then RECOMPUTES wave 2's index as the frozen-center
     assignment of the UNION corpus (corpus0 ∪ wave-1 absorbs) — the
-    engine path under test absorbs by grid_assign APPEND, so their
+    engine path under test absorbs by grid_assign_map APPEND, so their
     verdict equality is exactly the delta-absorb ≡ recompute claim
     (q_ivf_incremental's law, promoted to a driver-checked row through
     the whole front door). Centers are trained ONCE on corpus0 in both
@@ -347,7 +347,7 @@ def q_semantic_absorb_parity(spark, sf_dir):
     ONCE on the base corpus (vec_id % 5 ≤ 2) and frozen; wave 1
     (% 5 = 3) is gated on quality + lang + the IVF-probed semantic
     screen against that index; its ABSORBED documents' embeddings are
-    delta-assigned to the FROZEN centers (grid_assign — the map-only
+    delta-assigned to the FROZEN centers (grid_assign_map — the map-only
     q_ivf_incremental recipe, NO re-train, NO corpus re-assignment)
     and APPENDED to the standing (vec_id, cell) layout; wave 2
     (% 5 = 4) is then screened from the ABSORBED index — a wave-2
@@ -369,7 +369,7 @@ def q_semantic_absorb_parity(spark, sf_dir):
     from pyspark.storagelevel import StorageLevel
 
     from incubator_flink_old_spark.operators.similarity import (
-        grid_assign,
+        grid_assign_map,
         grid_ivf,
         semantic_screen_events,
     )
@@ -440,7 +440,9 @@ def q_semantic_absorb_parity(spark, sf_dir):
             ).select(F.col("doc_id").alias("vec_id")),
             on="vec_id",
         )
-        cells1 = cells0.unionByName(grid_assign(adm1_emb, centers))
+        cells1 = cells0.unionByName(
+            grid_assign_map(adm1_emb, centers.collect())
+        )
         emb1 = corpus0_emb.unionByName(adm1_emb)
         sem2 = semi(
             semantic_screen_events(
@@ -686,7 +688,7 @@ def q_stream_semantic_absorb_parity(spark, sf_dir):
     two new pieces into the operating state: wave 1 is gated and
     absorbed batch-side exactly as in q_semantic_absorb_parity (frozen
     corpus0-trained centers, admitted embeddings delta-assigned by the
-    grid_assign map and APPENDED), then wave 2 arrives as a REAL 3-file
+    grid_assign_map and APPENDED), then wave 2 arrives as a REAL 3-file
     event-time replay and its semantic screen executes as the PURE-MAP
     probe (semantic_screen_events_map) whose static sides ARE the
     absorbed (cells, vectors) artifacts — the index a wave just updated
@@ -714,7 +716,7 @@ def q_stream_semantic_absorb_parity(spark, sf_dir):
     from pyspark.storagelevel import StorageLevel
 
     from incubator_flink_old_spark.operators.similarity import (
-        grid_assign,
+        grid_assign_map,
         grid_ivf,
         semantic_screen_events,
         semantic_screen_events_map,
@@ -789,7 +791,7 @@ def q_stream_semantic_absorb_parity(spark, sf_dir):
         # re-evaluate unpinned static plans per micro-batch — the
         # materialize_static lesson applied to absorbed artifacts).
         cells1 = cells0.unionByName(
-            grid_assign(adm1_emb, centers)
+            grid_assign_map(adm1_emb, centers_rows)
         ).persist(StorageLevel.DISK_ONLY)
         emb1 = corpus0_emb.unionByName(adm1_emb).persist(
             StorageLevel.DISK_ONLY

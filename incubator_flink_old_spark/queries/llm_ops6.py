@@ -154,12 +154,12 @@ def q_sim_pq_topk(spark, sf_dir):
     vectors, (a) ADC ranks the query's own vector top-1 and (b) ADC
     top-5 overlaps exact brute-force top-5. Contract calibration: this
     fixture's embeddings carry no neighbor structure beyond identity —
-    non-self cosines sit at a ≈0.2 noise floor while the self ADC score
-    is 0.56-0.59 (measured at sf0.01 AND sf0.1), so (a) holds with a
-    >2× margin and is partition-stable, while any fixed overlap bar
-    above "self is found by both" would be grading coin flips among
-    near-ties. The approximation itself is deterministic (lowest-key
-    codebook seeds, fixed Lloyd iterations, tie-broken rankings).
+    the second-best ADC distance is ≥ 2.24× the self distance (measured
+    at sf0.001, sf0.01 AND sf0.1), so (a) holds with a >2× margin and
+    is partition-stable, while any fixed overlap bar above "self is
+    found by both" would be grading coin flips among near-ties. The
+    approximation itself is deterministic (integer-grid codebooks from
+    lowest-key seeds, exact-integer ADC, tie-broken rankings).
     Scale story: the corpus is scanned as m=8 4-bit codes per vector
     (64× smaller than raw float32), queries broadcast their distance
     tables, and a score is m array lookups — the memory-bound ANN path,
@@ -260,8 +260,9 @@ def q_sim_ivfpq_topk(spark, sf_dir):
     partition-pruned scan under a by-cell layout), PQ/ADC compresses HOW
     (m code lookups vs a d-dim float read). Contract (same calibration
     rationale as q_sim_pq_topk): each of 10 corpus queries probes its
-    own cell by construction and ADC ranks its own vector top-1
-    (measured margin >2× over the noise floor at both SFs);
+    own cell by construction and ADC ranks its own vector top-1 (its
+    own codes are its nearest, so no other vector's ADC distance is
+    smaller);
     found_in_probe asserts the probe prune did not lose the true
     nearest neighbor (= self)."""
     from pyspark.sql import Window

@@ -223,7 +223,6 @@ def test_empty_round8_encoders(spark):
     empty delta — the routine no-new-data batch must not throw."""
     from incubator_flink_old_spark.operators.similarity import (
         grid_pq,
-        grid_pq_encode,
         grid_pq_encode_map,
         sq8_encode_map,
     )
@@ -234,7 +233,6 @@ def test_empty_round8_encoders(spark):
     emb = t(spark, sf, "embeddings")
     empty = emb.filter("vec_id < 0")
     _, books = grid_pq(emb, m=4, n_centroids=4, iters=1)
-    assert grid_pq_encode(empty, books, m=4).count() == 0
     assert grid_pq_encode_map(empty, books.collect(), m=4).count() == 0
     from incubator_flink_old_spark.queries.llm_ops18 import (
         _grid_vec,

@@ -273,8 +273,8 @@ def test_ivf_layout_probe_scan_is_partition_pruned(spark, sf_dir):
     from incubator_flink_old_spark.operators.similarity import (
         as_double_array,
         grid_ivf,
+        grid_probes,
     )
-    from incubator_flink_old_spark.queries.llm_ops11 import _grid_probes
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     cells, centers = grid_ivf(emb, n_cells=8, iters=2)
@@ -286,7 +286,7 @@ def test_ivf_layout_probe_scan_is_partition_pruned(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("q_id"), "embedding"
     )
-    cand = stored.join(_grid_probes(queries, centers), on="cell").select(
+    cand = stored.join(grid_probes(queries, centers), on="cell").select(
         "q_id", "vec_id", as_double_array("embedding").alias("v")
     )
     cand.write.format("noop").mode("overwrite").save()

@@ -76,7 +76,7 @@ def test_grid_assign_split_invariant(spark, rows):
     delta separately must equal assigning the union, for ANY split and
     ANY (corpus-derived) centers."""
     from incubator_flink_old_spark.operators.similarity import (
-        grid_assign,
+        grid_assign_map,
         grid_ivf,
     )
 
@@ -89,13 +89,14 @@ def test_grid_assign_split_invariant(spark, rows):
     )
     n_cells = min(2, len(data))
     _, centers = grid_ivf(df, n_cells=n_cells, iters=1)
-    whole = {(r.vec_id, r.cell) for r in grid_assign(df, centers).collect()}
+    rows = centers.collect()
+    whole = {(r.vec_id, r.cell) for r in grid_assign_map(df, rows).collect()}
     parts = {
         (r.vec_id, r.cell)
-        for r in grid_assign(df.filter("is_base"), centers).collect()
+        for r in grid_assign_map(df.filter("is_base"), rows).collect()
     } | {
         (r.vec_id, r.cell)
-        for r in grid_assign(df.filter("NOT is_base"), centers).collect()
+        for r in grid_assign_map(df.filter("NOT is_base"), rows).collect()
     }
     assert parts == whole
 

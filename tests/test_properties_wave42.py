@@ -49,17 +49,17 @@ def test_pq_encode_split_invariant_any_split(spark, rows):
     (corpus-derived) codebooks — codes AND qerr."""
     from incubator_flink_old_spark.operators.similarity import (
         grid_pq,
-        grid_pq_encode,
+        grid_pq_encode_map,
     )
 
     df = _frame(spark, rows)
-    _, books = grid_pq(df, m=2, n_centroids=2, iters=1, dim=4)
-    books = books.localCheckpoint(eager=True)
+    _, books = grid_pq(df, m=2, n_centroids=2, iters=1)
+    books = books.collect()
 
     def enc(d):
         return {
             (r.vec_id, r.j): (r.code, r.qerr)
-            for r in grid_pq_encode(d, books, m=2, dim=4).collect()
+            for r in grid_pq_encode_map(d, books, m=2).collect()
         }
 
     whole = enc(df)
@@ -75,22 +75,20 @@ def test_pq_encode_map_equals_join_any_frame(spark, rows):
     random grids produce far more often than the fixture."""
     from incubator_flink_old_spark.operators.similarity import (
         grid_pq,
-        grid_pq_encode,
         grid_pq_encode_map,
     )
+    from tests.ann_join_reference import grid_pq_encode
 
     df = _frame(spark, rows)
-    _, books = grid_pq(df, m=2, n_centroids=2, iters=1, dim=4)
+    _, books = grid_pq(df, m=2, n_centroids=2, iters=1)
     books = books.localCheckpoint(eager=True)
     joined = {
         (r.vec_id, r.j): (r.code, r.qerr)
-        for r in grid_pq_encode(df, books, m=2, dim=4).collect()
+        for r in grid_pq_encode(df, books).collect()
     }
     mapped = {
         (r.vec_id, r.j): (r.code, r.qerr)
-        for r in grid_pq_encode_map(
-            df, books.collect(), m=2, dim=4
-        ).collect()
+        for r in grid_pq_encode_map(df, books.collect(), m=2).collect()
     }
     assert mapped == joined
 

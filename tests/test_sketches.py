@@ -141,18 +141,20 @@ def test_pq_self_retrieval_and_determinism(spark, sf_dir):
 
 
 def test_pq_codes_shape(spark, sf_dir):
-    from incubator_flink_old_spark.operators.similarity import (
-        pq_codebooks,
-        pq_encode,
-    )
+    from incubator_flink_old_spark.operators.similarity import grid_pq
 
-    emb = load_table(spark, sf_dir, "embeddings").limit(50)
-    books = pq_codebooks(emb, m=8, k=4, kmeans_iters=1)
+    emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 50)
+    codes, books = grid_pq(emb, m=8, n_centroids=4, iters=1)
     assert books.count() == 8 * 4  # m × k centroids
-    codes = pq_encode(emb, books, m=8)
-    bad = codes.filter(
-        (F.size("codes") != 8)
-        | F.exists("codes", lambda c: (c < 1) | (c > 4))
+    per_vec = codes.groupBy("vec_id").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.countDistinct("j").alias("nj"),
+        F.min("code").alias("lo"),
+        F.max("code").alias("hi"),
+    )
+    assert per_vec.count() == emb.count()
+    bad = per_vec.filter(
+        (F.col("n") != 8) | (F.col("nj") != 8) | (F.col("lo") < 1) | (F.col("hi") > 4)
     )
     assert bad.count() == 0
 
@@ -199,7 +201,11 @@ def test_ivf_pq_results_come_from_probed_cells(spark, sf_dir):
     """The probe prune is real: every returned vector lies in one of the
     query's n_probe cells (the equi-join admits nothing else), and self
     is always retrieved (a query probes its own cell by construction)."""
-    from incubator_flink_old_spark.operators.similarity import ivf_pq_topk
+    from incubator_flink_old_spark.operators.similarity import (
+        grid_ivf,
+        grid_probes,
+        ivf_pq_topk,
+    )
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 5).select(
@@ -210,6 +216,11 @@ def test_ivf_pq_results_come_from_probed_cells(spark, sf_dir):
     )
     got = _rows(out.select("q_id", "vec_id"))
     assert all((i, i) in set(got) for i in range(5))
+    # the same trainer run standalone gives the probed pool
+    cells, centers = grid_ivf(emb, n_cells=8, iters=2)
+    probes = grid_probes(q, centers, n_probe=2)
+    pool = set(_rows(probes.join(cells, on="cell").select("q_id", "vec_id")))
+    assert set(got) <= pool
     # deterministic under repartitioning
     out2 = ivf_pq_topk(
         q.repartition(3), emb.repartition(7), k=5, n_cells=8, n_probe=2, m=8,

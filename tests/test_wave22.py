@@ -145,7 +145,7 @@ def test_grid_pq_bounds_and_codes(spark, sf_dir):
     from incubator_flink_old_spark.queries import QUERIES, load_all_queries
 
     emb = _emb(spark, sf_dir)
-    codes, books = grid_pq(emb, m=4, n_centroids=8, iters=1, dim=64)
+    codes, books = grid_pq(emb, m=4, n_centroids=8, iters=1)
     n = emb.count()
     assert codes.count() == 4 * n
     bad = codes.filter((F.col("code") < 1) | (F.col("code") > 8)).count()
@@ -171,7 +171,7 @@ def test_grid_pq_saturated_codebook_is_exact(spark, sf_dir):
 
     emb = _emb(spark, sf_dir).filter(F.col("vec_id") < 40)
     n = emb.count()
-    codes, books = grid_pq(emb, m=4, n_centroids=n, iters=1, dim=64)
+    codes, books = grid_pq(emb, m=4, n_centroids=n, iters=1)
     eg = emb.select(
         "vec_id",
         F.transform(

@@ -150,6 +150,7 @@ def test_refine_unbounded_equals_exact_over_cells(spark):
 
     from incubator_flink_old_spark.operators.similarity import (
         grid_ivf,
+        grid_probes,
         grid_sqdist,
     )
     from incubator_flink_old_spark.queries._util import t
@@ -157,8 +158,8 @@ def test_refine_unbounded_equals_exact_over_cells(spark):
         _ITERS,
         _N_CELLS,
         _N_QUERIES,
+        _N_PROBE,
         _TOPK,
-        _grid_probes,
     )
     from incubator_flink_old_spark.queries.llm_ops18 import _grid_vec
     from incubator_flink_old_spark.queries.llm_ops26 import (
@@ -181,8 +182,10 @@ def test_refine_unbounded_equals_exact_over_cells(spark):
     queries = emb.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("q_id"), "embedding"
     )
-    pool = _grid_probes(queries, centers).join(cells, on="cell").select(
-        "q_id", "vec_id"
+    pool = (
+        grid_probes(queries, centers, n_probe=_N_PROBE)
+        .join(cells, on="cell")
+        .select("q_id", "vec_id")
     )
     qk = kd.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("kd").alias("qv")
@@ -224,11 +227,11 @@ def test_grid_assign_incremental_equals_batch(spark):
     """Index-maintenance laws: (1) assignment is row-local, so
     assigning base and delta SEPARATELY to frozen centers equals one
     batch assignment of their union — the property that makes
-    incremental maintenance exact, not approximate; (2) grid_assign
+    incremental maintenance exact, not approximate; (2) grid_assign_map
     against grid_ivf's own centers reproduces grid_ivf's final cells —
     the maintenance path and the training path share one arithmetic."""
     from incubator_flink_old_spark.operators.similarity import (
-        grid_assign,
+        grid_assign_map,
         grid_ivf,
     )
     from incubator_flink_old_spark.queries._util import t
@@ -241,20 +244,21 @@ def test_grid_assign_incremental_equals_batch(spark):
     base = emb.filter(F.col("vec_id") % 5 != 4)
     delta = emb.filter(F.col("vec_id") % 5 == 4)
     cells, centers = grid_ivf(base, n_cells=_N_CELLS, iters=_ITERS)
+    rows = centers.collect()
 
     batch = {
-        (r.vec_id, r.cell) for r in grid_assign(emb, centers).collect()
+        (r.vec_id, r.cell) for r in grid_assign_map(emb, rows).collect()
     }
     incremental = {
-        (r.vec_id, r.cell) for r in grid_assign(base, centers).collect()
-    } | {(r.vec_id, r.cell) for r in grid_assign(delta, centers).collect()}
+        (r.vec_id, r.cell) for r in grid_assign_map(base, rows).collect()
+    } | {(r.vec_id, r.cell) for r in grid_assign_map(delta, rows).collect()}
     assert incremental == batch
 
     # (2) training's own final assignment is reproduced by the
     # maintenance primitive
     trained = {(r.vec_id, r.cell) for r in cells.collect()}
     maintained = {
-        (r.vec_id, r.cell) for r in grid_assign(base, centers).collect()
+        (r.vec_id, r.cell) for r in grid_assign_map(base, rows).collect()
     }
     assert maintained == trained
 
@@ -321,7 +325,7 @@ def test_sq_codes_bounds_injection_identity(spark):
 
 def test_hybrid_prebuilt_index_identity(spark):
     """Index-as-a-table law: injecting a prebuilt (cells, centers) pair
-    — in production maintained by grid_assign deltas and amortized
+    — in production maintained by grid_assign_map deltas and amortized
     across queries — must reproduce the inline-retrain result exactly
     (the index holds the same data either way)."""
     from incubator_flink_old_spark.operators.similarity import grid_ivf
@@ -351,10 +355,10 @@ def test_grid_assign_map_equals_join_form(spark):
     bit-for-bit on every vector — including the strict-improvement
     fold's tie-break matching ROW_NUMBER's (sim desc, cell asc)."""
     from incubator_flink_old_spark.operators.similarity import (
-        grid_assign,
         grid_assign_map,
         grid_ivf,
     )
+    from tests.ann_join_reference import grid_assign
     from incubator_flink_old_spark.queries._util import t
     from incubator_flink_old_spark.queries.llm_ops11 import (
         _ITERS,

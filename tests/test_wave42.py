@@ -134,12 +134,12 @@ def test_stream_topk_state_is_k_bounded(spark):
 
 
 def test_pq_encode_frozen_books_matches_trainer_assignment(spark):
-    """grid_pq_encode against the trainer's own final codebooks must
+    """grid_pq_encode_map against the trainer's own final codebooks must
     reproduce grid_pq's codes exactly — the factored encoder and the
     trainer's last assignment are the same arithmetic."""
     from incubator_flink_old_spark.operators.similarity import (
         grid_pq,
-        grid_pq_encode,
+        grid_pq_encode_map,
     )
     from incubator_flink_old_spark.queries._util import t
     from incubator_flink_old_spark.queries.llm_ops11 import (
@@ -155,7 +155,7 @@ def test_pq_encode_frozen_books_matches_trainer_assignment(spark):
     want = {(r.vec_id, r.j): r.code for r in codes.collect()}
     got = {
         (r.vec_id, r.j): r.code
-        for r in grid_pq_encode(emb, books, m=_PQ_M).collect()
+        for r in grid_pq_encode_map(emb, books.collect(), m=_PQ_M).collect()
     }
     assert got == want
 
@@ -166,7 +166,7 @@ def test_pq_encode_split_invariance(spark):
     batch law the maintenance row rests on (codes AND qerr)."""
     from incubator_flink_old_spark.operators.similarity import (
         grid_pq,
-        grid_pq_encode,
+        grid_pq_encode_map,
     )
     from incubator_flink_old_spark.queries._util import t
     from incubator_flink_old_spark.queries.llm_ops11 import (
@@ -181,12 +181,12 @@ def test_pq_encode_split_invariance(spark):
     _, books = grid_pq(
         base, m=_PQ_M, n_centroids=_PQ_CENTROIDS, iters=_PQ_ITERS
     )
-    books = books.localCheckpoint(eager=True)
+    books = books.collect()
 
     def enc(df):
         return {
             (r.vec_id, r.j): (r.code, r.qerr)
-            for r in grid_pq_encode(df, books, m=_PQ_M).collect()
+            for r in grid_pq_encode_map(df, books, m=_PQ_M).collect()
         }
 
     whole = enc(delta)
@@ -199,10 +199,10 @@ def test_pq_encode_split_invariance(spark):
 def test_trainer_final_assignment_equals_frozen_reassign(spark):
     """grid_ivf's returned cells ARE the assignment against its final
     centers — so the maintained index (trainer cells ∪ frozen-center
-    delta assigns) is exactly grid_assign of the union: the identity
+    delta assigns) is exactly grid_assign_map of the union: the identity
     q_retrieval_lifecycle's maintained `ma` construction rests on."""
     from incubator_flink_old_spark.operators.similarity import (
-        grid_assign,
+        grid_assign_map,
         grid_ivf,
     )
     from incubator_flink_old_spark.queries._util import t
@@ -216,7 +216,8 @@ def test_trainer_final_assignment_equals_frozen_reassign(spark):
     cells, centers = grid_ivf(base, n_cells=_N_CELLS, iters=_ITERS)
     trained = {(r.vec_id, r.cell) for r in cells.select("vec_id", "cell").collect()}
     reassigned = {
-        (r.vec_id, r.cell) for r in grid_assign(base, centers).collect()
+        (r.vec_id, r.cell)
+        for r in grid_assign_map(base, centers.collect()).collect()
     }
     assert trained == reassigned
 
@@ -244,9 +245,9 @@ def test_pq_encode_map_equals_join_form(spark):
     (d asc, cid asc)."""
     from incubator_flink_old_spark.operators.similarity import (
         grid_pq,
-        grid_pq_encode,
         grid_pq_encode_map,
     )
+    from tests.ann_join_reference import grid_pq_encode
     from incubator_flink_old_spark.queries._util import t
     from incubator_flink_old_spark.queries.llm_ops11 import (
         _PQ_CENTROIDS,
@@ -261,7 +262,7 @@ def test_pq_encode_map_equals_join_form(spark):
     rows = books.collect()
     joined = {
         (r.vec_id, r.j): (r.code, r.qerr)
-        for r in grid_pq_encode(emb, books, m=_PQ_M).collect()
+        for r in grid_pq_encode(emb, books).collect()
     }
     mapped = {
         (r.vec_id, r.j): (r.code, r.qerr)

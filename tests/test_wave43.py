@@ -198,15 +198,16 @@ def test_drift_retrain_recall_recovery(spark):
 
     from incubator_flink_old_spark.operators.similarity import (
         as_double_array,
-        grid_assign,
+        grid_assign_map,
         grid_ivf,
+        grid_probes,
         grid_sqdist,
     )
     from incubator_flink_old_spark.queries._util import t
     from incubator_flink_old_spark.queries.llm_ops11 import (
         _ITERS,
         _N_CELLS,
-        _grid_probes,
+        _N_PROBE,
     )
     from incubator_flink_old_spark.queries.llm_ops18 import _grid_vec
     from incubator_flink_old_spark.queries.llm_ops28 import (
@@ -218,7 +219,7 @@ def test_drift_retrain_recall_recovery(spark):
     k = 5
 
     def recall(union_eg, cells, centers, queries):
-        probes = _grid_probes(queries, centers)
+        probes = grid_probes(queries, centers, n_probe=_N_PROBE)
         cand = probes.join(cells, on="cell").select("q_id", "vec_id")
         kd = union_eg.select(
             "vec_id",
@@ -285,7 +286,7 @@ def test_drift_retrain_recall_recovery(spark):
     centers = centers.localCheckpoint(eager=True)
     fcells = (
         bcells.select("vec_id", "cell")
-        .unionByName(grid_assign(delta, centers))
+        .unionByName(grid_assign_map(delta, centers.collect()))
         .localCheckpoint(eager=True)
     )
     rcells, rcenters = grid_ivf(union, n_cells=_N_CELLS, iters=_ITERS)
@@ -481,7 +482,6 @@ def test_stream_drift_audit_equals_batch(spark):
     audit exactly — integer sums are boundary-invariant."""
     from incubator_flink_old_spark.operators.similarity import (
         grid_pq,
-        grid_pq_encode,
         grid_pq_encode_map,
     )
     from incubator_flink_old_spark.queries._util import t
@@ -502,7 +502,7 @@ def test_stream_drift_audit_equals_batch(spark):
     book_rows = books.collect()
     batch = {
         (r.j, r.code): (r.n_delta, r.qerr)
-        for r in grid_pq_encode(emb.filter(~is_base), books, m=_PQ_M)
+        for r in grid_pq_encode_map(emb.filter(~is_base), book_rows, m=_PQ_M)
         .groupBy("j", "code")
         .agg(F.count(F.lit(1)).alias("n_delta"), F.sum("qerr").alias("qerr"))
         .collect()

@@ -346,9 +346,9 @@ def test_semantic_absorption_changes_verdict(spark):
     """The absorption law on a crafted fixture: a wave-2 paraphrase of
     a wave-1 ADMIT is invisible to the frozen standing index but
     caught by the absorbed one — the verdict flip comes from exactly
-    the rows grid_assign appended (frozen centers, no re-train)."""
+    the rows grid_assign_map appended (frozen centers, no re-train)."""
     from incubator_flink_old_spark.operators.similarity import (
-        grid_assign,
+        grid_assign_map,
         grid_ivf,
         semantic_screen_events,
     )
@@ -371,7 +371,7 @@ def test_semantic_absorption_changes_verdict(spark):
     ).collect()
     assert frozen == []  # the paraphrase's partner is not in the corpus
 
-    cells1 = cells0.unionByName(grid_assign(w1, centers))
+    cells1 = cells0.unionByName(grid_assign_map(w1, centers.collect()))
     emb1 = corpus0.unionByName(w1)
     absorbed = semantic_screen_events(
         w2, emb1, n_probe=2, threshold=0.9, index=(cells1, centers)
@@ -388,7 +388,7 @@ def test_semantic_absorb_plan_no_retrain_reads_cached_index(spark):
     from pyspark.storagelevel import StorageLevel
 
     from incubator_flink_old_spark.operators.similarity import (
-        grid_assign,
+        grid_assign_map,
         grid_ivf,
         semantic_screen_events,
     )
@@ -406,7 +406,7 @@ def test_semantic_absorb_plan_no_retrain_reads_cached_index(spark):
     cells0, corpus0 = pinned
     try:
         cells0.count(), corpus0.count()  # materialize the pins
-        cells1 = cells0.unionByName(grid_assign(w1, centers))
+        cells1 = cells0.unionByName(grid_assign_map(w1, centers.collect()))
         sem2 = semantic_screen_events(
             w2,
             corpus0.unionByName(w1),
@@ -645,7 +645,7 @@ def test_stream_semantic_absorb_flips_verdict(spark, tmp_path):
     import time
 
     from incubator_flink_old_spark.operators.similarity import (
-        grid_assign,
+        grid_assign_map,
         grid_ivf,
         semantic_screen_events_map,
     )
@@ -721,7 +721,7 @@ def test_stream_semantic_absorb_flips_verdict(spark, tmp_path):
 
     frozen = run(cells0, corpus0, "t47_sa_frozen")
     merged = run(
-        cells0.unionByName(grid_assign(w1, centers)),
+        cells0.unionByName(grid_assign_map(w1, centers_rows)),
         corpus0.unionByName(w1),
         "t47_sa_merged",
     )

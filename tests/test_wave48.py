@@ -2,11 +2,13 @@
 
 - The literal-array fold size gate: every collected-rows map form
   (grid_assign_map, grid_pq_encode_map, sq8_encode_map,
-  semantic_screen_events_map, and the trainers' internal assigns) must
+  semantic_screen_events_map, the trainers' internal assigns, and the
+  ivf_topk / pq_topk / ivf_pq_topk compositions over them) must
   produce BIT-IDENTICAL results through both arms — the F.expr-parsed
   literal below the element budget and the one-row broadcast frame above
-  it. The budget is monkeypatched to 0 to force the broadcast arm on
-  fixture-sized indexes.
+  it — including on caller frames that already carry a column named
+  like the broadcast arm's helper. The budget is monkeypatched to 0 to
+  force the broadcast arm on fixture-sized indexes.
 - Plan pins: at fixture sizes the fold arm stays literal (no join node
   in the assignment plan); above the budget the plan carries the
   broadcast join instead of a multi-MB parsed literal.
@@ -17,6 +19,10 @@
 - stateful_latest must reject non-integer order columns loudly
   (ADVICE r12: the argmax compares raw values; a float order column
   would silently change tie behavior vs the old int() walk).
+- Bad inputs fail loudly, also under ``python -O``: grid_pq /
+  grid_pq_encode_map reject an m that does not divide d, and
+  minhash_bands rejects _dtoks combined with _sigs/_toksets (ADVICE r13:
+  it used to ignore _dtoks and re-tokenize).
 """
 
 from __future__ import annotations
@@ -46,19 +52,25 @@ def _trained(spark):
 
 def test_grid_assign_map_broadcast_arm_equals_literal(spark, monkeypatch):
     from incubator_flink_old_spark.operators import similarity
-    from incubator_flink_old_spark.operators.similarity import (
-        grid_assign,
-        grid_assign_map,
-    )
+    from incubator_flink_old_spark.operators.similarity import grid_assign_map
+    from tests.ann_join_reference import grid_assign
 
     _, centers = _trained(spark)
     rows = centers.collect()
     emb = _emb(spark)
-    lit_arm = {(r.vec_id, r.cell) for r in grid_assign_map(emb, rows).collect()}
+    # the second input already carries the broadcast arm's helper name
+    frames = (emb, emb.withColumn("__centers", F.lit(1)))
+
+    def arm():
+        return [
+            {(r.vec_id, r.cell) for r in grid_assign_map(df, rows).collect()}
+            for df in frames
+        ]
+
+    lit_arm = arm()
     joined = {(r.vec_id, r.cell) for r in grid_assign(emb, centers).collect()}
     monkeypatch.setattr(similarity, "_FOLD_LITERAL_MAX_ELEMS", 0)
-    bc_arm = {(r.vec_id, r.cell) for r in grid_assign_map(emb, rows).collect()}
-    assert bc_arm == lit_arm == joined
+    assert arm() == lit_arm == [joined, joined]
 
 
 def test_grid_assign_map_plan_arms(spark, monkeypatch):
@@ -87,16 +99,22 @@ def test_grid_pq_encode_map_broadcast_arm_equals_literal(spark, monkeypatch):
     emb = _emb(spark)
     _, books = grid_pq(emb, m=4, n_centroids=4, iters=1)
     rows = books.collect()
-    lit_arm = {
-        (r.vec_id, r.j, r.code, r.qerr)
-        for r in grid_pq_encode_map(emb, rows, m=4).collect()
-    }
+    # the second input's key column has the broadcast arm's helper name
+    inputs = (
+        (emb, "vec_id"),
+        (emb.withColumnRenamed("vec_id", "__books"), "__books"),
+    )
+
+    def arm():
+        return [
+            {tuple(r) for r in grid_pq_encode_map(df, rows, m=4, key=key).collect()}
+            for df, key in inputs
+        ]
+
+    lit_arm = arm()
+    assert lit_arm[0] == lit_arm[1]
     monkeypatch.setattr(similarity, "_FOLD_LITERAL_MAX_ELEMS", 0)
-    bc_arm = {
-        (r.vec_id, r.j, r.code, r.qerr)
-        for r in grid_pq_encode_map(emb, rows, m=4).collect()
-    }
-    assert bc_arm == lit_arm
+    assert arm() == lit_arm
 
 
 def test_sq8_encode_map_broadcast_arm_equals_literal(spark, monkeypatch):
@@ -116,23 +134,57 @@ def test_sq8_encode_map_broadcast_arm_equals_literal(spark, monkeypatch):
         .agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
         .collect()
     )
-    lit_arm = {
-        (r.vec_id, r.p, r.c) for r in sq8_encode_map(emb, bounds).collect()
-    }
+    # the second input already carries the broadcast arm's helper names
+    frames = (emb, emb.withColumn("__lo", F.lit(1)).withColumn("__hi", F.lit(2)))
+
+    def arm():
+        return [
+            {(r.vec_id, r.p, r.c) for r in sq8_encode_map(df, bounds).collect()}
+            for df in frames
+        ]
+
+    lit_arm = arm()
+    assert lit_arm[0] == lit_arm[1]
     monkeypatch.setattr(similarity, "_FOLD_LITERAL_MAX_ELEMS", 0)
-    bc_arm = {
-        (r.vec_id, r.p, r.c) for r in sq8_encode_map(emb, bounds).collect()
-    }
-    assert bc_arm == lit_arm
+    assert arm() == lit_arm
 
 
 def test_grid_trainers_broadcast_arm_equals_literal(spark, monkeypatch):
     """grid_ivf / grid_pq retrain identically through the broadcast arm:
-    same seeds, same per-iteration centers, same final assignment."""
+    same seeds, same per-iteration centers, same final assignment — and
+    the search compositions over them (ivf_topk, pq_topk, ivf_pq_topk)
+    return identical rows through either arm and under input
+    repartitioning."""
     from incubator_flink_old_spark.operators import similarity
-    from incubator_flink_old_spark.operators.similarity import grid_ivf, grid_pq
+    from incubator_flink_old_spark.operators.similarity import (
+        grid_ivf,
+        grid_pq,
+        ivf_pq_topk,
+        ivf_topk,
+        pq_topk,
+    )
 
     emb = _emb(spark)
+    q = emb.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("q_id"), "embedding"
+    )
+
+    def searches(qs, corpus):
+        return [
+            {tuple(r) for r in out.collect()}
+            for out in (
+                ivf_topk(qs, corpus, k=5, n_cells=4, n_probe=2, kmeans_iters=2),
+                pq_topk(qs, corpus, k=5, m=4, n_centroids=4, kmeans_iters=1),
+                ivf_pq_topk(
+                    qs, corpus, k=5, n_cells=4, n_probe=2, m=4,
+                    n_centroids=4, kmeans_iters=1,
+                ),
+            )
+        ]
+
+    found = searches(q, emb)
+    assert all(len(rows) == 5 * 5 for rows in found)
+    assert searches(q.repartition(3), emb.repartition(7)) == found
     cells_l, centers_l = grid_ivf(emb, n_cells=4, iters=2)
     cl = {(r.vec_id, r.cell) for r in cells_l.collect()}
     ctl = {(r.cell, tuple(r.cv)) for r in centers_l.collect()}
@@ -147,6 +199,7 @@ def test_grid_trainers_broadcast_arm_equals_literal(spark, monkeypatch):
     codes_b, books_b = grid_pq(emb, m=4, n_centroids=4, iters=1)
     assert {(r.vec_id, r.j, r.code) for r in codes_b.collect()} == col
     assert {(r.j, r.cid, tuple(r.bv)) for r in books_b.collect()} == bol
+    assert searches(q, emb) == found
 
 
 def test_semantic_screen_events_map_broadcast_arm_equals_literal(
@@ -163,17 +216,26 @@ def test_semantic_screen_events_map_broadcast_arm_equals_literal(
     cells, centers = similarity.grid_ivf(corp, n_cells=4, iters=1)
     rows = centers.collect()
 
-    def run():
+    def run(carry=()):
         return {
             (r.doc_a, r.doc_b, round(r.cos, 12))
             for r in semantic_screen_events_map(
-                new, rows, cells, corp, n_probe=2, threshold=0.3
+                new.withColumn("__centers", F.lit(7)),
+                rows,
+                cells,
+                corp,
+                n_probe=2,
+                threshold=0.3,
+                carry=carry,
             ).collect()
         }
 
     lit_arm = run()
+    # a carry column named like the broadcast arm's helper
+    assert run(carry=("__centers",)) == lit_arm
     monkeypatch.setattr(similarity, "_FOLD_LITERAL_MAX_ELEMS", 0)
     assert run() == lit_arm
+    assert run(carry=("__centers",)) == lit_arm
 
 
 def test_spread_narrow_wide_scan_is_noop(spark):
@@ -240,3 +302,36 @@ def test_stateful_latest_rejects_float_order(spark):
     )
     with pytest.raises(ValueError, match="order column"):
         stateful_latest(df)
+
+
+def test_grid_pq_rejects_m_not_dividing_d(spark):
+    from incubator_flink_old_spark.operators.similarity import (
+        grid_pq,
+        grid_pq_encode_map,
+    )
+
+    emb = _emb(spark)  # 64-dim vectors
+    with pytest.raises(ValueError, match="d=64.*m=3"):
+        grid_pq(emb, m=3, n_centroids=4, iters=1)
+    _, books = grid_pq(emb, m=4, n_centroids=4, iters=1)
+    with pytest.raises(ValueError, match="d=64.*m=3"):
+        grid_pq_encode_map(emb, books.collect(), m=3)
+
+
+def test_minhash_bands_rejects_dtoks_with_sigs_or_toksets(spark):
+    from incubator_flink_old_spark.operators.text import (
+        minhash_bands,
+        minhash_signature,
+        tokens,
+    )
+    from incubator_flink_old_spark.queries._util import t
+
+    docs = t(spark, SF, "documents")
+    dtoks = docs.select("doc_id", tokens("text", distinct=True).alias("__dt"))
+    sigs = minhash_signature(docs, 8)
+    toksets = docs.select(F.col("doc_id").alias("__k"), F.array().alias("__toks"))
+    for extra in ({"_sigs": sigs}, {"_toksets": toksets}):
+        with pytest.raises(ValueError, match="_dtoks"):
+            minhash_bands(docs, 8, 4, _dtoks=dtoks, **extra)
+    # _dtoks alone stays the shared-tokenize path
+    assert minhash_bands(docs, 8, 4, _dtoks=dtoks).count() > 0

@@ -15,7 +15,7 @@ from the DELTA (the region users will actually search next), ground
 truth is exact full-precision top-k over the union.
 
 Pipelines compared (both the SHIPPED operators):
-- absorb: frozen base centers (grid_assign delta) + frozen base SQ8
+- absorb: frozen base centers (grid_assign_map delta) + frozen base SQ8
   bounds (clamped delta encode) → IVF+SQ8+refine retrieval.
 - retrain: Lloyd on the union + union bounds → same retrieval.
 
@@ -50,11 +50,11 @@ def _recall(spark, union_eg, cells, centers, codes, bounds, queries):
     """recall@K of the shipped IVF(+probe)+SQ8+refine chain over the
     given index artifacts, measured on `queries` (q_id, k) against the
     exact full-precision top-K over the union."""
-    from incubator_flink_old_spark.operators.similarity import grid_sqdist
-    from incubator_flink_old_spark.queries.llm_ops11 import (
-        _N_PROBE,
-        _grid_probes,
+    from incubator_flink_old_spark.operators.similarity import (
+        grid_probes,
+        grid_sqdist,
     )
+    from incubator_flink_old_spark.queries.llm_ops11 import _N_PROBE
     from incubator_flink_old_spark.queries.llm_ops26 import _REFINE_C
 
     qk = queries.select(
@@ -63,11 +63,7 @@ def _recall(spark, union_eg, cells, centers, codes, bounds, queries):
     )
     # probe cells with the raw query vector (same machinery as the
     # registered rows: cosine over the grid vector vs centers)
-    probes = _grid_probes(
-        queries.select("q_id", F.col("emb").alias("embedding")),
-        centers,
-        n_probe=_N_PROBE,
-    )
+    probes = grid_probes(queries, centers, n_probe=_N_PROBE, vec="emb")
     cand = probes.join(cells, on="cell").select("q_id", "vec_id")
     qcodes = _encode_query_codes(qk, bounds)
     code_scored = (
@@ -151,7 +147,7 @@ def main() -> None:
 
     from incubator_flink_old_spark import get_spark
     from incubator_flink_old_spark.operators.similarity import (
-        grid_assign,
+        grid_assign_map,
         grid_ivf,
     )
     from incubator_flink_old_spark.queries.llm_ops11 import _ITERS, _N_CELLS
@@ -181,7 +177,7 @@ def main() -> None:
     # ---- frozen (absorb) index artifacts
     bcells, bcenters = grid_ivf(base, n_cells=_N_CELLS, iters=_ITERS)
     bcenters = bcenters.localCheckpoint(eager=True)
-    d_assign = grid_assign(delta, bcenters)
+    d_assign = grid_assign_map(delta, bcenters.collect())
     fcells = bcells.select("vec_id", "cell").unionByName(
         d_assign
     ).localCheckpoint(eager=True)
@@ -278,7 +274,7 @@ def main() -> None:
 def pq_demo(spark, sf_dir: str, shift: float) -> None:
     """The PQ tier's drift loop (round-8 sibling of the IVF+SQ8 demo
     above): absorb a shifted delta with FROZEN codebooks
-    (grid_pq_encode — q_pq_incremental's path), read the qerr audit the
+    (grid_pq_encode_map — q_pq_incremental's path), read the qerr audit the
     row emits, trip a relative threshold (delta mean qerr > 2x base
     mean qerr), retrain on the union, and print ADC top-K recall on
     drifted queries before/after. Ground truth = exact full-precision
@@ -298,7 +294,7 @@ def pq_demo(spark, sf_dir: str, shift: float) -> None:
     codes only ever discriminate within a cell."""
     from incubator_flink_old_spark.operators.similarity import (
         grid_pq,
-        grid_pq_encode,
+        grid_pq_encode_map,
         grid_sqdist,
     )
     from incubator_flink_old_spark.queries.llm_ops11 import (
@@ -409,8 +405,9 @@ def pq_demo(spark, sf_dir: str, shift: float) -> None:
         base, m=_PQ_M, n_centroids=_PQ_CENTROIDS, iters=_PQ_ITERS
     )
     fbooks = fbooks.localCheckpoint(eager=True)
-    enc_base = grid_pq_encode(base, fbooks, m=_PQ_M)
-    enc_delta = grid_pq_encode(delta, fbooks, m=_PQ_M)
+    fbook_rows = fbooks.collect()
+    enc_base = grid_pq_encode_map(base, fbook_rows, m=_PQ_M)
+    enc_delta = grid_pq_encode_map(delta, fbook_rows, m=_PQ_M)
     qb = enc_base.agg(F.avg("qerr")).first()[0]
     qd = enc_delta.agg(F.avg("qerr")).first()[0]
     trip = qd > 2.0 * qb

@@ -12,7 +12,7 @@ i.e. the delta is FIXED-SIZE while the base grows, which is the
 steady-state shape of an append-heavy 100 TB table. Both sides are
 materialized parquet so timings measure compute, not lineage replay.
 
-All paths are the SHIPPED operators (grid_ivf / grid_assign /
+All paths are the SHIPPED operators (grid_ivf / grid_assign_map /
 bm25_index_stats / merge_bm25_stats / _sq_bounds / _sq_codes).
 
 Usage: python tools/maintenance_probe.py [N_scale]   (default 16)
@@ -63,7 +63,7 @@ def _probe(spark, sf_dir: str, n_scale: int, out: str) -> None:
         merge_bm25_stats,
     )
     from incubator_flink_old_spark.operators.similarity import (
-        grid_assign,
+        grid_assign_map,
         grid_ivf,
     )
     from incubator_flink_old_spark.queries.llm_ops11 import _ITERS, _N_CELLS
@@ -134,13 +134,11 @@ def _probe(spark, sf_dir: str, n_scale: int, out: str) -> None:
         nb, nd = ebase.count(), edelta.count()
 
         # --- IVF: retrain Lloyd on the union vs assign delta to frozen
-        centers = grid_ivf(ebase, n_cells=_N_CELLS, iters=_ITERS)[
-            1
-        ].localCheckpoint(eager=True)
+        centers = grid_ivf(ebase, n_cells=_N_CELLS, iters=_ITERS)[1].collect()
         t_retrain = _best(
             lambda: grid_ivf(eunion, n_cells=_N_CELLS, iters=_ITERS)[0]
         )
-        t_assign = _best(lambda: grid_assign(edelta, centers))
+        t_assign = _best(lambda: grid_assign_map(edelta, centers))
         print(
             f"scale={scale} base={nb:,} delta={nd:,} IVF: "
             f"retrain={t_retrain:.2f}s assign_delta={t_assign:.2f}s "
@@ -190,7 +188,7 @@ def _probe(spark, sf_dir: str, n_scale: int, out: str) -> None:
         # delta encode (the round-8 tier, q_pq_incremental)
         from incubator_flink_old_spark.operators.similarity import (
             grid_pq,
-            grid_pq_encode,
+            grid_pq_encode_map,
         )
         from incubator_flink_old_spark.queries.llm_ops11 import (
             _PQ_CENTROIDS,
@@ -200,13 +198,13 @@ def _probe(spark, sf_dir: str, n_scale: int, out: str) -> None:
 
         books = grid_pq(
             ebase, m=_PQ_M, n_centroids=_PQ_CENTROIDS, iters=_PQ_ITERS
-        )[1].localCheckpoint(eager=True)
+        )[1].collect()
         t_pq_retrain = _best(
             lambda: grid_pq(
                 eunion, m=_PQ_M, n_centroids=_PQ_CENTROIDS, iters=_PQ_ITERS
             )[0]
         )
-        t_pq_delta = _best(lambda: grid_pq_encode(edelta, books, m=_PQ_M))
+        t_pq_delta = _best(lambda: grid_pq_encode_map(edelta, books, m=_PQ_M))
         print(
             f"scale={scale} PQ: retrain+encode={t_pq_retrain:.2f}s "
             f"delta_frozen={t_pq_delta:.2f}s "

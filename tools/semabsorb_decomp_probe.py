@@ -67,7 +67,7 @@ def batch_row(spark):
     from pyspark.storagelevel import StorageLevel
 
     from incubator_flink_old_spark.operators.similarity import (
-        grid_assign,
+        grid_assign_map,
         grid_ivf,
         semantic_screen_events,
     )
@@ -129,7 +129,7 @@ def batch_row(spark):
         ).select(F.col("doc_id").alias("vec_id")),
         on="vec_id",
     )
-    cells1 = cells0.unionByName(grid_assign(adm1_emb, centers))
+    cells1 = cells0.unionByName(grid_assign_map(adm1_emb, centers.collect()))
     emb1 = corpus0_emb.unionByName(adm1_emb)
     sem2 = semi(
         semantic_screen_events(
@@ -167,7 +167,7 @@ def stream_row(spark, absorb: bool):
     from pyspark.storagelevel import StorageLevel
 
     from incubator_flink_old_spark.operators.similarity import (
-        grid_assign,
+        grid_assign_map,
         grid_ivf,
         semantic_screen_events,
         semantic_screen_events_map,
@@ -227,7 +227,7 @@ def stream_row(spark, absorb: bool):
                 .select(F.col("doc_id").alias("vec_id")),
                 on="vec_id",
             )
-            cells1 = cells0.unionByName(grid_assign(adm1_emb, centers)).persist(StorageLevel.DISK_ONLY)
+            cells1 = cells0.unionByName(grid_assign_map(adm1_emb, centers.collect())).persist(StorageLevel.DISK_ONLY)
             emb1 = corpus0_emb.unionByName(adm1_emb).persist(StorageLevel.DISK_ONLY)
             pinned += [cells1, emb1]
             cells1.count(); emb1.count()
