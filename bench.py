@@ -136,6 +136,7 @@ def main() -> None:
         k = max(1, math.ceil(len(names) / CHUNK_MAX))
         timings: dict[str, float] = {}
         engine: dict[str, dict[str, int]] = {}
+        floors: list[float | None] = []
         for i in range(k):
             with tempfile.NamedTemporaryFile(
                 mode="r", suffix=".json", delete=False
@@ -151,6 +152,7 @@ def main() -> None:
                     part = json.load(f)
                 timings.update(part["timings"])
                 engine.update(part["engine"])
+                floors.append(part["floor_s"])
             except Exception as exc:
                 print(f"bench: chunk {i}/{k} unreadable (rc={rc}): {exc}",
                       file=sys.stderr)
@@ -158,12 +160,13 @@ def main() -> None:
                 hi = (len(names) * (i + 1)) // k
                 for name in names[lo:hi]:
                     timings.setdefault(name, -1.0)
+                floors.append(None)
             finally:
                 try:
                     os.unlink(part_path)
                 except OSError:
                     pass
-        _emit(timings, engine, sf, sf_dir)
+        _emit(timings, engine, floors, sf, sf_dir)
         return
 
     i, k = (int(x) for x in chunk_arg.split(":"))
@@ -213,6 +216,11 @@ def main() -> None:
         simhash_pairs(
             load_table(spark, sf_dir, "documents").limit(64)
         ).write.format("noop").mode("overwrite").save()
+    # The chunk's noop floor: the wall of the cheapest possible action on
+    # this warmed session, so a sub-second row can be read as wall − floor.
+    start = time.perf_counter()
+    spark.range(1).write.format("noop").mode("overwrite").save()
+    floor_s = round(time.perf_counter() - start, 4)
     metrics = StageMetrics(spark)
     metrics.advance()  # consume warmup stages
 
@@ -325,13 +333,14 @@ def main() -> None:
             print(f"bench: {name} FAILED: {exc}", file=sys.stderr)
 
     with open(out_path, "w") as f:
-        json.dump({"timings": timings, "engine": engine}, f)
+        json.dump({"timings": timings, "engine": engine, "floor_s": floor_s}, f)
     spark.stop()
 
 
 def _emit(
     timings: dict[str, float],
     engine: dict[str, dict[str, int]],
+    floors: list[float | None],
     sf: float,
     sf_dir: str,
 ) -> None:
@@ -363,6 +372,8 @@ def _emit(
             | {
                 "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
                 "sf_dir": sf_dir,
+                # Per chunk, in chunk order (None: chunk unreadable).
+                "chunk_floor_s": floors,
                 "engine_metrics": engine,
             },
             f,

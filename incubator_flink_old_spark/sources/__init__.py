@@ -4,116 +4,63 @@ The reference's source surface is InputFormats (Text/Csv/Binary/Collection/
 Generic, plus addons) driven by ``DataSourceTask``; sinks are OutputFormats
 driven by ``DataSinkTask`` with optional global ordering. Spark's reader/
 writer framework subsumes the split handling, parallel enumeration and
-format parsing, so the engine's source layer is: explicit schemas for the
-fixture tables (never infer at scale — schema inference is a full extra
-pass over 100TB), typed loaders, and thin text/csv/collection readers
-mirroring the reference API names.
+format parsing, so the engine's source layer is: typed parquet loaders for
+the fixture tables, and thin text/csv/collection readers mirroring the
+reference API names.
+
+The parquet footer is the one source of truth for a fixture table's
+schema. Inferring it costs a Spark job per read, so :func:`load_table`
+infers once per file version and reads every later call with the
+remembered schema: a metadata memo keyed on the file's path, size and
+mtime and the inference confs. It never holds data, and a rewritten file
+is inferred again.
 """
 
 from __future__ import annotations
+
+import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-#: Explicit schemas for the driver-generated tables (FIXTURES.md §1).
-#: Reading with an explicit schema keeps the parquet footer read cheap and
-#: makes column pruning / predicate pushdown decisions stable.
-TABLE_SCHEMAS: dict[str, T.StructType] = {
-    "region": T.StructType(
-        [
-            T.StructField("r_regionkey", T.IntegerType()),
-            T.StructField("r_name", T.StringType()),
-        ]
-    ),
-    "nation": T.StructType(
-        [
-            T.StructField("n_nationkey", T.IntegerType()),
-            T.StructField("n_name", T.StringType()),
-            T.StructField("n_regionkey", T.IntegerType()),
-        ]
-    ),
-    "customer": T.StructType(
-        [
-            T.StructField("c_custkey", T.LongType()),
-            T.StructField("c_name", T.StringType()),
-            T.StructField("c_nationkey", T.IntegerType()),
-            T.StructField("c_acctbal", T.DoubleType()),
-            T.StructField("c_mktsegment", T.StringType()),
-        ]
-    ),
-    "supplier": T.StructType(
-        [
-            T.StructField("s_suppkey", T.LongType()),
-            T.StructField("s_name", T.StringType()),
-            T.StructField("s_nationkey", T.IntegerType()),
-            T.StructField("s_acctbal", T.DoubleType()),
-        ]
-    ),
-    "part": T.StructType(
-        [
-            T.StructField("p_partkey", T.LongType()),
-            T.StructField("p_name", T.StringType()),
-            T.StructField("p_brand", T.StringType()),
-            T.StructField("p_type", T.StringType()),
-            T.StructField("p_size", T.IntegerType()),
-            T.StructField("p_retailprice", T.DoubleType()),
-        ]
-    ),
-    "orders": T.StructType(
-        [
-            T.StructField("o_orderkey", T.LongType()),
-            T.StructField("o_custkey", T.LongType()),
-            T.StructField("o_orderstatus", T.StringType()),
-            T.StructField("o_totalprice", T.DoubleType()),
-            T.StructField("o_orderdate", T.TimestampType()),
-            T.StructField("o_orderpriority", T.StringType()),
-        ]
-    ),
-    "lineitem": T.StructType(
-        [
-            T.StructField("l_orderkey", T.LongType()),
-            T.StructField("l_partkey", T.LongType()),
-            T.StructField("l_suppkey", T.LongType()),
-            T.StructField("l_linenumber", T.IntegerType()),
-            T.StructField("l_quantity", T.DoubleType()),
-            T.StructField("l_extendedprice", T.DoubleType()),
-            T.StructField("l_discount", T.DoubleType()),
-            T.StructField("l_tax", T.DoubleType()),
-            T.StructField("l_returnflag", T.StringType()),
-            T.StructField("l_linestatus", T.StringType()),
-            T.StructField("l_shipdate", T.TimestampType()),
-        ]
-    ),
-    "events": T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    ),
-    "documents": T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("lang", T.StringType()),
-            T.StructField("source", T.StringType()),
-            T.StructField("n_chars", T.LongType()),
-        ]
-    ),
-    "embeddings": T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.FloatType())),
-            T.StructField("label", T.IntegerType()),
-        ]
-    ),
-}
+#: The driver-generated fixture tables (FIXTURES.md §1).
+TABLES = (
+    "region", "nation", "customer", "supplier", "part",
+    "orders", "lineitem", "events", "documents", "embeddings",
+)
 
-TABLES = tuple(TABLE_SCHEMAS)
+#: Session confs that change the schema Spark infers from a parquet footer.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+#: path -> (its footer stamp, the schema inferred from its footer). One
+#: entry per path: a rewritten file or a changed conf replaces it. Two
+#: threads loading a new file at once both infer and store equal entries.
+_FOOTER_SCHEMAS: dict[str, tuple[tuple, T.StructType]] = {}
+
+#: Columns stored as TIMESTAMP(NANOS) in the fixture parquet; read via
+#: spark.sql.legacy.parquet.nanosAsLong (set in session.RUNTIME_CONF) and
+#: normalized to microsecond timestamps here.
+_NANOS_TS_COLUMNS = frozenset({"ts"})
+
+
+def _footer_stamp(spark: SparkSession, path: str) -> tuple | None:
+    """What the schema inferred from ``path`` depends on: the file's size
+    and mtime and the inference confs. None when ``os.stat`` cannot see
+    ``path`` as one regular file."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    return (st.st_size, st.st_mtime_ns, tuple(spark.conf.get(c) for c in _INFERENCE_CONFS))
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -123,24 +70,36 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     (``api/common/io/BinaryInputFormat.java``, SURVEY §2.1 S4). Parquet is
     the engine's replacement: columnar, splittable, predicate-pushdown.
 
+    The first read of a file infers its schema from the footer (one Spark
+    job); later reads of the same file version pass that schema to the
+    reader and run no job. Paths ``os.stat`` cannot see as one regular
+    file (URI schemes, directory datasets) infer on every call.
+
     NANOS-precision timestamp columns (which Spark's vectorized reader
-    rejects) are read as raw long nanos and floor-truncated to microsecond
-    timestamps — the same truncation DuckDB applies reading the file, so
-    downstream semantics agree across engines.
+    rejects) are read as raw long nanos and truncated toward zero to
+    microsecond timestamps — the same truncation DuckDB applies reading the
+    file (pre-1970 values included), so downstream semantics agree across
+    engines.
     """
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    for field in df.schema.fields:
+    path = f"{sf_dir}/{name}.parquet"
+    stamp = _footer_stamp(spark, path)
+    seen, schema = _FOOTER_SCHEMAS.get(path, (None, None))
+    # format().load(path) is what read.parquet(path) runs, without the
+    # py4j round trips of converting a path list (~2 ms of ~10 per call).
+    reader = spark.read.format("parquet")
+    if stamp is None or seen != stamp:
+        df = reader.load(path)
+        schema = df.schema
+        if stamp is not None:
+            _FOOTER_SCHEMAS[path] = (stamp, schema)
+    else:
+        df = reader.schema(schema).load(path)
+    for field in schema.fields:
         if isinstance(field.dataType, T.LongType) and field.name in _NANOS_TS_COLUMNS:
             df = df.withColumn(
                 field.name, F.expr(f"timestamp_micros({field.name} div 1000)")
             )
     return df
-
-
-#: Columns stored as TIMESTAMP(NANOS) in the fixture parquet; read via
-#: spark.sql.legacy.parquet.nanosAsLong (set in session.RUNTIME_CONF) and
-#: normalized to microsecond timestamps here.
-_NANOS_TS_COLUMNS = frozenset({"ts"})
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

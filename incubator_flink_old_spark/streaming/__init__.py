@@ -241,15 +241,41 @@ def force_pins(*frames: DataFrame) -> None:
     pool (guide §2.6 — overlap independent jobs: Spark's scheduler
     happily runs several jobs at once, and each pin's tail would
     otherwise leave the cluster idle while the next pin waits;
-    optimization round 13). FIFO scheduling back-fills freed slots."""
+    optimization round 13). FIFO scheduling back-fills freed slots.
+
+    Each pin thread inherits the caller's local properties (job group,
+    job tags, description) and session tags, so the pin jobs show up
+    under the caller's labels. The pins of one call also share a job tag:
+    the first failing pin cancels the others' jobs and raises once they
+    have stopped."""
     if len(frames) <= 1:
         for f in frames:
             f.count()
         return
-    from concurrent.futures import ThreadPoolExecutor
+    import uuid
+    from concurrent.futures import ThreadPoolExecutor, as_completed
+
+    from pyspark import inheritable_thread_target
+
+    spark = frames[0].sparkSession
+    sc = spark.sparkContext
+    tag = f"force_pins-{uuid.uuid4().hex}"
+
+    @inheritable_thread_target(spark)
+    def pin(frame: DataFrame) -> None:
+        sc.addJobTag(tag)
+        frame.count()
 
     with ThreadPoolExecutor(max_workers=min(4, len(frames))) as pool:
-        list(pool.map(lambda f: f.count(), frames))
+        futures = [pool.submit(pin, f) for f in frames]
+        try:
+            for done in as_completed(futures):
+                done.result()
+        except BaseException:
+            for fut in futures:
+                fut.cancel()
+            sc.cancelJobsWithTag(tag)
+            raise
 
 
 def run_stream_to_memory(
