@@ -224,10 +224,14 @@ def main() -> None:
     metrics = StageMetrics(spark)
     metrics.advance()  # consume warmup stages
 
-    def run_once(name: str) -> float:
+    def run_once(name: str) -> tuple[float, float]:
+        """(wall, build): build is the driver-side construction of the
+        query's DataFrame, the first layer of its wall."""
         start = time.perf_counter()
-        QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - start
+        df = QUERIES[name](spark, sf_dir)
+        built = time.perf_counter()
+        df.write.format("noop").mode("overwrite").save()
+        return time.perf_counter() - start, built - start
 
     # Previous sidecar (if any) anchors a per-query sanity bar: when even
     # the cheapest of two runs lands far above the last recorded engine
@@ -252,13 +256,14 @@ def main() -> None:
     engine: dict[str, dict[str, int]] = {}
     for name in chunk_names:
         try:
-            t = run_once(name)
+            t, b = run_once(name)
             eng = metrics.advance()
             # Every run's raw numbers are recorded in the sidecar
-            # (runs_wall_s / runs_engine_ms) so the min-of-N scan below
-            # is reproducible from the committed artifact, not prose
-            # (VERDICT r06 item 3).
+            # (runs_wall_s / runs_build_s / runs_engine_ms) so the min-of-N
+            # scan below is reproducible from the committed artifact, not
+            # prose (VERDICT r06 item 3).
             runs_wall = [round(t, 4)]
+            runs_build = [round(b, 4)]
             runs_eng = [eng["executor_run_time_ms"]]
             # Steady-state: a first execution can pay whole-stage-codegen
             # JIT and transient machine load (observed 2-4× swings on the
@@ -280,7 +285,7 @@ def main() -> None:
                 # measurement instead of reporting the query as failed
                 # (ADVICE r04 item 1).
                 try:
-                    t2 = run_once(name)
+                    t2, b2 = run_once(name)
                     eng2 = metrics.advance()
                 except Exception as exc:
                     metrics.advance()
@@ -288,6 +293,7 @@ def main() -> None:
                           file=sys.stderr)
                 else:
                     runs_wall.append(round(t2, 4))
+                    runs_build.append(round(b2, 4))
                     runs_eng.append(eng2["executor_run_time_ms"])
                     t = min(t, t2)
                     if eng2["executor_run_time_ms"] < eng["executor_run_time_ms"]:
@@ -308,7 +314,7 @@ def main() -> None:
                 and eng["executor_run_time_ms"] - base > 500
             ):
                 try:
-                    t3 = run_once(name)
+                    t3, b3 = run_once(name)
                     eng3 = metrics.advance()
                 except Exception as exc:
                     metrics.advance()
@@ -317,6 +323,7 @@ def main() -> None:
                 else:
                     n_runs += 1
                     runs_wall.append(round(t3, 4))
+                    runs_build.append(round(b3, 4))
                     runs_eng.append(eng3["executor_run_time_ms"])
                     t = min(t, t3)
                     if eng3["executor_run_time_ms"] < eng["executor_run_time_ms"]:
@@ -325,6 +332,7 @@ def main() -> None:
             engine[name] = eng | {
                 "n_runs": n_runs,
                 "runs_wall_s": runs_wall,
+                "runs_build_s": runs_build,
                 "runs_engine_ms": runs_eng,
             }
         except Exception as exc:  # keep the bench line parseable on failure

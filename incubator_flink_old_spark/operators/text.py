@@ -433,13 +433,19 @@ def simhash16(df: DataFrame, text: str = "text", key: str = "doc_id") -> DataFra
     make every pair of empty docs a near-dup candidate, an O(empties²)
     blowup — empty/identical docs belong to exact dedup instead).
     """
+    return _simhash_project(_spread(df.select(key, text)), text, key)
+
+
+def _simhash_project(df: DataFrame, text: str, key: str) -> DataFrame:
+    """simhash16's signature projection over ``df`` = (key, text), which
+    the caller has already spread to cluster width."""
     dtoks = tokens(text, distinct=True)
     # One md5 + ONE base-16 parse per token: the first 4 hex chars of
     # md5(token) hold all 16 recipe bits as an int (digit k//4 occupies
     # bits [(3-k//4)*4, +3] of the parsed value, its bit (3-k%4) is the
     # recipe's bit k) — the per-bit counts below are then pure integer
     # shifts over this staged array, no string work.
-    staged = _spread(df.select(key, text)).select(
+    staged = df.select(
         F.col(key).alias(key),
         F.size(dtoks).alias("__n"),
         F.transform(
@@ -450,21 +456,22 @@ def simhash16(df: DataFrame, text: str = "text", key: str = "doc_id") -> DataFra
         ).alias("__p"),
     )
 
-    def ones_for(k: int) -> Column:
+    # The 16 per-bit counts, written as ONE SQL expression: built from
+    # Column objects, the same tree costs ~900 py4j round trips on the
+    # driver (16 filter lambdas, each a dozen JVM calls plus their
+    # reflection lookups); parsed from text it costs a handful. The
+    # optimized plan is the same either way.
+    def bit(k: int) -> str:
         pos = (3 - k // 4) * 4 + (3 - k % 4)
-        # NB: the lambda must be unary — pyspark passes (element, index)
-        # to two-parameter lambdas, so a `k=k` default would be clobbered
-        return F.size(
-            F.filter(F.col("__p"), lambda v: F.shiftright(v, pos) % 2 == 1)
+        ones = f"size(filter(`__p`, v -> shiftright(v, {pos}) % 2 = 1))"
+        return (
+            f"CASE WHEN {ones} * 2 >= `__n` THEN CAST({1 << k} AS BIGINT)"
+            " ELSE CAST(0 AS BIGINT) END"
         )
 
-    sig = F.lit(0).cast("long")
-    for k in range(16):
-        sig = sig + F.when(
-            ones_for(k) * 2 >= F.col("__n"), F.lit(1 << k).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
+    sig = " + ".join(["CAST(0 AS BIGINT)"] + [bit(k) for k in range(16)])
     return staged.select(
-        key, F.when(F.col("__n") > 0, sig).alias("simhash")
+        key, F.expr(f"CASE WHEN `__n` > 0 THEN {sig} END").alias("simhash")
     )
 
 
@@ -871,8 +878,14 @@ def simhash_pairs(
     """
     if not 0 <= max_hamming < 16:
         raise ValueError("max_hamming must be in [0, 16)")
-    df = _spread_narrow(df)
-    sigs = simhash16(df, text, key)  # (key, simhash)
+    spread = _spread_narrow(df)
+    if spread is df:
+        sigs = simhash16(df, text, key)  # (key, simhash)
+    else:
+        # Already at defaultParallelism partitions: simhash16's own width
+        # probe could only answer "no-op", and on a repartitioned frame
+        # that probe runs the shuffle-map job under AQE.
+        sigs = _simhash_project(spread.select(key, text), text, key)
     n_bands = max_hamming + 1
     base_w, rem = divmod(16, n_bands)
     bands, start = [], 0

@@ -75,6 +75,17 @@ def get_spark(app_name: str = "incubator_flink_old_spark") -> SparkSession:
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "true" if ui else "false")
         .config("spark.sql.execution.pyspark.udf.faulthandler.enabled", "true")
+        # DataFrame call-site capture off. With it on (PySpark's default),
+        # every F.* function and Column method captures a Python stack and
+        # makes ~6 extra py4j round trips to set and clear the JVM's
+        # PySparkCurrentOrigin: about half of a pair pipeline's driver-side
+        # build calls (PERF.md, driver floor). The cost of turning it off:
+        # runtime expression errors lose their "DataFrame ... was called
+        # from file:line" fragment. A static conf, so it is set here and
+        # not in RUNTIME_CONF; a session built outside the engine (such as
+        # the one handed to __spark_entry__) keeps the value it was built
+        # with.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # A long-lived session compiles one whole-stage-codegen module per
         # stage per query; at the default 240 MB the JVM code cache fills
         # after ~100 queries, HotSpot stops JIT-compiling, and hot verify
