@@ -13,6 +13,9 @@ banding keeps near-dup search at O(candidate pairs), never O(n²).
 
 from __future__ import annotations
 
+from functools import reduce
+from operator import and_
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -158,12 +161,7 @@ def minhash_signature(df: DataFrame, num_hashes: int = 8, text: str = "text", ke
     md5 is engine-portable and deterministic — at scale one would swap in
     xxhash64 for speed, at the cost of oracle portability.
     """
-    dtoks = tokens(text, distinct=True)
-    sig_cols = [
-        F.array_min(F.transform(dtoks, _salted_md5(j))).alias(f"mh{j}")
-        for j in range(num_hashes)
-    ]
-    return df.select(key, *sig_cols)
+    return _signatures(_stage_tokens(df, text, key), [key], num_hashes).drop("__n")
 
 
 def minhash_bands(
@@ -172,8 +170,6 @@ def minhash_bands(
     band_size: int = 2,
     text: str = "text",
     key: str = "doc_id",
-    _toksets: DataFrame | None = None,
-    _sigs: DataFrame | None = None,
     _dtoks: DataFrame | None = None,
 ) -> DataFrame:
     """LSH band rows (key, __n, __bks, band, bucket) — the frame the
@@ -188,89 +184,145 @@ def minhash_bands(
     (optimization round 12 — the distinct was ~70% of the candidate
     stage's engine time for a 1.28× duplicate factor).
 
-    When neither ``_sigs`` nor ``_toksets`` is supplied, signatures and
-    the token count come from ONE staged projection over ``df`` (no
-    sigs⋈toksets join, one tokenize pass instead of two — CollapseProject
-    leaves the non-cheap multi-use token array staged). ``_dtoks``
-    supplies that staged (key, __dt distinct-token array) frame directly
-    — the round-13 share point: a caller that also verifies (the pair
-    pipelines) persists ONE tokenize and feeds it to both the bands and
-    the verify token sets. Passing ``_dtoks`` together with ``_sigs`` or
-    ``_toksets`` raises ``ValueError``: that arm would ignore the staged
-    tokens and tokenize ``df`` again."""
+    Signatures and the token count come from ONE staged distinct-token
+    projection. ``_dtoks`` supplies that staged (key, __dt) frame
+    directly — the share point: a caller that also verifies (the pair
+    pipelines) stages ONE tokenize and feeds it to both the bands and
+    the verify token sets; without it ``df`` is tokenized here."""
     assert num_hashes % band_size == 0
-    n_bands = num_hashes // band_size
-    if _dtoks is not None and (_sigs is not None or _toksets is not None):
-        raise ValueError(
-            "minhash_bands: _dtoks cannot be combined with _sigs or _toksets"
-        )
-    if _sigs is None and _toksets is None:
-        staged = (
-            _dtoks
-            if _dtoks is not None
-            else df.select(
-                F.col(key).alias(key),
-                tokens(text, distinct=True).alias("__dt"),
-            )
-        )
-        sigged = staged.select(
-            key,
-            F.size("__dt").cast("int").alias("__n"),
-            *[
-                F.array_min(F.transform(F.col("__dt"), _salted_md5(j))).alias(f"mh{j}")
-                for j in range(num_hashes)
-            ],
-        )
-    else:
-        sigs = (
-            _sigs
-            if _sigs is not None
-            else minhash_signature(df, num_hashes, text, key)
-        )
-        toksets = (
-            _toksets
-            if _toksets is not None
-            else df.select(
-                F.col(key).alias("__k"),
-                _hashed_set(tokens(text, distinct=True)).alias("__toks"),
-            )
-        )
-        sigged = sigs.join(
-            toksets.select(F.col("__k"), F.size("__toks").alias("__n")),
-            sigs[key] == F.col("__k"),
-        ).select(key, "__n", *[f"mh{j}" for j in range(num_hashes)])
-    bks = F.array(
-        *[
-            F.md5(
-                F.encode(
-                    F.concat_ws(
-                        "|",
-                        *[F.col(f"mh{b * band_size + r}") for r in range(band_size)],
-                    ),
-                    "UTF-8",
-                )
-            )
-            for b in range(n_bands)
-        ]
+    staged = _dtoks if _dtoks is not None else _stage_tokens(df, text, key)
+    return _band_rows(
+        _signatures(staged, [key], num_hashes), [key], num_hashes, band_size
     )
-    return sigged.select(key, "__n", bks.alias("__bks")).select(
-        key, "__n", "__bks", F.posexplode("__bks").alias("band", "bucket")
+
+
+def _stage_tokens(df: DataFrame, text: str, key: str) -> DataFrame:
+    """(key, __dt): the staged distinct-token array that the MinHash
+    signatures and the verify token sets both read. CollapseProject
+    leaves a non-cheap column that is used more than once staged, so a
+    plan deriving both from one staged frame tokenizes once."""
+    return df.select(F.col(key).alias(key), tokens(text, distinct=True).alias("__dt"))
+
+
+def _signatures(staged: DataFrame, cols: list, num_hashes: int) -> DataFrame:
+    """(*cols, __n, mh0..mh{num_hashes-1}) over a frame carrying the
+    staged distinct-token column ``__dt``: ``__n`` is the distinct-token
+    count and mh_j = min over tokens of md5('<j>|' + token) — the one
+    signature projection of the batch and the streaming screens.
+
+    Parsed from SQL text: built from Column objects, the per-hash
+    lambdas cost several hundred py4j round trips on the driver; parsed
+    they cost a few each. The optimized plan is the same either way."""
+    mh = "array_min(transform(`__dt`, x -> md5(encode(concat('{j}|', x), 'UTF-8'))))"
+    return staged.select(
+        *cols,
+        F.expr("size(`__dt`) AS __n"),
+        *[F.expr(f"{mh.format(j=j)} AS mh{j}") for j in range(num_hashes)],
     )
+
+
+def _band_rows(sigs: DataFrame, cols: list, num_hashes: int, band_size: int) -> DataFrame:
+    """LSH band rows (*cols, __n, __bks, band, bucket) of a signature
+    frame (*cols, __n, mh0..): band b's bucket is
+    md5(mh_{b·r} | … | mh_{b·r+r-1}) for r = ``band_size``, ``__bks``
+    the row's array of every band's bucket, one row per band."""
+    bucket = "md5(encode(concat_ws('|', {}), 'UTF-8'))"
+    bks = ", ".join(
+        bucket.format(", ".join(f"`mh{b * band_size + r}`" for r in range(band_size)))
+        for b in range(num_hashes // band_size)
+    )
+    return sigs.select(*cols, "__n", F.expr(f"array({bks}) AS __bks")).select(
+        *cols, "__n", "__bks", F.posexplode("__bks").alias("band", "bucket")
+    )
+
+
+def _lsh_side(
+    df: DataFrame,
+    num_hashes: int,
+    band_size: int,
+    text: str,
+    key: str,
+    _dtoks: DataFrame | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """``(toks, bands)`` of one side of a MinHash pair pipeline, both
+    derived from ONE staged tokenize (``_dtoks``, or ``df`` spread to
+    cluster width and tokenized here): toks = (__k, __toks) sorted
+    60-bit token hashes for the verify, bands = :func:`minhash_bands`
+    rows for the candidate join."""
+    staged = _dtoks if _dtoks is not None else _stage_tokens(_spread_narrow(df), text, key)
+    toks = staged.select(
+        F.col(key).alias("__k"), _hashed_set(F.col("__dt")).alias("__toks")
+    )
+    return toks, minhash_bands(df, num_hashes, band_size, text, key, _dtoks=staged)
+
+
+def _size_ratio_ok(na: str, nb: str, threshold: float) -> Column:
+    """The size-ratio prefilter over two set-size SQL expressions:
+    jac(A,B) ≥ t ⇒ |A∩B| ≥ t·|A∪B|, and since |A∩B| ≤ min(|A|,|B|) and
+    |A∪B| ≥ max(|A|,|B|), min/max ≥ t — pairs failing it CANNOT pass
+    verify, so dropping them before the array intersect is
+    result-identical and cheap (int math)."""
+    return F.expr(f"CAST(least({na}, {nb}) AS DOUBLE) / greatest({na}, {nb})") >= threshold
+
+
+def _band_sides(bands_a: DataFrame, bands_b: DataFrame, key: str) -> tuple[DataFrame, DataFrame]:
+    """Name two band-row frames as the probe (doc_a, na, __ba) and the
+    build (doc_b, nb, __bb) side of the candidate join."""
+    return (
+        bands_a.select(
+            F.col(key).alias("doc_a"), F.col("__n").alias("na"),
+            F.col("__bks").alias("__ba"), "band", "bucket",
+        ),
+        bands_b.select(
+            F.col(key).alias("doc_b"), F.col("__n").alias("nb"),
+            F.col("__bks").alias("__bb"), "band", "bucket",
+        ),
+    )
+
+
+def _band_probe(
+    left: DataFrame,
+    right: DataFrame,
+    jaccard_threshold: float | None,
+    first_band: bool = True,
+    ordered: bool = False,
+) -> DataFrame:
+    """The candidate step of every MinHash pair pipeline, batch and
+    stream: ``left`` (doc_a, na, …) ⋈ ``right`` (doc_b, nb, …) on
+    (band, bucket), kept where
+
+    - ``doc_a < doc_b`` if ``ordered`` (a self-join, once per unordered
+      pair);
+    - the size-ratio prefilter (:func:`_size_ratio_ok`) holds, unless
+      ``jaccard_threshold`` is None;
+    - ``band`` is the first index where the two bucket arrays ``__ba`` /
+      ``__bb`` agree, if ``first_band`` (see :func:`band_candidates`).
+    """
+    conds = []
+    if ordered:
+        conds.append(F.col("doc_a") < F.col("doc_b"))
+    if jaccard_threshold is not None:
+        conds.append(_size_ratio_ok("`na`", "`nb`", jaccard_threshold))
+    if first_band:
+        conds.append(
+            F.expr(
+                "array_position(zip_with(`__ba`, `__bb`, (x, y) -> x = y), true)"
+                " = `band` + 1"
+            )
+        )
+    return left.join(right, on=["band", "bucket"]).filter(reduce(and_, conds))
 
 
 def band_candidates(
     bands: DataFrame,
-    jaccard_threshold: float,
+    jaccard_threshold: float | None,
     key: str = "doc_id",
     join_hint: str | None = None,
 ) -> DataFrame:
     """Candidate (doc_a, doc_b) pairs from a band-row frame — the
-    self-equi-join on (band, bucket) plus the size-ratio prefilter.
-
-    Size-ratio prefilter: jac(A,B) ≥ t ⇒ |A∩B| ≥ t·|A∪B|, and since
-    |A∩B| ≤ min(|A|,|B|) and |A∪B| ≥ max(|A|,|B|), min/max ≥ t — pairs
-    failing it CANNOT pass verify, so dropping them before the array
-    intersect is result-identical and cheap (int math).
+    self-equi-join on (band, bucket) plus the size-ratio prefilter
+    (skipped when ``jaccard_threshold`` is None: containment allows any
+    size ratio).
 
     Multi-band dedup is a FIRST-MATCHING-BAND filter, not a pair
     distinct: a pair colliding in m bands appears once per band, and
@@ -289,32 +341,11 @@ def band_candidates(
     near-dup search costs O(candidates), not a corpus shuffle (and with
     the distinct gone, zero exchanges anywhere in the candidate plan).
     """
-    left = bands.select(
-        F.col(key).alias("doc_a"), F.col("__n").alias("na"),
-        F.col("__bks").alias("__ba"), "band", "bucket",
-    )
-    right = bands.select(
-        F.col(key).alias("doc_b"), F.col("__n").alias("nb"),
-        F.col("__bks").alias("__bb"), "band", "bucket",
-    )
+    left, right = _band_sides(bands, bands, key)
     if join_hint:
         left = left.hint(join_hint)
-    return (
-        left.join(right, on=["band", "bucket"])
-        .filter(
-            (F.col("doc_a") < F.col("doc_b"))
-            & (
-                F.least("na", "nb").cast("double") / F.greatest("na", "nb")
-                >= jaccard_threshold
-            )
-            & (
-                F.array_position(
-                    F.zip_with("__ba", "__bb", lambda x, y: x == y), F.lit(True)
-                )
-                == F.col("band") + F.lit(1)
-            )
-        )
-        .select("doc_a", "doc_b")
+    return _band_probe(left, right, jaccard_threshold, ordered=True).select(
+        "doc_a", "doc_b"
     )
 
 
@@ -325,7 +356,6 @@ def minhash_lsh_pairs(
     jaccard_threshold: float = 0.7,
     text: str = "text",
     key: str = "doc_id",
-    _sigs: DataFrame | None = None,
     band_join_hint: str | None = None,
     _dtoks: DataFrame | None = None,
 ) -> DataFrame:
@@ -342,34 +372,14 @@ def minhash_lsh_pairs(
     # Verify runs on 60-bit token hashes (longs), not strings: the exact
     # jaccard is identical (collisions ~n²/2^61 ≈ never) and integer
     # set-intersection is several× cheaper — this is the dominant cost on
-    # high-duplication corpora where candidates ≈ all pairs.
-    if _dtoks is not None:
-        # Staged distinct-token arrays supplied by a caller that owns a
-        # persist lifecycle (dedup_clusters): tokenize ran ONCE there;
-        # both the verify token sets and the band signatures derive from
-        # the cached arrays (round 13 — guide §1.2: don't compute things
-        # three times).
-        toksets = _dtoks.select(
-            F.col(key).alias("__k"), _hashed_set(F.col("__dt")).alias("__toks")
-        )
-        bands = minhash_bands(
-            df, num_hashes, band_size, text, key, _sigs=_sigs, _dtoks=_dtoks
-        )
-    else:
-        df = _spread_narrow(df)
-        toksets = df.select(
-            F.col(key).alias("__k"),
-            _hashed_set(tokens(text, distinct=True)).alias("__toks"),
-        )
-        # bands NOT given _toksets: its fused projection computes
-        # signatures and the token count in one tokenize pass (no
-        # sigs⋈toksets join) — toksets here feeds only the verify joins.
-        bands = minhash_bands(df, num_hashes, band_size, text, key, _sigs=_sigs)
-
+    # high-duplication corpora where candidates ≈ all pairs. ``_dtoks``:
+    # staged distinct-token arrays from a caller that owns a persist
+    # lifecycle (dedup_clusters).
+    toks, bands = _lsh_side(df, num_hashes, band_size, text, key, _dtoks)
     cands = band_candidates(
         bands, jaccard_threshold, key=key, join_hint=band_join_hint
     )
-    return _jaccard_verify(cands, toksets, toksets, jaccard_threshold)
+    return _jaccard_verify(cands, toks, toks, jaccard_threshold)
 
 
 def _jaccard_verify(
@@ -379,7 +389,21 @@ def _jaccard_verify(
     jaccard_threshold: float,
 ) -> DataFrame:
     """Exact-jaccard verify over candidate (doc_a, doc_b) pairs, given
-    (__k, __toks) hashed-token-set frames for each side.
+    (__k, __toks) hashed-token-set frames for each side."""
+    joined = cands.join(
+        toks_a.withColumnRenamed("__k", "doc_a").withColumnRenamed("__toks", "ta"), on="doc_a"
+    ).join(
+        toks_b.withColumnRenamed("__k", "doc_b").withColumnRenamed("__toks", "tb"), on="doc_b"
+    )
+    return _jaccard_tail(joined, ["doc_a", "doc_b"], "ta", "tb", jaccard_threshold)
+
+
+def _jaccard_tail(
+    pairs: DataFrame, out: list, ta: str, tb: str, jaccard_threshold: float
+) -> DataFrame:
+    """The verify tail of every jaccard pair pipeline: the ``out``
+    columns of ``pairs`` plus the exact jaccard of its token-set columns
+    ``ta`` / ``tb``, kept where jaccard ≥ threshold.
 
     |A∪B| = |A|+|B|-|A∩B| (sets): one intersect instead of
     intersect+union — the verify step dominates the pipeline's cost.
@@ -392,24 +416,16 @@ def _jaccard_verify(
     on a Generate-produced attribute cannot be pushed below the
     Generate, so the intersect runs exactly once per candidate.
     """
-    scored = (
-        cands.join(toks_a.withColumnRenamed("__k", "doc_a").withColumnRenamed("__toks", "ta"), on="doc_a")
-        .join(toks_b.withColumnRenamed("__k", "doc_b").withColumnRenamed("__toks", "tb"), on="doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            _intersect_size("ta", "tb").alias("__i"),
-            (F.size("ta") + F.size("tb")).alias("__s"),
-        )
+    scored = pairs.select(
+        *out,
+        _intersect_size(ta, tb).alias("__i"),
+        (F.size(ta) + F.size(tb)).alias("__s"),
     )
     return _verify_barrier(
         scored,
         F.struct(
-            F.col("doc_a"),
-            F.col("doc_b"),
-            (
-                F.col("__i").cast("double") / (F.col("__s") - F.col("__i"))
-            ).alias("jaccard"),
+            *[F.col(c) for c in out],
+            F.expr("CAST(`__i` AS DOUBLE) / (`__s` - `__i`)").alias("jaccard"),
         ),
     ).filter(F.col("jaccard") >= jaccard_threshold)
 
@@ -433,7 +449,7 @@ def simhash16(df: DataFrame, text: str = "text", key: str = "doc_id") -> DataFra
     make every pair of empty docs a near-dup candidate, an O(empties²)
     blowup — empty/identical docs belong to exact dedup instead).
     """
-    return _simhash_project(_spread(df.select(key, text)), text, key)
+    return _simhash_project(_spread_narrow(df.select(key, text)), text, key)
 
 
 def _simhash_project(df: DataFrame, text: str, key: str) -> DataFrame:
@@ -602,9 +618,7 @@ def dedup_clusters(
         # pipeline's single consumer is the adjacency aggregation below,
         # so the cache is released right after adj materializes.
         spread = _spread_narrow(df)
-        staged_dtoks = spread.select(
-            F.col(key).alias(key), tokens(text, distinct=True).alias("__dt")
-        ).persist()
+        staged_dtoks = _stage_tokens(spread, text, key).persist()
         pairs = minhash_lsh_pairs(
             spread, band_size=band_size, jaccard_threshold=jaccard_threshold,
             text=text, key=key, _dtoks=staged_dtoks,
@@ -839,9 +853,7 @@ def sample_stratified(
         [(k, float(v)) for k, v in fractions.items()],
         f"{strata} string, __frac double",
     )
-    bucket = F.conv(F.substring(F.md5(F.col(key).cast("string")), 1, 15), 16, 10).cast(
-        "long"
-    ) % denom
+    bucket = _hash60(F.col(key).cast("string")) % denom
     return (
         df.join(F.broadcast(frac), on=strata, how="left")
         .withColumn("__frac", F.coalesce("__frac", F.lit(float(default_fraction))))
@@ -878,14 +890,10 @@ def simhash_pairs(
     """
     if not 0 <= max_hamming < 16:
         raise ValueError("max_hamming must be in [0, 16)")
-    spread = _spread_narrow(df)
-    if spread is df:
-        sigs = simhash16(df, text, key)  # (key, simhash)
-    else:
-        # Already at defaultParallelism partitions: simhash16's own width
-        # probe could only answer "no-op", and on a repartitioned frame
-        # that probe runs the shuffle-map job under AQE.
-        sigs = _simhash_project(spread.select(key, text), text, key)
+    # (key, simhash): simhash16's projection over ONE width probe — a
+    # second probe of a repartitioned frame runs its shuffle-map job
+    # under AQE.
+    sigs = _simhash_project(_spread_narrow(df).select(key, text), text, key)
     n_bands = max_hamming + 1
     base_w, rem = divmod(16, n_bands)
     bands, start = [], 0
@@ -958,33 +966,11 @@ def ngram_jaccard_pairs(
     )
     a = g.select(F.col("k").alias("doc_a"), F.col("g").alias("ga"), "bkt")
     b = g.select(F.col("k").alias("doc_b"), F.col("g").alias("gb"), "bkt")
-    size_ok = (
-        F.least(F.size("ga"), F.size("gb")).cast("double")
-        / F.greatest(F.size("ga"), F.size("gb"))
-        >= threshold
+    pairs = a.join(b, on="bkt").filter(
+        (F.col("doc_a") < F.col("doc_b"))
+        & _size_ratio_ok("size(`ga`)", "size(`gb`)", threshold)
     )
-    # intersect STAGED once + Generate barrier against filter pushdown
-    # into the join condition (see minhash_lsh_pairs for the rationale)
-    scored = (
-        a.join(b, on="bkt")
-        .filter((F.col("doc_a") < F.col("doc_b")) & size_ok)
-        .select(
-            "doc_a",
-            "doc_b",
-            _intersect_size("ga", "gb").alias("__i"),
-            (F.size("ga") + F.size("gb")).alias("__s"),
-        )
-    )
-    return _verify_barrier(
-        scored,
-        F.struct(
-            F.col("doc_a"),
-            F.col("doc_b"),
-            (
-                F.col("__i").cast("double") / (F.col("__s") - F.col("__i"))
-            ).alias("jaccard"),
-        ),
-    ).filter(F.col("jaccard") >= threshold)
+    return _jaccard_tail(pairs, ["doc_a", "doc_b"], "ga", "gb", threshold)
 
 def _hash60(tok: Column) -> Column:
     """60-bit integer token hash: first 15 hex digits of md5, portable to
@@ -1008,35 +994,6 @@ def _verify_barrier(df: DataFrame, *structs: Column) -> DataFrame:
     """
     out = df.select(F.explode(F.array(*structs)).alias("__e"))
     return out.select("__e.*")
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Ensure CPU-heavy per-row work (per-token md5 signatures) has at
-    least the cluster's parallelism underneath it — for MAP-ONLY
-    pipelines (simhash16).
-
-    A small corpus arrives as one unsplittable parquet row group, so a
-    map-only signature pipeline runs in ONE task regardless of cores.
-    Repartition ONLY when the scan's split count is well below
-    defaultParallelism: on a production table (thousands of splits) this
-    is a no-op, so the 100 TB plan never pays the shuffle; on toy inputs
-    the shuffle moves <1 MB of text and parallelizes the hashing. The
-    partition-count probe compiles the plan but runs no job.
-
-    Do NOT apply under join pipelines: measured 2× SLOWER on the minhash
-    family at sf0.1 — the injected round-robin Exchange displaces AQE's
-    broadcast/local-shuffle-read choices for every join above it, and the
-    extra plan nodes outweigh the parallel hashing.
-    """
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    try:
-        n = df.rdd.getNumPartitions()
-    except Exception:  # pragma: no cover - exotic plans; stay safe
-        return df
-    if 2 * n <= target:
-        return df.repartition(target)
-    return df
 
 
 def _intersect_size(a, b) -> Column:
@@ -1121,10 +1078,6 @@ def _isin_filter(markers):
     2-arg callable as (element, index), so extra default-bound params must
     never leak into the signature."""
     return lambda x: x.isin(*markers)
-
-
-def _salted_md5(j: int):
-    return lambda x: F.md5(F.encode(F.concat(F.lit(f"{j}|"), x), "UTF-8"))
 
 
 
@@ -1489,34 +1442,10 @@ def containment_pairs(
     Output: (contained, container, containment) rows, one per direction
     clearing the threshold.
     """
-    df = _spread_narrow(df)
-    toksets = df.select(
-        F.col(key).alias("__k"),
-        _hashed_set(tokens(text, distinct=True)).alias("__toks"),
-    )
-    # Fused band projection + first-matching-band dedup (see
-    # band_candidates): identical unordered-candidate set, no pair
-    # distinct exchange.
-    bands = minhash_bands(df, num_hashes, band_size, text, key)
-    left = bands.select(
-        F.col(key).alias("doc_a"), F.col("__bks").alias("__ba"), "band", "bucket"
-    )
-    right = bands.select(
-        F.col(key).alias("doc_b"), F.col("__bks").alias("__bb"), "band", "bucket"
-    )
-    cands = (
-        left.join(right, on=["band", "bucket"])
-        .filter(
-            (F.col("doc_a") < F.col("doc_b"))
-            & (
-                F.array_position(
-                    F.zip_with("__ba", "__bb", lambda x, y: x == y), F.lit(True)
-                )
-                == F.col("band") + F.lit(1)
-            )
-        )
-        .select("doc_a", "doc_b")
-    )
+    toksets, bands = _lsh_side(df, num_hashes, band_size, text, key)
+    # band_candidates without the size-ratio prefilter: first-matching-band
+    # dedup, no pair distinct exchange.
+    cands = band_candidates(bands, None, key=key)
     # Verify ONCE per unordered candidate, then fan out to the two
     # directions from the already-computed intersection size. The naive
     # form — ab.union(ba) over a shared `scored` frame — duplicates the
@@ -1692,11 +1621,7 @@ def pack_sequences(
     d = df.select(
         F.col(key),
         token_count(text).cast("long").alias("n_tok"),
-        (
-            F.conv(F.substring(F.md5(F.col(key).cast("string")), 1, 15), 16, 10)
-            .cast("long")
-            % buckets
-        ).alias("bucket"),
+        (_hash60(F.col(key).cast("string")) % buckets).alias("bucket"),
     )
     win = Window.partitionBy("bucket").orderBy(key)
     start = (F.sum("n_tok").over(win) - F.col("n_tok")).alias("pack_pos")
@@ -1797,45 +1722,11 @@ def minhash_lsh_pairs_between(
     Returns (doc_a ∈ left, doc_b ∈ right, jaccard ≥ threshold). Callers
     must ensure the two key spaces are disjoint (or accept self-pairs).
     """
-    left_df = _spread_narrow(left_df)
-    right_df = _spread_narrow(right_df)
-    toks_l = left_df.select(
-        F.col(key).alias("__k"),
-        _hashed_set(tokens(text, distinct=True)).alias("__toks"),
-    )
-    toks_r = right_df.select(
-        F.col(key).alias("__k"),
-        _hashed_set(tokens(text, distinct=True)).alias("__toks"),
-    )
-    # Fused band projections (no sigs⋈toksets join) + first-matching-band
-    # multi-band dedup instead of a pair-distinct shuffle — identical
-    # result set (see band_candidates), O(candidates) exchange removed.
-    bands_l = minhash_bands(left_df, num_hashes, band_size, text, key)
-    bands_r = minhash_bands(right_df, num_hashes, band_size, text, key)
-    left = bands_l.select(
-        F.col(key).alias("doc_a"), F.col("__n").alias("na"),
-        F.col("__bks").alias("__ba"), "band", "bucket",
-    )
-    right = bands_r.select(
-        F.col(key).alias("doc_b"), F.col("__n").alias("nb"),
-        F.col("__bks").alias("__bb"), "band", "bucket",
-    )
-    cands = (
-        left.join(right, on=["band", "bucket"])
-        .filter(
-            (
-                F.least("na", "nb").cast("double") / F.greatest("na", "nb")
-                >= jaccard_threshold
-            )
-            & (
-                F.array_position(
-                    F.zip_with("__ba", "__bb", lambda x, y: x == y), F.lit(True)
-                )
-                == F.col("band") + F.lit(1)
-            )
-        )
-        .select("doc_a", "doc_b")
-    )
+    toks_l, bands_l = _lsh_side(left_df, num_hashes, band_size, text, key)
+    toks_r, bands_r = _lsh_side(right_df, num_hashes, band_size, text, key)
+    cands = _band_probe(
+        *_band_sides(bands_l, bands_r, key), jaccard_threshold
+    ).select("doc_a", "doc_b")
     return _jaccard_verify(cands, toks_l, toks_r, jaccard_threshold)
 
 
@@ -1856,15 +1747,15 @@ def streaming_neardup_screen(
     corpus index — :func:`minhash_lsh_pairs_between` with the probe side
     arriving as a stream: each incoming document computes its MinHash
     signatures, hashed token set and band buckets in ONE map-side
-    projection (minhash_bands' join form is off-limits on a stream),
-    probes the standing corpus's band table through a STREAM-STATIC
+    projection, probes the standing corpus's band table through a STREAM-STATIC
     equi-join on (band, bucket), passes the size-ratio prefilter, and
     exact-jaccard-verifies against the corpus token sets — the
     crawl-ingest front door: every new document is screened against the
     whole standing corpus at ingest, never a corpus x corpus pass.
 
-    Identical arithmetic to the batch form (same salted-md5 signatures,
-    band hashing, prefilter bound, staged-intersect jaccard), so
+    The same code as the batch form (one signature and band projection,
+    candidate step and verify tail — :func:`_signatures`,
+    :func:`_band_probe`, :func:`_jaccard_tail`), so
     streaming ≡ batch bit-for-bit whatever the microbatch boundaries —
     each pair's verdict depends only on its own two token sets. The
     final dropDuplicates collapses multi-band hits; its state is one row
@@ -1934,15 +1825,13 @@ def neardup_corpus_artifacts(
     own artifacts — fingerprint selection never crosses documents), so
     the standing corpus is never re-hashed; at 100 TB these are the
     bucketed band/token TABLES the screens join against."""
-    corpus = _spread_narrow(corpus)
-    toks = corpus.select(
-        F.col(key).alias("doc_b"),
-        _hashed_set(tokens(text, distinct=True)).alias("tb"),
+    toks, bands = _lsh_side(corpus, num_hashes, band_size, text, key)
+    return (
+        toks.select(F.col("__k").alias("doc_b"), F.col("__toks").alias("tb")),
+        bands.select(
+            F.col(key).alias("doc_b"), F.col("__n").alias("nb"), "band", "bucket"
+        ),
     )
-    bands = minhash_bands(corpus, num_hashes, band_size, text, key).select(
-        F.col(key).alias("doc_b"), F.col("__n").alias("nb"), "band", "bucket"
-    )
-    return toks, bands
 
 
 def neardup_screen_events(
@@ -1997,7 +1886,6 @@ def neardup_screen_events(
             f"neardup_screen_events: num_hashes ({num_hashes}) must be a"
             f" multiple of band_size ({band_size})"
         )
-    ts = [F.col(c) for c in carry]
     if corpus_artifacts is not None:
         # Maintained-index form: the caller supplies the standing corpus
         # artifacts (possibly an O(wave) append-merge of frozen tables
@@ -2032,78 +1920,29 @@ def neardup_screen_events(
                 from incubator_flink_old_spark.streaming import force_pins
 
                 force_pins(toks_r, bands_r)
-    n_bands = num_hashes // band_size
-    dtoks = tokens(text, distinct=True)
-    srows = stream.select(
-        F.col(key).alias("doc_a"),
-        *ts,
-        _hashed_set(dtoks).alias("ta"),
-        *[
-            F.array_min(F.transform(dtoks, _salted_md5(j))).alias(f"mh{j}")
-            for j in range(num_hashes)
-        ],
+    # The stream side is the batch screen's own projection and candidate
+    # step over each micro-batch (the corpus bands carry no bucket array,
+    # so multi-band hits are left to the caller's dedup).
+    probe = ["doc_a", *carry, "ta"]
+    staged = stream.select(
+        F.col(key).alias("doc_a"), *carry, tokens(text, distinct=True).alias("__dt")
     )
-    srows = srows.select(
-        "doc_a",
-        *carry,
+    sigs = _signatures(
+        staged,
+        ["doc_a", *carry, _hashed_set(F.col("__dt")).alias("ta")],
+        num_hashes,
+    )
+    srows = _band_rows(sigs, probe, num_hashes, band_size).select(
+        *probe, F.col("__n").alias("na"), "band", "bucket"
+    )
+    cand = _band_probe(srows, bands_r, jaccard_threshold, first_band=False)
+    return _jaccard_tail(
+        cand.join(toks_r, on="doc_b"),
+        ["doc_a", *carry, "doc_b"],
         "ta",
-        F.size("ta").alias("na"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.md5(
-                            F.encode(
-                                F.concat_ws(
-                                    "|",
-                                    *[
-                                        F.col(f"mh{b * band_size + r}")
-                                        for r in range(band_size)
-                                    ],
-                                ),
-                                "UTF-8",
-                            )
-                        ).alias("bucket"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(
-        "doc_a",
-        *carry,
-        "ta",
-        "na",
-        F.col("bb.band").alias("band"),
-        F.col("bb.bucket").alias("bucket"),
+        "tb",
+        jaccard_threshold,
     )
-    cand = (
-        srows.join(bands_r, on=["band", "bucket"])
-        .filter(
-            F.least("na", "nb").cast("double") / F.greatest("na", "nb")
-            >= jaccard_threshold
-        )
-        .select("doc_a", *carry, "ta", "doc_b")
-    )
-    scored = cand.join(toks_r, on="doc_b").select(
-        "doc_a",
-        *carry,
-        "doc_b",
-        _intersect_size("ta", "tb").alias("__i"),
-        (F.size("ta") + F.size("tb")).alias("__s"),
-    )
-    return _verify_barrier(
-        scored,
-        F.struct(
-            F.col("doc_a"),
-            *ts,
-            F.col("doc_b"),
-            (
-                F.col("__i").cast("double") / (F.col("__s") - F.col("__i"))
-            ).alias("jaccard"),
-        ),
-    ).filter(F.col("jaccard") >= jaccard_threshold)
 
 
 def incremental_dedup(
@@ -2134,11 +1973,7 @@ def incremental_dedup(
     Returns (key, verdict) for every NEW-batch document (exact wins over
     near when both hold).
     """
-    h = (
-        F.conv(F.substring(F.md5(F.col(key).cast("string")), 1, 15), 16, 10)
-        .cast("long")
-        % split_mod
-    )
+    h = _hash60(F.col(key).cast("string")) % split_mod
     flagged = df.withColumn("__new", h == 0)
     new_df = flagged.filter(F.col("__new")).drop("__new")
     corpus = flagged.filter(~F.col("__new")).drop("__new")
@@ -3552,13 +3387,7 @@ def mixture_schedule(
             [(s, float(w)) for s, w in w_rows], f"{source} string, __wt double"
         )
     )
-    h = F.conv(
-        F.substring(
-            F.md5(F.encode(F.col(key).cast("string"), "UTF-8")), 1, 15
-        ),
-        16,
-        10,
-    ).cast("long")
+    h = _hash60(F.col(key).cast("string"))
     weighted = df.join(wdf, on=source).select(
         F.col(key), F.col(source), "__wt", h.alias("__h")
     )

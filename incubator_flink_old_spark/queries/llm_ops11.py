@@ -51,9 +51,9 @@ def q_dedup_minhash_layout(spark, sf_dir):
         _hashed_set,
         _jaccard_verify,
         _spread_narrow,
+        _stage_tokens,
         band_candidates,
         minhash_bands,
-        tokens,
     )
 
     # Stage the distinct-token arrays ONCE (round 13, VERDICT r12 items
@@ -65,10 +65,7 @@ def q_dedup_minhash_layout(spark, sf_dir):
     # ahead of it), and the band build derives signatures from the same
     # single tokenize instead of a sigs⋈toksets join's second pass.
     docs = _spread_narrow(t(spark, sf_dir, "documents"))
-    dtoks = docs.select(
-        F.col("doc_id").alias("doc_id"),
-        tokens("text", distinct=True).alias("__dt"),
-    ).persist()
+    dtoks = _stage_tokens(docs, "text", "doc_id").persist()
     toksets = dtoks.select(
         F.col("doc_id").alias("__k"), _hashed_set(F.col("__dt")).alias("__toks")
     ).localCheckpoint(eager=True)

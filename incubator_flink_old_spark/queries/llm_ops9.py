@@ -176,32 +176,41 @@ def q_minhash_est_jaccard(spark, sf_dir):
     verify pass at its chosen threshold. Estimates are exact multiples
     of 1/8 — no float-order hazards."""
     from incubator_flink_old_spark.operators.text import (
+        _band_rows,
+        _hashed_set,
+        _jaccard_verify,
+        _signatures,
         _spread_narrow,
-        minhash_lsh_pairs,
-        minhash_signature,
+        _stage_tokens,
+        band_candidates,
     )
 
     # Spread BEFORE the eager checkpoint: the checkpoint freezes its
     # input partitioning, and a single-split fixture scan would pin the
     # whole signature-fed pipeline to one task (optimization round 12).
     docs = _spread_narrow(t(spark, sf_dir, "documents"))
-    # One signature computation feeds all three consumers (band
+    staged = _stage_tokens(docs, "text", "doc_id")
+    # One (doc_id, __n, mh*) frame feeds all three consumers (band
     # generation + both est-join sides): materialized eagerly — the
     # frame is |docs| × 8 md5 strings, tiny — so the 8-hash pass over
-    # every distinct token runs once, not three times.
+    # every distinct token runs once, not three times; __n rides along,
+    # so the bands need no second tokenize for the size-ratio prefilter.
     nh = _EST_NUM_HASHES
-    sigs = minhash_signature(docs, num_hashes=nh).localCheckpoint(eager=True)
-    # band_join_hint: the checkpointed sigs are a LogicalRDD with no size
+    sigs = _signatures(staged, ["doc_id"], nh).localCheckpoint(eager=True)
+    toksets = staged.select(
+        F.col("doc_id").alias("__k"), _hashed_set(F.col("__dt")).alias("__toks")
+    )
+    # join_hint: the checkpointed sigs are a LogicalRDD with no size
     # stats, so the band self-join planned as a SortMergeJoin — and its
     # (band, bucket) exchange is HOT-BUCKET skewed (too few bytes for AQE
     # skew split), serializing candidate generation through 1-2 tasks
     # (measured wall ≈ engine). The broadcast hint restores the pair
     # family's BHJ shape: probe side keeps the spread partitioning, hot
     # buckets stream against the broadcast map (optimization round 12).
-    pairs = minhash_lsh_pairs(
-        docs, num_hashes=nh, band_size=4, jaccard_threshold=0.3, _sigs=sigs,
-        band_join_hint="broadcast",
+    cands = band_candidates(
+        _band_rows(sigs, ["doc_id"], nh, 4), 0.3, join_hint="broadcast"
     )
+    pairs = _jaccard_verify(cands, toksets, toksets, 0.3)
     sa = sigs.select(
         F.col("doc_id").alias("doc_a"),
         *[F.col(f"mh{j}").alias(f"a{j}") for j in range(nh)],

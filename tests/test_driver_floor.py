@@ -1,7 +1,8 @@
 """The driver-side build floor: get_spark turns off PySpark's per-call
 DataFrame call-site capture, simhash16 parses its bit sum from one SQL
-expression, and simhash_pairs probes its input's width once, so building
-it runs no Spark job."""
+expression, minhash_bands parses its signature and band projection, and
+simhash_pairs probes its input's width once, so building it runs no
+Spark job."""
 
 from __future__ import annotations
 
@@ -10,7 +11,11 @@ import contextlib
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from incubator_flink_old_spark.operators.text import simhash16, simhash_pairs
+from incubator_flink_old_spark.operators.text import (
+    minhash_bands,
+    simhash16,
+    simhash_pairs,
+)
 from incubator_flink_old_spark.sources import load_table
 from tests.test_sources_memo import _jobs_run_by
 
@@ -46,6 +51,16 @@ def test_simhash16_build_round_trips(spark):
     # 145-170 with the sum parsed from one SQL expression as well. py4j
     # also sends object releases through this client, so counts vary.
     assert counter["calls"] <= 500, counter
+
+
+def test_minhash_bands_build_round_trips(spark):
+    docs = spark.createDataFrame([(1, "a b c"), (2, "b c d")], "doc_id long, text string")
+    with _py4j_calls(spark) as counter:
+        minhash_bands(docs, num_hashes=8, band_size=4)
+    # Spark 4.1.2: 567-1,453 round trips with the eight signature lambdas
+    # and the band md5s built from Column objects; under 250 with both
+    # parsed from SQL text.
+    assert counter["calls"] <= 350, counter
 
 
 def test_simhash_pairs_build_runs_no_job(spark, tmp_path):

@@ -115,6 +115,29 @@ def test_between_pairs_consistent_with_self_pairs(spark):
     assert between == expected
 
 
+def test_self_pairs_equal_between_pairs_on_one_corpus(spark, sf_dir):
+    # Law: the self form and the probe form share one candidate step and
+    # one verify tail, so minhash_lsh_pairs(df) is exactly
+    # minhash_lsh_pairs_between(df, df) restricted to doc_a < doc_b —
+    # ids and jaccard both.
+    from incubator_flink_old_spark.queries._util import t
+
+    df = t(spark, sf_dir, "documents")
+    for band_size in (2, 4):
+        self_pairs = {
+            (r["doc_a"], r["doc_b"], r["jaccard"])
+            for r in minhash_lsh_pairs(df, band_size=band_size).collect()
+        }
+        between = {
+            (r["doc_a"], r["doc_b"], r["jaccard"])
+            for r in minhash_lsh_pairs_between(df, df, band_size=band_size)
+            .filter(F.col("doc_a") < F.col("doc_b"))
+            .collect()
+        }
+        assert self_pairs, band_size
+        assert self_pairs == between, band_size
+
+
 def test_incremental_dedup_verdicts_verified_brute_force(spark):
     # Random-ish deterministic corpus; verify every verdict against a
     # brute-force exact/near check of new×corpus.

@@ -20,9 +20,7 @@
   (ADVICE r12: the argmax compares raw values; a float order column
   would silently change tie behavior vs the old int() walk).
 - Bad inputs fail loudly, also under ``python -O``: grid_pq /
-  grid_pq_encode_map reject an m that does not divide d, and
-  minhash_bands rejects _dtoks combined with _sigs/_toksets (ADVICE r13:
-  it used to ignore _dtoks and re-tokenize).
+  grid_pq_encode_map reject an m that does not divide d.
 """
 
 from __future__ import annotations
@@ -317,21 +315,3 @@ def test_grid_pq_rejects_m_not_dividing_d(spark):
     with pytest.raises(ValueError, match="d=64.*m=3"):
         grid_pq_encode_map(emb, books.collect(), m=3)
 
-
-def test_minhash_bands_rejects_dtoks_with_sigs_or_toksets(spark):
-    from incubator_flink_old_spark.operators.text import (
-        minhash_bands,
-        minhash_signature,
-        tokens,
-    )
-    from incubator_flink_old_spark.queries._util import t
-
-    docs = t(spark, SF, "documents")
-    dtoks = docs.select("doc_id", tokens("text", distinct=True).alias("__dt"))
-    sigs = minhash_signature(docs, 8)
-    toksets = docs.select(F.col("doc_id").alias("__k"), F.array().alias("__toks"))
-    for extra in ({"_sigs": sigs}, {"_toksets": toksets}):
-        with pytest.raises(ValueError, match="_dtoks"):
-            minhash_bands(docs, 8, 4, _dtoks=dtoks, **extra)
-    # _dtoks alone stays the shared-tokenize path
-    assert minhash_bands(docs, 8, 4, _dtoks=dtoks).count() > 0
