@@ -18,6 +18,15 @@ PySpark API, the public Stratosphere/Flink history, and published papers
 (Battré et al. SoCC'10; Ewen et al. PVLDB'12; Alexandrov et al. VLDBJ'14).
 """
 
-from incubator_flink_old_spark.session import get_spark, prep_session
-
 __all__ = ["get_spark", "prep_session"]
+
+
+def __getattr__(name):
+    # Lazy (PEP 562): the Python-worker daemon runs as
+    # ``python -m incubator_flink_old_spark.pyworker``, which imports this
+    # package first and must do so before pyspark is loaded.
+    if name in __all__:
+        from incubator_flink_old_spark import session
+
+        return getattr(session, name)
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

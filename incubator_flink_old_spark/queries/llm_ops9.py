@@ -190,16 +190,17 @@ def q_minhash_est_jaccard(spark, sf_dir):
     # whole signature-fed pipeline to one task (optimization round 12).
     docs = _spread_narrow(t(spark, sf_dir, "documents"))
     staged = _stage_tokens(docs, "text", "doc_id")
-    # One (doc_id, __n, mh*) frame feeds all three consumers (band
-    # generation + both est-join sides): materialized eagerly — the
-    # frame is |docs| × 8 md5 strings, tiny — so the 8-hash pass over
-    # every distinct token runs once, not three times; __n rides along,
-    # so the bands need no second tokenize for the size-ratio prefilter.
+    # One (doc_id, __n, mh*, __toks) frame feeds all four consumers (band
+    # generation, the verify token sets and both est-join sides):
+    # materialized eagerly — the frame is |docs| × 8 md5 strings plus
+    # one hashed token set per doc, small — so the tokenize and the
+    # 8-hash pass over every distinct token run once, not once per
+    # consumer; __n rides along, so the bands need no second tokenize
+    # for the size-ratio prefilter.
     nh = _EST_NUM_HASHES
-    sigs = _signatures(staged, ["doc_id"], nh).localCheckpoint(eager=True)
-    toksets = staged.select(
-        F.col("doc_id").alias("__k"), _hashed_set(F.col("__dt")).alias("__toks")
-    )
+    toks = _hashed_set(F.col("__dt")).alias("__toks")
+    sigs = _signatures(staged, ["doc_id", toks], nh).localCheckpoint(eager=True)
+    toksets = sigs.select(F.col("doc_id").alias("__k"), "__toks")
     # join_hint: the checkpointed sigs are a LogicalRDD with no size
     # stats, so the band self-join planned as a SortMergeJoin — and its
     # (band, bucket) exchange is HOT-BUCKET skewed (too few bytes for AQE

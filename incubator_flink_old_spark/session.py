@@ -20,6 +20,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 #: Runtime-settable confs applied to ANY session the engine is handed
 #: (the test/bench harness builds its own session; so does the driver).
 #: Only runtime-mutable keys belong here.
@@ -86,6 +88,18 @@ def get_spark(app_name: str = "incubator_flink_old_spark") -> SparkSession:
         # the one handed to __spark_entry__) keeps the value it was built
         # with.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Python workers fork from the engine's daemon (pyworker.py), which
+        # takes Spark's pyspark.zip, py4j zip and spark-core jar off
+        # sys.path when pyspark and py4j are installed as directories.
+        # With them on it, every task's setup_spark_files makes 16 cached
+        # zipimporters re-read 26,672 archive entries: 0.16-0.30 s of
+        # worker CPU a task, against ~10 ms for the rest of a
+        # pandas-state task (PERF.md, Python-worker per-task floor).
+        # PYTHONPATH names the package's parent so a worker finds the
+        # module from any cwd. Static confs, like the one above: a
+        # session built outside the engine keeps Spark's default daemon.
+        .config("spark.python.daemon.module", "incubator_flink_old_spark.pyworker")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         # A long-lived session compiles one whole-stage-codegen module per
         # stage per query; at the default 240 MB the JVM code cache fills
         # after ~100 queries, HotSpot stops JIT-compiling, and hot verify
