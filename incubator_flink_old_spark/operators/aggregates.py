@@ -209,7 +209,7 @@ def global_row_number(
     spark = df.sparkSession
     from incubator_flink_old_spark.sources import local_rows
 
-    offsets_df = local_rows(spark, offsets or [(0, 0)], "__pid int, __offset long")
+    offsets_df = local_rows(spark, offsets, "__pid int, __offset long")
     return (
         indexed.join(F.broadcast(offsets_df), "__pid", "left")
         .withColumn(alias, F.coalesce(F.col("__offset"), F.lit(0)) + F.col("__local"))
@@ -280,7 +280,7 @@ def per_group_row_number(
     gtype = dict(df.dtypes)[group]
     offsets_df = local_rows(
         spark,
-        offsets or [(0, None, 0)],
+        offsets,
         f"__opid int, __og {gtype}, __offset long",
     )
     # eqNullSafe on the group key: a NULL group is a legal rank group
@@ -366,7 +366,7 @@ def global_prefix_agg(
     schema = "__pid int, " + ", ".join(
         f"__prev_{a} {dtypes[a]}" for a in values
     )
-    prev_df = local_rows(df.sparkSession, prevs or [(0, *[None] * len(values))], schema)
+    prev_df = local_rows(df.sparkSession, prevs, schema)
     out = indexed.join(F.broadcast(prev_df), "__pid", "left")
     for a, (_, how) in values.items():
         prev = F.col(f"__prev_{a}")

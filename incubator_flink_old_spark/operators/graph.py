@@ -536,6 +536,7 @@ def scc_forward_backward(
     convention — labels are relabelled at the end, since a pivot is the
     min of its weak component, not necessarily of its SCC)."""
     from incubator_flink_old_spark.operators.iterations import _materialize
+    from incubator_flink_old_spark.sources import local_rows
 
     e0 = (
         edges.select("src", "dst")
@@ -549,7 +550,7 @@ def scc_forward_backward(
         .distinct()
     )
     spark = edges.sparkSession
-    assigned = spark.createDataFrame([], "id long, lbl long")
+    assigned = local_rows(spark, [], "id long, lbl long")
     active = _materialize(verts.select(F.col("id").cast("long").alias("id")))
     ae = e0
 

@@ -67,8 +67,11 @@ def bloom_build(
     regardless of input size. The final word list is collected (bounded:
     2048 rows at the default 2^17 bits = 16 KiB) and re-emitted as a
     single array row, the form a broadcast join can ship once per
-    executor.
+    executor: one array literal parsed from SQL text over range(1), so
+    the row needs no Python worker and costs one py4j call.
     """
+    from incubator_flink_old_spark.operators.similarity import _sql_bigint_array
+
     if num_bits % 64 != 0:
         raise ValueError("num_bits must be a multiple of 64")
     n_words = num_bits // 64
@@ -91,7 +94,9 @@ def bloom_build(
     )
     filled = {r["__w"]: r["__m"] for r in words.collect()}
     arr = [filled.get(w, 0) for w in range(n_words)]
-    return values.sparkSession.createDataFrame([(arr,)], "__bf array<bigint>")
+    return values.sparkSession.range(1).select(
+        F.expr(_sql_bigint_array(arr)).alias("__bf")
+    )
 
 
 def bloom_might_contain(

@@ -3367,6 +3367,7 @@ def mixture_schedule(
         global_row_number,
         per_group_row_number,
     )
+    from incubator_flink_old_spark.sources import local_rows
 
     w_rows = sorted(weights.items())
     if not w_rows:
@@ -3383,8 +3384,10 @@ def mixture_schedule(
             " omit a source from weights to exclude it"
         )
     wdf = F.broadcast(
-        df.sparkSession.createDataFrame(
-            [(s, float(w)) for s, w in w_rows], f"{source} string, __wt double"
+        local_rows(
+            df.sparkSession,
+            [(s, float(w)) for s, w in w_rows],
+            f"{source} string, __wt double",
         )
     )
     h = _hash60(F.col(key).cast("string"))

@@ -669,7 +669,7 @@ def q_stream_cdc_parity(spark, sf_dir):
     emission per key is EXACTLY the batch ROW_NUMBER window whatever
     the batch boundaries — boundary invariance law-pinned in
     tests/test_wave42.py. Epoch micros are computed Spark-side before
-    the state worker (the stateful_session epoch lesson); the 'error'
+    the aggregation (the stateful_session epoch lesson); the 'error'
     tombstone drops the key at readback exactly as the batch form
     filters it.
 
@@ -707,15 +707,7 @@ def q_stream_cdc_parity(spark, sf_dir):
         )
         out = stateful_latest(stream)
         name = f"stream_cdc_{next(_SEQ)}"
-        # state_partitions=16: the pandas-state rows keyed by user_id are
-        # PYTHON-WORKER bound (wall ~= ert >> cpu — ~1.5k fn calls per
-        # batch serialized state_partitions-wide), the opposite regime
-        # from the state-machinery-bound built-in operators (PERF.md
-        # round 5). Measured sweep at sf0.1 (round 13): 4/8/16/32 ->
-        # 6.4/4.5/3.8/4.4 s stream wall on this shape; 16 is the
-        # crossover before per-store fixed cost wins. Partitioning never
-        # changes results (boundary-invariance laws green).
-        run_stream_to_memory(out, name, "update", state_partitions=16)
+        run_stream_to_memory(out, name, "update")
         tbl = spark.table(name).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(src, ignore_errors=True)

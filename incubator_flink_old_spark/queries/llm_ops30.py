@@ -34,6 +34,7 @@ from incubator_flink_old_spark.queries.llm_ops29 import (
     _WIN_W,
     _stream_winnow_oracle,
 )
+from incubator_flink_old_spark.sources import local_rows
 
 _SEQ = itertools.count()
 
@@ -557,7 +558,8 @@ def q_serve_operating_point(spark, sf_dir):
             .groupBy("n_probe", "refine_c")
             .agg(F.count(F.lit(1)).alias("hits"))
         )
-        cfg = spark.createDataFrame(
+        cfg = local_rows(
+            spark,
             [(int(a), int(b)) for a, b in _OP_CONFIGS],
             "n_probe long, refine_c long",
         )

@@ -209,12 +209,16 @@ def local_rows(spark: SparkSession, rows: list, schema: str) -> DataFrame:
     Here the rows become ONE JVM literal — explode(array(struct…)) over
     range(1) — a single task, zero Python workers, and a relation small
     enough that Catalyst broadcasts it directly. Values must be plain
-    scalars (str/int/float/bool/None/date/Decimal). Falls back to
-    createDataFrame for empty input (no literal to type) and above
+    scalars (str/int/float/bool/None/date/Decimal). Empty input is a
+    typed projection over range(0). Falls back to createDataFrame above
     _LOCAL_ROWS_MAX rows (plan-compile cost crosses over).
     """
     st = T.StructType.fromDDL(schema) if isinstance(schema, str) else schema
-    if not rows or len(rows) > _LOCAL_ROWS_MAX:
+    if not rows:
+        return spark.range(0).select(
+            *[F.lit(None).cast(f.dataType).alias(f.name) for f in st.fields]
+        )
+    if len(rows) > _LOCAL_ROWS_MAX:
         return spark.createDataFrame(rows, schema=schema)
     structs = [
         F.struct(

@@ -147,6 +147,9 @@ def stateful_session_stats(
 
     Scale: state lives in the state store partitioned by key; watermark
     bounds retention.
+
+    Custom state by design: this row exercises the user state API
+    itself; :func:`session_window` is the built-in form of a session.
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -425,7 +428,9 @@ def stateful_heavy_hitters(
     (deterministic: min count, then lexicographically greatest value
     evicts first), so state is O(capacity) per group forever — the
     property that makes per-key frequency tracking viable over
-    unbounded streams where exact maps would grow without limit.
+    unbounded streams where exact maps would grow without limit. No
+    built-in operator replaces it: a streaming count keeps a counter for
+    every distinct value, and only SpaceSaving's eviction bounds that.
 
     State is one string column holding the JSON text of ``[vals, cnts,
     errs]``. With ``array<…>`` state columns Spark gives each trigger's
@@ -553,6 +558,8 @@ def stateful_asof_enrich(
     arrive Spark-side as NaN, not NULL, and diverge from the SQL twin.
 
     Output: (key, seq, ts, asof_seq, asof_ts) — one row per lookup.
+    No built-in operator replaces it: a stream-stream join emits every
+    match in its time range, not the latest preceding one under a TTL.
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -720,7 +727,9 @@ def stateful_topk(
 
     Output: (group, id, score, seen, batch_rank). Scale: state is
     O(k) per group forever; emissions are k rows per group per batch;
-    the merge work per batch is sort(|batch rows| + k) per group.
+    the merge work per batch is sort(|batch rows| + k) per group. No
+    built-in aggregate keeps only the k best rows (``max`` keeps one,
+    ``collect_list`` keeps all), so the bounded top-k is custom state.
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -791,34 +800,30 @@ def stateful_latest(
     order_cols: tuple[str, str] = ("ts_us", "event_id"),
     payload_cols: tuple[str, ...] = ("event_type", "value"),
 ) -> DataFrame:
-    """Streaming LATEST-WINS compaction with O(1) state per key
-    (applyInPandasWithState) — the CDC/upsert MERGE semantics
-    (q_cdc_latest) maintained continuously: per key, state holds only
-    the current winning row by the (ts, id) total order; each
-    microbatch arg-maxes the batch's rows against it and emits the
-    current winner (update semantics).
+    """Streaming LATEST-WINS compaction with O(1) state per key — the
+    CDC/upsert MERGE semantics (q_cdc_latest) maintained continuously:
+    per key, state holds only the current winning row by the (ts, id)
+    total order, and each microbatch emits the current winner (update
+    semantics).
 
-    Latest-wins is an idempotent, commutative, associative merge
-    (argmax over a total order — a semilattice), so the final emission
-    equals the batch ROW_NUMBER window whatever the microbatch
-    boundaries or intra-batch order — the invariance the law test
-    permutes. No arithmetic touches any column (pure comparisons), so
-    streaming ≡ batch bit-for-bit. Order columns must be longs (epoch
-    micros computed Spark-side BEFORE the state worker — the
-    stateful_session epoch lesson); ties break by the second order
-    column descending, matching the batch window's (ts DESC, id DESC).
+    Latest-wins is an argmax over a total order (a semilattice), so it
+    is a built-in streaming aggregation, ``max(struct(o1, o2,
+    *payload_cols))``, kept in the JVM state store: no Python worker
+    runs. The final emission equals the batch ROW_NUMBER window (ts
+    DESC, id DESC) whatever the microbatch boundaries or intra-batch
+    order — the invariance the law test permutes. No arithmetic touches
+    any column (pure comparisons), so streaming ≡ batch bit-for-bit.
+    Order columns must be integers (epoch micros computed Spark-side —
+    the stateful_session epoch lesson). Tie rule: rows with equal
+    (o1, o2) are ordered by their payload columns in turn, so the
+    greatest payload wins (NULL lowest), whatever order they arrive in.
 
-    Output: (key, *order_cols, *payload_cols, seen) — ``seen`` counts
-    rows absorbed per key (monotone), so a readback selects each key's
-    LAST emission without a batch-id channel. Scale: state is one row
-    per key forever; emissions are one row per key per batch."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
+    Output: (key, *order_cols, *payload_cols, seen), each column of its
+    input type — ``seen`` counts rows absorbed per key (monotone), so a
+    readback selects each key's LAST emission without a batch-id
+    channel. Scale: state is one row per key forever; emissions are one
+    row per key per batch."""
     o1, o2 = order_cols
-    # Payload types come from the stream's own schema (ADVICE r08: a
-    # name-based special case silently mistyped any non-default payload
-    # set) — latest-wins never transforms a payload value, so the output
-    # carries each column's input type verbatim.
     in_types = {f.name: f.dataType.simpleString() for f in stream.schema}
     missing = [c for c in payload_cols if c not in in_types]
     if missing:
@@ -827,73 +832,22 @@ def stateful_latest(
             f"stream schema ({sorted(in_types)})"
         )
     for c in order_cols:
-        # The argmax walk compares raw order values; the docstring
-        # mandates longs (epoch micros computed Spark-side). A float
-        # order column would silently change tie behavior vs the
-        # declared-long contract (ADVICE r12) — fail loudly instead.
+        # A float order column would silently change tie behavior vs the
+        # declared-integer contract (ADVICE r12) — fail loudly instead.
         if in_types.get(c) not in ("bigint", "int", "smallint", "tinyint"):
             raise ValueError(
                 f"stateful_latest: order column {c!r} must be an integer"
                 f" type (epoch micros computed Spark-side), got"
                 f" {in_types.get(c)}"
             )
-    payload_schema = ", ".join(f"{c} {in_types[c]}" for c in payload_cols)
-    out_schema = (
-        f"{key} long, {o1} long, {o2} long, {payload_schema}, seen long"
-    )
-    state_schema = f"{o1} long, {o2} long, {payload_schema}, seen long"
-
-    def fn(key_tuple, pdfs, state: GroupState):
-        import pandas as pd  # worker-side import
-
-        if state.hasTimedOut:  # pragma: no cover - no timeout configured
-            state.remove()
-            return
-        best = None  # (o1, o2, *payloads)
-        seen = 0
-        if state.exists:
-            row = state.get
-            best = tuple(row[:-1])
-            seen = int(row[-1])
-        # per-key-per-batch body (round 12, guide §4): find the batch
-        # argmax on plain lists (itertuples paid ~ms-scale setup per
-        # call), strict > keeps the FIRST of exact (o1, o2) ties — the
-        # original walk's semantics verbatim
-        for pdf in pdfs:
-            m = len(pdf)
-            seen += m
-            if not m:
-                continue
-            o1_l = pdf[o1].to_numpy().tolist()
-            o2_l = pdf[o2].to_numpy().tolist()
-            bi, b1, b2 = -1, None, None
-            for idx, (a, b) in enumerate(zip(o1_l, o2_l)):
-                if bi < 0 or a > b1 or (a == b1 and b > b2):
-                    bi, b1, b2 = idx, a, b
-            cand = (int(b1), int(b2)) + tuple(
-                pdf.iat[bi, pdf.columns.get_loc(c)] for c in payload_cols
-            )
-            if best is None or cand[:2] > best[:2]:
-                best = cand
-        if best is None:  # pragma: no cover - keyed batch is never empty
-            return
-        state.update(tuple(best) + (seen,))
-        yield pd.DataFrame(
-            {
-                key: [key_tuple[0]],
-                o1: [best[0]],
-                o2: [best[1]],
-                **{c: [best[2 + i]] for i, c in enumerate(payload_cols)},
-                "seen": [seen],
-            }
-        )
-
+    cols = (o1, o2, *payload_cols)
     return (
-        stream.select(key, o1, o2, *payload_cols)
-        .groupBy(key)
-        .applyInPandasWithState(
-            fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
+        stream.groupBy(key)
+        .agg(
+            F.max(F.struct(*cols)).alias("__m"),
+            F.count(F.lit(1)).alias("seen"),
         )
+        .select(key, *[F.col(f"__m.{c}").alias(c) for c in cols], "seen")
     )
 
 
@@ -959,10 +913,10 @@ def write_event_time_replay(
     ntile, SEQUENTIALLY, so a maxFilesPerTrigger=1 file stream replays
     them in that order (the file source replays oldest-modtime-first) —
     the in-event-time-order regime a watermark models: a crawl's ingest
-    time is its arrival order. Shared by the watermark-parity rows,
-    their tests and the state probe (one copy of the load-bearing
-    invariant, per review). File order is enforced by stamping each
-    file group's mtime explicitly 50 ms apart (``os.utime``, the
+    time is its arrival order. Shared by the watermark-parity rows and
+    their tests (one copy of the load-bearing invariant, per review).
+    File order is enforced by stamping each file group's mtime
+    explicitly 50 ms apart (``os.utime``, the
     q_stream_asof_parity recipe) instead of sleeping between writes —
     optimization round 12: the 0.15 s/file sleeps summed to ~0.5 s of
     pure scaffolding wall on every replay-parity row. Fixture-prep

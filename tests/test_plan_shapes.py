@@ -315,3 +315,69 @@ def test_bucketed_join_layout_is_exchange_free(spark, sf_dir):
     assert "Exchange hashpartitioning(o_orderkey" not in plan, plan[:2000]
     assert plan.count("Bucketed: true") == 2, plan[:2000]
     assert "SortMergeJoin" in plan, plan[:2000]
+
+
+def test_stateful_latest_is_a_builtin_aggregation(spark, tmp_path):
+    """Latest-wins is max(struct) in the JVM state store: no pandas-state
+    node, so no Python worker runs."""
+    from incubator_flink_old_spark.plans import explain_str
+    from incubator_flink_old_spark.streaming import stateful_latest
+
+    stream = spark.readStream.schema(
+        "user_id long, ts_us long, event_id long, event_type string, value double"
+    ).parquet(str(tmp_path))
+    plan = explain_str(stateful_latest(stream), "extended")
+    assert "PandasWithState" not in plan, plan
+    assert "Aggregate" in plan, plan
+
+
+def _bloom(spark):
+    from incubator_flink_old_spark.operators.sketches import bloom_build
+
+    vals = spark.range(50).select((F.col("id") * 7919).alias("g"))
+    return bloom_build(vals, "g", num_bits=1 << 10, num_hashes=3)
+
+
+@pytest.mark.parametrize(
+    "build",
+    [lambda spark: from_elements(spark, [], "id long, lbl string"), _bloom],
+    ids=["local_rows_empty", "bloom_build"],
+)
+def test_driver_built_frames_scan_no_python_rdd(spark, build):
+    """A frame the driver builds from collected values is a JVM literal:
+    createDataFrame(list) would plan a Scan ExistingRDD over a Python
+    RDD, and each of its tasks would fork a Python worker."""
+    plan = _executed_plan(build(spark))
+    assert "ExistingRDD" not in plan, plan
+
+
+def _mixture(spark):
+    from incubator_flink_old_spark.operators.text import mixture_schedule
+
+    out = mixture_schedule(_docs(spark, 8), {"s": 1.0})
+    return {r.doc_id for r in out.collect()} == set(range(8))
+
+
+def _scc(spark):
+    from incubator_flink_old_spark.operators.graph import scc_forward_backward
+
+    edges = from_elements(spark, [(1, 2), (2, 1), (2, 3)], "src long, dst long")
+    got = {r.id: r.scc_id for r in scc_forward_backward(edges).collect()}
+    return got == {1: 1, 2: 1, 3: 3}
+
+
+@pytest.mark.parametrize(
+    "run", [_mixture, _scc], ids=["mixture_schedule", "scc_forward_backward"]
+)
+def test_operators_build_no_python_rdd(spark, monkeypatch, run):
+    """mixture_schedule's weights and scc_forward_backward's empty seed
+    are JVM literals too. Both plans read local checkpoints, which also
+    print as Scan ExistingRDD, so these are pinned at the constructor:
+    the operator runs with createDataFrame unavailable."""
+    from pyspark.sql import SparkSession
+
+    def no_python_rdd(*args, **kwargs):
+        raise AssertionError("createDataFrame called")
+
+    monkeypatch.setattr(SparkSession, "createDataFrame", no_python_rdd)
+    assert run(spark)

@@ -369,13 +369,6 @@ def test_stream_sq8_encode_is_pure_map(spark):
 
 
 def _final_latest(spark, rows, n_files: int, order_col):
-    from pyspark.sql import Window
-
-    from incubator_flink_old_spark.streaming import (
-        run_stream_to_memory,
-        stateful_latest,
-    )
-
     src = tempfile.mkdtemp(prefix="t2_cdc_law_")
     try:
         (
@@ -384,21 +377,34 @@ def _final_latest(spark, rows, n_files: int, order_col):
             .write.mode("overwrite")
             .parquet(src)
         )
-        stream = (
-            spark.readStream.schema(
-                "user_id long, ts_us long, event_id long, "
-                "event_type string, value double"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        name = f"cdc_law_{n_files}_{order_col}"
-        run_stream_to_memory(
-            stateful_latest(stream), name, "update", state_partitions=2
-        )
-        tbl = spark.table(name).localCheckpoint(eager=True)
+        return _replay_latest(spark, src, f"cdc_law_{n_files}_{order_col}")
     finally:
         shutil.rmtree(src, ignore_errors=True)
+
+
+def _replay_latest(spark, src: str, name: str):
+    """Replay ``src`` one file per trigger through stateful_latest and
+    return each key's last emission as sorted (user_id, event_id,
+    event_type, value) tuples."""
+    from pyspark.sql import Window
+
+    from incubator_flink_old_spark.streaming import (
+        run_stream_to_memory,
+        stateful_latest,
+    )
+
+    stream = (
+        spark.readStream.schema(
+            "user_id long, ts_us long, event_id long, "
+            "event_type string, value double"
+        )
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
+    )
+    run_stream_to_memory(
+        stateful_latest(stream), name, "update", state_partitions=2
+    )
+    tbl = spark.table(name)
     w = Window.partitionBy("user_id")
     return sorted(
         (r.user_id, r.event_id, r.event_type, r.value)
@@ -438,6 +444,31 @@ def test_stream_cdc_batch_boundary_invariance(spark):
         .collect()
     )
     assert single == batch
+
+
+def test_stream_cdc_exact_tie_breaks_by_payload(spark):
+    """An exact (ts_us, event_id) tie between rows with different
+    payloads goes to the greatest payload whichever row arrives first:
+    the tie rule is part of the order, so boundary invariance holds on
+    ties too. Each row is its own micro-batch, in both arrival orders."""
+    from incubator_flink_old_spark.sources import local_rows
+    from incubator_flink_old_spark.streaming import write_event_time_replay
+
+    rows = local_rows(
+        spark,
+        [(1, 100, 7, "a", 2.0, 0, 1), (1, 100, 7, "b", 1.0, 1, 0)],
+        "user_id long, ts_us long, event_id long, event_type string, "
+        "value double, a_first long, b_first long",
+    )
+    got = {}
+    for order in ("a_first", "b_first"):
+        src = tempfile.mkdtemp(prefix="t2_cdc_tie_")
+        try:
+            write_event_time_replay(rows, src, n_files=2, order_by=order)
+            got[order] = _replay_latest(spark, src, f"cdc_tie_{order}")
+        finally:
+            shutil.rmtree(src, ignore_errors=True)
+    assert got["a_first"] == got["b_first"] == [(1, 7, "b", 1.0)], got
 
 
 def test_prefix_refine_laws(spark):
