@@ -14,8 +14,8 @@ only that key; a 2-D probe (user × time, geo × time, doc × score) on any
 single-key layout still scans ~the full table on the other dimension.
 Interleaving k quantized dimensions bounds every row group to a small
 hyper-rectangle, so a selective k-D probe reads O(result) row groups.
-`tools/zorder_probe.py` measures the bytes-read ratio vs a natural
-layout at sf0.1.
+PERF.md "Round 5: Z-order layout" gives the bytes-read ratio vs a
+natural layout at sf0.1.
 
 Everything is JVM-side Column arithmetic (shift/AND/OR): no UDF, no
 shuffle beyond the one `repartitionByRange` that IS the layout build.

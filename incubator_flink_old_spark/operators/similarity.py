@@ -111,7 +111,7 @@ def _centers_frame(spark, rows) -> DataFrame:
     above it; identical schema either way."""
     if sum(1 + len(r["cv"]) for r in rows) <= _FOLD_LITERAL_MAX_ELEMS:
         return (
-            spark.range(1)
+            spark.range(0, 1, 1, 1)
             .select(F.explode(_centers_sql_array(rows)).alias("s"))
             .select(F.col("s.cell").alias("cell"), F.col("s.cv").alias("cv"))
         )
@@ -152,7 +152,7 @@ def _books_frame(spark, by_j: dict, m: int) -> DataFrame:
     n = sum(1 + len(r["bv"]) for rows in by_j.values() for r in rows)
     if n <= _FOLD_LITERAL_MAX_ELEMS:
         return (
-            spark.range(1)
+            spark.range(0, 1, 1, 1)
             .select(
                 F.posexplode(_books_sql_array(by_j, m)).alias("__j", "__bl")
             )
@@ -432,7 +432,7 @@ def grid_ivf(
         empty_cells = e.select(
             F.col("__c").alias(key), F.lit(1).cast("int").alias("cell")
         ).filter(F.lit(False))
-        empty_centers = spark.range(0).select(
+        empty_centers = spark.range(0, 0, 1, 1).select(
             F.lit(1).cast("int").alias("cell"),
             F.array(F.lit(0).cast("long")).alias("cv"),
         )
@@ -634,7 +634,7 @@ def grid_pq(
             F.lit(0).alias("j"),
             F.lit(1).cast("int").alias("code"),
         ).filter(F.lit(False))
-        empty_books = spark.range(0).select(
+        empty_books = spark.range(0, 0, 1, 1).select(
             F.lit(0).cast("int").alias("j"),
             F.lit(1).cast("int").alias("cid"),
             F.array(F.lit(0).cast("long")).alias("bv"),

@@ -94,7 +94,7 @@ def bloom_build(
     )
     filled = {r["__w"]: r["__m"] for r in words.collect()}
     arr = [filled.get(w, 0) for w in range(n_words)]
-    return values.sparkSession.range(1).select(
+    return values.sparkSession.range(0, 1, 1, 1).select(
         F.expr(_sql_bigint_array(arr)).alias("__bf")
     )
 
@@ -208,10 +208,11 @@ def heavy_hitters(
     local bar) by feeding pre-bucketed inputs, or cap with a SpaceSaving
     sketch — the pruning law is unchanged.
 
-    WHEN TO USE (measured, tools/sketch_probe.py): the prune only bites
-    when ``threshold >> P`` (the local bar is ceil(T/P); at T ≤ P it is
-    1 and nothing prunes) AND the value distribution is long-tailed
-    (the win is tail values never shuffling). On a small vocabulary a
+    WHEN TO USE (measured, PERF.md "Sketch-op probe results"): the
+    prune only bites when ``threshold >> P`` (the local bar is
+    ceil(T/P); at T ≤ P it is 1 and nothing prunes) AND the value
+    distribution is long-tailed (the win is tail values never
+    shuffling). On a small vocabulary a
     plain groupBy+HAVING is already optimal — hash-agg map-side combine
     collapses it before the exchange — so this operator is the
     scale-path variant, not a default replacement.

@@ -176,7 +176,8 @@ def minhash_bands(
     candidate self-join runs on. Exposed so a 100 TB deployment can
     MATERIALIZE it bucketed by (band, bucket) (`bucketBy` +
     `saveAsTable`), making the candidate join zero-exchange
-    (tools/band_bucket_probe.py measures exactly that); ``__n`` carries
+    (PERF.md "Round 2 delta", band-bucketed layout, measures exactly
+    that); ``__n`` carries
     the distinct-token count for the size-ratio prefilter and ``__bks``
     the row's FULL bucket array (bucket == __bks[band]) so
     :func:`band_candidates` can dedup multi-band collisions with a

@@ -79,3 +79,21 @@ def split_col(key: str = "doc_id") -> Column:
         .when(b < 90, F.lit("val"))
         .otherwise(F.lit("test"))
     )
+
+
+def vec_id_thirds(delta: DataFrame) -> tuple[DataFrame, ...]:
+    """The streamed delta of the vector-maintenance rows as replay
+    batches: three vec_id ranges cut at hi//3 and 2·(hi//3), or ONE batch
+    when the delta is empty or tiny — the cuts would degenerate (or fail
+    on a None max); the parity laws are batch-boundary-invariant by
+    construction (ADVICE r07)."""
+    hi = delta.agg(F.max("vec_id")).collect()[0][0]  # 1-row bound
+    if hi is None or hi < 3:
+        return (delta,)
+    lo_cut, hi_cut = hi // 3, 2 * (hi // 3)
+    v = F.col("vec_id")
+    return (
+        delta.filter(v <= lo_cut),
+        delta.filter((v > lo_cut) & (v <= hi_cut)),
+        delta.filter(v > hi_cut),
+    )

@@ -7,14 +7,10 @@ window cannot hold rolls to r05 as pure overflow (COVERAGE.md).
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import functions as F
 
 from incubator_flink_old_spark.queries import register
 from incubator_flink_old_spark.queries._util import sql_dsum, t
-
-_STREAM_SEQ = itertools.count()
 
 
 def _stream_session_oracle() -> str:
@@ -45,7 +41,7 @@ def q_stream_session_parity(spark, sf_dir):
     from incubator_flink_old_spark.queries._util import dsum
     from incubator_flink_old_spark.streaming import (
         read_events_stream,
-        run_stream_to_memory,
+        stream_result,
     )
 
     stream = read_events_stream(spark, sf_dir)
@@ -62,9 +58,7 @@ def q_stream_session_parity(spark, sf_dir):
             "total_value",
         )
     )
-    name = f"stream_session_{next(_STREAM_SEQ)}"
-    run_stream_to_memory(agg, name, "complete")
-    return spark.table(name)
+    return stream_result(agg, "complete")
 
 
 @register(
@@ -89,7 +83,7 @@ def q_stream_interval_join_parity(spark, sf_dir):
     from incubator_flink_old_spark.streaming import (
         interval_join,
         read_events_stream,
-        run_stream_to_memory,
+        stream_result,
         with_watermark,
     )
 
@@ -118,9 +112,7 @@ def q_stream_interval_join_parity(spark, sf_dir):
     j = interval_join(l, r, "user_id", upper="10 minutes").select(
         l["user_id"], "click_id", "purchase_id"
     )
-    name = f"stream_ij_{next(_STREAM_SEQ)}"
-    run_stream_to_memory(j, name, "append")
-    return spark.table(name)
+    return stream_result(j, "append")
 
 
 @register(

@@ -10,7 +10,6 @@ algorithm), plus per-cell label purity over that IVF layout.
 
 from __future__ import annotations
 
-import itertools
 import tempfile
 
 from pyspark.sql import Window
@@ -445,7 +444,6 @@ def q_ann_recall_lsh(spark, sf_dir):
 # Custom-state streaming operator ⇄ batch parity (the applyInPandasWithState
 # surface gets a driver row)
 # --------------------------------------------------------------------------
-_STREAM_SEQ = itertools.count()
 
 #: Session gap and watermark of the custom-state parity row, shared by
 #: the Spark call and every constant in the oracle below.
@@ -515,19 +513,17 @@ def q_stream_custom_state_parity(spark, sf_dir):
     user, watermark-bounded."""
     from incubator_flink_old_spark.streaming import (
         read_events_stream,
-        run_stream_to_memory,
         stateful_session_stats,
+        stream_result,
     )
 
     ev = read_events_stream(spark, sf_dir)
     out = stateful_session_stats(
         ev, gap_seconds=_CS_GAP_S, watermark="10 minutes"
     )
-    name = f"stream_cs_{next(_STREAM_SEQ)}"
     # state_partitions=16: Python-worker-bound pandas-state row keyed
     # by user_id (the q_stream_cdc_parity sweep rationale, round 13).
-    run_stream_to_memory(out, name, "append", state_partitions=16)
-    return spark.table(name)
+    return stream_result(out, "append", state_partitions=16)
 
 
 # --------------------------------------------------------------------------

@@ -7,9 +7,9 @@ event time) keeps parquet row-group min/max tight on BOTH dimensions at
 once, so a 2-D rectangle probe — the "this cohort, this week" query
 every event store runs — prunes to O(result) row groups instead of
 scanning the full table on the un-partitioned dimension.
-`tools/zorder_probe.py` measures the bytes-read ratio vs a natural
-layout at sf0.1; tests/test_wave24.py asserts both range predicates
-reach the layout scan as PushedFilters.
+PERF.md "Round 5: Z-order layout" gives the bytes-read ratio vs a
+natural layout at sf0.1; tests/test_wave24.py asserts both range
+predicates reach the layout scan as PushedFilters.
 """
 
 from __future__ import annotations
@@ -102,7 +102,7 @@ def q_zorder_layout(spark, sf_dir):
     2-D rectangle (a 25%-of-users × 25%-of-time cohort window) answered
     from the layout with BOTH range predicates pushed to the parquet
     scan (tests/test_wave24.py asserts the PushedFilters; the bytes-read
-    ratio vs a natural layout is measured in tools/zorder_probe.py).
+    ratio vs a natural layout is in PERF.md "Round 5: Z-order layout").
     The aggregate (events, distinct users, decimal-staged value total
     per event type) is value-identical to the plain-scan oracle because
     the layout permutes rows, never changes them; bounds are integer

@@ -6,9 +6,10 @@ q_zorder_layout; hash-bucketed fact⨝fact co-location → this module).
 At 100 TB the single biggest shuffle in a TPC-H-shaped workload is
 lineitem⨝orders on orderkey; writing BOTH fact tables bucketed and
 sorted by that key turns every subsequent join between them into a
-zero-exchange, zero-sort zip of co-located buckets. `tools/bucketize.py`
-measures the win at sf0.1; tests/test_plan_shapes.py asserts the
-exchange-free join on this exact query's plan.
+zero-exchange, zero-sort zip of co-located buckets. PERF.md "Round 2
+delta" (bucketed-layout probe) measures the win at sf0.1;
+tests/test_plan_shapes.py asserts the exchange-free join on this exact
+query's plan.
 """
 
 from __future__ import annotations

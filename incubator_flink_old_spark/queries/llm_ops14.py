@@ -13,10 +13,8 @@ hash.
 from __future__ import annotations
 
 import datetime
-import itertools
 import os
 import tempfile
-import time
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -25,7 +23,6 @@ from incubator_flink_old_spark.queries import register
 from incubator_flink_old_spark.queries._util import split_case_sql, split_col, t
 from incubator_flink_old_spark.queries.llm_ops2 import _dedup_cluster_oracle
 
-_SEQ = itertools.count()
 
 # --------------------------------------------------------------------------
 # Streaming SpaceSaving heavy hitters ⇄ exact batch counts
@@ -73,33 +70,20 @@ def q_stream_hh_parity(spark, sf_dir):
     Scale: state is O(capacity) per group forever; emissions are
     capacity-bounded rows per group per batch."""
     from incubator_flink_old_spark.streaming import (
-        run_stream_to_memory,
+        replay_source,
         stateful_heavy_hitters,
+        stream_result,
     )
 
-    src = tempfile.mkdtemp(prefix="t2_hh_src_")
-    (
-        t(spark, sf_dir, "events")
-        .select("event_type", "user_id")
-        .repartition(4)
-        .write.mode("overwrite")
-        .parquet(src)
-    )
-    stream = (
-        spark.readStream.schema("event_type string, user_id long")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    out = stateful_heavy_hitters(
-        stream, capacity=_HH_CAPACITY, k=_HH_CAPACITY,
-        group="event_type", value="user_id",
-    )
-    name = f"stream_hh_{next(_SEQ)}"
-    run_stream_to_memory(out, name, "update", state_partitions=4)
-    final = (
-        spark.table(name)
-        .groupBy("event_type", "user_id")
-        .agg(F.max("cnt").alias("cnt"), F.max("err").alias("err"))
+    events = t(spark, sf_dir, "events").select("event_type", "user_id")
+    with replay_source([events.repartition(4)]) as stream:
+        out = stateful_heavy_hitters(
+            stream, capacity=_HH_CAPACITY, k=_HH_CAPACITY,
+            group="event_type", value="user_id",
+        )
+        emitted = stream_result(out, "update", state_partitions=4)
+    final = emitted.groupBy("event_type", "user_id").agg(
+        F.max("cnt").alias("cnt"), F.max("err").alias("err")
     )
     w = Window.partitionBy("event_type").orderBy(F.col("cnt").desc(), "user_id")
     return (
@@ -230,7 +214,7 @@ def q_stream_late_drop_parity(spark, sf_dir):
     state at 100 TB/day — state for a window lives only until the
     watermark passes its end."""
     from incubator_flink_old_spark.queries._util import dsum
-    from incubator_flink_old_spark.streaming import run_stream_to_memory
+    from incubator_flink_old_spark.streaming import replay_source, stream_result
 
     ev = (
         t(spark, sf_dir, "events")
@@ -248,43 +232,30 @@ def q_stream_late_drop_parity(spark, sf_dir):
     wm_bound = m - datetime.timedelta(minutes=10)
     late = (F.col("event_id") % 10 == 7) & (F.col("we") <= F.lit(late_bound))
     trailing = F.col("we") > F.lit(wm_bound)
-    src = tempfile.mkdtemp(prefix="t2_late_src_")
-    cols = ["event_id", "ts", "value"]
     batches = (
         ev.filter(~late & ~trailing),
         ev.filter(~late & trailing),
         ev.limit(0),  # empty batch: lets the committed watermark apply
         ev.filter(late),
     )
-    for i, b in enumerate(batches):
-        before = {f for f in os.listdir(src)} if i else set()
-        b.select(cols).repartition(1).write.mode(
-            "overwrite" if i == 0 else "append"
-        ).parquet(src)
-        if i:
-            bump = time.time() + 1800 * i
-            for f in os.listdir(src):
-                if f.endswith(".parquet") and f not in before:
-                    os.utime(os.path.join(src, f), (bump, bump))
-    stream = (
-        spark.readStream.schema("event_id long, ts timestamp, value double")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    agg = (
-        stream.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "1 hour"))
-        .agg(F.count(F.lit(1)).alias("n_events"), dsum("value", "total_value"))
-        .select(
-            F.col("window.start").alias("win_start"),
-            F.col("window.end").alias("win_end"),
-            "n_events",
-            "total_value",
+    with replay_source(
+        b.select("event_id", "ts", "value").repartition(1) for b in batches
+    ) as stream:
+        agg = (
+            stream.withWatermark("ts", "10 minutes")
+            .groupBy(F.window("ts", "1 hour"))
+            .agg(
+                F.count(F.lit(1)).alias("n_events"),
+                dsum("value", "total_value"),
+            )
+            .select(
+                F.col("window.start").alias("win_start"),
+                F.col("window.end").alias("win_end"),
+                "n_events",
+                "total_value",
+            )
         )
-    )
-    name = f"stream_late_{next(_SEQ)}"
-    run_stream_to_memory(agg, name, "append", state_partitions=4)
-    return spark.table(name)
+        return stream_result(agg, "append", state_partitions=4)
 
 
 # --------------------------------------------------------------------------
@@ -315,7 +286,7 @@ def q_stream_enrich_parity(spark, sf_dir):
     from incubator_flink_old_spark.queries._util import dsum
     from incubator_flink_old_spark.streaming import (
         read_events_stream,
-        run_stream_to_memory,
+        stream_result,
     )
 
     dim = t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
@@ -326,9 +297,7 @@ def q_stream_enrich_parity(spark, sf_dir):
     agg = joined.groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).alias("n_events"), dsum("value", "total_value")
     )
-    name = f"stream_enrich_{next(_SEQ)}"
-    run_stream_to_memory(agg, name, "complete")
-    return spark.table(name)
+    return stream_result(agg, "complete")
 
 
 # --------------------------------------------------------------------------

@@ -14,23 +14,46 @@ be invisible to results.
 from __future__ import annotations
 
 import datetime
-import itertools
-import os
 import tempfile
-import time
 
 from pyspark.sql import functions as F
 
 from incubator_flink_old_spark.queries import register
 from incubator_flink_old_spark.queries._util import dsum, sql_dsum, t
 
-_SEQ = itertools.count()
 
-_EVENT_COLS = ["event_id", "ts", "user_id", "event_type", "value", "props"]
-_EVENT_SCHEMA = (
-    "event_id long, ts timestamp, user_id long, event_type string, "
-    "value double, props string"
-)
+def _sentinel_replay(spark, sf_dir, kinds):
+    """The events fixture as one replay batch, then two sentinel batches
+    one and two hours past its max ts: one row per event type in
+    ``kinds`` (users −1, −2, … in turn). The sentinels share no user with
+    the fixture, so they join nothing; they exist only to force two more
+    microbatch boundaries, so the watermark the real rows derive is
+    APPLIED (Spark applies a committed watermark one-to-two batches
+    later — measured on 4.1, see q_stream_late_drop_parity)."""
+    from incubator_flink_old_spark.sources import local_rows
+
+    ev = t(spark, sf_dir, "events").select(
+        "event_id",
+        F.col("ts").cast("timestamp").alias("ts"),
+        "user_id",
+        "event_type",
+        "value",
+        "props",
+    )
+    m = ev.agg(F.max("ts")).collect()[0][0]
+    sentinels = [
+        local_rows(
+            spark,
+            [
+                (-100 * (k + 1) - i, m + datetime.timedelta(hours=i),
+                 -(k + 1), kind, 0.0, "{}")
+                for k, kind in enumerate(kinds)
+            ],
+            ev.schema,
+        )
+        for i in (1, 2)
+    ]
+    return [ev.repartition(1), *sentinels]
 
 
 # --------------------------------------------------------------------------
@@ -81,69 +104,31 @@ def q_stream_leftouter_join_parity(spark, sf_dir):
     order."""
     from incubator_flink_old_spark.streaming import (
         interval_join,
-        run_stream_to_memory,
+        replay_source,
+        stream_result,
         with_watermark,
     )
 
-    ev = t(spark, sf_dir, "events").select(
-        "event_id",
-        F.col("ts").cast("timestamp").alias("ts"),
-        "user_id",
-        "event_type",
-        "value",
-        "props",
-    )
-    m = ev.agg(F.max("ts")).collect()[0][0]
-    src = tempfile.mkdtemp(prefix="t2_loj_src_")
-    ev.repartition(1).write.mode("overwrite").parquet(src)
-    from incubator_flink_old_spark.streaming import append_literal_rows
-
-    for i in (1, 2):
-        before = set(os.listdir(src))
-        append_literal_rows(
-            spark,
-            src,
-            [
-                (
-                    -100 - i,
-                    m + datetime.timedelta(hours=i),
-                    -1,
-                    "purchase",
-                    0.0,
-                    "{}",
-                )
-            ],
-            _EVENT_SCHEMA,
+    batches = _sentinel_replay(spark, sf_dir, ("purchase",))
+    with replay_source(batches) as stream:
+        clicks = stream.filter(F.col("event_type") == "click").select(
+            "user_id",
+            F.col("ts").alias("l_ts"),
+            F.col("event_id").alias("click_id"),
         )
-        bump = time.time() + 1800 * i
-        for f in os.listdir(src):
-            if f.endswith(".parquet") and f not in before:
-                os.utime(os.path.join(src, f), (bump, bump))
-    stream = (
-        spark.readStream.schema(_EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    clicks = stream.filter(F.col("event_type") == "click").select(
-        "user_id",
-        F.col("ts").alias("l_ts"),
-        F.col("event_id").alias("click_id"),
-    )
-    purchases = stream.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("r_user"),
-        F.col("ts").alias("r_ts"),
-        F.col("event_id").alias("purchase_id"),
-    )
-    l = with_watermark(clicks, "l_ts", "10 minutes")
-    r = with_watermark(purchases, "r_ts", "10 minutes").withColumnRenamed(
-        "r_user", "user_id"
-    )
-    j = interval_join(
-        l, r, "user_id", upper="10 minutes", how="leftOuter"
-    ).select(l["user_id"], "click_id", "purchase_id")
-    name = f"stream_loj_{next(_SEQ)}"
-    run_stream_to_memory(j, name, "append", state_partitions=4)
-    return spark.table(name)
+        purchases = stream.filter(F.col("event_type") == "purchase").select(
+            F.col("user_id").alias("r_user"),
+            F.col("ts").alias("r_ts"),
+            F.col("event_id").alias("purchase_id"),
+        )
+        l = with_watermark(clicks, "l_ts", "10 minutes")
+        r = with_watermark(purchases, "r_ts", "10 minutes").withColumnRenamed(
+            "r_user", "user_id"
+        )
+        j = interval_join(
+            l, r, "user_id", upper="10 minutes", how="leftOuter"
+        ).select(l["user_id"], "click_id", "purchase_id")
+        return stream_result(j, "append", state_partitions=4)
 
 
 # --------------------------------------------------------------------------

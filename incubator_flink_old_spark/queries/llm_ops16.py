@@ -11,23 +11,10 @@ in output).
 
 from __future__ import annotations
 
-import datetime
-import itertools
-import os
-import tempfile
-import time
-
 from pyspark.sql import functions as F
 
 from incubator_flink_old_spark.queries import register
-from incubator_flink_old_spark.queries._util import dsum, sql_dsum, t
-
-_SEQ = itertools.count()
-
-_EVENT_SCHEMA = (
-    "event_id long, ts timestamp, user_id long, event_type string, "
-    "value double, props string"
-)
+from incubator_flink_old_spark.queries._util import dsum, sql_dsum
 
 
 # --------------------------------------------------------------------------
@@ -87,7 +74,7 @@ def q_stream_dynamic_gap_parity(spark, sf_dir):
     gap expression evaluates map-side, adding nothing to state."""
     from incubator_flink_old_spark.streaming import (
         read_events_stream,
-        run_stream_to_memory,
+        stream_result,
     )
 
     stream = read_events_stream(spark, sf_dir)
@@ -111,9 +98,7 @@ def q_stream_dynamic_gap_parity(spark, sf_dir):
             "total_value",
         )
     )
-    name = f"stream_dyngap_{next(_SEQ)}"
-    run_stream_to_memory(agg, name, "complete")
-    return spark.table(name)
+    return stream_result(agg, "complete")
 
 
 # --------------------------------------------------------------------------
@@ -158,87 +143,43 @@ def q_stream_join_window_parity(spark, sf_dir):
     bounded by watermark; the chain never buffers unboundedly — this
     is the canonical funnel-metrics pipeline (match then rollup) as
     one query."""
+    from incubator_flink_old_spark.queries.llm_ops15 import _sentinel_replay
     from incubator_flink_old_spark.streaming import (
         interval_join,
-        run_stream_to_memory,
+        replay_source,
+        stream_result,
         with_watermark,
     )
 
-    ev = t(spark, sf_dir, "events").select(
-        "event_id",
-        F.col("ts").cast("timestamp").alias("ts"),
-        "user_id",
-        "event_type",
-        "value",
-        "props",
-    )
-    m = ev.agg(F.max("ts")).collect()[0][0]
-    src = tempfile.mkdtemp(prefix="t2_jw_src_")
-    ev.repartition(1).write.mode("overwrite").parquet(src)
-    from incubator_flink_old_spark.streaming import append_literal_rows
-
-    for i in (1, 2):
-        before = set(os.listdir(src))
-        append_literal_rows(
-            spark,
-            src,
-            [
-                (
-                    -100 - i,
-                    m + datetime.timedelta(hours=i),
-                    -1,
-                    "purchase",
-                    0.0,
-                    "{}",
-                ),
-                (
-                    -200 - i,
-                    m + datetime.timedelta(hours=i),
-                    -2,
-                    "click",
-                    0.0,
-                    "{}",
-                ),
-            ],
-            _EVENT_SCHEMA,
+    with replay_source(
+        _sentinel_replay(spark, sf_dir, ("purchase", "click"))
+    ) as stream:
+        clicks = stream.filter(F.col("event_type") == "click").select(
+            "user_id",
+            F.col("ts").alias("l_ts"),
+            F.col("event_id").alias("click_id"),
         )
-        bump = time.time() + 1800 * i
-        for f in os.listdir(src):
-            if f.endswith(".parquet") and f not in before:
-                os.utime(os.path.join(src, f), (bump, bump))
-    stream = (
-        spark.readStream.schema(_EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    clicks = stream.filter(F.col("event_type") == "click").select(
-        "user_id",
-        F.col("ts").alias("l_ts"),
-        F.col("event_id").alias("click_id"),
-    )
-    purchases = stream.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("r_user"),
-        F.col("ts").alias("r_ts"),
-        F.col("value").alias("r_value"),
-    )
-    l = with_watermark(clicks, "l_ts", "10 minutes")
-    r = with_watermark(purchases, "r_ts", "10 minutes").withColumnRenamed(
-        "r_user", "user_id"
-    )
-    j = interval_join(l, r, "user_id", upper="10 minutes")
-    agg = (
-        j.groupBy(F.window("l_ts", "1 hour"))
-        .agg(
-            F.count(F.lit(1)).alias("n_pairs"),
-            dsum("r_value", "purchase_value"),
+        purchases = stream.filter(F.col("event_type") == "purchase").select(
+            F.col("user_id").alias("r_user"),
+            F.col("ts").alias("r_ts"),
+            F.col("value").alias("r_value"),
         )
-        .select(
-            F.col("window.start").alias("win_start"),
-            F.col("window.end").alias("win_end"),
-            "n_pairs",
-            "purchase_value",
+        l = with_watermark(clicks, "l_ts", "10 minutes")
+        r = with_watermark(purchases, "r_ts", "10 minutes").withColumnRenamed(
+            "r_user", "user_id"
         )
-    )
-    name = f"stream_jw_{next(_SEQ)}"
-    run_stream_to_memory(agg, name, "append", state_partitions=4)
-    return spark.table(name)
+        j = interval_join(l, r, "user_id", upper="10 minutes")
+        agg = (
+            j.groupBy(F.window("l_ts", "1 hour"))
+            .agg(
+                F.count(F.lit(1)).alias("n_pairs"),
+                dsum("r_value", "purchase_value"),
+            )
+            .select(
+                F.col("window.start").alias("win_start"),
+                F.col("window.end").alias("win_end"),
+                "n_pairs",
+                "purchase_value",
+            )
+        )
+        return stream_result(agg, "append", state_partitions=4)

@@ -411,8 +411,8 @@ def q_retrieval_two_stage(spark, sf_dir):
     one 64-long broadcast query vector. The expensive dense scan never
     runs corpus-wide — that is the entire point of the topology. The
     stage-1 candidate count is the deployment's main knob: recall@k of
-    the rerank vs N is MEASURED in tools/retrieval_sweep.py (PERF.md
-    round-6 table), and because ranking is a deterministic total order,
+    the rerank vs N is MEASURED in PERF.md "Round 6: two-stage
+    retrieval", and because ranking is a deterministic total order,
     recall@k(N) = |dense-top-k ∩ candidates(N)|/k — monotone in N (law
     in tests/test_wave40.py)."""
     docs = t(spark, sf_dir, "documents")

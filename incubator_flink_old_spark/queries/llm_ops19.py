@@ -160,7 +160,7 @@ def q_stream_dedup_watermark_parity(spark, sf_dir):
     not part of the key."""
     from incubator_flink_old_spark.streaming import (
         read_events_stream,
-        run_stream_to_memory,
+        stream_result,
     )
 
     stream = read_events_stream(spark, sf_dir)
@@ -169,9 +169,7 @@ def q_stream_dedup_watermark_parity(spark, sf_dir):
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    name = f"stream_ddw_{next(_SEQ)}"
-    run_stream_to_memory(dedup, name, "append")
-    return spark.table(name)
+    return stream_result(dedup, "append")
 
 
 # ---------------------------------------------------------------------------

@@ -10,19 +10,11 @@ discipline.
 
 from __future__ import annotations
 
-import itertools
-import os
-import shutil
-import tempfile
-import time
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from incubator_flink_old_spark.queries import register
 from incubator_flink_old_spark.queries._util import t
-
-_SEQ = itertools.count()
 
 
 # --------------------------------------------------------------------------
@@ -246,8 +238,9 @@ def q_stream_asof_parity(spark, sf_dir):
     and a by-key topic partitioning so the groupBy shuffle is a no-op.
     """
     from incubator_flink_old_spark.streaming import (
-        run_stream_to_memory,
+        replay_source,
         stateful_asof_enrich,
+        stream_result,
     )
 
     ev = (
@@ -268,38 +261,13 @@ def q_stream_asof_parity(spark, sf_dir):
         ev.filter((F.col("ep") >= cuts[1]) & (F.col("ep") < cuts[2])),
         ev.filter(F.col("ep") >= cuts[2]),
     )
-    # The source dir is only needed while the bounded replay runs —
-    # run_stream_to_memory stops the query before returning and the
-    # memory sink owns the result, so remove it in `finally` (repeated
-    # driver/bench invocations must not accumulate parquet in /tmp).
-    src = tempfile.mkdtemp(prefix="t2_asof_src_")
-    try:
-        for i, b in enumerate(batches):
-            before = set(os.listdir(src)) if i else set()
-            b.repartition(1).write.mode(
-                "overwrite" if i == 0 else "append"
-            ).parquet(src)
-            if i:
-                # force file order = time order for the file-replay source
-                bump = time.time() + 1800 * i
-                for f in os.listdir(src):
-                    if f.endswith(".parquet") and f not in before:
-                        os.utime(os.path.join(src, f), (bump, bump))
-        stream = (
-            spark.readStream.schema(
-                "user_id long, event_id long, ep double, event_type string"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        out = stateful_asof_enrich(stream)
-        name = f"stream_asof_{next(_SEQ)}"
+    with replay_source(b.repartition(1) for b in batches) as stream:
         # state_partitions=16: Python-worker-bound pandas-state row —
         # measured sweep 4/8/16/32 -> 5.2/4.2/3.8/4.5 s on this shape
         # (round 13; the q_stream_cdc_parity rationale).
-        run_stream_to_memory(out, name, "append", state_partitions=16)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-    return spark.table(name).select(
+        emitted = stream_result(
+            stateful_asof_enrich(stream), "append", state_partitions=16
+        )
+    return emitted.select(
         "user_id", "event_id", "ep", "asof_seq", "asof_ts"
     )

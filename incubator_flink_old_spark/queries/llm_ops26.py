@@ -15,16 +15,10 @@ reads per query).
 
 from __future__ import annotations
 
-import itertools
-import shutil
-import tempfile
-
 from pyspark.sql import functions as F
 
 from incubator_flink_old_spark.queries import register
-from incubator_flink_old_spark.queries._util import t
-
-_SEQ = itertools.count()
+from incubator_flink_old_spark.queries._util import t, vec_id_thirds
 
 #: Dense candidates retrieved from the probed IVF cells — the second
 #: arm of the hybrid union, sized like the lexical arm so neither stage
@@ -301,7 +295,8 @@ def _hybrid_topk(
 def q_retrieval_hybrid(spark, sf_dir):
     """HYBRID retrieval — lexical candidates ∪ IVF-indexed dense
     candidates, reranked by exact dense score: the deployment fix the
-    round-6 sweep demanded. tools/retrieval_sweep.py measured that the
+    round-6 sweep demanded. The sweep (PERF.md "Round 6: two-stage
+    retrieval") measured that the
     two-stage topology's dense recall decays with corpus growth at fixed
     stage-1 N (recall→0 at 16× — PERF.md r06), because stage 2 only ever
     sees lexically-surfaced docs. Here stage 2 retrieves its own
@@ -1084,7 +1079,7 @@ def q_stream_ivf_assign_parity(spark, sf_dir):
         _ITERS,
         _N_CELLS,
     )
-    from incubator_flink_old_spark.streaming import run_stream_to_memory
+    from incubator_flink_old_spark.streaming import replay_source, stream_result
 
     emb = t(spark, sf_dir, "embeddings")
     is_base = F.col("vec_id") % _IVF_DELTA_MOD != _IVF_DELTA_REM
@@ -1092,35 +1087,12 @@ def q_stream_ivf_assign_parity(spark, sf_dir):
     center_rows = centers.collect()  # n_cells rows — bounded by design
 
     delta = emb.filter(~is_base).select("vec_id", "embedding")
-    hi = delta.agg(F.max("vec_id")).collect()[0][0]  # 1-row bound
-    if hi is None or hi < 3:
-        # Empty/tiny delta split: hi//3 cuts would degenerate (or
-        # TypeError on None) — replay as a single batch; the parity law
-        # is batch-boundary-invariant by construction (ADVICE r07).
-        batches = (delta,)
-    else:
-        cuts = (hi // 3, 2 * (hi // 3))
-        batches = (
-            delta.filter(F.col("vec_id") <= cuts[0]),
-            delta.filter(
-                (F.col("vec_id") > cuts[0]) & (F.col("vec_id") <= cuts[1])
-            ),
-            delta.filter(F.col("vec_id") > cuts[1]),
+    with replay_source(
+        b.repartition(1) for b in vec_id_thirds(delta)
+    ) as stream:
+        out = stream_result(
+            grid_assign_map(stream, center_rows),
+            "append",
+            state_partitions=None,
         )
-    src = tempfile.mkdtemp(prefix="t2_stream_ivf_")
-    try:
-        for i, b in enumerate(batches):
-            b.repartition(1).write.mode(
-                "overwrite" if i == 0 else "append"
-            ).parquet(src)
-        stream = (
-            spark.readStream.schema("vec_id long, embedding array<float>")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        out = grid_assign_map(stream, center_rows)
-        name = f"stream_ivf_{next(_SEQ)}"
-        run_stream_to_memory(out, name, "append", state_partitions=None)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-    return spark.table(name).select("vec_id", "cell")
+    return out.select("vec_id", "cell")

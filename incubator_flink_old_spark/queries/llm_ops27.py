@@ -9,17 +9,11 @@ permutes and the driver row hash-checks against plain window SQL.
 
 from __future__ import annotations
 
-import itertools
-import shutil
-import tempfile
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from incubator_flink_old_spark.queries import register
-from incubator_flink_old_spark.queries._util import t
-
-_SEQ = itertools.count()
+from incubator_flink_old_spark.queries._util import t, vec_id_thirds
 
 _TOPK_K = 5
 
@@ -55,32 +49,18 @@ def q_stream_topk_parity(spark, sf_dir):
     leaderboards (top documents by quality score, top URLs by spam
     signal) with state independent of stream length."""
     from incubator_flink_old_spark.streaming import (
-        run_stream_to_memory,
+        replay_source,
         stateful_topk,
+        stream_result,
     )
 
-    src = tempfile.mkdtemp(prefix="t2_topk_src_")
-    try:
-        (
-            t(spark, sf_dir, "events")
-            .select("event_type", "event_id", "value")
-            .repartition(4)
-            .write.mode("overwrite")
-            .parquet(src)
+    events = t(spark, sf_dir, "events").select(
+        "event_type", "event_id", "value"
+    )
+    with replay_source([events.repartition(4)]) as stream:
+        tbl = stream_result(
+            stateful_topk(stream, k=_TOPK_K), "update", state_partitions=4
         )
-        stream = (
-            spark.readStream.schema(
-                "event_type string, event_id long, value double"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        out = stateful_topk(stream, k=_TOPK_K)
-        name = f"stream_topk_{next(_SEQ)}"
-        run_stream_to_memory(out, name, "update", state_partitions=4)
-        tbl = spark.table(name).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
     w = Window.partitionBy("event_type")
     return (
         tbl.withColumn("mx", F.max("seen").over(w))
@@ -158,12 +138,12 @@ def q_pq_incremental(spark, sf_dir):
     (q_sq8_incremental), and now the PQ codebook tier. The codebooks
     train on the 80% base corpus only; the 20% delta is absorbed by a
     map-only nearest-code fold — cost scales with the delta, never the
-    corpus (the absorb-vs-retrain shape tools/maintenance_probe.py
-    measures FLAT under 16x growth for the siblings).
+    corpus (the absorb-vs-retrain shape PERF.md "Round 7: index
+    maintenance" measures FLAT under 16x growth for the siblings).
 
     Returned audit: per (subspace, code) delta counts and EXACT integer
     quantization-error sums — the drift signal a maintenance loop
-    consumes (tools/drift_retrain_probe.py is the consumer pattern):
+    consumes (q_drift_retrain is the consumer pattern):
     rising qerr per absorbed batch says the frozen codebooks no longer
     describe the data and the retrain threshold is approaching.
 
@@ -353,8 +333,8 @@ def q_retrieval_lifecycle(spark, sf_dir):
     injected instead of inline-trained — the deployment shape where the
     index is a TABLE amortized across queries and absorbing deltas
     between retrains (PERF.md: absorption flat under 16x growth,
-    prebuilt index 2.7x faster per query, drift-gated retrain via
-    tools/drift_retrain_probe.py).
+    prebuilt index 2.7x faster per query, drift-gated retrain in
+    q_drift_retrain).
 
     Scale: identical to q_retrieval_hybrid's posture — the absorb adds
     one broadcast-join map over the delta and a digest-sized stats
@@ -495,7 +475,7 @@ def q_stream_pq_encode_parity(spark, sf_dir):
         _PQ_ITERS,
         _PQ_M,
     )
-    from incubator_flink_old_spark.streaming import run_stream_to_memory
+    from incubator_flink_old_spark.streaming import replay_source, stream_result
 
     emb = t(spark, sf_dir, "embeddings")
     is_base = F.col("vec_id") % _PQ_DELTA_MOD != _PQ_DELTA_REM
@@ -508,35 +488,15 @@ def q_stream_pq_encode_parity(spark, sf_dir):
     book_rows = books.collect()  # m*n_centroids rows — bounded by design
 
     delta = emb.filter(~is_base).select("vec_id", "embedding")
-    hi = delta.agg(F.max("vec_id")).collect()[0][0]  # 1-row bound
-    if hi is None or hi < 3:
-        batches = (delta,)  # degenerate split: single-batch replay
-    else:
-        cuts = (hi // 3, 2 * (hi // 3))
-        batches = (
-            delta.filter(F.col("vec_id") <= cuts[0]),
-            delta.filter(
-                (F.col("vec_id") > cuts[0]) & (F.col("vec_id") <= cuts[1])
-            ),
-            delta.filter(F.col("vec_id") > cuts[1]),
+    with replay_source(
+        b.repartition(1) for b in vec_id_thirds(delta)
+    ) as stream:
+        out = stream_result(
+            grid_pq_encode_map(stream, book_rows, m=_PQ_M),
+            "append",
+            state_partitions=None,
         )
-    src = tempfile.mkdtemp(prefix="t2_stream_pq_")
-    try:
-        for i, b in enumerate(batches):
-            b.repartition(1).write.mode(
-                "overwrite" if i == 0 else "append"
-            ).parquet(src)
-        stream = (
-            spark.readStream.schema("vec_id long, embedding array<float>")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        out = grid_pq_encode_map(stream, book_rows, m=_PQ_M)
-        name = f"stream_pq_{next(_SEQ)}"
-        run_stream_to_memory(out, name, "append", state_partitions=None)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-    return spark.table(name).select("vec_id", "j", "code", "qerr")
+    return out.select("vec_id", "j", "code", "qerr")
 
 
 # --------------------------------------------------------------------------
@@ -604,7 +564,7 @@ def q_stream_sq8_encode_parity(spark, sf_dir):
         _grid_vec,
         _sq_bounds,
     )
-    from incubator_flink_old_spark.streaming import run_stream_to_memory
+    from incubator_flink_old_spark.streaming import replay_source, stream_result
 
     emb = t(spark, sf_dir, "embeddings")
     is_base = F.col("vec_id") % _PQ_DELTA_MOD != _PQ_DELTA_REM
@@ -613,35 +573,15 @@ def q_stream_sq8_encode_parity(spark, sf_dir):
     ).collect()  # 64 rows — bounded by design
 
     delta = emb.filter(~is_base).select("vec_id", "embedding")
-    hi = delta.agg(F.max("vec_id")).collect()[0][0]  # 1-row bound
-    if hi is None or hi < 3:
-        batches = (delta,)  # degenerate split: single-batch replay
-    else:
-        cuts = (hi // 3, 2 * (hi // 3))
-        batches = (
-            delta.filter(F.col("vec_id") <= cuts[0]),
-            delta.filter(
-                (F.col("vec_id") > cuts[0]) & (F.col("vec_id") <= cuts[1])
-            ),
-            delta.filter(F.col("vec_id") > cuts[1]),
+    with replay_source(
+        b.repartition(1) for b in vec_id_thirds(delta)
+    ) as stream:
+        out = stream_result(
+            sq8_encode_map(stream, bounds_rows, levels=_SQ_LEVELS),
+            "append",
+            state_partitions=None,
         )
-    src = tempfile.mkdtemp(prefix="t2_stream_sq8_")
-    try:
-        for i, b in enumerate(batches):
-            b.repartition(1).write.mode(
-                "overwrite" if i == 0 else "append"
-            ).parquet(src)
-        stream = (
-            spark.readStream.schema("vec_id long, embedding array<float>")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        out = sq8_encode_map(stream, bounds_rows, levels=_SQ_LEVELS)
-        name = f"stream_sq8_{next(_SEQ)}"
-        run_stream_to_memory(out, name, "append", state_partitions=None)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-    return spark.table(name).select("vec_id", "p", "c")
+    return out.select("vec_id", "p", "c")
 
 
 # --------------------------------------------------------------------------
@@ -678,39 +618,20 @@ def q_stream_cdc_parity(spark, sf_dir):
     stream; emissions are one row per key per batch and the readback
     scans emissions, never the log."""
     from incubator_flink_old_spark.streaming import (
-        run_stream_to_memory,
+        replay_source,
         stateful_latest,
+        stream_result,
     )
 
-    src = tempfile.mkdtemp(prefix="t2_cdc_src_")
-    try:
-        (
-            t(spark, sf_dir, "events")
-            .select(
-                "user_id",
-                F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-                "event_id",
-                "event_type",
-                "value",
-            )
-            .repartition(4)
-            .write.mode("overwrite")
-            .parquet(src)
-        )
-        stream = (
-            spark.readStream.schema(
-                "user_id long, ts_us long, event_id long, "
-                "event_type string, value double"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        out = stateful_latest(stream)
-        name = f"stream_cdc_{next(_SEQ)}"
-        run_stream_to_memory(out, name, "update")
-        tbl = spark.table(name).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+    changes = t(spark, sf_dir, "events").select(
+        "user_id",
+        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
+        "event_id",
+        "event_type",
+        "value",
+    )
+    with replay_source([changes.repartition(4)]) as stream:
+        tbl = stream_result(stateful_latest(stream), "update")
     w = Window.partitionBy("user_id")
     return (
         tbl.withColumn("mx", F.max("seen").over(w))

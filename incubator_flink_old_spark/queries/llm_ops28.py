@@ -8,20 +8,16 @@ on both axes for all four tiers (IVF, PQ, SQ8, prefix).
 
 from __future__ import annotations
 
-import itertools
-import shutil
-import tempfile
-
 from pyspark.sql import functions as F
 
 from incubator_flink_old_spark.queries import register
-from incubator_flink_old_spark.queries._util import t
+from incubator_flink_old_spark.queries._util import t, vec_id_thirds
 
-_SEQ = itertools.count()
 
 # --------------------------------------------------------------------------
 # Drift-gated coarse-tier retrain: the maintenance loop's recovery path as a
-# checked row (tools/drift_retrain_probe.py's measured recipe, registered)
+# checked row (the recipe measured in PERF.md "Round 8: drift-triggered
+# retrain", registered)
 # --------------------------------------------------------------------------
 
 #: Base/delta split — the maintenance family's shared convention.
@@ -36,7 +32,8 @@ _D_REM = 4
 #: source whose distribution walked away from the training corpus).
 _DRIFT_SHIFT = 0.375
 
-#: Audit thresholds — tools/drift_retrain_probe.py's measured policy:
+#: Audit thresholds — the policy measured in PERF.md "Round 8: drift-
+#: triggered retrain":
 #: the delta's mean PQ quantization error vs the base's (the sharp
 #: detector: ~1.0x in-distribution, ~9.5x under hard drift, PERF.md
 #: round 8), and the maintained index's worst cell-level delta
@@ -276,7 +273,7 @@ def _drift_retrain_oracle() -> str:
 def q_drift_retrain(spark, sf_dir):
     """DRIFT-GATED COARSE-TIER RETRAIN — the maintenance loop's recovery
     path as a driver-checked row (VERDICT r08 item 1; the operational
-    recipe tools/drift_retrain_probe.py measured, now a checked
+    recipe PERF.md "Round 8: drift-triggered retrain" measured, now a checked
     artifact): a deliberately-drifted delta (every coordinate shifted by
     the exact constant 3/8) is absorbed by the FROZEN base index; the
     row reads the SAME audits the maintenance rows emit — the PQ
@@ -366,7 +363,7 @@ def q_stream_lifecycle_parity(spark, sf_dir):
         _sq_codes,
     )
     from incubator_flink_old_spark.queries.llm_ops26 import _hybrid_topk
-    from incubator_flink_old_spark.streaming import run_stream_to_memory
+    from incubator_flink_old_spark.streaming import replay_source, stream_result
 
     emb = t(spark, sf_dir, "embeddings")
     docs = t(spark, sf_dir, "documents")
@@ -382,50 +379,23 @@ def q_stream_lifecycle_parity(spark, sf_dir):
     # The delta arrives as a REAL multi-batch stream; each replay runs
     # one pure-map encoder (same source files, two landing tables).
     delta = emb.filter(~is_base).select("vec_id", "embedding")
-    hi = delta.agg(F.max("vec_id")).collect()[0][0]  # 1-row bound
-    if hi is None or hi < 3:
-        batches = (delta,)  # degenerate split: single-batch replay
-    else:
-        cuts = (hi // 3, 2 * (hi // 3))
-        batches = (
-            delta.filter(F.col("vec_id") <= cuts[0]),
-            delta.filter(
-                (F.col("vec_id") > cuts[0]) & (F.col("vec_id") <= cuts[1])
-            ),
-            delta.filter(F.col("vec_id") > cuts[1]),
-        )
-    src = tempfile.mkdtemp(prefix="t2_stream_lc_")
-    try:
-        for i, b in enumerate(batches):
-            b.repartition(1).write.mode(
-                "overwrite" if i == 0 else "append"
-            ).parquet(src)
-        stream_of = lambda: (  # noqa: E731 — two replays, one schema
-            spark.readStream.schema("vec_id long, embedding array<float>")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        n = next(_SEQ)
-        assign_name = f"stream_lc_assign_{n}"
-        run_stream_to_memory(
-            grid_assign_map(stream_of(), center_rows),
-            assign_name,
+    with replay_source(
+        b.repartition(1) for b in vec_id_thirds(delta)
+    ) as stream:
+        assigned = stream_result(
+            grid_assign_map(stream, center_rows),
             "append",
             state_partitions=None,
         )
-        codes_name = f"stream_lc_sq8_{n}"
-        run_stream_to_memory(
-            sq8_encode_map(stream_of(), bounds_rows, levels=_SQ_LEVELS),
-            codes_name,
+        codes = stream_result(
+            sq8_encode_map(stream, bounds_rows, levels=_SQ_LEVELS),
             "append",
             state_partitions=None,
         )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
 
     # IVF maintained: base cells ∪ the STREAMED assignments
     mcells = bcells.select("vec_id", "cell").unionByName(
-        spark.table(assign_name).select("vec_id", "cell")
+        assigned.select("vec_id", "cell")
     )
     # SQ8 maintained: base encode (frozen bounds; encoding is per-row
     # pure, so base-encode ∪ delta-encode ≡ the batch row's one union
@@ -437,8 +407,7 @@ def q_stream_lifecycle_parity(spark, sf_dir):
         clamp=True,
     )
     delta_codes = (
-        spark.table(codes_name)
-        .groupBy("vec_id")
+        codes.groupBy("vec_id")
         .agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("p", "c"))),
@@ -742,42 +711,29 @@ def q_stream_neardup_screen_parity(spark, sf_dir):
     from incubator_flink_old_spark.operators.text import (
         streaming_neardup_screen,
     )
-    from incubator_flink_old_spark.streaming import run_stream_to_memory
+    from incubator_flink_old_spark.streaming import replay_source, stream_result
 
     docs = t(spark, sf_dir, "documents")
     is_new = F.col("doc_id") % _D_MOD == _D_REM
     corpus = docs.filter(~is_new)
     arts: list = []  # persisted corpus artifacts; released in finally
-    src = tempfile.mkdtemp(prefix="t2_stream_nds_")
     try:
-        (
-            docs.filter(is_new)
-            .select("doc_id", "text")
-            .repartition(4)
-            .write.mode("overwrite")
-            .parquet(src)
-        )
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        out = streaming_neardup_screen(
-            stream,
-            corpus,
-            num_hashes=_NDS_HASHES,
-            band_size=_NDS_BAND,
-            jaccard_threshold=_NDS_THRESHOLD,
-            materialize_static=True,
-            artifact_registry=arts,
-        )
-        name = f"stream_nds_{next(_SEQ)}"
-        run_stream_to_memory(out, name, "append", state_partitions=4)
-        tbl = spark.table(name).localCheckpoint(eager=True)
+        with replay_source(
+            [docs.filter(is_new).select("doc_id", "text").repartition(4)]
+        ) as stream:
+            out = streaming_neardup_screen(
+                stream,
+                corpus,
+                num_hashes=_NDS_HASHES,
+                band_size=_NDS_BAND,
+                jaccard_threshold=_NDS_THRESHOLD,
+                materialize_static=True,
+                artifact_registry=arts,
+            )
+            tbl = stream_result(out, "append", state_partitions=4)
     finally:
         for a in arts:
             a.unpersist()
-        shutil.rmtree(src, ignore_errors=True)
     return tbl.select("doc_a", "doc_b", "jaccard")
 
 
@@ -825,7 +781,7 @@ def q_stream_drift_audit_parity(spark, sf_dir):
         _PQ_ITERS,
         _PQ_M,
     )
-    from incubator_flink_old_spark.streaming import run_stream_to_memory
+    from incubator_flink_old_spark.streaming import replay_source, stream_result
 
     emb = t(spark, sf_dir, "embeddings")
     is_base = F.col("vec_id") % _D_MOD != _D_REM
@@ -838,29 +794,9 @@ def q_stream_drift_audit_parity(spark, sf_dir):
     book_rows = books.collect()  # m*n_centroids rows — bounded by design
 
     delta = emb.filter(~is_base).select("vec_id", "embedding")
-    hi = delta.agg(F.max("vec_id")).collect()[0][0]  # 1-row bound
-    if hi is None or hi < 3:
-        batches = (delta,)  # degenerate split: single-batch replay
-    else:
-        cuts = (hi // 3, 2 * (hi // 3))
-        batches = (
-            delta.filter(F.col("vec_id") <= cuts[0]),
-            delta.filter(
-                (F.col("vec_id") > cuts[0]) & (F.col("vec_id") <= cuts[1])
-            ),
-            delta.filter(F.col("vec_id") > cuts[1]),
-        )
-    src = tempfile.mkdtemp(prefix="t2_stream_audit_")
-    try:
-        for i, b in enumerate(batches):
-            b.repartition(1).write.mode(
-                "overwrite" if i == 0 else "append"
-            ).parquet(src)
-        stream = (
-            spark.readStream.schema("vec_id long, embedding array<float>")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
+    with replay_source(
+        b.repartition(1) for b in vec_id_thirds(delta)
+    ) as stream:
         audit = (
             grid_pq_encode_map(stream, book_rows, m=_PQ_M)
             .groupBy("j", "code")
@@ -869,11 +805,7 @@ def q_stream_drift_audit_parity(spark, sf_dir):
                 F.sum("qerr").alias("qerr"),
             )
         )
-        name = f"stream_audit_{next(_SEQ)}"
-        run_stream_to_memory(audit, name, "complete", state_partitions=4)
-        out = spark.table(name).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+        out = stream_result(audit, "complete", state_partitions=4)
     return out.select("j", "code", "n_delta", "qerr")
 
 
@@ -923,28 +855,17 @@ def q_stream_bm25_stats_parity(spark, sf_dir):
         streaming_bm25_stats,
     )
     from incubator_flink_old_spark.queries.llm_ops18 import _TS_TERMS
-    from incubator_flink_old_spark.streaming import run_stream_to_memory
+    from incubator_flink_old_spark.streaming import replay_source, stream_result
 
     docs = t(spark, sf_dir, "documents")
-    src = tempfile.mkdtemp(prefix="t2_stream_bm25_")
-    try:
-        (
-            docs.select("doc_id", "text")
-            .repartition(4)
-            .write.mode("overwrite")
-            .parquet(src)
+    with replay_source(
+        [docs.select("doc_id", "text").repartition(4)]
+    ) as stream:
+        stats_row = stream_result(
+            streaming_bm25_stats(stream, _TS_TERMS),
+            "complete",
+            state_partitions=4,
         )
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        out = streaming_bm25_stats(stream, _TS_TERMS)
-        name = f"stream_bm25_{next(_SEQ)}"
-        run_stream_to_memory(out, name, "complete", state_partitions=4)
-        stats_row = spark.table(name).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
 
     # Reassemble the (scalars, dft) pair the scorer injects: avgdl from
     # the landed longs (merge_bm25_stats' division shape and its n=0
@@ -1017,42 +938,22 @@ def q_stream_prefix_encode_parity(spark, sf_dir):
         prefix_encode_map,
     )
     from incubator_flink_old_spark.queries.llm_ops27 import _MRL_DIM
-    from incubator_flink_old_spark.streaming import run_stream_to_memory
+    from incubator_flink_old_spark.streaming import replay_source, stream_result
 
     emb = t(spark, sf_dir, "embeddings")
     delta = emb.filter(F.col("vec_id") % _D_MOD == _D_REM).select(
         "vec_id", "embedding"
     )
-    hi = delta.agg(F.max("vec_id")).collect()[0][0]  # 1-row bound
-    if hi is None or hi < 3:
-        batches = (delta,)  # degenerate split: single-batch replay
-    else:
-        cuts = (hi // 3, 2 * (hi // 3))
-        batches = (
-            delta.filter(F.col("vec_id") <= cuts[0]),
-            delta.filter(
-                (F.col("vec_id") > cuts[0]) & (F.col("vec_id") <= cuts[1])
-            ),
-            delta.filter(F.col("vec_id") > cuts[1]),
+    with replay_source(
+        b.repartition(1) for b in vec_id_thirds(delta)
+    ) as stream:
+        out = stream_result(
+            prefix_encode_map(stream, prefix=_MRL_DIM),
+            "append",
+            state_partitions=None,
         )
-    src = tempfile.mkdtemp(prefix="t2_stream_pfx_")
-    try:
-        for i, b in enumerate(batches):
-            b.repartition(1).write.mode(
-                "overwrite" if i == 0 else "append"
-            ).parquet(src)
-        stream = (
-            spark.readStream.schema("vec_id long, embedding array<float>")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        out = prefix_encode_map(stream, prefix=_MRL_DIM)
-        name = f"stream_pfx_{next(_SEQ)}"
-        run_stream_to_memory(out, name, "append", state_partitions=None)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
     return (
-        spark.table(name)
+        out
         .select("vec_id", F.posexplode("pk").alias("p0", "v"))
         .select("vec_id", (F.col("p0") + 1).alias("p"), "v")
     )

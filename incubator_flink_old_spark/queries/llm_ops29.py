@@ -9,10 +9,6 @@ row per emitted pair forever; unbounded crawl ingest needs eviction).
 
 from __future__ import annotations
 
-import itertools
-import shutil
-import tempfile
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -26,8 +22,6 @@ from incubator_flink_old_spark.queries.llm_ops11 import (
     _grid_ivf_ctes,
     _sql_cos,
 )
-
-_SEQ = itertools.count()
 
 #: Known-item protocol knobs: the first N embeddings become queries, each
 #: DEGRADED by zeroing every MASK_MOD-th dimension (0-based index i with
@@ -244,52 +238,40 @@ def q_stream_neardup_watermark_parity(spark, sf_dir):
         _NDS_HASHES,
         _NDS_THRESHOLD,
     )
-    from incubator_flink_old_spark.streaming import run_stream_to_memory
+    from incubator_flink_old_spark.streaming import (
+        event_time_batches,
+        replay_source,
+        stream_result,
+    )
 
     docs = t(spark, sf_dir, "documents")
     is_new = F.col("doc_id") % _D_MOD == _D_REM
     corpus = docs.filter(~is_new)
     arts: list = []  # persisted corpus artifacts; released in finally
-    src = tempfile.mkdtemp(prefix="t2_stream_ndw_")
+    new_docs = docs.filter(is_new).select(
+        "doc_id",
+        "text",
+        F.timestamp_seconds(F.lit(1704067200) + F.col("doc_id")).alias("ts"),
+    )
     try:
-        new_docs = docs.filter(is_new).select(
-            "doc_id",
-            "text",
-            F.timestamp_seconds(F.lit(1704067200) + F.col("doc_id")).alias(
-                "ts"
-            ),
-        )
         # In-event-time-order replay (see docstring — out-of-order
-        # replay = legitimate late drops); the shared fixture helper
-        # owns the sequential-write/modtime invariant.
-        from incubator_flink_old_spark.streaming import (
-            write_event_time_replay,
-        )
-
-        write_event_time_replay(new_docs, src, n_files=4)
-        stream = (
-            spark.readStream.schema("doc_id long, text string, ts timestamp")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        out = streaming_neardup_screen(
-            stream,
-            corpus,
-            num_hashes=_NDS_HASHES,
-            band_size=_NDS_BAND,
-            jaccard_threshold=_NDS_THRESHOLD,
-            event_time="ts",
-            watermark_delay="30 seconds",
-            materialize_static=True,
-            artifact_registry=arts,
-        )
-        name = f"stream_ndw_{next(_SEQ)}"
-        run_stream_to_memory(out, name, "append", state_partitions=4)
-        tbl = spark.table(name).localCheckpoint(eager=True)
+        # replay = legitimate late drops).
+        with replay_source(event_time_batches(new_docs, n_files=4)) as stream:
+            out = streaming_neardup_screen(
+                stream,
+                corpus,
+                num_hashes=_NDS_HASHES,
+                band_size=_NDS_BAND,
+                jaccard_threshold=_NDS_THRESHOLD,
+                event_time="ts",
+                watermark_delay="30 seconds",
+                materialize_static=True,
+                artifact_registry=arts,
+            )
+            tbl = stream_result(out, "append", state_partitions=4)
     finally:
         for a in arts:
             a.unpersist()
-        shutil.rmtree(src, ignore_errors=True)
     return tbl.select("doc_a", "doc_b", "jaccard")
 
 
@@ -813,41 +795,28 @@ def q_stream_winnow_screen_parity(spark, sf_dir):
         streaming_winnow_screen,
     )
     from incubator_flink_old_spark.queries.llm_ops28 import _D_MOD, _D_REM
-    from incubator_flink_old_spark.streaming import run_stream_to_memory
+    from incubator_flink_old_spark.streaming import replay_source, stream_result
 
     docs = t(spark, sf_dir, "documents")
     is_new = F.col("doc_id") % _D_MOD == _D_REM
     arts: list = []  # persisted corpus artifacts; released in finally
-    src = tempfile.mkdtemp(prefix="t2_stream_win_")
     try:
-        (
-            docs.filter(is_new)
-            .select("doc_id", "text")
-            .repartition(4)
-            .write.mode("overwrite")
-            .parquet(src)
-        )
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        out = streaming_winnow_screen(
-            stream,
-            docs.filter(~is_new),
-            k=_WIN_K,
-            w=_WIN_W,
-            max_df=_WIN_MAX_DF,
-            materialize_static=True,
-            artifact_registry=arts,
-        )
-        name = f"stream_win_{next(_SEQ)}"
-        run_stream_to_memory(out, name, "append", state_partitions=4)
-        tbl = spark.table(name).localCheckpoint(eager=True)
+        with replay_source(
+            [docs.filter(is_new).select("doc_id", "text").repartition(4)]
+        ) as stream:
+            out = streaming_winnow_screen(
+                stream,
+                docs.filter(~is_new),
+                k=_WIN_K,
+                w=_WIN_W,
+                max_df=_WIN_MAX_DF,
+                materialize_static=True,
+                artifact_registry=arts,
+            )
+            tbl = stream_result(out, "append", state_partitions=4)
     finally:
         for a in arts:
             a.unpersist()
-        shutil.rmtree(src, ignore_errors=True)
     return tbl.select("doc_a", "doc_b", "fp")
 
 
@@ -932,28 +901,17 @@ def q_stream_winnow_stats_parity(spark, sf_dir):
         winnow_fingerprints,
         winnow_matches_from_index,
     )
-    from incubator_flink_old_spark.streaming import run_stream_to_memory
+    from incubator_flink_old_spark.streaming import replay_source, stream_result
 
     docs = t(spark, sf_dir, "documents")
-    src = tempfile.mkdtemp(prefix="t2_stream_winstats_")
-    try:
-        (
-            docs.select("doc_id", "text")
-            .repartition(4)
-            .write.mode("overwrite")
-            .parquet(src)
+    with replay_source(
+        [docs.select("doc_id", "text").repartition(4)]
+    ) as stream:
+        live_stats = stream_result(
+            streaming_winnow_stats(stream, k=_WIN_K, w=_WIN_W),
+            "complete",
+            state_partitions=4,
         )
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        out = streaming_winnow_stats(stream, k=_WIN_K, w=_WIN_W)
-        name = f"stream_winstats_{next(_SEQ)}"
-        run_stream_to_memory(out, name, "complete", state_partitions=4)
-        live_stats = spark.table(name).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
     fps = winnow_fingerprints(docs, k=_WIN_K, w=_WIN_W, hashes_only=True)
     return winnow_matches_from_index(
         fps, live_stats, min_shared=_WIN_MIN_SHARED, max_df=_WIN_MAX_DF

@@ -12,9 +12,7 @@ stitched DuckDB oracle.
 
 from __future__ import annotations
 
-import itertools
-import shutil
-import tempfile
+import datetime
 
 from pyspark.sql import functions as F
 
@@ -36,9 +34,35 @@ from incubator_flink_old_spark.queries.llm_ops29 import (
 )
 from incubator_flink_old_spark.sources import local_rows
 
-_SEQ = itertools.count()
-
 _GATE_LANGS = ("en", "de", "fr")
+
+
+def _gate_replay(wave):
+    """Replay batches of the streamed gate rows: ``wave``'s documents
+    with an ingest time of 1704067200 + doc_id seconds, in three
+    event-time-ordered files, then two far-future sentinel documents
+    (doc −1/−2, one and two hours past the last ingest time — the
+    q_stream_leftouter_join_parity flush recipe). The sentinels push
+    the watermark past every real document (it applies one to two
+    batches later), so the append-mode verdict fold emits every real
+    verdict inside a DATA batch instead of racing the no-data flush;
+    callers filter them out (doc_id ≥ 0)."""
+    from incubator_flink_old_spark.streaming import event_time_batches
+
+    docs = wave.select(
+        "doc_id",
+        "text",
+        "lang",
+        F.timestamp_seconds(F.lit(1704067200) + F.col("doc_id")).alias("ts"),
+    )
+    yield from event_time_batches(docs, n_files=3)
+    mx = docs.agg(F.max("ts")).collect()[0][0]
+    for i in (1, 2):
+        yield local_rows(
+            wave.sparkSession,
+            [(-i, "the of and to a", "en", mx + datetime.timedelta(hours=i))],
+            docs.schema,
+        )
 
 
 def _ingest_gate_oracle(
@@ -178,77 +202,34 @@ def q_stream_ingest_gate_parity(spark, sf_dir):
     from incubator_flink_old_spark.operators.text import (
         streaming_ingest_gate,
     )
-    from incubator_flink_old_spark.streaming import (
-        run_stream_to_memory,
-        write_event_time_replay,
-    )
+    from incubator_flink_old_spark.streaming import replay_source, stream_result
 
     docs = t(spark, sf_dir, "documents")
     is_new = F.col("doc_id") % _D_MOD == _D_REM
     corpus = docs.filter(~is_new)
     arts: list = []  # persisted corpus artifacts; released in finally
-    src = tempfile.mkdtemp(prefix="t2_stream_gate_")
     try:
-        new_docs = docs.filter(is_new).select(
-            "doc_id",
-            "text",
-            "lang",
-            F.timestamp_seconds(F.lit(1704067200) + F.col("doc_id")).alias(
-                "ts"
-            ),
-        )
-        write_event_time_replay(new_docs, src, n_files=3)
-        # Two sentinel arrivals push the watermark past every real
-        # document (applied-one-to-two-batches-later rule), forcing the
-        # append-mode aggregation to emit all real verdicts in DATA
-        # batches instead of racing the no-data flush.
-        mx = new_docs.agg(F.max("ts")).collect()[0][0]
-        import datetime
-
-        from incubator_flink_old_spark.streaming import append_literal_rows
-
-        for i in (1, 2):
-            append_literal_rows(
-                spark,
-                src,
-                [(-i, "the of and to a", "en", mx + datetime.timedelta(hours=i))],
-                "doc_id long, text string, lang string, ts timestamp",
+        with replay_source(_gate_replay(docs.filter(is_new))) as stream:
+            out = streaming_ingest_gate(
+                stream,
+                corpus,
+                langs=_GATE_LANGS,
+                num_hashes=_NDS_HASHES,
+                band_size=_NDS_BAND,
+                jaccard_threshold=_NDS_THRESHOLD,
+                k=_WIN_K,
+                w=_WIN_W,
+                max_df=_WIN_MAX_DF,
+                event_time="ts",
+                watermark_delay="30 seconds",
+                materialize_static=True,
+                artifact_registry=arts,
             )
-            # mtime ordering is handled by append_literal_rows itself (utime)
-        stream = (
-            spark.readStream.schema(
-                "doc_id long, text string, lang string, ts timestamp"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        out = streaming_ingest_gate(
-            stream,
-            corpus,
-            langs=_GATE_LANGS,
-            num_hashes=_NDS_HASHES,
-            band_size=_NDS_BAND,
-            jaccard_threshold=_NDS_THRESHOLD,
-            k=_WIN_K,
-            w=_WIN_W,
-            max_df=_WIN_MAX_DF,
-            event_time="ts",
-            watermark_delay="30 seconds",
-            materialize_static=True,
-            artifact_registry=arts,
-        )
-        name = f"stream_gate_{next(_SEQ)}"
-        run_stream_to_memory(out, name, "append", state_partitions=4)
-        tbl = (
-            spark.table(name)
-            .filter(F.col("doc_id") >= 0)
-            .localCheckpoint(eager=True)
-        )
+            verdicts = stream_result(out, "append", state_partitions=4)
     finally:
         for a in arts:
             a.unpersist()
-        shutil.rmtree(src, ignore_errors=True)
-    return tbl
+    return verdicts.filter(F.col("doc_id") >= 0)
 
 
 # --------------------------------------------------------------------------
@@ -379,7 +360,8 @@ def q_winnow_drift_refresh(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# Serve operating point: the recall half of tools/nprobe_sweep.py as a
+# Serve operating point: the recall half of the n_probe sweep (PERF.md
+# "Round 7: recall-vs-n_probe") as a
 # driver-checked row — pinning the production (n_probe, refine_c) the way
 # q_drift_retrain pinned the maintenance recipe
 # --------------------------------------------------------------------------
@@ -475,14 +457,14 @@ def q_serve_operating_point(spark, sf_dir):
     """SERVE OPERATING POINT (VERDICT r09 item 6): the production ANN
     serving configuration — n_probe=3 of 8 cells, refine_c=20 (4x the
     final k) — pinned as a driver-checked row alongside its bracketing
-    knob settings, the recall half of tools/nprobe_sweep.py's
-    recall-vs-cost table as a hash-checked artifact. Four configs run
-    the SHIPPED serve body (_refine_ranked, the q_ann_recall_ivfsq8_
-    refine recipe): one probe fewer (1,20), a starved shortlist (3,5),
-    the production point (3,20), and all-cells (8,20) — the lossless
-    ceiling the refine law guarantees. Each row reports exact hit
-    counts against the full-precision ground truth and the mean
-    recall@5 (a single division of exact integers). The deployment
+    knob settings, the recall half of the recall-vs-cost table in
+    PERF.md "Round 7: recall-vs-n_probe" as a hash-checked artifact.
+    Four configs run the SHIPPED serve body (_refine_ranked, the
+    q_ann_recall_ivfsq8_refine recipe): one probe fewer (1,20), a
+    starved shortlist (3,5), the production point (3,20), and all-cells
+    (8,20) — the lossless ceiling the refine law guarantees. Each row
+    reports exact hit counts against the full-precision ground truth
+    and the mean recall@5 (a single division of exact integers). The deployment
     claim this pins: what the chosen point buys relative to each
     neighboring knob, measured on the shipped code path — the serving
     analogue of what q_drift_retrain pinned for maintenance.

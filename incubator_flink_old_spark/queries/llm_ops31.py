@@ -31,6 +31,7 @@ from incubator_flink_old_spark.queries.llm_ops29 import (
 )
 from incubator_flink_old_spark.queries.llm_ops30 import (
     _GATE_LANGS,
+    _gate_replay,
     _ingest_gate_oracle,
 )
 
@@ -516,10 +517,6 @@ def q_token_budget_schedule(spark, sf_dir):
 # Streaming absorb parity: the MERGED artifacts serve the live crawl
 # --------------------------------------------------------------------------
 
-import itertools as _itertools
-
-_SEQ31 = _itertools.count()
-
 
 def _stream_absorb_oracle() -> str:
     """Wave 2 of the absorb oracle, alone: the streamed gate emits the
@@ -571,10 +568,6 @@ def q_stream_absorb_parity(spark, sf_dir):
     Scale: per-batch cost is the map-side gates plus O(batch
     candidates) probe joins against the persisted merged artifacts;
     state is one row per in-flight document, watermark-evicted."""
-    import datetime
-    import shutil
-    import tempfile
-
     from pyspark.storagelevel import StorageLevel
 
     from incubator_flink_old_spark.operators.text import (
@@ -584,10 +577,9 @@ def q_stream_absorb_parity(spark, sf_dir):
         winnow_corpus_index,
     )
     from incubator_flink_old_spark.streaming import (
-        append_literal_rows,
         force_pins,
-        run_stream_to_memory,
-        write_event_time_replay,
+        replay_source,
+        stream_result,
     )
 
     docs = t(spark, sf_dir, "documents")
@@ -613,7 +605,6 @@ def q_stream_absorb_parity(spark, sf_dir):
         for f in (toks0, bands0, fps0, stats0)
     ]
     toks0, bands0, fps0, stats0 = pinned
-    src = tempfile.mkdtemp(prefix="t2_stream_absorb_")
     try:
         g1 = streaming_ingest_gate(
             wave1,
@@ -662,55 +653,17 @@ def q_stream_absorb_parity(spark, sf_dir):
         # they'd build inside micro-batch 0 at the clamped state width
         # (optimization round 12; see streaming.force_pins).
         force_pins(*[f for pair in merged.values() for f in pair])
-        stream_src = wave2.select(
-            "doc_id",
-            "text",
-            "lang",
-            F.timestamp_seconds(F.lit(1704067200) + F.col("doc_id")).alias(
-                "ts"
-            ),
-        )
-        write_event_time_replay(stream_src, src, n_files=3)
-        mx = stream_src.agg(F.max("ts")).collect()[0][0]
-        for i in (1, 2):
-            append_literal_rows(
-                spark,
-                src,
-                [
-                    (
-                        -i,
-                        "the of and to a",
-                        "en",
-                        mx + datetime.timedelta(hours=i),
-                    )
-                ],
-                "doc_id long, text string, lang string, ts timestamp",
+        with replay_source(_gate_replay(wave2)) as stream:
+            out = streaming_ingest_gate(
+                stream,
+                None,
+                corpus_artifacts=merged,
+                event_time="ts",
+                watermark_delay="30 seconds",
+                **kw,
             )
-            # mtime ordering is handled by append_literal_rows itself (utime)
-        stream = (
-            spark.readStream.schema(
-                "doc_id long, text string, lang string, ts timestamp"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        out = streaming_ingest_gate(
-            stream,
-            None,
-            corpus_artifacts=merged,
-            event_time="ts",
-            watermark_delay="30 seconds",
-            **kw,
-        )
-        name = f"stream_absorb_{next(_SEQ31)}"
-        run_stream_to_memory(out, name, "append", state_partitions=4)
-        tbl = (
-            spark.table(name)
-            .filter(F.col("doc_id") >= 0)
-            .localCheckpoint(eager=True)
-        )
+            verdicts = stream_result(out, "append", state_partitions=4)
     finally:
         for f in pinned:
             f.unpersist()
-        shutil.rmtree(src, ignore_errors=True)
-    return tbl
+    return verdicts.filter(F.col("doc_id") >= 0)

@@ -14,8 +14,6 @@ the assignment from the union.
 
 from __future__ import annotations
 
-import itertools as _itertools
-
 from pyspark.sql import functions as F
 
 from incubator_flink_old_spark.queries import register
@@ -29,6 +27,7 @@ from incubator_flink_old_spark.queries.llm_ops28 import (
 )
 from incubator_flink_old_spark.queries.llm_ops30 import (
     _GATE_LANGS,
+    _gate_replay,
     _ingest_gate_oracle,
 )
 from incubator_flink_old_spark.queries.llm_ops31 import (
@@ -38,8 +37,6 @@ from incubator_flink_old_spark.queries.llm_ops31 import (
     _SEM_THRESHOLD,
     _semantic_gate_oracle,
 )
-
-_SEQ32 = _itertools.count()
 
 
 @register("q_stream_semantic_gate_parity", oracle=_semantic_gate_oracle())
@@ -73,10 +70,6 @@ def q_stream_semantic_gate_parity(spark, sf_dir):
     literal-array work map-side plus a partition-pruned fetch of
     n_probe cells — O(corpus/n_cells · n_probe), never the corpus;
     state stays one row per in-flight document, watermark-evicted."""
-    import datetime
-    import shutil
-    import tempfile
-
     from pyspark.storagelevel import StorageLevel
 
     from incubator_flink_old_spark.operators.similarity import (
@@ -87,10 +80,9 @@ def q_stream_semantic_gate_parity(spark, sf_dir):
         streaming_ingest_gate,
     )
     from incubator_flink_old_spark.streaming import (
-        append_literal_rows,
         force_pins,
-        run_stream_to_memory,
-        write_event_time_replay,
+        replay_source,
+        stream_result,
     )
 
     docs = t(spark, sf_dir, "documents")
@@ -100,7 +92,6 @@ def q_stream_semantic_gate_parity(spark, sf_dir):
     corpus = docs.filter(~new_d)
     pinned: list = []
     arts: list = []
-    src = tempfile.mkdtemp(prefix="t2_stream_semgate_")
     try:
         # The standing semantic index, trained once batch-side; the
         # centers collect is bounded (_SEM_CELLS = 8 rows — the
@@ -127,84 +118,47 @@ def q_stream_semantic_gate_parity(spark, sf_dir):
         # (optimization round 12; see streaming.force_pins).
         force_pins(cells, corpus_emb, nemb)
 
-        stream_src = docs.filter(new_d).select(
-            "doc_id",
-            "text",
-            "lang",
-            F.timestamp_seconds(F.lit(1704067200) + F.col("doc_id")).alias(
-                "ts"
-            ),
-        )
-        write_event_time_replay(stream_src, src, n_files=3)
-        mx = stream_src.agg(F.max("ts")).collect()[0][0]  # 1-row finish
-        for i in (1, 2):
-            append_literal_rows(
-                spark,
-                src,
-                [
-                    (
-                        -i,
-                        "the of and to a",
-                        "en",
-                        mx + datetime.timedelta(hours=i),
-                    )
-                ],
-                "doc_id long, text string, lang string, ts timestamp",
-            )
-            # mtime ordering is handled by append_literal_rows itself (utime)
-        stream = (
-            spark.readStream.schema(
-                "doc_id long, text string, lang string, ts timestamp"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        # The streaming semantic screen: events derive FROM the stream
-        # (the extra_screens key-domain contract holds by construction)
-        # via a stream-static inner join to the new-side embeddings,
-        # then the pure-map probe — no window, no stream-side shuffle.
-        sem = semantic_screen_events_map(
-            stream.select(
-                F.col("doc_id").alias("vec_id"), "ts"
-            ).join(
-                nemb.select(
-                    F.col("doc_id").alias("vec_id"), "embedding"
+        with replay_source(_gate_replay(docs.filter(new_d))) as stream:
+            # The streaming semantic screen: events derive FROM the
+            # stream (the extra_screens key-domain contract holds by
+            # construction) via a stream-static inner join to the
+            # new-side embeddings, then the pure-map probe — no window,
+            # no stream-side shuffle.
+            sem = semantic_screen_events_map(
+                stream.select(
+                    F.col("doc_id").alias("vec_id"), "ts"
+                ).join(
+                    nemb.select(
+                        F.col("doc_id").alias("vec_id"), "embedding"
+                    ),
+                    on="vec_id",
                 ),
-                on="vec_id",
-            ),
-            centers_rows,
-            cells,
-            corpus_emb,
-            n_probe=_SEM_PROBE,
-            threshold=_SEM_THRESHOLD,
-            carry=("ts",),
-        ).select("doc_a", "ts")
-        out = streaming_ingest_gate(
-            stream,
-            corpus,
-            langs=_GATE_LANGS,
-            num_hashes=_NDS_HASHES,
-            band_size=_NDS_BAND,
-            jaccard_threshold=_NDS_THRESHOLD,
-            screens=("neardup",),
-            extra_screens={"semdup": sem},
-            event_time="ts",
-            watermark_delay="30 seconds",
-            materialize_static=True,
-            artifact_registry=arts,
-        )
-        name = f"stream_semgate_{next(_SEQ32)}"
-        run_stream_to_memory(out, name, "append", state_partitions=4)
-        tbl = (
-            spark.table(name)
-            .filter(F.col("doc_id") >= 0)
-            .localCheckpoint(eager=True)
-        )
+                centers_rows,
+                cells,
+                corpus_emb,
+                n_probe=_SEM_PROBE,
+                threshold=_SEM_THRESHOLD,
+                carry=("ts",),
+            ).select("doc_a", "ts")
+            out = streaming_ingest_gate(
+                stream,
+                corpus,
+                langs=_GATE_LANGS,
+                num_hashes=_NDS_HASHES,
+                band_size=_NDS_BAND,
+                jaccard_threshold=_NDS_THRESHOLD,
+                screens=("neardup",),
+                extra_screens={"semdup": sem},
+                event_time="ts",
+                watermark_delay="30 seconds",
+                materialize_static=True,
+                artifact_registry=arts,
+            )
+            verdicts = stream_result(out, "append", state_partitions=4)
     finally:
         for f in pinned + arts:
             f.unpersist()
-        shutil.rmtree(src, ignore_errors=True)
-    return tbl
+    return verdicts.filter(F.col("doc_id") >= 0)
 
 
 # --------------------------------------------------------------------------
@@ -709,10 +663,6 @@ def q_stream_semantic_absorb_parity(spark, sf_dir):
     partition-pruned fetch of n_probe cells against the DISK_ONLY-
     pinned merged artifacts; state is one row per in-flight document,
     watermark-evicted."""
-    import datetime
-    import shutil
-    import tempfile
-
     from pyspark.storagelevel import StorageLevel
 
     from incubator_flink_old_spark.operators.similarity import (
@@ -725,10 +675,9 @@ def q_stream_semantic_absorb_parity(spark, sf_dir):
         streaming_ingest_gate,
     )
     from incubator_flink_old_spark.streaming import (
-        append_literal_rows,
         force_pins,
-        run_stream_to_memory,
-        write_event_time_replay,
+        replay_source,
+        stream_result,
     )
 
     docs = t(spark, sf_dir, "documents")
@@ -747,7 +696,6 @@ def q_stream_semantic_absorb_parity(spark, sf_dir):
         for f in (cells0, centers, corpus0_emb)
     ]
     cells0, centers, corpus0_emb = pinned
-    src = tempfile.mkdtemp(prefix="t2_stream_semabsorb_")
     try:
         # Batch wave-1 gate + absorb (the q_semantic_absorb_parity
         # path verbatim: frozen centers, O(wave) delta append).
@@ -802,73 +750,38 @@ def q_stream_semantic_absorb_parity(spark, sf_dir):
         # forced below, right after its own persist.
         force_pins(cells1, emb1)
 
-        w2_stream_src = docs.filter(m5d == 4).select(
-            "doc_id",
-            "text",
-            "lang",
-            F.timestamp_seconds(F.lit(1704067200) + F.col("doc_id")).alias(
-                "ts"
-            ),
-        )
-        write_event_time_replay(w2_stream_src, src, n_files=3)
-        mx = w2_stream_src.agg(F.max("ts")).collect()[0][0]  # 1-row finish
-        for i in (1, 2):
-            append_literal_rows(
-                spark,
-                src,
-                [
-                    (
-                        -i,
-                        "the of and to a",
-                        "en",
-                        mx + datetime.timedelta(hours=i),
-                    )
-                ],
-                "doc_id long, text string, lang string, ts timestamp",
-            )
-            # mtime ordering is handled by append_literal_rows itself (utime)
-        stream = (
-            spark.readStream.schema(
-                "doc_id long, text string, lang string, ts timestamp"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
         nemb2 = emb.filter(m5v == 4).select(
             F.col("vec_id").alias("doc_id"), "embedding"
         ).persist(StorageLevel.DISK_ONLY)
         pinned.append(nemb2)
         force_pins(nemb2)
-        sem2 = semantic_screen_events_map(
-            stream.select(F.col("doc_id").alias("vec_id"), "ts").join(
-                nemb2.select(F.col("doc_id").alias("vec_id"), "embedding"),
-                on="vec_id",
-            ),
-            centers_rows,
-            cells1,
-            emb1,
-            n_probe=_SEM_PROBE,
-            threshold=_SEM_THRESHOLD,
-            carry=("ts",),
-        ).select("doc_a", "ts")
-        out = streaming_ingest_gate(
-            stream,
-            None,
-            langs=_GATE_LANGS,
-            screens=(),
-            extra_screens={"semdup": sem2},
-            event_time="ts",
-            watermark_delay="30 seconds",
-        )
-        name = f"stream_semabsorb_{next(_SEQ32)}"
-        run_stream_to_memory(out, name, "append", state_partitions=4)
-        tbl = (
-            spark.table(name)
-            .filter(F.col("doc_id") >= 0)
-            .localCheckpoint(eager=True)
-        )
+        w2_docs = docs.filter(m5d == 4)
+        with replay_source(_gate_replay(w2_docs)) as stream:
+            sem2 = semantic_screen_events_map(
+                stream.select(F.col("doc_id").alias("vec_id"), "ts").join(
+                    nemb2.select(
+                        F.col("doc_id").alias("vec_id"), "embedding"
+                    ),
+                    on="vec_id",
+                ),
+                centers_rows,
+                cells1,
+                emb1,
+                n_probe=_SEM_PROBE,
+                threshold=_SEM_THRESHOLD,
+                carry=("ts",),
+            ).select("doc_a", "ts")
+            out = streaming_ingest_gate(
+                stream,
+                None,
+                langs=_GATE_LANGS,
+                screens=(),
+                extra_screens={"semdup": sem2},
+                event_time="ts",
+                watermark_delay="30 seconds",
+            )
+            verdicts = stream_result(out, "append", state_partitions=4)
     finally:
         for f in pinned:
             f.unpersist()
-        shutil.rmtree(src, ignore_errors=True)
-    return tbl
+    return verdicts.filter(F.col("doc_id") >= 0)

@@ -9,8 +9,6 @@ streaming one, whose bounded replay must equal the batch SQL exactly.
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -164,7 +162,6 @@ def q_count_min(spark, sf_dir):
 # --------------------------------------------------------------------------
 # Streaming batch parity — the driver-checkable Structured Streaming row
 # --------------------------------------------------------------------------
-_STREAM_SEQ = itertools.count()
 
 
 @register(
@@ -192,7 +189,7 @@ def q_stream_window_parity(spark, sf_dir):
     from incubator_flink_old_spark.queries._util import dsum
     from incubator_flink_old_spark.streaming import (
         read_events_stream,
-        run_stream_to_memory,
+        stream_result,
     )
 
     stream = read_events_stream(spark, sf_dir)
@@ -209,9 +206,7 @@ def q_stream_window_parity(spark, sf_dir):
             "total_value",
         )
     )
-    name = f"stream_parity_{next(_STREAM_SEQ)}"
-    run_stream_to_memory(agg, name, "complete")
-    return spark.table(name)
+    return stream_result(agg, "complete")
 
 
 # --------------------------------------------------------------------------

@@ -9,8 +9,6 @@ a KS distribution-drift gate. Every query carries a DuckDB twin.
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -22,7 +20,6 @@ from incubator_flink_old_spark.queries.llm_ops8 import _SPLIT_SQL, _split_col
 # --------------------------------------------------------------------------
 # Streaming dedup parity (second streaming driver row — W5 surface)
 # --------------------------------------------------------------------------
-_STREAM_SEQ = itertools.count()
 
 
 @register(
@@ -45,7 +42,7 @@ def q_stream_dedup_parity(spark, sf_dir):
     driver."""
     from incubator_flink_old_spark.streaming import (
         read_events_stream,
-        run_stream_to_memory,
+        stream_result,
     )
 
     stream = read_events_stream(spark, sf_dir)
@@ -53,9 +50,7 @@ def q_stream_dedup_parity(spark, sf_dir):
         F.min("event_id").alias("canonical_event"),
         F.count(F.lit(1)).alias("n_events"),
     )
-    name = f"stream_dedup_{next(_STREAM_SEQ)}"
-    run_stream_to_memory(agg, name, "complete")
-    return spark.table(name)
+    return stream_result(agg, "complete")
 
 
 # --------------------------------------------------------------------------

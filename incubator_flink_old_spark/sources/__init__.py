@@ -207,29 +207,36 @@ def local_rows(spark: SparkSession, rows: list, schema: str) -> DataFrame:
     must never touch Python.
 
     Here the rows become ONE JVM literal — explode(array(struct…)) over
-    range(1) — a single task, zero Python workers, and a relation small
-    enough that Catalyst broadcasts it directly. Values must be plain
-    scalars (str/int/float/bool/None/date/Decimal). Empty input is a
-    typed projection over range(0). Falls back to createDataFrame above
-    _LOCAL_ROWS_MAX rows (plan-compile cost crosses over).
+    a one-split range(1) — a single task, zero Python workers, and a
+    relation small enough that Catalyst broadcasts it directly. Values
+    must be plain scalars (str/int/float/bool/None/date/Decimal); a row
+    whose arity differs from the schema's raises. Empty input is a
+    typed projection over a one-split range(0). Falls back to
+    createDataFrame above _LOCAL_ROWS_MAX rows (plan-compile cost
+    crosses over).
     """
     st = T.StructType.fromDDL(schema) if isinstance(schema, str) else schema
+    values = [row if isinstance(row, (tuple, list)) else (row,) for row in rows]
+    for row, vals in zip(rows, values):
+        if len(vals) != len(st.fields):
+            # a short row would read its missing columns back as NULL —
+            # e.g. a NULL event-time sentinel that never advances a
+            # watermark — so fail here instead
+            raise ValueError(
+                f"local_rows: row {row!r} has {len(vals)} values for"
+                f" {len(st.fields)} schema fields"
+            )
     if not rows:
-        return spark.range(0).select(
+        return spark.range(0, 0, 1, 1).select(
             *[F.lit(None).cast(f.dataType).alias(f.name) for f in st.fields]
         )
     if len(rows) > _LOCAL_ROWS_MAX:
         return spark.createDataFrame(rows, schema=schema)
     structs = [
-        F.struct(
-            *[
-                F.lit(v).alias(f.name)
-                for v, f in zip(row if isinstance(row, (tuple, list)) else (row,), st.fields)
-            ]
-        )
-        for row in rows
+        F.struct(*[F.lit(v).alias(f.name) for v, f in zip(vals, st.fields)])
+        for vals in values
     ]
-    return spark.range(1).select(
+    return spark.range(0, 1, 1, 1).select(
         F.explode(F.array(*structs)).alias("__r")
     ).select(*[F.col(f"__r.{f.name}").cast(f.dataType).alias(f.name) for f in st.fields])
 

@@ -17,6 +17,9 @@ forever, so ``with_watermark`` is mandatory in the streaming forms.
 
 from __future__ import annotations
 
+import contextlib
+import itertools
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -302,7 +305,8 @@ def run_stream_to_memory(
     results (PERF.md round-5). Size it to state volume — hundreds at
     100 TB state, single digits for fixture-scale state. ``None`` keeps
     the session's current width. The session conf is restored after the
-    run (start() has already captured it)."""
+    run (start() has already captured it). The query is stopped on the
+    way out, also when the run raises."""
     spark = stream_df.sparkSession
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
@@ -315,11 +319,126 @@ def run_stream_to_memory(
             .queryName(query_name)
             .start()
         )
-        q.processAllAvailable()
-        q.stop()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
         return q
     finally:
         spark.conf.set(key, prev)
+
+
+#: Names the memory sinks of :func:`stream_result`.
+_RESULT_SEQ = itertools.count()
+
+#: Seconds between the file mtimes of consecutive :func:`replay_source`
+#: batches — whole seconds, so the order survives a file system that
+#: keeps coarse mtimes.
+_REPLAY_STEP_S = 1.0
+
+
+@contextlib.contextmanager
+def replay_source(batches):
+    """The bounded replay of the streaming parity rows: write each
+    DataFrame of ``batches`` as given (its partitioning is the caller's:
+    one file per partition) into one fresh temp directory, and yield a
+    ``maxFilesPerTrigger=1`` file stream over it whose schema is the
+    first batch's.
+
+    The file source replays oldest-modtime-first, so each batch's new
+    files are stamped (``os.utime``) strictly after the previous
+    batch's: the stream sees the batches in the given order whatever
+    the wall clock did while writing them. A later batch whose column
+    names or types differ from the first's raises (nullability aside —
+    the file source reads every column as nullable).
+
+    ``batches`` may be a generator (:func:`event_time_batches`): it is
+    consumed one batch per write and closed on exit, so a pin it holds
+    across its yields is released also when a write fails. The
+    directory is removed on exit, also on error; run the stream inside
+    the ``with`` block (:func:`stream_result` leaves no reader behind)."""
+    import os
+    import shutil
+    import tempfile
+    import time
+
+    path = tempfile.mkdtemp(prefix="stream_replay_")
+    try:
+        first = None
+        seen: set[str] = set()
+        t0 = time.time()
+        for i, batch in enumerate(batches):
+            if first is None:
+                first = batch.schema
+            elif batch.schema.simpleString() != first.simpleString():
+                raise ValueError(
+                    f"replay_source: batch {i} has schema"
+                    f" {batch.schema.simpleString()}, batch 0 has"
+                    f" {first.simpleString()}"
+                )
+            batch.write.mode("append").parquet(path)
+            ts = t0 + i * _REPLAY_STEP_S
+            for f in os.listdir(path):
+                if f.endswith(".parquet") and f not in seen:
+                    os.utime(os.path.join(path, f), (ts, ts))
+                    seen.add(f)
+        if first is None:
+            raise ValueError("replay_source: no batches")
+        yield (
+            batch.sparkSession.readStream.schema(first)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(path)
+        )
+    finally:
+        close = getattr(batches, "close", None)
+        if close is not None:
+            close()
+        shutil.rmtree(path, ignore_errors=True)
+
+
+def stream_result(
+    out: DataFrame, output_mode: str, state_partitions: int | None = 8
+) -> DataFrame:
+    """Run the bounded stream ``out`` to completion into a memory sink
+    (:func:`run_stream_to_memory`) and return the sink's rows as a batch
+    frame.
+
+    The memory sink holds its rows on the driver and the frame plans as
+    a ``LocalTableScan`` of them: it needs neither the replayed files
+    nor a copy into executor blocks, and it still collects after its
+    view is dropped — so the view is dropped here, and a run leaves no
+    catalog entry behind."""
+    name = f"stream_result_{next(_RESULT_SEQ)}"
+    run_stream_to_memory(out, name, output_mode, state_partitions)
+    spark = out.sparkSession
+    result = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return result
+
+
+def event_time_batches(
+    df: DataFrame, n_files: int = 4, order_by: str = "doc_id"
+):
+    """``df`` cut into ``n_files`` ``order_by``-ntile groups, yielded in
+    that order as one single-file batch each — for :func:`replay_source`,
+    which replays them in that order: the in-event-time-order regime a
+    watermark models (a crawl's ingest time is its arrival order).
+
+    The tiled frame is pinned once across the yields (an eager
+    ``localCheckpoint``): each batch's write would otherwise re-run the
+    source scan and the global ntile sort (measured ~45% of
+    q_stream_ingest_gate_parity's wall at sf0.1, PERF.md round 11). The
+    pin is released when the generator finishes or is closed."""
+    from pyspark.sql import Window
+
+    tiled = df.withColumn(
+        "__b", F.ntile(n_files).over(Window.orderBy(order_by))
+    ).localCheckpoint(eager=True)
+    try:
+        for g in range(1, n_files + 1):
+            yield tiled.filter(F.col("__b") == g).drop("__b").coalesce(1)
+    finally:
+        tiled.unpersist()
 
 
 def interval_join(
@@ -849,106 +968,3 @@ def stateful_latest(
         )
         .select(key, *[F.col(f"__m.{c}").alias(c) for c in cols], "seen")
     )
-
-
-def append_literal_rows(spark, path: str, rows, schema: str) -> None:
-    """Append a handful of LITERAL rows (watermark sentinels, cap rows)
-    to a replay directory as one tiny parquet file — via a
-    ``range(1)``-projection plan, NOT ``createDataFrame``: writing a
-    local-rows frame goes through the Python-RDD evaluation path and
-    costs 5–10 s PER SENTINEL on a warm sf0.1 session (measured,
-    PERF.md round 11 — it was ~40%% of the gate-parity row's wall),
-    where the literal projection writes in ~0.2 s. ``schema`` is the
-    DDL string the stream reader uses; values are cast field-wise.
-    Row arity is CHECKED against the schema (review finding): a silent
-    zip would write a short row whose missing column reads back NULL —
-    e.g. a NULL event-time sentinel that never advances the watermark,
-    hanging the replay instead of failing at write time.
-
-    The new file's mtime is stamped strictly ABOVE every parquet file
-    already in ``path`` (the maxFilesPerTrigger file source replays in
-    modtime order), so back-to-back appends need no inter-call sleep —
-    the q_stream_asof_parity ``os.utime`` recipe, centralized
-    (optimization round 12: the 0.2 s sleeps per sentinel across the
-    replay-parity rows were pure scaffolding wall)."""
-    import os
-    import time
-
-    if not rows:
-        raise ValueError("append_literal_rows: rows is empty")
-    fields = spark.createDataFrame([], schema).schema.fields
-    frame = None
-    for row in rows:
-        if len(row) != len(fields):
-            raise ValueError(
-                f"append_literal_rows: row has {len(row)} values for"
-                f" {len(fields)} schema fields: {row!r}"
-            )
-        one = spark.range(1).select(
-            *[
-                F.lit(v).cast(f.dataType).alias(f.name)
-                for v, f in zip(row, fields)
-            ]
-        )
-        frame = one if frame is None else frame.unionByName(one)
-    before: dict[str, float] = {}
-    if os.path.isdir(path):
-        for f in os.listdir(path):
-            if f.endswith(".parquet"):
-                before[f] = os.path.getmtime(os.path.join(path, f))
-    frame.coalesce(1).write.mode("append").parquet(path)
-    ts = max(max(before.values(), default=0.0) + 0.05, time.time())
-    for f in os.listdir(path):
-        if f.endswith(".parquet") and f not in before:
-            os.utime(os.path.join(path, f), (ts, ts))
-
-
-def write_event_time_replay(
-    df,
-    path: str,
-    n_files: int = 4,
-    order_by: str = "doc_id",
-) -> None:
-    """Write ``df`` as ``n_files`` parquet files split by ``order_by``
-    ntile, SEQUENTIALLY, so a maxFilesPerTrigger=1 file stream replays
-    them in that order (the file source replays oldest-modtime-first) —
-    the in-event-time-order regime a watermark models: a crawl's ingest
-    time is its arrival order. Shared by the watermark-parity rows and
-    their tests (one copy of the load-bearing invariant, per review).
-    File order is enforced by stamping each file group's mtime
-    explicitly 50 ms apart (``os.utime``, the
-    q_stream_asof_parity recipe) instead of sleeping between writes —
-    optimization round 12: the 0.15 s/file sleeps summed to ~0.5 s of
-    pure scaffolding wall on every replay-parity row. Fixture-prep
-    helper — the cost is test scaffolding, never operator cost."""
-    import os
-    import time
-
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    # Pin the tiled frame ONCE: each per-file write otherwise re-runs
-    # the source scan + global ntile sort (n_files full jobs — measured
-    # ~45% of q_stream_ingest_gate_parity's wall at sf0.1, PERF.md
-    # round 11). Eager checkpoint, released after the last write.
-    tiled = df.withColumn(
-        "__b", F.ntile(n_files).over(Window.orderBy(order_by))
-    ).localCheckpoint(eager=True)
-    t0 = time.time()
-    try:
-        seen: set[str] = set()
-        for g in range(1, n_files + 1):
-            (
-                tiled.filter(F.col("__b") == g)
-                .drop("__b")
-                .coalesce(1)
-                .write.mode("append")
-                .parquet(path)
-            )
-            ts = t0 + (g - 1) * 0.05
-            for f in os.listdir(path):
-                if f.endswith(".parquet") and f not in seen:
-                    os.utime(os.path.join(path, f), (ts, ts))
-                    seen.add(f)
-    finally:
-        tiled.unpersist()

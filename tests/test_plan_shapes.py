@@ -346,9 +346,12 @@ def _bloom(spark):
 def test_driver_built_frames_scan_no_python_rdd(spark, build):
     """A frame the driver builds from collected values is a JVM literal:
     createDataFrame(list) would plan a Scan ExistingRDD over a Python
-    RDD, and each of its tasks would fork a Python worker."""
+    RDD, and each of its tasks would fork a Python worker. Its range is
+    one split, so it schedules one task, not defaultParallelism mostly
+    empty ones."""
     plan = _executed_plan(build(spark))
     assert "ExistingRDD" not in plan, plan
+    assert "splits=1)" in plan, plan
 
 
 def _mixture(spark):

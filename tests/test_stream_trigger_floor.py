@@ -5,15 +5,16 @@ warm session compiles no new state-encoder class per trigger."""
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
 import struct
 import subprocess
 import sys
-import tempfile
 import textwrap
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -26,23 +27,12 @@ _SCHEMA = "event_type string, event_id long, value double"
 _ADVERSARIAL = (0.1 + 0.2, -0.0, 5e-324, 1.7976931348623157e308)
 
 
-def _replay_dir(spark, files):
-    """A parquet directory that a maxFilesPerTrigger=1 stream replays as
-    one trigger per entry of ``files`` (each a list of rows), in order."""
-    from incubator_flink_old_spark.streaming import append_literal_rows
+def _batches(spark, files):
+    """Replay batches, one trigger per entry of ``files`` (each a list of
+    rows), in order."""
+    from incubator_flink_old_spark.sources import local_rows
 
-    src = tempfile.mkdtemp(prefix="trigger_floor_")
-    for rows in files:
-        append_literal_rows(spark, src, rows, _SCHEMA)
-    return src
-
-
-def _stream(spark, src):
-    return (
-        spark.readStream.schema(_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
+    return [local_rows(spark, rows, _SCHEMA) for rows in files]
 
 
 def _three_files():
@@ -57,20 +47,20 @@ _READLINK_RUN = textwrap.dedent(
     """
     import sys, tempfile
     from incubator_flink_old_spark import get_spark
+    from incubator_flink_old_spark.sources import local_rows
     from incubator_flink_old_spark.streaming import (
-        append_literal_rows, run_stream_to_memory, stateful_heavy_hitters)
+        replay_source, stateful_heavy_hitters, stream_result)
 
+    tempfile.tempdir = sys.argv[1]
     spark = get_spark("readlink-probe")
-    src = tempfile.mkdtemp(dir=sys.argv[1])
-    for f in range(2):
-        append_literal_rows(spark, src, [("a", f, 1.0), ("b", f, 2.0)],
-                            "event_type string, event_id long, value double")
-    stream = (spark.readStream.schema(
-        "event_type string, event_id long, value double")
-        .option("maxFilesPerTrigger", "1").parquet(src))
-    out = stateful_heavy_hitters(stream, value="event_id")
-    run_stream_to_memory(out, "readlink_probe", "update", state_partitions=2)
-    assert spark.table("readlink_probe").count() > 0
+    batches = [
+        local_rows(spark, [("a", f, 1.0), ("b", f, 2.0)],
+                   "event_type string, event_id long, value double")
+        for f in range(2)
+    ]
+    with replay_source(batches) as stream:
+        out = stateful_heavy_hitters(stream, value="event_id")
+        assert stream_result(out, "update", state_partitions=2).count() > 0
     spark.stop()
     """
 )
@@ -122,6 +112,7 @@ def test_warm_stream_compiles_no_new_class(spark, operator):
     state encoder's generated code is the same text on every trigger,
     so every class comes from the codegen cache."""
     from incubator_flink_old_spark.streaming import (
+        replay_source,
         run_stream_to_memory,
         stateful_heavy_hitters,
         stateful_topk,
@@ -134,18 +125,15 @@ def test_warm_stream_compiles_no_new_class(spark, operator):
 
     compiled = []
     for run in range(2):
-        src = _replay_dir(spark, _three_files())
-        try:
+        with replay_source(_batches(spark, _three_files())) as stream:
             before = _source_code_size_count(spark)
             run_stream_to_memory(
-                build(_stream(spark, src)),
+                build(stream),
                 f"codegen_{operator}_{run}",
                 "update",
                 state_partitions=2,
             )
             compiled.append(_source_code_size_count(spark) - before)
-        finally:
-            shutil.rmtree(src, ignore_errors=True)
     assert compiled[1] == 0, compiled
 
 
@@ -153,13 +141,12 @@ def test_state_checksum_files_still_written(spark, tmp_path):
     """The state store keeps wrapping the checkpoint manager in its
     checksum manager: every state delta has its checksum file, and
     both have the file system's .crc."""
-    from incubator_flink_old_spark.streaming import stateful_topk
+    from incubator_flink_old_spark.streaming import replay_source, stateful_topk
 
-    src = _replay_dir(spark, _three_files())
     ckpt = str(tmp_path / "ckpt")
-    try:
+    with replay_source(_batches(spark, _three_files())) as stream:
         q = (
-            stateful_topk(_stream(spark, src), k=2)
+            stateful_topk(stream, k=2)
             .writeStream.outputMode("update")
             .format("memory")
             .queryName("checksum_files")
@@ -168,8 +155,6 @@ def test_state_checksum_files_still_written(spark, tmp_path):
         )
         q.processAllAvailable()
         q.stop()
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
     deltas = 0
     for dirpath, _, files in os.walk(os.path.join(ckpt, "state")):
         names = set(files)
@@ -196,8 +181,9 @@ def test_topk_state_roundtrips_adversarial_doubles(spark):
     from pyspark.sql import Window
 
     from incubator_flink_old_spark.streaming import (
-        run_stream_to_memory,
+        replay_source,
         stateful_topk,
+        stream_result,
     )
 
     k = 6
@@ -207,29 +193,23 @@ def test_topk_state_roundtrips_adversarial_doubles(spark):
         [("a", 20, 0.3), ("a", 21, -5e-324), ("b", 22, -1.0)],
         [("a", 30, -2.0), ("b", 31, 0.30000000000000004)],
     ]
-    src = _replay_dir(spark, files)
-    try:
-        rows = spark.read.schema(_SCHEMA).parquet(src)
-        written = {_bits(r.value) for r in rows.collect()}
-        assert {_bits(v) for v in _ADVERSARIAL} <= written
-        run_stream_to_memory(
-            stateful_topk(_stream(spark, src), k=k),
-            "topk_adversarial",
-            "update",
-            state_partitions=2,
+    batches = _batches(spark, files)
+    rows = functools.reduce(DataFrame.unionByName, batches)
+    written = {_bits(r.value) for r in rows.collect()}
+    assert {_bits(v) for v in _ADVERSARIAL} <= written
+    with replay_source(batches) as stream:
+        tbl = stream_result(
+            stateful_topk(stream, k=k), "update", state_partitions=2
         )
-        tbl = spark.table("topk_adversarial").localCheckpoint(eager=True)
-        w = Window.partitionBy("event_type").orderBy(
-            F.col("value").desc(), "event_id"
-        )
-        batch = sorted(
-            (r.event_type, r.event_id, _bits(r.value), r.rnk)
-            for r in rows.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-            .collect()
-        )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+    w = Window.partitionBy("event_type").orderBy(
+        F.col("value").desc(), "event_id"
+    )
+    batch = sorted(
+        (r.event_type, r.event_id, _bits(r.value), r.rnk)
+        for r in rows.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= k)
+        .collect()
+    )
     last = F.max("seen").over(Window.partitionBy("event_type"))
     streamed = sorted(
         (r.event_type, r.event_id, _bits(r.value), r.batch_rank)

@@ -389,3 +389,65 @@ def test_idempotent_sink_drives_a_real_stream(spark, sf_dir, tmp_path, events_st
 
     want = load_table(spark, sf_dir, "events").count()
     assert read_committed(spark, out).count() == want
+
+
+def test_replay_row_leaves_no_temp_dir_or_view(spark, sf_dir):
+    """A replay-parity row cleans up after itself: two runs of
+    q_stream_hh_parity add no entry under the temp dir (the replay
+    source is removed) and no catalog view (the memory sink's view is
+    dropped), and each result still collects. A first run goes before
+    the snapshot: the JVM unpacks its native libraries and creates its
+    session-wide temp dirs under the same temp dir on first use."""
+    import os
+    import tempfile
+
+    from incubator_flink_old_spark.queries import QUERIES, load_all_queries
+
+    load_all_queries()
+    QUERIES["q_stream_hh_parity"](spark, sf_dir).count()
+    tmp = tempfile.gettempdir()
+    dirs = set(os.listdir(tmp))
+    views = {t.name for t in spark.catalog.listTables()}
+    for _ in range(2):
+        assert QUERIES["q_stream_hh_parity"](spark, sf_dir).count() > 0
+    assert set(os.listdir(tmp)) - dirs == set()
+    assert {t.name for t in spark.catalog.listTables()} - views == set()
+
+
+def test_replay_source_cleans_up_when_the_stream_fails(spark):
+    """A replay whose stream fails in its second micro-batch still
+    removes its directory, and leaves no query running."""
+    import os
+    import tempfile
+
+    from incubator_flink_old_spark.sources import local_rows
+    from incubator_flink_old_spark.streaming import (
+        replay_source,
+        stream_result,
+    )
+
+    def replay_dirs():
+        return {
+            e for e in os.listdir(tempfile.gettempdir())
+            if e.startswith("stream_replay_")
+        }
+
+    before = replay_dirs()
+    schema = "id long, tag string"
+    batches = [
+        local_rows(spark, [(1, "ok")], schema),
+        local_rows(spark, [(2, "boom")], schema),
+    ]
+    with pytest.raises(Exception, match="replay boom"):
+        with replay_source(batches) as stream:
+            failing = stream.select(
+                "id",
+                F.when(
+                    F.col("tag") == "boom", F.raise_error(F.lit("replay boom"))
+                )
+                .otherwise(F.col("tag"))
+                .alias("tag"),
+            )
+            stream_result(failing, "append")
+    assert replay_dirs() == before
+    assert spark.streams.active == []

@@ -209,8 +209,8 @@ def test_two_stage_recall_monotone_in_candidates(spark):
     deterministic total order on (dense_ip DESC, doc_id), any full-truth
     doc admitted to the candidate set outranks every non-truth candidate
     — so recall@k(N) == |full-top-k ∩ candidates(N)| / k exactly, and is
-    monotone nondecreasing in N. tools/retrieval_sweep.py measures the
-    same quantity at sf0.1 and 16x."""
+    monotone nondecreasing in N. PERF.md "Round 6: two-stage retrieval"
+    measures the same quantity at sf0.1 and 16x."""
     from incubator_flink_old_spark.operators.retrieval import bm25_topk
     from incubator_flink_old_spark.queries._util import t
     from incubator_flink_old_spark.queries.llm_ops18 import (

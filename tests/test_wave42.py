@@ -7,8 +7,6 @@ with any order- or boundary-dependent state handling."""
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -27,32 +25,17 @@ def _final_topk(spark, src_rows, n_files: int, order_col):
     from pyspark.sql import Window
 
     from incubator_flink_old_spark.streaming import (
-        run_stream_to_memory,
+        replay_source,
         stateful_topk,
+        stream_result,
     )
 
-    src = tempfile.mkdtemp(prefix="t2_topk_law_")
-    try:
-        (
-            src_rows.orderBy(order_col)
-            .repartition(n_files)
-            .write.mode("overwrite")
-            .parquet(src)
+    with replay_source(
+        [src_rows.orderBy(order_col).repartition(n_files)]
+    ) as stream:
+        tbl = stream_result(
+            stateful_topk(stream, k=K), "update", state_partitions=2
         )
-        stream = (
-            spark.readStream.schema(
-                "event_type string, event_id long, value double"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        name = f"topk_law_{n_files}_{order_col}"
-        run_stream_to_memory(
-            stateful_topk(stream, k=K), name, "update", state_partitions=2
-        )
-        tbl = spark.table(name).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
     w = Window.partitionBy("event_type")
     return sorted(
         (r.event_type, r.event_id, r.value, r.batch_rank)
@@ -95,30 +78,16 @@ def test_stream_topk_state_is_k_bounded(spark):
     monotone across a group's emissions."""
     from incubator_flink_old_spark.queries._util import t
     from incubator_flink_old_spark.streaming import (
-        run_stream_to_memory,
+        replay_source,
         stateful_topk,
+        stream_result,
     )
 
     rows = t(spark, SF, "events").select("event_type", "event_id", "value")
-    src = tempfile.mkdtemp(prefix="t2_topk_bound_")
-    try:
-        rows.repartition(3).write.mode("overwrite").parquet(src)
-        stream = (
-            spark.readStream.schema(
-                "event_type string, event_id long, value double"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
+    with replay_source([rows.repartition(3)]) as stream:
+        tbl = stream_result(
+            stateful_topk(stream, k=K), "update", state_partitions=2
         )
-        run_stream_to_memory(
-            stateful_topk(stream, k=K),
-            "topk_bound",
-            "update",
-            state_partitions=2,
-        )
-        tbl = spark.table("topk_bound").localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
     per_emission = tbl.groupBy("event_type", "seen").count()
     assert per_emission.filter(F.col("count") > K).count() == 0
     # batch_rank within an emission is 1..n with no gaps
@@ -369,42 +338,28 @@ def test_stream_sq8_encode_is_pure_map(spark):
 
 
 def _final_latest(spark, rows, n_files: int, order_col):
-    src = tempfile.mkdtemp(prefix="t2_cdc_law_")
-    try:
-        (
-            rows.orderBy(order_col)
-            .repartition(n_files)
-            .write.mode("overwrite")
-            .parquet(src)
-        )
-        return _replay_latest(spark, src, f"cdc_law_{n_files}_{order_col}")
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+    return _replay_latest([rows.orderBy(order_col).repartition(n_files)])
 
 
-def _replay_latest(spark, src: str, name: str):
-    """Replay ``src`` one file per trigger through stateful_latest and
+def _replay_latest(batches):
+    """Replay ``batches`` one file per trigger through stateful_latest and
     return each key's last emission as sorted (user_id, event_id,
     event_type, value) tuples."""
     from pyspark.sql import Window
 
     from incubator_flink_old_spark.streaming import (
-        run_stream_to_memory,
+        replay_source,
         stateful_latest,
+        stream_result,
     )
 
-    stream = (
-        spark.readStream.schema(
-            "user_id long, ts_us long, event_id long, "
-            "event_type string, value double"
+    with replay_source(batches) as stream:
+        changes = stream.select(
+            "user_id", "ts_us", "event_id", "event_type", "value"
         )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    run_stream_to_memory(
-        stateful_latest(stream), name, "update", state_partitions=2
-    )
-    tbl = spark.table(name)
+        tbl = stream_result(
+            stateful_latest(changes), "update", state_partitions=2
+        )
     w = Window.partitionBy("user_id")
     return sorted(
         (r.user_id, r.event_id, r.event_type, r.value)
@@ -452,7 +407,7 @@ def test_stream_cdc_exact_tie_breaks_by_payload(spark):
     the tie rule is part of the order, so boundary invariance holds on
     ties too. Each row is its own micro-batch, in both arrival orders."""
     from incubator_flink_old_spark.sources import local_rows
-    from incubator_flink_old_spark.streaming import write_event_time_replay
+    from incubator_flink_old_spark.streaming import event_time_batches
 
     rows = local_rows(
         spark,
@@ -462,12 +417,9 @@ def test_stream_cdc_exact_tie_breaks_by_payload(spark):
     )
     got = {}
     for order in ("a_first", "b_first"):
-        src = tempfile.mkdtemp(prefix="t2_cdc_tie_")
-        try:
-            write_event_time_replay(rows, src, n_files=2, order_by=order)
-            got[order] = _replay_latest(spark, src, f"cdc_tie_{order}")
-        finally:
-            shutil.rmtree(src, ignore_errors=True)
+        got[order] = _replay_latest(
+            event_time_batches(rows, n_files=2, order_by=order)
+        )
     assert got["a_first"] == got["b_first"] == [(1, 7, "b", 1.0)], got
 
 

@@ -91,7 +91,7 @@ def test_dense_mrr_plan_has_no_cartesian(spark):
     assert "CartesianProduct" not in plan
 
 
-def _neardup_stream_run(spark, tmpdir, event_time, in_order=True):
+def _neardup_stream_run(spark, event_time, in_order=True):
     """Drive streaming_neardup_screen over a 4-batch file replay of the
     sf0.001 'new' slice; returns (emitted rows, stopped query handle)."""
     from incubator_flink_old_spark.operators.text import (
@@ -100,8 +100,9 @@ def _neardup_stream_run(spark, tmpdir, event_time, in_order=True):
     from incubator_flink_old_spark.queries._util import t
     from incubator_flink_old_spark.queries.llm_ops28 import _D_MOD, _D_REM
     from incubator_flink_old_spark.streaming import (
+        event_time_batches,
+        replay_source,
         run_stream_to_memory,
-        write_event_time_replay,
     )
 
     docs = t(spark, SF, "documents")
@@ -111,25 +112,20 @@ def _neardup_stream_run(spark, tmpdir, event_time, in_order=True):
         "text",
         F.timestamp_seconds(F.lit(1704067200) + F.col("doc_id")).alias("ts"),
     )
-    write_event_time_replay(new_docs, tmpdir, n_files=4)
-    stream = (
-        spark.readStream.schema("doc_id long, text string, ts timestamp")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(tmpdir)
-    )
-    out = streaming_neardup_screen(
-        stream,
-        docs.filter(~is_new),
-        event_time=event_time,
-        watermark_delay="30 seconds",
-    )
-    name = f"w44_ndw_{next(_W44_SEQ)}"
-    q = run_stream_to_memory(out, name, "append", state_partitions=4)
+    with replay_source(event_time_batches(new_docs, n_files=4)) as stream:
+        out = streaming_neardup_screen(
+            stream,
+            docs.filter(~is_new),
+            event_time=event_time,
+            watermark_delay="30 seconds",
+        )
+        name = f"w44_ndw_{next(_W44_SEQ)}"
+        q = run_stream_to_memory(out, name, "append", state_partitions=4)
     rows = spark.table(name).collect()
     return rows, q
 
 
-def test_neardup_watermark_parity_and_eviction(spark, tmp_path):
+def test_neardup_watermark_parity_and_eviction(spark):
     """The watermarked screen must emit exactly the unwatermarked
     screen's pairs under in-event-time-order replay (a pair's multi-band
     hits share one arrival row ⇒ one event time ⇒ none straddle the
@@ -137,8 +133,8 @@ def test_neardup_watermark_parity_and_eviction(spark, tmp_path):
     than the pairs emitted — eviction really ran as the watermark
     advanced across batches (the unbounded form keeps one state row per
     pair forever)."""
-    wm_rows, q = _neardup_stream_run(spark, str(tmp_path / "wm"), "ts")
-    plain_rows, _ = _neardup_stream_run(spark, str(tmp_path / "pl"), None)
+    wm_rows, q = _neardup_stream_run(spark, "ts")
+    plain_rows, _ = _neardup_stream_run(spark, None)
     key = lambda r: (r.doc_a, r.doc_b, round(r.jaccard, 9))
     assert sorted(map(key, wm_rows)) == sorted(map(key, plain_rows))
     assert len(wm_rows) > 0
@@ -409,7 +405,7 @@ def test_new_operator_guards(spark):
         streaming_winnow_screen(docs, docs, event_time="ingest_ts")
 
 
-def test_streaming_winnow_watermark_parity(spark, tmp_path):
+def test_streaming_winnow_watermark_parity(spark):
     """The watermarked winnow screen (event_time recipe carried over
     from the neardup screen) emits exactly the unwatermarked screen's
     events under in-event-time-order replay, with eviction bounding the
@@ -420,44 +416,34 @@ def test_streaming_winnow_watermark_parity(spark, tmp_path):
     from incubator_flink_old_spark.queries._util import t
     from incubator_flink_old_spark.queries.llm_ops28 import _D_MOD, _D_REM
     from incubator_flink_old_spark.streaming import (
+        event_time_batches,
+        replay_source,
         run_stream_to_memory,
-        write_event_time_replay,
     )
 
     docs = t(spark, SF, "documents")
     is_new = F.col("doc_id") % _D_MOD == _D_REM
+    new_docs = docs.filter(is_new).select(
+        "doc_id",
+        "text",
+        F.timestamp_seconds(F.lit(1704067200) + F.col("doc_id")).alias("ts"),
+    )
     results = {}
     for label, et in (("wm", "ts"), ("plain", None)):
-        src = str(tmp_path / label)
-        write_event_time_replay(
-            docs.filter(is_new).select(
-                "doc_id",
-                "text",
-                F.timestamp_seconds(
-                    F.lit(1704067200) + F.col("doc_id")
-                ).alias("ts"),
-            ),
-            src,
-            n_files=4,
-        )
-        stream = (
-            spark.readStream.schema("doc_id long, text string, ts timestamp")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        out = streaming_winnow_screen(
-            stream,
-            docs.filter(~is_new),
-            k=3,
-            w=4,
-            max_df=100,
-            event_time=et,
-            watermark_delay="30 seconds",
-        )
-        if et is None:
-            out = out.drop("ts")
-        name = f"w44_winwm_{next(_W44_SEQ)}"
-        q = run_stream_to_memory(out, name, "append", state_partitions=4)
+        with replay_source(event_time_batches(new_docs, n_files=4)) as stream:
+            out = streaming_winnow_screen(
+                stream,
+                docs.filter(~is_new),
+                k=3,
+                w=4,
+                max_df=100,
+                event_time=et,
+                watermark_delay="30 seconds",
+            )
+            if et is None:
+                out = out.drop("ts")
+            name = f"w44_winwm_{next(_W44_SEQ)}"
+            q = run_stream_to_memory(out, name, "append", state_partitions=4)
         results[label] = (
             {(r.doc_a, r.doc_b, r.fp) for r in spark.table(name).collect()},
             q.lastProgress["stateOperators"][0]["numRowsTotal"],
@@ -506,7 +492,7 @@ def test_rp_refine_laws(spark):
     assert again == unbounded
 
 
-def test_streaming_winnow_screen_batch_parity(spark, tmp_path):
+def test_streaming_winnow_screen_batch_parity(spark):
     """The streaming winnowed screen must emit exactly the batch
     equi-join of the two sides' fingerprint sets (df-capped corpus),
     whatever the microbatch boundaries — every event depends only on
@@ -517,27 +503,18 @@ def test_streaming_winnow_screen_batch_parity(spark, tmp_path):
     )
     from incubator_flink_old_spark.queries._util import t
     from incubator_flink_old_spark.queries.llm_ops28 import _D_MOD, _D_REM
-    from incubator_flink_old_spark.streaming import run_stream_to_memory
+    from incubator_flink_old_spark.streaming import replay_source, stream_result
 
     docs = t(spark, SF, "documents")
     is_new = F.col("doc_id") % _D_MOD == _D_REM
-    src = str(tmp_path / "win")
-    docs.filter(is_new).select("doc_id", "text").repartition(4).write.parquet(
-        src
-    )
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    out = streaming_winnow_screen(
-        stream, docs.filter(~is_new), k=3, w=4, max_df=100
-    )
-    name = f"w44_win_{next(_W44_SEQ)}"
-    run_stream_to_memory(out, name, "append", state_partitions=4)
-    got = {
-        (r.doc_a, r.doc_b, r.fp) for r in spark.table(name).collect()
-    }
+    with replay_source(
+        [docs.filter(is_new).select("doc_id", "text").repartition(4)]
+    ) as stream:
+        out = streaming_winnow_screen(
+            stream, docs.filter(~is_new), k=3, w=4, max_df=100
+        )
+        emitted = stream_result(out, "append", state_partitions=4)
+    got = {(r.doc_a, r.doc_b, r.fp) for r in emitted.collect()}
     fps = winnow_fingerprints(docs, k=3, w=4).select("doc_id", "fp").distinct()
     nfp = fps.filter(is_new)
     cfp = fps.filter(~is_new)
@@ -621,7 +598,7 @@ def test_winnow_from_index_cap_requires_stats(spark):
         merge_winnow_stats()
 
 
-def test_streaming_winnow_stats_boundary_invariance(spark, tmp_path):
+def test_streaming_winnow_stats_boundary_invariance(spark):
     """The streamed (fp, df) state after a 3-batch replay must equal
     winnow_index_stats over the whole corpus — per-fp counts are an
     integer-sum monoid over once-only arrivals, so batch boundaries
@@ -633,22 +610,15 @@ def test_streaming_winnow_stats_boundary_invariance(spark, tmp_path):
         winnow_index_stats,
     )
     from incubator_flink_old_spark.queries._util import t
-    from incubator_flink_old_spark.streaming import run_stream_to_memory
+    from incubator_flink_old_spark.streaming import replay_source, stream_result
 
     docs = t(spark, SF, "documents").limit(120).select("doc_id", "text")
-    src = str(tmp_path / "win_stats_src")
-    docs.repartition(3).write.mode("overwrite").parquet(src)
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    name = f"t_winstats_{next(_W44_SEQ)}"
-    run_stream_to_memory(
-        streaming_winnow_stats(stream, k=3, w=4), name, "complete",
-        state_partitions=4,
-    )
-    streamed = sorted(map(tuple, spark.table(name).collect()))
+    with replay_source([docs.repartition(3)]) as stream:
+        stats = stream_result(
+            streaming_winnow_stats(stream, k=3, w=4), "complete",
+            state_partitions=4,
+        )
+    streamed = sorted(map(tuple, stats.collect()))
     batch = winnow_index_stats(
         winnow_fingerprints(docs, k=3, w=4, hashes_only=True)
     )

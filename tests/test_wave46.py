@@ -614,19 +614,25 @@ def test_checked_bigint_lower_bound(spark):
         bad.collect()
 
 
-def test_append_literal_rows_guards(spark, tmp_path):
-    """Arity mismatch and empty rows fail at write time — a short row
-    would otherwise read back as a NULL column (e.g. a NULL event-time
-    sentinel that never advances the watermark)."""
-    from incubator_flink_old_spark.streaming import append_literal_rows
+def test_local_rows_guards(spark):
+    """A row whose arity differs from the schema fails when the frame is
+    built — a short row would otherwise read back as a NULL column (e.g.
+    a NULL event-time sentinel that never advances the watermark) and a
+    long one would lose values. A sentinel batch round-trips through a
+    replay."""
+    from incubator_flink_old_spark.sources import local_rows
+    from incubator_flink_old_spark.streaming import (
+        replay_source,
+        stream_result,
+    )
 
-    p = str(tmp_path / "lit")
-    with pytest.raises(ValueError, match="rows is empty"):
-        append_literal_rows(spark, p, [], "a long, b string")
-    with pytest.raises(ValueError, match="schema fields"):
-        append_literal_rows(spark, p, [(1,)], "a long, b string")
-    append_literal_rows(spark, p, [(1, "x"), (2, "y")], "a long, b string")
-    got = sorted(map(tuple, spark.read.parquet(p).collect()))
+    with pytest.raises(ValueError, match=r"\(1,\).*schema fields"):
+        local_rows(spark, [(1,)], "a long, b string")
+    with pytest.raises(ValueError, match=r"\(1, 'x', 2\).*schema fields"):
+        local_rows(spark, [(1, "x", 2)], "a long, b string")
+    rows = local_rows(spark, [(1, "x"), (2, "y")], "a long, b string")
+    with replay_source([rows]) as stream:
+        got = sorted(map(tuple, stream_result(stream, "append").collect()))
     assert got == [(1, "x"), (2, "y")]
 
 

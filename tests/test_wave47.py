@@ -143,7 +143,7 @@ def test_semantic_map_empty_centers_raises(spark):
         semantic_screen_events_map(df, [], df.select("vec_id"), df)
 
 
-def test_stream_semantic_gate_no_window_one_state(spark, tmp_path):
+def test_stream_semantic_gate_no_window_one_state(spark):
     """Plan pins for the streaming semantic gate (VERDICT r11 item 1's
     'done' criterion): the streaming DAG contains NO window operator
     (the batch probe's ROW_NUMBER rank is replaced by the pure-map
@@ -151,7 +151,7 @@ def test_stream_semantic_gate_no_window_one_state(spark, tmp_path):
     smuggle a per-key shuffle in), and the executed query runs exactly
     ONE stateful operator (the gate's single existence-MAX fold) while
     emitting verdicts equal to the batch gate's."""
-    import time
+    import datetime
 
     from incubator_flink_old_spark.operators.similarity import (
         grid_ivf,
@@ -161,7 +161,11 @@ def test_stream_semantic_gate_no_window_one_state(spark, tmp_path):
         streaming_ingest_gate,
     )
     from incubator_flink_old_spark.queries._util import t
-    from incubator_flink_old_spark.streaming import append_literal_rows
+    from incubator_flink_old_spark.sources import local_rows
+    from incubator_flink_old_spark.streaming import (
+        replay_source,
+        run_stream_to_memory,
+    )
 
     docs = t(spark, SF, "documents")
     emb = t(spark, SF, "embeddings")
@@ -180,85 +184,66 @@ def test_stream_semantic_gate_no_window_one_state(spark, tmp_path):
         F.col("vec_id").alias("doc_id"), "embedding"
     )
 
-    src = str(tmp_path / "replay")
     stream_src = docs.filter(new_d).select(
         "doc_id",
         "text",
         "lang",
         F.timestamp_seconds(F.lit(1704067200) + F.col("doc_id")).alias("ts"),
     )
-    stream_src.coalesce(1).write.parquet(src)
     mx = stream_src.agg(F.max("ts")).collect()[0][0]
-    import datetime
-
-    time.sleep(0.2)
-    append_literal_rows(
+    sentinel = local_rows(
         spark,
-        src,
         [(-1, "the of and to a", "en", mx + datetime.timedelta(hours=1))],
-        "doc_id long, text string, lang string, ts timestamp",
+        stream_src.schema,
     )
-    stream = (
-        spark.readStream.schema(
-            "doc_id long, text string, lang string, ts timestamp"
+    with replay_source([stream_src.coalesce(1), sentinel]) as stream:
+        sem = semantic_screen_events_map(
+            stream.select(F.col("doc_id").alias("vec_id"), "ts").join(
+                nemb.select(F.col("doc_id").alias("vec_id"), "embedding"),
+                on="vec_id",
+            ),
+            centers_rows,
+            cells,
+            corpus_emb,
+            n_probe=3,
+            threshold=0.40,
+            carry=("ts",),
+        ).select("doc_a", "ts")
+        out = streaming_ingest_gate(
+            stream,
+            corpus,
+            langs=("en", "de", "fr"),
+            num_hashes=8,
+            band_size=4,
+            jaccard_threshold=0.7,
+            screens=("neardup",),
+            extra_screens={"semdup": sem},
+            event_time="ts",
+            watermark_delay="30 seconds",
         )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    sem = semantic_screen_events_map(
-        stream.select(F.col("doc_id").alias("vec_id"), "ts").join(
-            nemb.select(F.col("doc_id").alias("vec_id"), "embedding"),
-            on="vec_id",
-        ),
-        centers_rows,
-        cells,
-        corpus_emb,
-        n_probe=3,
-        threshold=0.40,
-        carry=("ts",),
-    ).select("doc_a", "ts")
-    out = streaming_ingest_gate(
-        stream,
-        corpus,
-        langs=("en", "de", "fr"),
-        num_hashes=8,
-        band_size=4,
-        jaccard_threshold=0.7,
-        screens=("neardup",),
-        extra_screens={"semdup": sem},
-        event_time="ts",
-        watermark_delay="30 seconds",
-    )
-    # Plan pin 1 (walked structurally, not string-matched). The
-    # load-bearing half: no Window node on ANY streaming subtree —
-    # asserted FIRST so it stands on its own if the stricter pin below
-    # is ever relaxed (review finding: filtering the already-empty
-    # window list was dead code).
-    analyzed = out._jdf.queryExecution().analyzed()
+        # Plan pin 1 (walked structurally, not string-matched). The
+        # load-bearing half: no Window node on ANY streaming subtree —
+        # asserted FIRST so it stands on its own if the stricter pin below
+        # is ever relaxed (review finding: filtering the already-empty
+        # window list was dead code).
+        analyzed = out._jdf.queryExecution().analyzed()
 
-    def walk(node):
-        yield node
-        for i in range(node.children().size()):
-            yield from walk(node.children().apply(i))
+        def walk(node):
+            yield node
+            for i in range(node.children().size()):
+                yield from walk(node.children().apply(i))
 
-    windows = [n for n in walk(analyzed) if n.nodeName() == "Window"]
-    streaming_windows = [n for n in windows if n.isStreaming()]
-    assert not streaming_windows, [str(n) for n in streaming_windows]
-    # The stricter pin for THIS fixture: the standing index is a
-    # materialized artifact, so even batch-side train windows are out.
-    assert not windows, [str(n) for n in windows]
+        windows = [n for n in walk(analyzed) if n.nodeName() == "Window"]
+        streaming_windows = [n for n in windows if n.isStreaming()]
+        assert not streaming_windows, [str(n) for n in streaming_windows]
+        # The stricter pin for THIS fixture: the standing index is a
+        # materialized artifact, so even batch-side train windows are out.
+        assert not windows, [str(n) for n in windows]
 
-    name = "t47_semgate"
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    # Plan pin 2: exactly ONE stateful operator executed.
-    assert len(q.lastProgress["stateOperators"]) == 1
+        name = "t47_semgate"
+        q = run_stream_to_memory(out, name, "append", state_partitions=None)
+        # Plan pin 2: exactly ONE stateful operator executed.
+        assert len(q.lastProgress["stateOperators"]) == 1
 
     got = {
         r["doc_id"]: tuple(r)[1:]
@@ -633,7 +618,7 @@ def test_semantic_screens_reject_nonpositive_n_probe(spark):
         semantic_screen_events_map(df, centers, cells, df, n_probe=0)
 
 
-def test_stream_semantic_absorb_flips_verdict(spark, tmp_path):
+def test_stream_semantic_absorb_flips_verdict(spark):
     """The absorption law AT STREAM LEVEL (q_stream_semantic_absorb_
     parity): a streamed wave-2 paraphrase of a wave-1 admit reads
     has_semdup FALSE when the gate's static sides are the FROZEN
@@ -642,7 +627,6 @@ def test_stream_semantic_absorb_flips_verdict(spark, tmp_path):
     stream-static joins read, with the same pure-map probe and the
     same single fold."""
     import datetime
-    import time
 
     from incubator_flink_old_spark.operators.similarity import (
         grid_assign_map,
@@ -652,7 +636,8 @@ def test_stream_semantic_absorb_flips_verdict(spark, tmp_path):
     from incubator_flink_old_spark.operators.text import (
         streaming_ingest_gate,
     )
-    from incubator_flink_old_spark.streaming import append_literal_rows
+    from incubator_flink_old_spark.sources import local_rows
+    from incubator_flink_old_spark.streaming import replay_source, stream_result
 
     schema_e = "vec_id long, embedding array<float>"
     corpus0 = spark.createDataFrame(
@@ -666,26 +651,14 @@ def test_stream_semantic_absorb_flips_verdict(spark, tmp_path):
     centers_rows = centers.collect()
 
     sw = "the a of and to the a of and to words enough for quality " * 4
-    src = str(tmp_path / "replay")
     t0 = datetime.datetime(2024, 1, 1)
-    append_literal_rows(
-        spark, src, [(20, sw, "en", t0)],
-        "doc_id long, text string, lang string, ts timestamp",
-    )
-    time.sleep(0.2)
-    append_literal_rows(
-        spark, src, [(-1, sw, "en", t0 + datetime.timedelta(hours=1))],
-        "doc_id long, text string, lang string, ts timestamp",
-    )
+    batches = [
+        local_rows(spark, [(doc, sw, "en", ts)],
+                   "doc_id long, text string, lang string, ts timestamp")
+        for doc, ts in ((20, t0), (-1, t0 + datetime.timedelta(hours=1)))
+    ]
 
-    def run(cells, emb, name):
-        stream = (
-            spark.readStream.schema(
-                "doc_id long, text string, lang string, ts timestamp"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
+    def run(stream, cells, emb):
         sem = semantic_screen_events_map(
             stream.select(F.col("doc_id").alias("vec_id"), "ts").join(
                 probe_emb, on="vec_id"
@@ -706,25 +679,19 @@ def test_stream_semantic_absorb_flips_verdict(spark, tmp_path):
             event_time="ts",
             watermark_delay="30 seconds",
         )
-        q = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
+        verdicts = stream_result(out, "append", state_partitions=None)
         return {
             r["doc_id"]: r.asDict()
-            for r in spark.table(name).filter(F.col("doc_id") >= 0).collect()
+            for r in verdicts.filter(F.col("doc_id") >= 0).collect()
         }
 
-    frozen = run(cells0, corpus0, "t47_sa_frozen")
-    merged = run(
-        cells0.unionByName(grid_assign_map(w1, centers_rows)),
-        corpus0.unionByName(w1),
-        "t47_sa_merged",
-    )
+    with replay_source(batches) as stream:
+        frozen = run(stream, cells0, corpus0)
+        merged = run(
+            stream,
+            cells0.unionByName(grid_assign_map(w1, centers_rows)),
+            corpus0.unionByName(w1),
+        )
     assert frozen[20]["has_semdup"] is False
     assert merged[20]["has_semdup"] is True
     assert frozen[20]["admit"] and not merged[20]["admit"]

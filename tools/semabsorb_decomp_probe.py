@@ -159,10 +159,6 @@ def batch_row(spark):
 
 
 def stream_row(spark, absorb: bool):
-    import datetime
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
     from pyspark.storagelevel import StorageLevel
 
@@ -177,21 +173,20 @@ def stream_row(spark, absorb: bool):
     from incubator_flink_old_spark.queries.llm_ops28 import (
         _D_MOD, _D_REM, _NDS_BAND, _NDS_HASHES, _NDS_THRESHOLD,
     )
-    from incubator_flink_old_spark.queries.llm_ops30 import _GATE_LANGS
+    from incubator_flink_old_spark.queries.llm_ops30 import (
+        _GATE_LANGS,
+        _gate_replay,
+    )
     from incubator_flink_old_spark.queries.llm_ops31 import (
         _SEM_CELLS, _SEM_ITERS, _SEM_PROBE, _SEM_THRESHOLD,
     )
-    from incubator_flink_old_spark.streaming import (
-        append_literal_rows,
-        write_event_time_replay,
-    )
+    from incubator_flink_old_spark.streaming import replay_source
 
     name = "stream_absorb" if absorb else "stream_gate"
     print(f"== q_stream_semantic_{'absorb' if absorb else 'gate'}_parity decomposition ==", flush=True)
     _T0[0] = time.perf_counter()
     docs = t(spark, SF_DIR, "documents")
     emb = t(spark, SF_DIR, "embeddings")
-    src = tempfile.mkdtemp(prefix=f"t2_probe_{name}_")
     pinned, arts = [], []
     try:
         if absorb:
@@ -262,55 +257,34 @@ def stream_row(spark, absorb: bool):
                 materialize_static=True, artifact_registry=arts,
             )
 
-        stream_src = docs.filter(stream_pred).select(
-            "doc_id", "text", "lang",
-            F.timestamp_seconds(F.lit(1704067200) + F.col("doc_id")).alias("ts"),
-        )
-        write_event_time_replay(stream_src, src, n_files=3)
-        mx = stream_src.agg(F.max("ts")).collect()[0][0]
-        for i in (1, 2):
-            append_literal_rows(
-                spark, src,
-                [(-i, "the of and to a", "en", mx + datetime.timedelta(hours=i))],
-                "doc_id long, text string, lang string, ts timestamp",
-            )
-        lap("replay fixture write (3 files + 2 sentinels)")
-        stream = (
-            spark.readStream.schema(
-                "doc_id long, text string, lang string, ts timestamp"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        sem = semantic_screen_events_map(
-            stream.select(F.col("doc_id").alias("vec_id"), "ts").join(
-                nemb.select(F.col("doc_id").alias("vec_id"), "embedding"),
-                on="vec_id",
-            ),
-            centers_rows, static_cells, static_emb,
-            n_probe=_SEM_PROBE, threshold=_SEM_THRESHOLD, carry=("ts",),
-        ).select("doc_a", "ts")
         corpus_side = None if absorb else docs.filter(F.col("doc_id") % _D_MOD != _D_REM)
-        out = streaming_ingest_gate(
-            stream, corpus_side, langs=_GATE_LANGS,
-            extra_screens={"semdup": sem},
-            event_time="ts", watermark_delay="30 seconds",
-            **gate_kwargs,
-        )
-        lap("stream DAG build (lazy)")
-        run_stream_with_progress(out, f"probe_{name}", "append", state_partitions=4)
-        lap("stream run (5 micro-batches)")
-        tbl = (
-            spark.table(f"probe_{name}")
-            .filter(F.col("doc_id") >= 0)
-            .localCheckpoint(eager=True)
-        )
+        with replay_source(_gate_replay(docs.filter(stream_pred))) as stream:
+            lap("replay fixture write (3 files + 2 sentinels)")
+            sem = semantic_screen_events_map(
+                stream.select(F.col("doc_id").alias("vec_id"), "ts").join(
+                    nemb.select(F.col("doc_id").alias("vec_id"), "embedding"),
+                    on="vec_id",
+                ),
+                centers_rows, static_cells, static_emb,
+                n_probe=_SEM_PROBE, threshold=_SEM_THRESHOLD, carry=("ts",),
+            ).select("doc_a", "ts")
+            out = streaming_ingest_gate(
+                stream, corpus_side, langs=_GATE_LANGS,
+                extra_screens={"semdup": sem},
+                event_time="ts", watermark_delay="30 seconds",
+                **gate_kwargs,
+            )
+            lap("stream DAG build (lazy)")
+            run_stream_with_progress(
+                out, f"probe_{name}", "append", state_partitions=4
+            )
+            lap("stream run (5 micro-batches)")
+        tbl = spark.table(f"probe_{name}").filter(F.col("doc_id") >= 0)
         tbl.write.format("noop").mode("overwrite").save()
-        lap("readback checkpoint + noop")
+        lap("readback + noop")
     finally:
         for f in pinned + arts:
             f.unpersist()
-        shutil.rmtree(src, ignore_errors=True)
 
 
 def main():
