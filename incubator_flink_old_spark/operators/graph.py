@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from incubator_flink_old_spark.operators.iterations import bulk_iterate, delta_iterate
+from incubator_flink_old_spark.session import release, staged
 
 DEFAULT_GRAPH_MAX_ITER = 30
 
@@ -218,14 +219,6 @@ def page_rank(
     )
     n = vertices.count()  # scalar loop constant (driver-side, once)
     out_degree = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    # Loop-invariant: cache the adjacency with degree (the reference pins
-    # loop-invariant inputs at the iteration head — same idea).
-    adj = (
-        edges.join(out_degree, on="src")
-        .select("src", "dst", "deg")
-        .persist()
-    )
-    adj.count()
     init = vertices.select("id", F.lit(1.0 / n).alias("rank"))
 
     def step(ranks: DataFrame, _i: int) -> DataFrame:
@@ -256,11 +249,17 @@ def page_rank(
             )
         )
 
-    # interval=1: each round references `ranks` twice (contribs + dangling)
-    # — materializing every round avoids double-computing a lazy round.
-    result = bulk_iterate(init, step, max_iterations=num_iterations, checkpoint_interval=1)
-    adj.unpersist()
-    return result
+    # Loop-invariant: cache the adjacency with degree (the reference pins
+    # loop-invariant inputs at the iteration head — same idea).
+    with staged() as st:
+        adj = st.keep(
+            edges.join(out_degree, on="src").select("src", "dst", "deg").persist()
+        )
+        adj.count()
+        # interval=1: each round reads `ranks` twice (contribs + dangling).
+        return bulk_iterate(
+            init, step, max_iterations=num_iterations, checkpoint_interval=1
+        )
 
 
 def kmeans(
@@ -489,8 +488,7 @@ def _reach_from(frontier: DataFrame, edges: DataFrame) -> DataFrame:
     feeds. Correctness must not depend on a tuning knob."""
     from incubator_flink_old_spark.operators.iterations import _materialize
 
-    reached = _materialize(frontier)
-    cur = reached
+    reached = cur = _materialize(frontier)
     while True:
         nxt = (
             cur.join(edges, cur.id == edges.src)
@@ -499,10 +497,14 @@ def _reach_from(frontier: DataFrame, edges: DataFrame) -> DataFrame:
             .join(reached, on=["id", "pivot"], how="left_anti")
         )
         nxt = _materialize(nxt)
+        if cur is not reached:
+            release(cur)  # the wavefront nxt expanded
         if nxt.count() == 0:
+            release(nxt)
             return reached
-        reached = _materialize(reached.union(nxt))
-        cur = nxt
+        grown = _materialize(reached.union(nxt))
+        release(reached)
+        reached, cur = grown, nxt
 
 
 def scc_forward_backward(
@@ -550,14 +552,22 @@ def scc_forward_backward(
         .distinct()
     )
     spark = edges.sparkSession
-    assigned = local_rows(spark, [], "id long, lbl long")
+    assigned = empty = local_rows(spark, [], "id long, lbl long")
     active = _materialize(verts.select(F.col("id").cast("long").alias("id")))
     ae = e0
+
+    def swap(old: DataFrame, new: DataFrame) -> DataFrame:
+        """``new`` materialized, then ``old``, which it replaces, released."""
+        new = _materialize(new)
+        if old is not empty:
+            release(old)
+        return new
 
     for _ in range(max_pivot_rounds):
         if active.count() == 0:
             break
-        ae = _materialize(
+        ae = swap(
+            ae,
             ae.join(active.select(F.col("id").alias("src")), on="src", how="left_semi")
             .join(active.select(F.col("id").alias("dst")), on="dst", how="left_semi")
             .select("src", "dst")
@@ -573,13 +583,17 @@ def scc_forward_backward(
             )
             n_trim = active.count() - nontrivial.count()
             if n_trim == 0:
+                release(nontrivial)
                 break
             trimmed = active.join(nontrivial, on="id", how="left_anti")
-            assigned = _materialize(
-                assigned.union(trimmed.select("id", F.col("id").alias("lbl")))
+            assigned = swap(
+                assigned,
+                assigned.union(trimmed.select("id", F.col("id").alias("lbl"))),
             )
+            release(active)
             active = nontrivial
-            ae = _materialize(
+            ae = swap(
+                ae,
                 ae.join(
                     active.select(F.col("id").alias("src")), on="src", how="left_semi"
                 )
@@ -608,12 +622,16 @@ def scc_forward_backward(
             .groupBy("id")
             .agg(F.min("pivot").alias("pivot"))
         )
-        assigned = _materialize(
-            assigned.union(members.select("id", F.col("pivot").alias("lbl")))
+        release(fwd)
+        release(bwd)
+        assigned = swap(
+            assigned,
+            assigned.union(members.select("id", F.col("pivot").alias("lbl"))),
         )
-        active = _materialize(
-            active.join(members.select("id"), on="id", how="left_anti")
+        active = swap(
+            active, active.join(members.select("id"), on="id", how="left_anti")
         )
+        release(members)
 
     if active.count() > 0:  # bounded-rounds fallback: exact closure form
         ae = (
@@ -634,6 +652,9 @@ def scc_forward_backward(
         mutual = mutual.union(active.select("id", F.col("id").alias("other")))
         residual = mutual.groupBy("id").agg(F.min("other").alias("lbl"))
         assigned = assigned.union(residual)
+    else:  # the result reads only `assigned`
+        release(ae)
+        release(active)
 
     # relabel: scc_id = min member id of each group
     relabel = assigned.groupBy("lbl").agg(F.min("id").alias("scc_id"))

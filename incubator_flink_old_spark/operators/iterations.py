@@ -16,10 +16,11 @@ iteration traps are handled centrally here:
    rounds, blowing up planning time and re-executing history on failure.
    Cure: ``localCheckpoint(eager=True)`` each round truncates lineage
    (materializes round output in executor storage). On a real cluster one
-   would use reliable ``checkpoint()`` for fault tolerance; localCheckpoint
-   is the right local/bench tradeoff and the API keeps the choice pluggable.
-2. Unbounded cached-DF accumulation — old rounds must be unpersisted once
-   the new round is materialized, or executor storage fills at 100TB.
+   would ``checkpoint()`` into a checkpoint directory for fault tolerance;
+   localCheckpoint is the local/bench tradeoff.
+2. Unbounded cached-DF accumulation — a round's checkpoint is released
+   once its successor is materialized, so a finished iteration holds only
+   its result's blocks.
 """
 
 from __future__ import annotations
@@ -28,15 +29,15 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
+from incubator_flink_old_spark.session import release
+
 #: A conservative default matching the reference's requirement that every
 #: iteration declares maxIterations.
 DEFAULT_MAX_ITERATIONS = 10
 
 
-def _materialize(df: DataFrame, reliable: bool = False) -> DataFrame:
+def _materialize(df: DataFrame) -> DataFrame:
     """Cut lineage and materialize a round's result."""
-    if reliable:  # pragma: no cover - needs spark.sparkContext.setCheckpointDir
-        return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)
 
 
@@ -45,7 +46,6 @@ def bulk_iterate(
     step: Callable[[DataFrame, int], DataFrame],
     max_iterations: int = DEFAULT_MAX_ITERATIONS,
     converged: Callable[[DataFrame, DataFrame, int], bool] | None = None,
-    reliable: bool = False,
     checkpoint_interval: int = 1,
 ) -> DataFrame:
     """I1: ds.iterate(maxIter){ step }.closeWith(result).
@@ -62,18 +62,21 @@ def bulk_iterate(
     un-materialized rounds just re-execute inside the next job, saving
     nothing. Raise only for shuffle-free map-style steps where plan depth
     is the sole cost. With a ``converged`` callback every round
-    materializes anyway (the check is an action over both states).
+    materializes anyway (the check is an action over both states), and
+    a round is released after ``converged`` has read it.
     """
     interval = 1 if converged is not None else max(1, checkpoint_interval)
-    state = _materialize(initial, reliable)
+    state = held = _materialize(initial)
     for i in range(max_iterations):
-        nxt = step(state, i)
-        if (i + 1) % interval == 0 or i == max_iterations - 1:
-            nxt = _materialize(nxt, reliable)
-        if converged is not None and converged(state, nxt, i):
-            state = nxt
+        state, prev = step(state, i), state
+        if (i + 1) % interval and i < max_iterations - 1:
+            continue  # a lazy round, cut by a later materialization
+        state = _materialize(state)
+        done = converged is not None and converged(prev, state, i)
+        release(held)
+        held = state
+        if done:
             break
-        state = nxt
     else:
         # With a convergence criterion, exiting via the cap means the
         # fixpoint was NOT certified — surface it (fixed-round callers
@@ -97,7 +100,6 @@ def delta_iterate(
     step: Callable[[DataFrame, DataFrame, int], tuple[DataFrame, DataFrame]],
     keys: list[str],
     max_iterations: int = DEFAULT_MAX_ITERATIONS,
-    reliable: bool = False,
 ) -> DataFrame:
     """I2: iterateDelta(workset, maxIter, keyFields) — incremental fixpoint.
 
@@ -115,19 +117,20 @@ def delta_iterate(
     workset's shuffles small. Empty-workset termination is a count() on the
     (small) workset — the one driver-side scalar per round.
     """
-    solution = _materialize(solution, reliable)
-    workset = _materialize(workset, reliable)
+    solution = _materialize(solution)
+    workset = _materialize(workset)
     for i in range(max_iterations):
         if workset.isEmpty():
             break
         delta, next_workset = step(solution, workset, i)
-        delta = _materialize(delta, reliable)
+        delta = _materialize(delta)
         next_solution = _materialize(
-            solution.join(delta, on=keys, how="left_anti").unionByName(delta),
-            reliable,
+            solution.join(delta, on=keys, how="left_anti").unionByName(delta)
         )
-        solution = next_solution
-        workset = _materialize(next_workset, reliable)
+        next_workset = _materialize(next_workset)
+        for done in (solution, workset, delta):
+            release(done)
+        solution, workset = next_solution, next_workset
     else:
         # Reference-faithful: iterateDelta(maxIter) stops at the cap
         # without signaling. But a NON-EMPTY workset at exit means the
@@ -143,4 +146,5 @@ def delta_iterate(
                 "raise max_iterations for an exact fixpoint",
                 file=sys.stderr,
             )
+    release(workset)
     return solution

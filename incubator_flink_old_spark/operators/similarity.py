@@ -23,6 +23,8 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from incubator_flink_old_spark.session import staged
+
 #: Scalar-element budget for embedding a collected index as ONE parsed
 #: SQL literal (VERDICT r12 item 1). Below it the literal fold is the
 #: cheapest possible plan (constant-folded, zero joins — the fixture
@@ -984,7 +986,7 @@ def _sem_assigned(
     :func:`semantic_pairs`: unit-normalize, lowest-key seeds, nearest
     centroid via max_by over (sim, -cell) — a combinable aggregation
     (map-side partials), no per-vector window needed. Returns a
-    PERSISTED (__c, cell, __u) frame — the caller unpersists. Persisted
+    PERSISTED (__c, cell, __u) frame — the caller stages it. Persisted
     because the consumers (both pair-join sides + the final assignment)
     would otherwise each re-run the assignment crossJoin (static plan
     shows no exchange reuse across the renamed sides). At 100 TB the
@@ -1039,8 +1041,8 @@ def semantic_pairs(
 
     Output: (vec_a, vec_b, cos) with vec_a < vec_b. Scale: identical to
     semantic_dedup — the O(n²) join runs per cell only."""
-    assigned = _sem_assigned(corpus, n_cells, key, vec)
-    try:
+    with staged() as st:
+        assigned = st.keep(_sem_assigned(corpus, n_cells, key, vec))
         a = assigned.select(
             F.col("__c").alias("vec_a"), "cell", F.col("__u").alias("__ua")
         )
@@ -1056,8 +1058,6 @@ def semantic_pairs(
             .filter(F.col("cos") >= threshold)
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        assigned.unpersist()
 
 
 def semantic_dedup(
@@ -1085,8 +1085,8 @@ def semantic_dedup(
 
     Output: (vec_id, cell, keep) for every corpus vector.
     """
-    assigned = _sem_assigned(corpus, n_cells, key, vec)
-    try:
+    with staged() as st:
+        assigned = st.keep(_sem_assigned(corpus, n_cells, key, vec))
         a = assigned.select(F.col("__c").alias("__a"), F.col("cell"), F.col("__u").alias("__ua"))
         b = assigned.select(F.col("__c").alias("__b"), F.col("cell"), F.col("__u").alias("__ub"))
         dropped = (
@@ -1108,8 +1108,6 @@ def semantic_dedup(
         # before returning — the "no persist outlives its operator call"
         # rule (same pattern as dedup_clusters).
         return out.localCheckpoint(eager=True)
-    finally:
-        assigned.unpersist()
 
 
 def centroid_outliers(

@@ -19,6 +19,8 @@ from operator import and_
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from incubator_flink_old_spark.session import Stage, release, staged
+
 #: Deterministic "stopword" marker sets for the heuristic language scorer.
 LANG_MARKERS: dict[str, tuple[str, ...]] = {
     "en": ("the", "a", "of", "and", "to"),
@@ -610,82 +612,74 @@ def dedup_clusters(
     Returns (doc_id, cluster_id, keep) for EVERY input document, where
     keep ⇔ doc_id == cluster_id (the canonical member).
     """
-    staged_dtoks = None
-    if pairs is None:
-        # Stage the distinct-token arrays ONCE (VERDICT r12 item 5): the
-        # pair pipeline otherwise tokenizes the corpus three times in one
-        # evaluation — the bands' fused projection plus BOTH verify
-        # sides' token sets. The persist lifecycle is owned here: the
-        # pipeline's single consumer is the adjacency aggregation below,
-        # so the cache is released right after adj materializes.
-        spread = _spread_narrow(df)
-        staged_dtoks = _stage_tokens(spread, text, key).persist()
-        pairs = minhash_lsh_pairs(
-            spread, band_size=band_size, jaccard_threshold=jaccard_threshold,
-            text=text, key=key, _dtoks=staged_dtoks,
+    with staged() as st:
+        with staged() as tok:
+            if pairs is None:
+                # Stage the distinct-token arrays ONCE (VERDICT r12 item
+                # 5): the pair pipeline otherwise tokenizes the corpus
+                # three times in one evaluation — the bands' fused
+                # projection plus BOTH verify sides' token sets. Its single
+                # consumer is the adjacency aggregation below, so the inner
+                # scope releases it right after adj materializes.
+                spread = _spread_narrow(df)
+                dtoks = tok.keep(_stage_tokens(spread, text, key).persist())
+                pairs = minhash_lsh_pairs(
+                    spread, band_size=band_size,
+                    jaccard_threshold=jaccard_threshold,
+                    text=text, key=key, _dtoks=dtoks,
+                )
+            # Symmetrize via per-row explode, NOT union-of-swapped-
+            # projections: union(A, A.swap) plants the whole pair pipeline
+            # (signatures, band join, verify) TWICE in the physical plan —
+            # measured 2× the pair cost at sf0.1. One Generate over each
+            # pair row keeps the expensive subtree single.
+            sym = pairs.select(
+                F.explode(F.array(
+                    F.struct(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
+                    F.struct(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")),
+                )).alias("e")
+            ).select("e.src", "e.dst")
+            adj = st.keep(sym.groupBy(F.col("src").alias("id")).agg(
+                F.collect_set("dst").alias("nbrs")
+            ).persist())
+            adj.count()  # materialize: every consumer below reads the cache
+        labels = adj.select("id", F.least("id", F.array_min("nbrs")).alias("lbl"))
+        la = labels.select(F.col("id").alias("src"), F.col("lbl").alias("la"))
+        lb = labels.select(F.col("id").alias("dst"), F.col("lbl").alias("lb"))
+        cedges = (
+            adj.select(F.col("id").alias("src"), F.explode("nbrs").alias("dst"))
+            .join(la, on="src")
+            .join(lb, on="dst")
+            .filter(F.col("la") != F.col("lb"))
+            .select(F.col("la").alias("src"), F.col("lb").alias("dst"))
+            .distinct()
         )
-    # Symmetrize via per-row explode, NOT union-of-swapped-projections:
-    # union(A, A.swap) plants the whole pair pipeline (signatures, band
-    # join, verify) TWICE in the physical plan — measured 2× the pair
-    # cost at sf0.1. One Generate over each pair row keeps the expensive
-    # subtree single.
-    sym = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-                ),
-                F.struct(
-                    F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")
-                ),
+        n_residual = cedges.count()
+        if n_residual == 0:
+            comp = labels.select(
+                F.col("id").alias("__cid"), F.col("lbl").alias("component")
             )
-        ).alias("e")
-    ).select("e.src", "e.dst")
-    adj = sym.groupBy(F.col("src").alias("id")).agg(
-        F.collect_set("dst").alias("nbrs")
-    ).persist()
-    adj.count()  # materialize: every consumer below reads the small cache
-    if staged_dtoks is not None:
-        # the pair pipeline (the staged tokenize's only consumer) has now
-        # fully evaluated into adj — release the token-array cache
-        staged_dtoks.unpersist()
-    labels = adj.select("id", F.least("id", F.array_min("nbrs")).alias("lbl"))
-    la = labels.select(F.col("id").alias("src"), F.col("lbl").alias("la"))
-    lb = labels.select(F.col("id").alias("dst"), F.col("lbl").alias("lb"))
-    cedges = (
-        adj.select(F.col("id").alias("src"), F.explode("nbrs").alias("dst"))
-        .join(la, on="src")
-        .join(lb, on="dst")
-        .filter(F.col("la") != F.col("lb"))
-        .select(F.col("la").alias("src"), F.col("lb").alias("dst"))
-        .distinct()
-    )
-    n_residual = cedges.count()
-    if n_residual == 0:
-        comp = labels.select(
-            F.col("id").alias("__cid"), F.col("lbl").alias("component")
-        )
-    else:
-        comp_small = components_partial(
-            df.sparkSession,
-            cedges,
-            n_edges=n_residual,
-            max_iterations=max_iterations,
-            local_max=residual_local_max,
-        )
-        comp = labels.join(
-            comp_small, labels["lbl"] == comp_small["id"], "left"
-        ).select(
-            labels["id"].alias("__cid"),
-            F.coalesce(F.col("component"), F.col("lbl")).alias("component"),
-        )
-    # The returned frame must not depend on the adjacency cache (the caller
-    # consumes it at an unknown later time, which would leak the cache in a
-    # long-lived session — VERDICT r02 "What's wrong" #5). comp is tiny
-    # (one row per non-singleton dup-graph node), so materializing it with
-    # a localCheckpoint and releasing the adjacency immediately is cheap.
-    comp = comp.localCheckpoint(eager=True)
-    adj.unpersist()
+        else:
+            comp_small = components_partial(
+                df.sparkSession,
+                cedges,
+                n_edges=n_residual,
+                max_iterations=max_iterations,
+                local_max=residual_local_max,
+            )
+            comp = labels.join(
+                comp_small, labels["lbl"] == comp_small["id"], "left"
+            ).select(
+                labels["id"].alias("__cid"),
+                F.coalesce(F.col("component"), F.col("lbl")).alias("component"),
+            )
+        # The returned frame must not depend on the adjacency cache (the
+        # caller consumes it at an unknown later time, which would leak
+        # the cache in a long-lived session — VERDICT r02 "What's wrong"
+        # #5). comp is tiny (one row per non-singleton dup-graph node), so
+        # materializing it with a localCheckpoint before the scope
+        # releases the adjacency is cheap.
+        comp = comp.localCheckpoint(eager=True)
     return (
         df.select(F.col(key).cast("long").alias(key))
         .join(comp, F.col(key) == F.col("__cid"), "left")
@@ -1741,8 +1735,7 @@ def streaming_neardup_screen(
     key: str = "doc_id",
     event_time: str | None = None,
     watermark_delay: str = "10 seconds",
-    materialize_static: bool = False,
-    artifact_registry: "list | None" = None,
+    stage: Stage | None = None,
 ) -> DataFrame:
     """Near-dup screening of a LIVE document stream against a FROZEN
     corpus index — :func:`minhash_lsh_pairs_between` with the probe side
@@ -1798,8 +1791,7 @@ def streaming_neardup_screen(
         text=text,
         key=key,
         carry=carry,
-        materialize_static=materialize_static,
-        artifact_registry=artifact_registry,
+        stage=stage,
     )
     if event_time is None:
         return verified.dropDuplicates(["doc_a", "doc_b"])
@@ -1835,6 +1827,25 @@ def neardup_corpus_artifacts(
     )
 
 
+def _stage_static(stage: Stage, stream: DataFrame, *frames: DataFrame):
+    """Persist a screen's corpus artifacts DISK_ONLY into ``stage`` and
+    return them. DISK_ONLY: in-heap pins accumulated across queries OOM
+    a 1g driver (the round driver's session runs with default memory).
+    On a streaming probe side they are built NOW, at the session's batch
+    width: left lazy they materialize inside micro-batch 0 after the
+    stream runner has clamped shuffle partitions to the state width, and
+    the whole corpus hash runs serialized there (optimization round 12,
+    measured; see streaming.force_pins)."""
+    from pyspark.storagelevel import StorageLevel
+
+    from incubator_flink_old_spark import streaming
+
+    pinned = stage.keep(*(f.persist(StorageLevel.DISK_ONLY) for f in frames))
+    if stream.isStreaming:
+        streaming.force_pins(*frames)
+    return pinned
+
+
 def neardup_screen_events(
     stream: DataFrame,
     corpus: DataFrame,
@@ -1844,8 +1855,7 @@ def neardup_screen_events(
     text: str = "text",
     key: str = "doc_id",
     carry: tuple[str, ...] = (),
-    materialize_static: bool = False,
-    artifact_registry: "list | None" = None,
+    stage: Stage | None = None,
     corpus_artifacts: "tuple[DataFrame, DataFrame] | None" = None,
 ) -> DataFrame:
     """The PRE-DEDUP verified match events under
@@ -1859,25 +1869,18 @@ def neardup_screen_events(
     names stream columns passed through each event (e.g. the ingest
     event time). Returns (doc_a, *carry, doc_b, jaccard ≥ threshold).
 
-    ``materialize_static=True`` persists the corpus-derived artifacts
-    (band table + hashed token sets) DISK_ONLY — a stream-static join
-    re-evaluates the static side's PLAN every micro-batch, so an
-    unmaterialized corpus re-hashes itself per batch (measured: the
-    dominant cost of the multi-batch parity rows). The persist is LAZY:
-    the first micro-batch pays the build, later batches read the
-    spilled blocks; lineage is kept (executor loss re-derives from
-    source). At 100 TB these are standing bucketed TABLES; the flag is
-    the fixture-scale stand-in, default off for batch callers whose
-    one-shot plan needs no pin. Pass ``artifact_registry`` (a list) to
-    receive the persisted frames — the CALLER owns the stream lifecycle
-    and should unpersist them after the run, else the blocks live until
-    JVM exit (review finding).
+    A ``stage`` (:func:`~incubator_flink_old_spark.session.staged`)
+    takes the corpus artifacts (band table + hashed token sets) persisted
+    DISK_ONLY, built at once on a streaming probe side: a stream-static
+    join re-evaluates an unpinned static PLAN every micro-batch (measured:
+    the dominant cost of the multi-batch parity rows). At 100 TB these are
+    standing bucketed TABLES; batch callers pass none.
 
     ``corpus_artifacts=(toks, bands)`` supplies PRECOMPUTED standing
     artifacts (:func:`neardup_corpus_artifacts`, possibly appended with
     an admitted wave's delta — the N-wave absorb path) instead of
     deriving them from ``corpus``; ``corpus`` is then unused and the
-    caller owns persistence (materialize_static is ignored)."""
+    caller pins the supplied frames."""
     if num_hashes % band_size != 0:
         # ValueError BEFORE any artifact construction (review finding):
         # a bare assert here was stripped under python -O, and placed
@@ -1890,37 +1893,15 @@ def neardup_screen_events(
     if corpus_artifacts is not None:
         # Maintained-index form: the caller supplies the standing corpus
         # artifacts (possibly an O(wave) append-merge of frozen tables
-        # with a delta batch — the absorb path) and OWNS their
-        # persistence; materialize_static is ignored for supplied frames.
+        # with a delta batch — the absorb path) and pins them itself.
         toks_r, bands_r = corpus_artifacts
     else:
         toks_r, bands_r = neardup_corpus_artifacts(
             corpus, num_hashes=num_hashes, band_size=band_size,
             text=text, key=key,
         )
-        if materialize_static:
-            # DISK_ONLY: the artifacts must not occupy driver/executor
-            # heap (the round driver's session runs with default memory;
-            # in-heap checkpoints accumulated across queries OOM a 1g
-            # driver). Batch 1 computes and spills them once; later
-            # batches read the persisted blocks instead of re-hashing
-            # the corpus.
-            from pyspark.storagelevel import StorageLevel
-
-            toks_r = toks_r.persist(StorageLevel.DISK_ONLY)
-            bands_r = bands_r.persist(StorageLevel.DISK_ONLY)
-            if artifact_registry is not None:
-                artifact_registry.extend((toks_r, bands_r))
-            if stream.isStreaming:
-                # Build the artifacts NOW, at the session's batch width:
-                # left lazy they materialize inside micro-batch 0 after
-                # the stream runner has clamped shuffle partitions to
-                # the state width — the whole corpus hash then runs
-                # serialized in one micro-batch (optimization round 12,
-                # measured; see streaming.force_pins).
-                from incubator_flink_old_spark.streaming import force_pins
-
-                force_pins(toks_r, bands_r)
+        if stage is not None:
+            toks_r, bands_r = _stage_static(stage, stream, toks_r, bands_r)
     # The stream side is the batch screen's own projection and candidate
     # step over each micro-batch (the corpus bands carry no bucket array,
     # so multi-band hits are left to the caller's dedup).
@@ -2211,6 +2192,7 @@ def bpe_learn(
         merges.append((a, b))
         nxt = cur.withColumn("syms", _merge_adjacent(F.col("syms"), a, b))
         nxt = nxt.localCheckpoint(eager=True)
+        release(cur)  # the merge round it replaced
         cur = nxt
     return merges, cur
 
@@ -2724,7 +2706,7 @@ def winnow_drift_audit(
     n_base: int,
     n_delta: int,
     min_skew: float = 2.5,
-    artifact_registry: "list | None" = None,
+    stage: Stage | None = None,
 ) -> DataFrame:
     """DRIFT AUDIT for the span-dedup index's stop-gram cap — the
     :func:`~incubator_flink_old_spark.queries.llm_ops28.q_drift_retrain`
@@ -2759,11 +2741,9 @@ def winnow_drift_audit(
     one row. Refreshing the cap after a trip costs nothing more — the
     merged stats ARE the refreshed index (:func:`merge_winnow_stats`).
 
-    Pass ``artifact_registry`` (a list) to receive the internal eager
-    checkpoint of the merged digest for release — otherwise its blocks
-    live until JVM exit (review finding; the screens' registry
-    contract). Materialize the returned refresh frame before
-    unpersisting it."""
+    A ``stage`` takes the merged digest's eager checkpoint, taken before
+    the fail-loud gate; materialize the returned refresh frame, which
+    reads it, inside that scope."""
     if n_delta <= 0 or n_base < 0:
         # An empty delta cannot justify a refresh, and share would be a
         # zero/invalid denominator — the designed not-tripped error, not
@@ -2790,13 +2770,8 @@ def winnow_drift_audit(
         # re-shingle whole corpora to build the stats — review finding).
         .localCheckpoint(eager=True)
     )
-    if artifact_registry is not None:
-        # The checkpointed digest lives until JVM exit unless released
-        # (review finding — the screens' artifact_registry contract):
-        # the caller must materialize the returned refresh frame (e.g.
-        # its own eager checkpoint) BEFORE unpersisting, since a
-        # checkpoint's blocks cannot be recomputed once dropped.
-        artifact_registry.append(j)
+    if stage is not None:
+        stage.keep(j)
     share = n_delta / (n_base + n_delta)
     mx = (
         j.filter(F.col("df_merged") > max_df)
@@ -2935,8 +2910,7 @@ def streaming_winnow_screen(
     key: str = "doc_id",
     event_time: str | None = None,
     watermark_delay: str = "10 seconds",
-    materialize_static: bool = False,
-    artifact_registry: "list | None" = None,
+    stage: Stage | None = None,
 ) -> DataFrame:
     """The WINNOWED crawl front door — :func:`streaming_neardup_screen`'s
     deterministic sibling: each arriving document computes its winnowed
@@ -2971,8 +2945,7 @@ def streaming_winnow_screen(
     carry = (event_time,) if event_time is not None else ()
     matched = winnow_screen_events(
         stream, corpus, k=k, w=w, max_df=max_df, text=text, key=key,
-        carry=carry, materialize_static=materialize_static,
-        artifact_registry=artifact_registry,
+        carry=carry, stage=stage,
     )
     if event_time is None:
         return matched.dropDuplicates(["doc_a", "doc_b", "fp"])
@@ -3016,8 +2989,7 @@ def winnow_screen_events(
     text: str = "text",
     key: str = "doc_id",
     carry: tuple[str, ...] = (),
-    materialize_static: bool = False,
-    artifact_registry: "list | None" = None,
+    stage: Stage | None = None,
     corpus_index: "tuple[DataFrame, DataFrame] | None" = None,
 ) -> DataFrame:
     """The PRE-DEDUP match events under :func:`streaming_winnow_screen`
@@ -3030,16 +3002,15 @@ def winnow_screen_events(
     out so duplicate-insensitive composers
     (:func:`streaming_ingest_gate`) consume the screen with zero
     stateful operators. Returns (doc_a, *carry, doc_b, fp).
-    ``materialize_static`` persists the capped corpus fingerprint
-    index DISK_ONLY (lazy — batch 1 builds it) — see
-    :func:`neardup_screen_events` for the contract, including
-    ``artifact_registry`` ownership of the unpersist.
+    With a ``stage``, the capped corpus fingerprint index is persisted
+    DISK_ONLY into it — see :func:`neardup_screen_events` for the
+    contract.
 
     ``corpus_index=(fps, stats)`` supplies the PRECOMPUTED standing
     index (:func:`winnow_corpus_index`, possibly an O(wave) absorb:
     fps appended, stats :func:`merge_winnow_stats`-merged); ``corpus``
     is then unused, the cap is applied from the supplied stats, and
-    the caller owns persistence. By the merge exactness (integer df
+    the caller pins the supplied frames. By the merge exactness (integer df
     sums over disjoint document sets) the capped probe is
     value-identical to a from-scratch rebuild over the union corpus."""
     if corpus_index is not None:
@@ -3067,21 +3038,8 @@ def winnow_screen_events(
                 .select("fp")
             )
             cfp = cfp.join(keep, on="fp").select("doc_b", "fp")
-        if materialize_static:
-            from pyspark.storagelevel import StorageLevel
-
-            # DISK_ONLY for the same heap-footprint reason as
-            # neardup_screen_events' artifacts.
-            cfp = cfp.persist(StorageLevel.DISK_ONLY)
-            if artifact_registry is not None:
-                artifact_registry.append(cfp)
-            if stream.isStreaming:
-                # Same batch-width forcing as neardup_screen_events —
-                # the df-capped index must not build inside micro-batch
-                # 0 at the clamped state width (optimization round 12).
-                from incubator_flink_old_spark.streaming import force_pins
-
-                force_pins(cfp)
+        if stage is not None:
+            cfp = _stage_static(stage, stream, cfp)
     sfp = winnow_fingerprints(
         stream, k=k, w=w, text=text, key=key, carry=carry, hashes_only=True
     ).select(F.col(key).alias("doc_a"), *carry, "fp")
@@ -3109,8 +3067,7 @@ def streaming_ingest_gate(
     event_time: str | None = None,
     watermark_delay: str = "10 seconds",
     screens: tuple[str, ...] = ("neardup", "span"),
-    materialize_static: bool = False,
-    artifact_registry: "list | None" = None,
+    stage: Stage | None = None,
     corpus_artifacts: "dict | None" = None,
     extra_screens: "dict[str, DataFrame] | None" = None,
 ) -> DataFrame:
@@ -3159,8 +3116,9 @@ def streaming_ingest_gate(
     ``"neardup"`` = (toks, bands) (:func:`neardup_corpus_artifacts`)
     and ``"span"`` = (fps, stats) (:func:`winnow_corpus_index`) — the
     N-wave absorb path, where admitting a wave appends its delta
-    artifacts instead of re-deriving the corpus. The caller owns
-    persistence of supplied frames.
+    artifacts instead of re-deriving the corpus. The caller pins
+    supplied frames; ``stage`` pins the artifacts derived from
+    ``corpus`` (:func:`neardup_screen_events`).
 
     ``extra_screens`` composes ADDITIONAL dup screens into the SAME
     single evidence fold: ``{name: events}`` where events is any frame
@@ -3259,8 +3217,7 @@ def streaming_ingest_gate(
             text=text,
             key=key,
             carry=carry,
-            materialize_static=materialize_static,
-            artifact_registry=artifact_registry,
+            stage=stage,
             corpus_artifacts=corpus_artifacts.get("neardup"),
         ).select(
             F.col("doc_a").alias("__doc"),
@@ -3273,8 +3230,7 @@ def streaming_ingest_gate(
     if "span" in screens:
         span = winnow_screen_events(
             stream, corpus, k=k, w=w, max_df=max_df, text=text, key=key,
-            carry=carry, materialize_static=materialize_static,
-            artifact_registry=artifact_registry,
+            carry=carry, stage=stage,
             corpus_index=corpus_artifacts.get("span"),
         ).select(
             F.col("doc_a").alias("__doc"),

@@ -2,6 +2,11 @@
 
 from __future__ import annotations
 
+import atexit
+import functools
+import shutil
+import tempfile
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -10,6 +15,20 @@ from incubator_flink_old_spark.sources import load_table
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
+
+
+@functools.cache
+def _scratch_root() -> str:
+    root = tempfile.mkdtemp(prefix="spark_graft_rows_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh directory for files a row writes and its returned frame
+    scans lazily, so the row cannot remove it: all of them live under one
+    per-process root, removed when the interpreter exits."""
+    return tempfile.mkdtemp(prefix=prefix, dir=_scratch_root())
 
 
 def dsum(col, alias: str, scale: int = 6) -> Column:

@@ -10,13 +10,12 @@ algorithm), plus per-cell label purity over that IVF layout.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from incubator_flink_old_spark.queries import register
-from incubator_flink_old_spark.queries._util import t
+from incubator_flink_old_spark.queries._util import scratch_dir, t
+from incubator_flink_old_spark.session import staged
 
 # --------------------------------------------------------------------------
 # Materialized band-bucketed layout: build once, probe zero-exchange
@@ -64,27 +63,31 @@ def q_dedup_minhash_layout(spark, sf_dir):
     # ahead of it), and the band build derives signatures from the same
     # single tokenize instead of a sigs⋈toksets join's second pass.
     docs = _spread_narrow(t(spark, sf_dir, "documents"))
-    dtoks = _stage_tokens(docs, "text", "doc_id").persist()
-    toksets = dtoks.select(
-        F.col("doc_id").alias("__k"), _hashed_set(F.col("__dt")).alias("__toks")
-    ).localCheckpoint(eager=True)
-    bands = minhash_bands(docs, num_hashes=8, band_size=4, _dtoks=dtoks)
-    # External table at a per-run temp path: a MANAGED bucketed table's
-    # warehouse directory survives the session while the catalog entry
-    # does not, and the next session's saveAsTable then dies with
-    # LOCATION_ALREADY_EXISTS — the unique path sidesteps the stale-dir
-    # class entirely, and the DROP covers re-runs within one session.
-    spark.sql(f"DROP TABLE IF EXISTS {_LAYOUT_TABLE}")
-    path = tempfile.mkdtemp(prefix="t2_layout_") + "/bands"
-    (
-        bands.repartition(_LAYOUT_BUCKETS, "band", "bucket")
-        .write.bucketBy(_LAYOUT_BUCKETS, "band", "bucket")
-        .sortBy("band", "bucket")
-        .option("path", path)
-        .mode("overwrite")
-        .saveAsTable(_LAYOUT_TABLE)
-    )
-    dtoks.unpersist()  # write + checkpoint consumed the staged tokenize
+    # toksets is read by the returned frame, so only the staged
+    # tokenize, which the write and the checkpoint consume, is scoped.
+    with staged() as st:
+        dtoks = st.keep(_stage_tokens(docs, "text", "doc_id").persist())
+        toksets = dtoks.select(
+            F.col("doc_id").alias("__k"),
+            _hashed_set(F.col("__dt")).alias("__toks"),
+        ).localCheckpoint(eager=True)
+        bands = minhash_bands(docs, num_hashes=8, band_size=4, _dtoks=dtoks)
+        # External table at a per-run temp path: a MANAGED bucketed
+        # table's warehouse directory survives the session while the
+        # catalog entry does not, and the next session's saveAsTable then
+        # dies with LOCATION_ALREADY_EXISTS — the unique path sidesteps
+        # the stale-dir class entirely, and the DROP covers re-runs
+        # within one session.
+        spark.sql(f"DROP TABLE IF EXISTS {_LAYOUT_TABLE}")
+        path = scratch_dir("t2_layout_") + "/bands"
+        (
+            bands.repartition(_LAYOUT_BUCKETS, "band", "bucket")
+            .write.bucketBy(_LAYOUT_BUCKETS, "band", "bucket")
+            .sortBy("band", "bucket")
+            .option("path", path)
+            .mode("overwrite")
+            .saveAsTable(_LAYOUT_TABLE)
+        )
     stored = spark.table(_LAYOUT_TABLE)
     cands = band_candidates(stored, 0.7, join_hint="merge")
     return _jaccard_verify(cands, toksets, toksets, 0.7)
@@ -351,7 +354,6 @@ def q_ann_recall_ivf(spark, sf_dir):
     both rankings, consistently on both sides. Scale: probe pruning is
     an equi-join on cell — partition-pruned under a by-cell layout
     (q_ann_recall_ivf_layout driver-checks exactly that)."""
-
     from incubator_flink_old_spark.operators.similarity import (
         grid_ivf,
         grid_probes,
@@ -584,8 +586,6 @@ def q_ann_recall_ivf_layout(spark, sf_dir):
     q_ann_recall_ivf (same oracle): the layout is a physical change
     only; a billion-vector deployment re-runs queries at O(probed
     cells), never a corpus scan."""
-    import tempfile
-
     from incubator_flink_old_spark.operators.similarity import (
         grid_ivf,
         grid_probes,
@@ -593,7 +593,7 @@ def q_ann_recall_ivf_layout(spark, sf_dir):
 
     emb = t(spark, sf_dir, "embeddings")
     cells, centers = grid_ivf(emb, n_cells=_N_CELLS, iters=_ITERS)
-    path = tempfile.mkdtemp(prefix="t2_ivf_layout_") + "/by_cell"
+    path = scratch_dir("t2_ivf_layout_") + "/by_cell"
     (
         emb.join(cells, on="vec_id")
         .write.partitionBy("cell")

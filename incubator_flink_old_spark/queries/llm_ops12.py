@@ -14,12 +14,10 @@ predicates reach the layout scan as PushedFilters.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import functions as F
 
 from incubator_flink_old_spark.queries import register
-from incubator_flink_old_spark.queries._util import dsum, sql_dsum, t
+from incubator_flink_old_spark.queries._util import dsum, scratch_dir, sql_dsum, t
 
 # Rectangle bounds as integer per-mille fractions of each dimension's
 # span — computed with IDENTICAL integer arithmetic on both engines
@@ -71,7 +69,7 @@ def _zorder_write_and_probe(spark, sf_dir):
     ).collect()[0]
     if minu is None:  # empty table: degrade, never throw (house law)
         minu = maxu = mint = maxt = 0
-    path = tempfile.mkdtemp(prefix="t2_zorder_") + "/events_z"
+    path = scratch_dir("t2_zorder_") + "/events_z"
     write_zordered(
         ev,
         path,
@@ -285,7 +283,7 @@ def q_zorder_incremental(spark, sf_dir):
     dims = [(F.col("user_id"), minu, maxu), (F.col("t_us"), mint, maxt)]
     base = ev.filter(F.pmod(F.col("event_id"), F.lit(10)) < 8)
     delta = ev.filter(F.pmod(F.col("event_id"), F.lit(10)) >= 8)
-    path = tempfile.mkdtemp(prefix="t2_zorder_inc_") + "/events_z"
+    path = scratch_dir("t2_zorder_inc_") + "/events_z"
     write_zordered(base, path, dims, bits=16, n_files=12)
     append_zordered(delta, path, dims, bits=16, n_files=4)
     lo_u = minu + (maxu - minu) * _U_LO // 100

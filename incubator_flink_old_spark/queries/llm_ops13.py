@@ -14,12 +14,10 @@ query's plan.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import functions as F
 
 from incubator_flink_old_spark.queries import register
-from incubator_flink_old_spark.queries._util import dsum, sql_dsum, t
+from incubator_flink_old_spark.queries._util import dsum, scratch_dir, sql_dsum, t
 
 #: Catalog names the layout build (re)writes; bucket count is the knob a
 #: real deployment sizes to cluster width (buckets ≫ executors).
@@ -44,7 +42,7 @@ def _bucketed_join_probe(spark, sf_dir):
     # LOCATION_ALREADY_EXISTS (the q_dedup_minhash_layout precedent).
     for name in (_B_ORDERS, _B_LINEITEM):
         spark.sql(f"DROP TABLE IF EXISTS {name}")
-    base = tempfile.mkdtemp(prefix="t2_bucketed_")
+    base = scratch_dir("t2_bucketed_")
     (
         orders.repartition(_N_BUCKETS, "o_orderkey")
         .write.bucketBy(_N_BUCKETS, "o_orderkey")

@@ -14,13 +14,17 @@ from __future__ import annotations
 
 import datetime
 import os
-import tempfile
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from incubator_flink_old_spark.queries import register
-from incubator_flink_old_spark.queries._util import split_case_sql, split_col, t
+from incubator_flink_old_spark.queries._util import (
+    scratch_dir,
+    split_case_sql,
+    split_col,
+    t,
+)
 from incubator_flink_old_spark.queries.llm_ops2 import _dedup_cluster_oracle
 
 
@@ -125,7 +129,7 @@ def q_stream_eos_sink_parity(spark, sf_dir):
         read_committed,
     )
 
-    base = tempfile.mkdtemp(prefix="t2_eos_")
+    base = scratch_dir("t2_eos_")
     src = os.path.join(base, "src")
     out = os.path.join(base, "out")
     ckpt = os.path.join(base, "ckpt")

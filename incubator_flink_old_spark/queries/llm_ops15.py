@@ -14,12 +14,11 @@ be invisible to results.
 from __future__ import annotations
 
 import datetime
-import tempfile
 
 from pyspark.sql import functions as F
 
 from incubator_flink_old_spark.queries import register
-from incubator_flink_old_spark.queries._util import dsum, sql_dsum, t
+from incubator_flink_old_spark.queries._util import dsum, scratch_dir, sql_dsum, t
 
 
 def _sentinel_replay(spark, sf_dir, kinds):
@@ -237,7 +236,7 @@ def _dpp_joined(spark, sf_dir):
     ev = t(spark, sf_dir, "events").select(
         F.to_date("ts").alias("day"), "value"
     )
-    layout = tempfile.mkdtemp(prefix="t2_dpp_fact_")
+    layout = scratch_dir("t2_dpp_fact_")
     ev.write.mode("overwrite").partitionBy("day").parquet(layout)
     fact = spark.read.parquet(layout)
     # The dim must carry a SELECTIVE predicate (not just a LIMIT) for

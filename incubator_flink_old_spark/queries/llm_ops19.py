@@ -226,6 +226,8 @@ def q_statestore_read(spark, sf_dir):
             q.awaitTermination()
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
+        # The row reads the state store, not the sink: drop its view.
+        spark.catalog.dropTempView(name)
         state = spark.read.format("statestore").load(ck)
         out = state.select(
             F.col("key.event_type").alias("event_type"),

@@ -167,6 +167,7 @@ def q_stream_restart_recovery(spark, sf_dir):
             q1.processAllAvailable()
             q1.stop()
             q1.awaitTermination()
+            spark.catalog.dropTempView(name1)
 
             # the second half lands while no query is running
             ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.parquet(
@@ -188,8 +189,10 @@ def q_stream_restart_recovery(spark, sf_dir):
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
         # The memory sink holds its rows on the driver: the frame needs
-        # neither the checkpoint nor the source dir removed below.
-        return spark.table(name2)
+        # neither its view nor the dirs removed below.
+        result = spark.table(name2)
+        spark.catalog.dropTempView(name2)
+        return result
     finally:
         shutil.rmtree(ck, ignore_errors=True)
         shutil.rmtree(src, ignore_errors=True)

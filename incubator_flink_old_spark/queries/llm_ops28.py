@@ -711,29 +711,24 @@ def q_stream_neardup_screen_parity(spark, sf_dir):
     from incubator_flink_old_spark.operators.text import (
         streaming_neardup_screen,
     )
+    from incubator_flink_old_spark.session import staged
     from incubator_flink_old_spark.streaming import replay_source, stream_result
 
     docs = t(spark, sf_dir, "documents")
     is_new = F.col("doc_id") % _D_MOD == _D_REM
     corpus = docs.filter(~is_new)
-    arts: list = []  # persisted corpus artifacts; released in finally
-    try:
-        with replay_source(
-            [docs.filter(is_new).select("doc_id", "text").repartition(4)]
-        ) as stream:
-            out = streaming_neardup_screen(
-                stream,
-                corpus,
-                num_hashes=_NDS_HASHES,
-                band_size=_NDS_BAND,
-                jaccard_threshold=_NDS_THRESHOLD,
-                materialize_static=True,
-                artifact_registry=arts,
-            )
-            tbl = stream_result(out, "append", state_partitions=4)
-    finally:
-        for a in arts:
-            a.unpersist()
+    with staged() as st, replay_source(
+        [docs.filter(is_new).select("doc_id", "text").repartition(4)]
+    ) as stream:
+        out = streaming_neardup_screen(
+            stream,
+            corpus,
+            num_hashes=_NDS_HASHES,
+            band_size=_NDS_BAND,
+            jaccard_threshold=_NDS_THRESHOLD,
+            stage=st,
+        )
+        tbl = stream_result(out, "append", state_partitions=4)
     return tbl.select("doc_a", "doc_b", "jaccard")
 
 

@@ -238,6 +238,7 @@ def q_stream_neardup_watermark_parity(spark, sf_dir):
         _NDS_HASHES,
         _NDS_THRESHOLD,
     )
+    from incubator_flink_old_spark.session import staged
     from incubator_flink_old_spark.streaming import (
         event_time_batches,
         replay_source,
@@ -247,31 +248,27 @@ def q_stream_neardup_watermark_parity(spark, sf_dir):
     docs = t(spark, sf_dir, "documents")
     is_new = F.col("doc_id") % _D_MOD == _D_REM
     corpus = docs.filter(~is_new)
-    arts: list = []  # persisted corpus artifacts; released in finally
     new_docs = docs.filter(is_new).select(
         "doc_id",
         "text",
         F.timestamp_seconds(F.lit(1704067200) + F.col("doc_id")).alias("ts"),
     )
-    try:
-        # In-event-time-order replay (see docstring — out-of-order
-        # replay = legitimate late drops).
-        with replay_source(event_time_batches(new_docs, n_files=4)) as stream:
-            out = streaming_neardup_screen(
-                stream,
-                corpus,
-                num_hashes=_NDS_HASHES,
-                band_size=_NDS_BAND,
-                jaccard_threshold=_NDS_THRESHOLD,
-                event_time="ts",
-                watermark_delay="30 seconds",
-                materialize_static=True,
-                artifact_registry=arts,
-            )
-            tbl = stream_result(out, "append", state_partitions=4)
-    finally:
-        for a in arts:
-            a.unpersist()
+    # In-event-time-order replay (see docstring — out-of-order replay =
+    # legitimate late drops).
+    with staged() as st, replay_source(
+        event_time_batches(new_docs, n_files=4)
+    ) as stream:
+        out = streaming_neardup_screen(
+            stream,
+            corpus,
+            num_hashes=_NDS_HASHES,
+            band_size=_NDS_BAND,
+            jaccard_threshold=_NDS_THRESHOLD,
+            event_time="ts",
+            watermark_delay="30 seconds",
+            stage=st,
+        )
+        tbl = stream_result(out, "append", state_partitions=4)
     return tbl.select("doc_a", "doc_b", "jaccard")
 
 
@@ -795,28 +792,23 @@ def q_stream_winnow_screen_parity(spark, sf_dir):
         streaming_winnow_screen,
     )
     from incubator_flink_old_spark.queries.llm_ops28 import _D_MOD, _D_REM
+    from incubator_flink_old_spark.session import staged
     from incubator_flink_old_spark.streaming import replay_source, stream_result
 
     docs = t(spark, sf_dir, "documents")
     is_new = F.col("doc_id") % _D_MOD == _D_REM
-    arts: list = []  # persisted corpus artifacts; released in finally
-    try:
-        with replay_source(
-            [docs.filter(is_new).select("doc_id", "text").repartition(4)]
-        ) as stream:
-            out = streaming_winnow_screen(
-                stream,
-                docs.filter(~is_new),
-                k=_WIN_K,
-                w=_WIN_W,
-                max_df=_WIN_MAX_DF,
-                materialize_static=True,
-                artifact_registry=arts,
-            )
-            tbl = stream_result(out, "append", state_partitions=4)
-    finally:
-        for a in arts:
-            a.unpersist()
+    with staged() as st, replay_source(
+        [docs.filter(is_new).select("doc_id", "text").repartition(4)]
+    ) as stream:
+        out = streaming_winnow_screen(
+            stream,
+            docs.filter(~is_new),
+            k=_WIN_K,
+            w=_WIN_W,
+            max_df=_WIN_MAX_DF,
+            stage=st,
+        )
+        tbl = stream_result(out, "append", state_partitions=4)
     return tbl.select("doc_a", "doc_b", "fp")
 
 

@@ -32,6 +32,7 @@ from incubator_flink_old_spark.queries.llm_ops29 import (
     _WIN_W,
     _stream_winnow_oracle,
 )
+from incubator_flink_old_spark.session import staged
 from incubator_flink_old_spark.sources import local_rows
 
 _GATE_LANGS = ("en", "de", "fr")
@@ -207,28 +208,24 @@ def q_stream_ingest_gate_parity(spark, sf_dir):
     docs = t(spark, sf_dir, "documents")
     is_new = F.col("doc_id") % _D_MOD == _D_REM
     corpus = docs.filter(~is_new)
-    arts: list = []  # persisted corpus artifacts; released in finally
-    try:
-        with replay_source(_gate_replay(docs.filter(is_new))) as stream:
-            out = streaming_ingest_gate(
-                stream,
-                corpus,
-                langs=_GATE_LANGS,
-                num_hashes=_NDS_HASHES,
-                band_size=_NDS_BAND,
-                jaccard_threshold=_NDS_THRESHOLD,
-                k=_WIN_K,
-                w=_WIN_W,
-                max_df=_WIN_MAX_DF,
-                event_time="ts",
-                watermark_delay="30 seconds",
-                materialize_static=True,
-                artifact_registry=arts,
-            )
-            verdicts = stream_result(out, "append", state_partitions=4)
-    finally:
-        for a in arts:
-            a.unpersist()
+    with staged() as st, replay_source(
+        _gate_replay(docs.filter(is_new))
+    ) as stream:
+        out = streaming_ingest_gate(
+            stream,
+            corpus,
+            langs=_GATE_LANGS,
+            num_hashes=_NDS_HASHES,
+            band_size=_NDS_BAND,
+            jaccard_threshold=_NDS_THRESHOLD,
+            k=_WIN_K,
+            w=_WIN_W,
+            max_df=_WIN_MAX_DF,
+            event_time="ts",
+            watermark_delay="30 seconds",
+            stage=st,
+        )
+        verdicts = stream_result(out, "append", state_partitions=4)
     return verdicts.filter(F.col("doc_id") >= 0)
 
 
@@ -334,8 +331,9 @@ def q_winnow_drift_refresh(spark, sf_dir):
     )
     n_base = base.count()  # bounded: 1-row action (corpus cardinality)
     n_delta = delta.count()  # bounded: 1-row action
-    arts: list = []  # the audit's internal digest checkpoint
-    try:
+    # The stage releases the audit's digest also when its not-tripped
+    # ValueError propagates; the 3-row refresh list reading it is pinned.
+    with staged() as st:
         out = winnow_drift_audit(
             bs,
             ds,
@@ -343,20 +341,9 @@ def q_winnow_drift_refresh(spark, sf_dir):
             n_base=n_base,
             n_delta=n_delta,
             min_skew=_DRIFT_MIN_SKEW,
-            artifact_registry=arts,
+            stage=st,
         )
-        # Materialize the (3-row) refresh list, then release the
-        # digest-sized internal checkpoint — repeated audits in one
-        # session no longer accumulate in-heap blocks until JVM exit
-        # (review finding; the stream-parity rows' release pattern).
-        out = out.localCheckpoint(eager=True)
-    finally:
-        # finally, not tail code: the audit checkpoints BEFORE its
-        # fail-loud gates, so the designed not-tripped ValueError would
-        # otherwise leak the digest blocks (review finding).
-        for a in arts:
-            a.unpersist()
-    return out
+        return out.localCheckpoint(eager=True)
 
 
 # --------------------------------------------------------------------------
@@ -494,16 +481,16 @@ def q_serve_operating_point(spark, sf_dir):
     # each of the 4 plan branches would re-derive cells/codes/kd at
     # action time (centers is already an eager checkpoint inside
     # grid_ivf). ONE merged (vec_id, cell, code, kd) frame = one
-    # materialize job instead of three; released in finally once the
+    # materialize job instead of three; the scope releases it once the
     # 4-row result materializes. bt is referenced exactly once (the
     # single truth join below), so it needs no pin.
-    vecs = (
-        arts["cells"]
-        .join(arts["codes"], on="vec_id")
-        .join(arts["kd"], on="vec_id")
-        .localCheckpoint(eager=True)
-    )
-    try:
+    with staged() as st:
+        vecs = st.keep(
+            arts["cells"]
+            .join(arts["codes"], on="vec_id")
+            .join(arts["kd"], on="vec_id")
+            .localCheckpoint(eager=True)
+        )
         arts["cells"] = vecs.select("vec_id", "cell")
         arts["codes"] = vecs.select("vec_id", "code")
         arts["kd"] = vecs.select("vec_id", "kd")
@@ -560,10 +547,7 @@ def q_serve_operating_point(spark, sf_dir):
         )
         # Materialize the 4-row table BEFORE releasing the pin — a
         # checkpoint's blocks cannot be recomputed once dropped.
-        out = out.localCheckpoint(eager=True)
-    finally:
-        vecs.unpersist()
-    return out
+        return out.localCheckpoint(eager=True)
 
 
 # --------------------------------------------------------------------------

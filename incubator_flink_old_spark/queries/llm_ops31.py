@@ -34,6 +34,7 @@ from incubator_flink_old_spark.queries.llm_ops30 import (
     _gate_replay,
     _ingest_gate_oracle,
 )
+from incubator_flink_old_spark.session import staged
 
 #: The absorption rule: quality + lang + verified near-dup. The span
 #: flag is carried and parity-checked (it exercises the merged winnow
@@ -140,24 +141,23 @@ def q_ingest_absorb_parity(spark, sf_dir):
         w=_WIN_W,
         max_df=_WIN_MAX_DF,
     )
-    absorbed = (
-        F.col("quality_ok") & F.col("lang_ok") & ~F.col("has_neardup")
-    ).alias("absorbed")
+    absorbed = F.expr(_ABSORB_RULE).alias("absorbed")
 
     # The standing corpus artifacts, built ONCE and pinned DISK_ONLY
     # (the stream-parity rows' heap discipline) — every later read is
-    # the persisted blocks, never a corpus re-hash. Released in
-    # finally after the verdict table materializes.
+    # the persisted blocks, never a corpus re-hash. The scope releases
+    # them after the verdict table materializes.
     toks0, bands0 = neardup_corpus_artifacts(
         corpus0, num_hashes=_NDS_HASHES, band_size=_NDS_BAND
     )
     fps0, stats0 = winnow_corpus_index(corpus0, k=_WIN_K, w=_WIN_W)
-    pinned = [
-        f.persist(StorageLevel.DISK_ONLY)
-        for f in (toks0, bands0, fps0, stats0)
-    ]
-    toks0, bands0, fps0, stats0 = pinned
-    try:
+    with staged() as st:
+        toks0, bands0, fps0, stats0 = st.keep(
+            *(
+                f.persist(StorageLevel.DISK_ONLY)
+                for f in (toks0, bands0, fps0, stats0)
+            )
+        )
         g1 = streaming_ingest_gate(
             wave1,
             None,  # corpus unused: both screens read the artifacts
@@ -170,16 +170,8 @@ def q_ingest_absorb_parity(spark, sf_dir):
         # Pin wave 1's verdicts: they are read three times (output
         # rows, the absorbed-set join, the disjointness probe) and
         # each unpinned read would replay the whole wave-1 gate.
-        g1 = g1.localCheckpoint(eager=True)
-        pinned.append(g1)
-        admitted1 = wave1.join(
-            g1.filter(
-                F.col("quality_ok")
-                & F.col("lang_ok")
-                & ~F.col("has_neardup")
-            ).select("doc_id"),
-            on="doc_id",
-        )
+        g1 = st.keep(g1.localCheckpoint(eager=True))
+        admitted1 = wave1.join(g1.filter(_ABSORB_RULE).select("doc_id"), on="doc_id")
         # The O(wave) absorb: delta artifacts from the admitted docs
         # alone, appended to the standing tables; dfs integer-merge
         # with the disjointness assertion (a bounded ≤1-row probe over
@@ -223,11 +215,7 @@ def q_ingest_absorb_parity(spark, sf_dir):
 
         # Materialize the verdict table BEFORE releasing the pins (a
         # checkpoint's blocks cannot be recomputed once dropped).
-        out = tag(g1, 1).unionByName(tag(g2, 2)).localCheckpoint(eager=True)
-    finally:
-        for f in pinned:
-            f.unpersist()
-    return out
+        return tag(g1, 1).unionByName(tag(g2, 2)).localCheckpoint(eager=True)
 
 
 # --------------------------------------------------------------------------
@@ -600,30 +588,25 @@ def q_stream_absorb_parity(spark, sf_dir):
         corpus0, num_hashes=_NDS_HASHES, band_size=_NDS_BAND
     )
     fps0, stats0 = winnow_corpus_index(corpus0, k=_WIN_K, w=_WIN_W)
-    pinned = [
-        f.persist(StorageLevel.DISK_ONLY)
-        for f in (toks0, bands0, fps0, stats0)
-    ]
-    toks0, bands0, fps0, stats0 = pinned
-    try:
-        g1 = streaming_ingest_gate(
-            wave1,
-            None,
-            corpus_artifacts={
-                "neardup": (toks0, bands0),
-                "span": (fps0, stats0),
-            },
-            **kw,
-        ).localCheckpoint(eager=True)
-        pinned.append(g1)
-        admitted1 = wave1.join(
-            g1.filter(
-                F.col("quality_ok")
-                & F.col("lang_ok")
-                & ~F.col("has_neardup")
-            ).select("doc_id"),
-            on="doc_id",
+    with staged() as st:
+        toks0, bands0, fps0, stats0 = st.keep(
+            *(
+                f.persist(StorageLevel.DISK_ONLY)
+                for f in (toks0, bands0, fps0, stats0)
+            )
         )
+        g1 = st.keep(
+            streaming_ingest_gate(
+                wave1,
+                None,
+                corpus_artifacts={
+                    "neardup": (toks0, bands0),
+                    "span": (fps0, stats0),
+                },
+                **kw,
+            ).localCheckpoint(eager=True)
+        )
+        admitted1 = wave1.join(g1.filter(_ABSORB_RULE).select("doc_id"), on="doc_id")
         toks_d, bands_d = neardup_corpus_artifacts(
             admitted1, num_hashes=_NDS_HASHES, band_size=_NDS_BAND
         )
@@ -640,15 +623,12 @@ def q_stream_absorb_parity(spark, sf_dir):
         }
         # Pin the merged static sides once: the stream-static joins
         # re-evaluate the static plan per micro-batch otherwise (the
-        # materialize_static lesson, applied to supplied artifacts).
-        for name in merged:
-            a, b = merged[name]
-            a, b = (
+        # screens' staged-corpus lesson, applied to supplied artifacts).
+        for name, (a, b) in merged.items():
+            merged[name] = st.keep(
                 a.persist(StorageLevel.DISK_ONLY),
                 b.persist(StorageLevel.DISK_ONLY),
             )
-            merged[name] = (a, b)
-            pinned.extend((a, b))
         # Force the merged pins at the session's batch width — lazy,
         # they'd build inside micro-batch 0 at the clamped state width
         # (optimization round 12; see streaming.force_pins).
@@ -663,7 +643,4 @@ def q_stream_absorb_parity(spark, sf_dir):
                 **kw,
             )
             verdicts = stream_result(out, "append", state_partitions=4)
-    finally:
-        for f in pinned:
-            f.unpersist()
     return verdicts.filter(F.col("doc_id") >= 0)

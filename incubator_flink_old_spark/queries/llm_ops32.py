@@ -31,12 +31,14 @@ from incubator_flink_old_spark.queries.llm_ops30 import (
     _ingest_gate_oracle,
 )
 from incubator_flink_old_spark.queries.llm_ops31 import (
+    _ABSORB_RULE,
     _SEM_CELLS,
     _SEM_ITERS,
     _SEM_PROBE,
     _SEM_THRESHOLD,
     _semantic_gate_oracle,
 )
+from incubator_flink_old_spark.session import staged
 
 
 @register("q_stream_semantic_gate_parity", oracle=_semantic_gate_oracle())
@@ -90,9 +92,7 @@ def q_stream_semantic_gate_parity(spark, sf_dir):
     new_d = F.col("doc_id") % _D_MOD == _D_REM
     new_v = F.col("vec_id") % _D_MOD == _D_REM
     corpus = docs.filter(~new_d)
-    pinned: list = []
-    arts: list = []
-    try:
+    with staged() as st:
         # The standing semantic index, trained once batch-side; the
         # centers collect is bounded (_SEM_CELLS = 8 rows — the
         # literal-array probe's contract). cells + corpus vectors are
@@ -103,16 +103,16 @@ def q_stream_semantic_gate_parity(spark, sf_dir):
             corpus_emb, n_cells=_SEM_CELLS, iters=_SEM_ITERS
         )
         centers_rows = centers.collect()  # bounded: n_cells rows
-        cells = cells.persist(StorageLevel.DISK_ONLY)
-        corpus_emb = corpus_emb.persist(StorageLevel.DISK_ONLY)
         # New-side embeddings: the stream-static lookup that attaches
         # each arrival's vector (vec_id = doc_id, the hybrid linkage).
-        nemb = (
-            emb.filter(new_v)
-            .select(F.col("vec_id").alias("doc_id"), "embedding")
-            .persist(StorageLevel.DISK_ONLY)
+        nemb = emb.filter(new_v).select(
+            F.col("vec_id").alias("doc_id"), "embedding"
         )
-        pinned += [cells, corpus_emb, nemb]
+        cells, corpus_emb, nemb = st.keep(
+            cells.persist(StorageLevel.DISK_ONLY),
+            corpus_emb.persist(StorageLevel.DISK_ONLY),
+            nemb.persist(StorageLevel.DISK_ONLY),
+        )
         # Force the serve pins at the session's batch width — lazy,
         # they'd build inside micro-batch 0 at the clamped state width
         # (optimization round 12; see streaming.force_pins).
@@ -151,13 +151,9 @@ def q_stream_semantic_gate_parity(spark, sf_dir):
                 extra_screens={"semdup": sem},
                 event_time="ts",
                 watermark_delay="30 seconds",
-                materialize_static=True,
-                artifact_registry=arts,
+                stage=st,
             )
             verdicts = stream_result(out, "append", state_partitions=4)
-    finally:
-        for f in pinned + arts:
-            f.unpersist()
     return verdicts.filter(F.col("doc_id") >= 0)
 
 
@@ -340,20 +336,13 @@ def q_semantic_absorb_parity(spark, sf_dir):
     w1_emb = emb.filter(m5v == 3).select("vec_id", "embedding")
     w2_emb = emb.filter(m5v == 4).select("vec_id", "embedding")
 
-    absorbed = (
-        F.col("quality_ok") & F.col("lang_ok") & ~F.col("has_semdup")
-    ).alias("absorbed")
+    absorbed = F.expr(_SEM_ABSORB_RULE).alias("absorbed")
 
     # The standing index, trained ONCE and pinned (DISK_ONLY — the
     # absorb-row heap discipline); every later read is blocks.
     cells0, centers = grid_ivf(
         corpus0_emb, n_cells=_SEM_CELLS, iters=_SEM_ITERS
     )
-    pinned = [
-        f.persist(StorageLevel.DISK_ONLY)
-        for f in (cells0, centers, corpus0_emb)
-    ]
-    cells0, centers, corpus0_emb = pinned
 
     def semi(events, wave_docs):
         # extra_screens key-domain contract (ADVICE r11): structural,
@@ -364,7 +353,13 @@ def q_semantic_absorb_parity(spark, sf_dir):
             how="leftsemi",
         )
 
-    try:
+    with staged() as st:
+        cells0, centers, corpus0_emb = st.keep(
+            *(
+                f.persist(StorageLevel.DISK_ONLY)
+                for f in (cells0, centers, corpus0_emb)
+            )
+        )
         sem1 = semi(
             semantic_screen_events(
                 w1_emb,
@@ -375,23 +370,20 @@ def q_semantic_absorb_parity(spark, sf_dir):
             ),
             w1_docs,
         )
-        g1 = streaming_ingest_gate(
-            w1_docs,
-            None,
-            langs=_GATE_LANGS,
-            screens=(),
-            extra_screens={"semdup": sem1},
-        ).localCheckpoint(eager=True)
-        pinned.append(g1)
+        g1 = st.keep(
+            streaming_ingest_gate(
+                w1_docs,
+                None,
+                langs=_GATE_LANGS,
+                screens=(),
+                extra_screens={"semdup": sem1},
+            ).localCheckpoint(eager=True)
+        )
         # The O(wave) absorb: admitted embeddings delta-assigned to the
         # FROZEN centers (map-only; the standing corpus is never
         # re-assigned), appended to the standing by-cell layout.
         adm1_emb = w1_emb.join(
-            g1.filter(
-                F.col("quality_ok")
-                & F.col("lang_ok")
-                & ~F.col("has_semdup")
-            ).select(F.col("doc_id").alias("vec_id")),
+            g1.filter(_SEM_ABSORB_RULE).select(F.col("doc_id").alias("vec_id")),
             on="vec_id",
         )
         cells1 = cells0.unionByName(
@@ -428,11 +420,7 @@ def q_semantic_absorb_parity(spark, sf_dir):
 
         # Materialize before releasing the pins (checkpoint blocks
         # cannot be recomputed once dropped).
-        out = tag(g1, 1).unionByName(tag(g2, 2)).localCheckpoint(eager=True)
-    finally:
-        for f in pinned:
-            f.unpersist()
-    return out
+        return tag(g1, 1).unionByName(tag(g2, 2)).localCheckpoint(eager=True)
 
 
 # --------------------------------------------------------------------------
@@ -593,30 +581,25 @@ def q_training_factory_e2e(spark, sf_dir):
     # Admitted docs feed three downstream reads (calibration, the kept
     # join, the schedule's token counts) — pin once, release after the
     # result materializes.
-    admitted = new_docs.join(
-        gate.filter(
-            F.col("quality_ok")
-            & F.col("lang_ok")
-            & ~F.col("has_neardup")
-        ).select("doc_id"),
-        on="doc_id",
-    ).localCheckpoint(eager=True)
-    try:
+    with staged() as st:
+        admitted = st.keep(
+            new_docs.join(
+                gate.filter(_ABSORB_RULE).select("doc_id"),
+                on="doc_id",
+            ).localCheckpoint(eager=True)
+        )
         cal = quality_calibrate(
             admitted, keep_frac=_CAL_KEEP_FRAC, skew_safe=True
         )
         kept = admitted.join(
             cal.filter("keep").select("doc_id"), on="doc_id"
         )
-        out = token_budget_chunks(
+        return token_budget_chunks(
             kept,
             budget=_TB_BUDGET,
             weights=dict(_FACTORY_WEIGHTS),
             skew_safe=True,
         ).localCheckpoint(eager=True)
-    finally:
-        admitted.unpersist()
-    return out
 
 
 def _stream_sem_absorb_oracle() -> str:
@@ -691,12 +674,13 @@ def q_stream_semantic_absorb_parity(spark, sf_dir):
         corpus0_emb, n_cells=_SEM_CELLS, iters=_SEM_ITERS
     )
     centers_rows = centers.collect()  # bounded: n_cells rows
-    pinned = [
-        f.persist(StorageLevel.DISK_ONLY)
-        for f in (cells0, centers, corpus0_emb)
-    ]
-    cells0, centers, corpus0_emb = pinned
-    try:
+    with staged() as st:
+        cells0, centers, corpus0_emb = st.keep(
+            *(
+                f.persist(StorageLevel.DISK_ONLY)
+                for f in (cells0, centers, corpus0_emb)
+            )
+        )
         # Batch wave-1 gate + absorb (the q_semantic_absorb_parity
         # path verbatim: frozen centers, O(wave) delta append).
         sem1 = (
@@ -719,41 +703,38 @@ def q_stream_semantic_absorb_parity(spark, sf_dir):
         # own plan — unpinned, the whole wave-1 gate would run twice
         # (measured on the round-12 pair: this row landed at 22.9 s
         # pair-min before the pin).
-        g1 = streaming_ingest_gate(
-            w1_docs,
-            None,
-            langs=_GATE_LANGS,
-            screens=(),
-            extra_screens={"semdup": sem1},
-        ).localCheckpoint(eager=True)
-        pinned.append(g1)
+        g1 = st.keep(
+            streaming_ingest_gate(
+                w1_docs,
+                None,
+                langs=_GATE_LANGS,
+                screens=(),
+                extra_screens={"semdup": sem1},
+            ).localCheckpoint(eager=True)
+        )
         adm1_emb = w1_emb.join(
-            g1.filter(
-                F.col("quality_ok")
-                & F.col("lang_ok")
-                & ~F.col("has_semdup")
-            ).select(F.col("doc_id").alias("vec_id")),
+            g1.filter(_SEM_ABSORB_RULE).select(F.col("doc_id").alias("vec_id")),
             on="vec_id",
         )
         # The merged static sides, pinned ONCE (stream-static joins
         # re-evaluate unpinned static plans per micro-batch — the
-        # materialize_static lesson applied to absorbed artifacts).
-        cells1 = cells0.unionByName(
-            grid_assign_map(adm1_emb, centers_rows)
-        ).persist(StorageLevel.DISK_ONLY)
-        emb1 = corpus0_emb.unionByName(adm1_emb).persist(
-            StorageLevel.DISK_ONLY
+        # screens' staged-corpus lesson applied to absorbed artifacts).
+        cells1, emb1 = st.keep(
+            cells0.unionByName(
+                grid_assign_map(adm1_emb, centers_rows)
+            ).persist(StorageLevel.DISK_ONLY),
+            corpus0_emb.unionByName(adm1_emb).persist(StorageLevel.DISK_ONLY),
         )
-        pinned += [cells1, emb1]
         # Force the absorbed serve pins at the session's batch width
         # (optimization round 12; see streaming.force_pins). nemb2 is
         # forced below, right after its own persist.
         force_pins(cells1, emb1)
 
-        nemb2 = emb.filter(m5v == 4).select(
-            F.col("vec_id").alias("doc_id"), "embedding"
-        ).persist(StorageLevel.DISK_ONLY)
-        pinned.append(nemb2)
+        nemb2 = st.keep(
+            emb.filter(m5v == 4)
+            .select(F.col("vec_id").alias("doc_id"), "embedding")
+            .persist(StorageLevel.DISK_ONLY)
+        )
         force_pins(nemb2)
         w2_docs = docs.filter(m5d == 4)
         with replay_source(_gate_replay(w2_docs)) as stream:
@@ -781,7 +762,4 @@ def q_stream_semantic_absorb_parity(spark, sf_dir):
                 watermark_delay="30 seconds",
             )
             verdicts = stream_result(out, "append", state_partitions=4)
-    finally:
-        for f in pinned:
-            f.unpersist()
     return verdicts.filter(F.col("doc_id") >= 0)

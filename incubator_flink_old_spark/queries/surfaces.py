@@ -8,12 +8,11 @@ oracle is the plain relational answer — the invariant under test is
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
 from incubator_flink_old_spark.queries import register
-from incubator_flink_old_spark.queries._util import t
+from incubator_flink_old_spark.queries._util import scratch_dir, t
 
 
 @register(
@@ -39,7 +38,7 @@ def q_csv_roundtrip(spark, sf_dir):
         "c_custkey", "c_name", "c_nationkey"
     )
     out = os.path.join(
-        tempfile.mkdtemp(prefix="t2_csv_"), "customer_csv"
+        scratch_dir("t2_csv_"), "customer_csv"
     )
     cust.write.mode("overwrite").option("header", "false").csv(out)
     back = read_csv(
@@ -136,7 +135,7 @@ def q_source_text(spark, sf_dir):
     from incubator_flink_old_spark.sources import read_text
 
     part = t(spark, sf_dir, "part").select("p_partkey", "p_name", "p_brand")
-    out = os.path.join(tempfile.mkdtemp(prefix="t2_text_"), "part_text")
+    out = os.path.join(scratch_dir("t2_text_"), "part_text")
     (
         part.select(
             F.concat_ws(
@@ -305,7 +304,7 @@ def q_schema_evolution(spark, sf_dir):
     orders = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
-    base = tempfile.mkdtemp(prefix="t2_evo_")
+    base = scratch_dir("t2_evo_")
     v1 = os.path.join(base, "gen=v1")
     v2 = os.path.join(base, "gen=v2")
     orders.filter(F.col("o_orderkey") % 3 == 0).drop(
@@ -354,7 +353,7 @@ def q_csv_quarantine(spark, sf_dir):
     from incubator_flink_old_spark.sources import read_csv_robust
 
     cust = t(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    out = os.path.join(tempfile.mkdtemp(prefix="t2_quar_"), "landing_csv")
+    out = os.path.join(scratch_dir("t2_quar_"), "landing_csv")
     lines = cust.select(
         F.when(
             F.col("c_custkey") % 17 == 3,
@@ -471,7 +470,7 @@ def q_distributed_cache(spark, sf_dir):
     keys = sorted(
         r[0] for r in nat.collect() if r[0] % 5 == 0
     )  # 25-row dim: bounded driver finish
-    base = tempfile.mkdtemp(prefix="t2_dcache_")
+    base = scratch_dir("t2_dcache_")
     fname = "allowed_nations.txt"
     with open(os.path.join(base, fname), "w") as f:
         f.write("\n".join(str(k) for k in keys))

@@ -16,9 +16,10 @@ Scale posture (tested on local[N], designed for a 1000-executor cluster):
 
 from __future__ import annotations
 
+import contextlib
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -39,6 +40,9 @@ RUNTIME_CONF: dict[str, str] = {
     # The events fixture stores TIMESTAMP(NANOS); Spark rejects it natively.
     # Read as long nanos, normalized to µs timestamps in sources.load_table.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # Remove a checkpointLocation-less stream's temporary-<uuid> dir also
+    # when the query fails (kept until JVM exit otherwise).
+    "spark.sql.streaming.forceDeleteTempCheckpointLocation": "true",
 }
 
 
@@ -157,3 +161,48 @@ def get_spark(app_name: str = "incubator_flink_old_spark") -> SparkSession:
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return prep_session(spark, shuffle_partitions=int(cpus))
+
+
+def release(df: DataFrame) -> None:
+    """Free the blocks of a persisted or local-checkpointed frame. On a
+    checkpoint ``unpersist()`` frees nothing: its blocks belong to the RDD
+    of its ``LogicalRDD`` plan, and a later read of it fails loudly."""
+    if df.is_cached:
+        df.unpersist()
+        return
+    plan = df._jdf.logicalPlan()
+    if plan.nodeName() != "LogicalRDD":
+        raise ValueError(
+            f"release: {plan.nodeName()} is neither persisted nor a checkpoint"
+        )
+    plan.rdd().unpersist(False)
+
+
+class Stage:
+    """The frames one :func:`staged` scope releases on exit."""
+
+    def __init__(self) -> None:
+        self.frames: list[DataFrame] = []
+
+    def keep(self, *frames: DataFrame):
+        """Take ``frames``, already persisted or eagerly checkpointed by
+        the caller; return the frame, or a tuple of several."""
+        self.frames += frames
+        return frames[0] if len(frames) == 1 else frames
+
+
+@contextlib.contextmanager
+def staged():
+    """A scope that releases every frame its :meth:`Stage.keep` took, on
+    exit and also on error. It decides no storage level and runs no job:
+    each site keeps its own ``persist``, ``localCheckpoint`` or
+    ``streaming.force_pins``. Scopes nest. A scope may keep only frames
+    whose every consumer finishes inside it: a frame returned past it
+    must already be materialized (an eager checkpoint of its own, left
+    to Spark's ContextCleaner, or a memory-sink table)."""
+    stage = Stage()
+    try:
+        yield stage
+    finally:
+        for df in reversed(stage.frames):
+            release(df)

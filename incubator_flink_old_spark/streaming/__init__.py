@@ -23,6 +23,8 @@ import itertools
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from incubator_flink_old_spark.session import staged
+
 
 def with_watermark(df: DataFrame, ts_col: str, delay: str) -> DataFrame:
     """W4: bound event-time lateness; late rows beyond ``delay`` drop out
@@ -431,14 +433,14 @@ def event_time_batches(
     pin is released when the generator finishes or is closed."""
     from pyspark.sql import Window
 
-    tiled = df.withColumn(
-        "__b", F.ntile(n_files).over(Window.orderBy(order_by))
-    ).localCheckpoint(eager=True)
-    try:
+    with staged() as st:
+        tiled = st.keep(
+            df.withColumn(
+                "__b", F.ntile(n_files).over(Window.orderBy(order_by))
+            ).localCheckpoint(eager=True)
+        )
         for g in range(1, n_files + 1):
             yield tiled.filter(F.col("__b") == g).drop("__b").coalesce(1)
-    finally:
-        tiled.unpersist()
 
 
 def interval_join(

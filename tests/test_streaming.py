@@ -392,9 +392,10 @@ def test_idempotent_sink_drives_a_real_stream(spark, sf_dir, tmp_path, events_st
 
 
 def test_replay_row_leaves_no_temp_dir_or_view(spark, sf_dir):
-    """A replay-parity row cleans up after itself: two runs of
-    q_stream_hh_parity add no entry under the temp dir (the replay
-    source is removed) and no catalog view (the memory sink's view is
+    """Memory-sink rows clean up after themselves: two runs each of
+    q_stream_hh_parity, q_statestore_read and q_stream_restart_recovery
+    add no entry under the temp dir (the replay source and checkpoint
+    dirs are removed) and no catalog view (the memory sinks' views are
     dropped), and each result still collects. A first run goes before
     the snapshot: the JVM unpacks its native libraries and creates its
     session-wide temp dirs under the same temp dir on first use."""
@@ -403,20 +404,27 @@ def test_replay_row_leaves_no_temp_dir_or_view(spark, sf_dir):
 
     from incubator_flink_old_spark.queries import QUERIES, load_all_queries
 
+    rows = (
+        "q_stream_hh_parity",
+        "q_statestore_read",
+        "q_stream_restart_recovery",
+    )
     load_all_queries()
     QUERIES["q_stream_hh_parity"](spark, sf_dir).count()
     tmp = tempfile.gettempdir()
     dirs = set(os.listdir(tmp))
     views = {t.name for t in spark.catalog.listTables()}
     for _ in range(2):
-        assert QUERIES["q_stream_hh_parity"](spark, sf_dir).count() > 0
+        for name in rows:
+            assert QUERIES[name](spark, sf_dir).count() > 0, name
     assert set(os.listdir(tmp)) - dirs == set()
     assert {t.name for t in spark.catalog.listTables()} - views == set()
 
 
 def test_replay_source_cleans_up_when_the_stream_fails(spark):
     """A replay whose stream fails in its second micro-batch still
-    removes its directory, and leaves no query running."""
+    removes its directory and the memory sink's temporary checkpoint
+    dir, and leaves no query running."""
     import os
     import tempfile
 
@@ -429,7 +437,7 @@ def test_replay_source_cleans_up_when_the_stream_fails(spark):
     def replay_dirs():
         return {
             e for e in os.listdir(tempfile.gettempdir())
-            if e.startswith("stream_replay_")
+            if e.startswith(("stream_replay_", "temporary-"))
         }
 
     before = replay_dirs()

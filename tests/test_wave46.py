@@ -333,32 +333,39 @@ def test_checked_bigint_guard(spark):
 
 
 def test_drift_audit_registry_release(spark):
-    """The drift audit's internal digest checkpoint is exposed for
-    release: the registry receives exactly one frame, and after the
-    caller materializes the refresh list the block can be unpersisted
-    with the result still readable (the q_winnow_drift_refresh
-    pattern)."""
+    """The drift audit's internal digest checkpoint is released by the
+    caller's stage: the stage takes exactly that one frame, and once the
+    caller has materialized the refresh list inside the scope, the
+    digest's RDD leaves the persistent set on exit while the result
+    still collects (the q_winnow_drift_refresh pattern)."""
     from incubator_flink_old_spark.operators.text import (
         winnow_drift_audit,
     )
+    from incubator_flink_old_spark.session import staged
+
+    def persistent():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
     base = spark.createDataFrame(
         [("f1", 20), ("f2", 3)], "fp string, df long"
     )
     delta = spark.createDataFrame([("f1", 10)], "fp string, df long")
-    arts: list = []
-    out = winnow_drift_audit(
-        base,
-        delta,
-        max_df=25,
-        n_base=80,
-        n_delta=20,
-        min_skew=1.5,
-        artifact_registry=arts,
-    )
-    assert len(arts) == 1
-    out = out.localCheckpoint(eager=True)
-    arts[0].unpersist()
+    before = persistent()
+    with staged() as st:
+        out = winnow_drift_audit(
+            base,
+            delta,
+            max_df=25,
+            n_base=80,
+            n_delta=20,
+            min_skew=1.5,
+            stage=st,
+        )
+        assert len(st.frames) == 1
+        digest = persistent() - before
+        assert len(digest) == 1
+        out = out.localCheckpoint(eager=True)
+    assert not digest & persistent()  # released for real
     rows = out.collect()
     assert [r["fp"] for r in rows] == ["f1"]  # 20 -> 30 crosses the cap
 

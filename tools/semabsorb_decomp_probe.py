@@ -80,6 +80,7 @@ def batch_row(spark):
         _SEM_PROBE,
         _SEM_THRESHOLD,
     )
+    from incubator_flink_old_spark.session import staged
 
     print("== q_semantic_absorb_parity decomposition ==", flush=True)
     _T0[0] = time.perf_counter()
@@ -93,69 +94,68 @@ def batch_row(spark):
     w2_emb = emb.filter(m5v == 4).select("vec_id", "embedding")
     lap("setup (lazy)")
 
-    cells0, centers = grid_ivf(corpus0_emb, n_cells=_SEM_CELLS, iters=_SEM_ITERS)
-    lap("grid_ivf build (lazy graph + per-iter checkpoints)")
-    pinned = [
-        f.persist(StorageLevel.DISK_ONLY)
-        for f in (cells0, centers, corpus0_emb)
-    ]
-    cells0, centers, corpus0_emb = pinned
-    cells0.count(); centers.count(); corpus0_emb.count()
-    lap("pin cells0/centers/corpus0_emb (forced)")
+    with staged() as st:
+        cells0, centers = grid_ivf(corpus0_emb, n_cells=_SEM_CELLS, iters=_SEM_ITERS)
+        lap("grid_ivf build (lazy graph + per-iter checkpoints)")
+        cells0, centers, corpus0_emb = st.keep(
+            *(
+                f.persist(StorageLevel.DISK_ONLY)
+                for f in (cells0, centers, corpus0_emb)
+            )
+        )
+        cells0.count(); centers.count(); corpus0_emb.count()
+        lap("pin cells0/centers/corpus0_emb (forced)")
 
-    def semi(events, wave_docs):
-        return events.select("doc_a").join(
-            wave_docs.select(F.col("doc_id").alias("doc_a")),
-            on="doc_a", how="leftsemi",
+        def semi(events, wave_docs):
+            return events.select("doc_a").join(
+                wave_docs.select(F.col("doc_id").alias("doc_a")),
+                on="doc_a", how="leftsemi",
+            )
+
+        sem1 = semi(
+            semantic_screen_events(
+                w1_emb, corpus0_emb, n_probe=_SEM_PROBE,
+                threshold=_SEM_THRESHOLD, index=(cells0, centers),
+            ),
+            w1_docs,
+        )
+        g1 = st.keep(streaming_ingest_gate(
+            w1_docs, None, langs=_GATE_LANGS, screens=(),
+            extra_screens={"semdup": sem1},
+        ).localCheckpoint(eager=True))
+        lap("wave-1 screen + gate (eager checkpoint)")
+
+        adm1_emb = w1_emb.join(
+            g1.filter(
+                F.col("quality_ok") & F.col("lang_ok") & ~F.col("has_semdup")
+            ).select(F.col("doc_id").alias("vec_id")),
+            on="vec_id",
+        )
+        cells1 = cells0.unionByName(grid_assign_map(adm1_emb, centers.collect()))
+        emb1 = corpus0_emb.unionByName(adm1_emb)
+        sem2 = semi(
+            semantic_screen_events(
+                w2_emb, emb1, n_probe=_SEM_PROBE,
+                threshold=_SEM_THRESHOLD, index=(cells1, centers),
+            ),
+            w2_docs,
+        )
+        g2 = streaming_ingest_gate(
+            w2_docs, None, langs=_GATE_LANGS, screens=(),
+            extra_screens={"semdup": sem2},
         )
 
-    sem1 = semi(
-        semantic_screen_events(
-            w1_emb, corpus0_emb, n_probe=_SEM_PROBE,
-            threshold=_SEM_THRESHOLD, index=(cells0, centers),
-        ),
-        w1_docs,
-    )
-    g1 = streaming_ingest_gate(
-        w1_docs, None, langs=_GATE_LANGS, screens=(),
-        extra_screens={"semdup": sem1},
-    ).localCheckpoint(eager=True)
-    pinned.append(g1)
-    lap("wave-1 screen + gate (eager checkpoint)")
+        def tag(g, wave):
+            return g.select(
+                F.lit(wave).cast("long").alias("wave"), "doc_id",
+                "quality_ok", "lang_ok", "has_semdup",
+                (F.col("quality_ok") & F.col("lang_ok") & ~F.col("has_semdup")).alias("absorbed"),
+            )
 
-    adm1_emb = w1_emb.join(
-        g1.filter(
-            F.col("quality_ok") & F.col("lang_ok") & ~F.col("has_semdup")
-        ).select(F.col("doc_id").alias("vec_id")),
-        on="vec_id",
-    )
-    cells1 = cells0.unionByName(grid_assign_map(adm1_emb, centers.collect()))
-    emb1 = corpus0_emb.unionByName(adm1_emb)
-    sem2 = semi(
-        semantic_screen_events(
-            w2_emb, emb1, n_probe=_SEM_PROBE,
-            threshold=_SEM_THRESHOLD, index=(cells1, centers),
-        ),
-        w2_docs,
-    )
-    g2 = streaming_ingest_gate(
-        w2_docs, None, langs=_GATE_LANGS, screens=(),
-        extra_screens={"semdup": sem2},
-    )
-
-    def tag(g, wave):
-        return g.select(
-            F.lit(wave).cast("long").alias("wave"), "doc_id",
-            "quality_ok", "lang_ok", "has_semdup",
-            (F.col("quality_ok") & F.col("lang_ok") & ~F.col("has_semdup")).alias("absorbed"),
-        )
-
-    out = tag(g1, 1).unionByName(tag(g2, 2)).localCheckpoint(eager=True)
-    lap("wave-2 absorb + screen + gate + final checkpoint")
-    out.write.format("noop").mode("overwrite").save()
-    lap("noop save of checkpointed result")
-    for f in pinned:
-        f.unpersist()
+        out = tag(g1, 1).unionByName(tag(g2, 2)).localCheckpoint(eager=True)
+        lap("wave-2 absorb + screen + gate + final checkpoint")
+        out.write.format("noop").mode("overwrite").save()
+        lap("noop save of checkpointed result")
 
 
 def stream_row(spark, absorb: bool):
@@ -180,6 +180,7 @@ def stream_row(spark, absorb: bool):
     from incubator_flink_old_spark.queries.llm_ops31 import (
         _SEM_CELLS, _SEM_ITERS, _SEM_PROBE, _SEM_THRESHOLD,
     )
+    from incubator_flink_old_spark.session import staged
     from incubator_flink_old_spark.streaming import replay_source
 
     name = "stream_absorb" if absorb else "stream_gate"
@@ -187,8 +188,7 @@ def stream_row(spark, absorb: bool):
     _T0[0] = time.perf_counter()
     docs = t(spark, SF_DIR, "documents")
     emb = t(spark, SF_DIR, "embeddings")
-    pinned, arts = [], []
-    try:
+    with staged() as st:
         if absorb:
             m5d, m5v = F.col("doc_id") % 5, F.col("vec_id") % 5
             w1_docs = docs.filter(m5d == 3).select("doc_id", "text", "lang")
@@ -197,11 +197,12 @@ def stream_row(spark, absorb: bool):
             cells0, centers = grid_ivf(corpus0_emb, n_cells=_SEM_CELLS, iters=_SEM_ITERS)
             centers_rows = centers.collect()
             lap("grid_ivf + centers collect")
-            pinned = [
-                f.persist(StorageLevel.DISK_ONLY)
-                for f in (cells0, centers, corpus0_emb)
-            ]
-            cells0, centers, corpus0_emb = pinned
+            cells0, centers, corpus0_emb = st.keep(
+                *(
+                    f.persist(StorageLevel.DISK_ONLY)
+                    for f in (cells0, centers, corpus0_emb)
+                )
+            )
             sem1 = (
                 semantic_screen_events(
                     w1_emb, corpus0_emb, n_probe=_SEM_PROBE,
@@ -211,27 +212,26 @@ def stream_row(spark, absorb: bool):
                 .join(w1_docs.select(F.col("doc_id").alias("doc_a")),
                       on="doc_a", how="leftsemi")
             )
-            g1 = streaming_ingest_gate(
+            g1 = st.keep(streaming_ingest_gate(
                 w1_docs, None, langs=_GATE_LANGS, screens=(),
                 extra_screens={"semdup": sem1},
-            ).localCheckpoint(eager=True)
-            pinned.append(g1)
+            ).localCheckpoint(eager=True))
             lap("wave-1 gate (eager)")
             adm1_emb = w1_emb.join(
                 g1.filter(F.col("quality_ok") & F.col("lang_ok") & ~F.col("has_semdup"))
                 .select(F.col("doc_id").alias("vec_id")),
                 on="vec_id",
             )
-            cells1 = cells0.unionByName(grid_assign_map(adm1_emb, centers.collect())).persist(StorageLevel.DISK_ONLY)
-            emb1 = corpus0_emb.unionByName(adm1_emb).persist(StorageLevel.DISK_ONLY)
-            pinned += [cells1, emb1]
+            cells1, emb1 = st.keep(
+                cells0.unionByName(grid_assign_map(adm1_emb, centers.collect())).persist(StorageLevel.DISK_ONLY),
+                corpus0_emb.unionByName(adm1_emb).persist(StorageLevel.DISK_ONLY),
+            )
             cells1.count(); emb1.count()
             lap("absorbed artifacts pin (forced)")
             stream_pred, static_cells, static_emb = m5d == 4, cells1, emb1
-            nemb = emb.filter(m5v == 4).select(
+            nemb = st.keep(emb.filter(m5v == 4).select(
                 F.col("vec_id").alias("doc_id"), "embedding"
-            ).persist(StorageLevel.DISK_ONLY)
-            pinned.append(nemb)
+            ).persist(StorageLevel.DISK_ONLY))
             gate_kwargs = dict(screens=())
         else:
             new_d = F.col("doc_id") % _D_MOD == _D_REM
@@ -240,21 +240,20 @@ def stream_row(spark, absorb: bool):
             cells, centers = grid_ivf(corpus_emb, n_cells=_SEM_CELLS, iters=_SEM_ITERS)
             centers_rows = centers.collect()
             lap("grid_ivf + centers collect")
-            cells = cells.persist(StorageLevel.DISK_ONLY)
-            corpus_emb = corpus_emb.persist(StorageLevel.DISK_ONLY)
-            nemb = (
+            cells, corpus_emb, nemb = st.keep(
+                cells.persist(StorageLevel.DISK_ONLY),
+                corpus_emb.persist(StorageLevel.DISK_ONLY),
                 emb.filter(new_v)
                 .select(F.col("vec_id").alias("doc_id"), "embedding")
-                .persist(StorageLevel.DISK_ONLY)
+                .persist(StorageLevel.DISK_ONLY),
             )
-            pinned += [cells, corpus_emb, nemb]
             cells.count(); corpus_emb.count(); nemb.count()
             lap("static artifact pins (forced)")
             stream_pred, static_cells, static_emb = new_d, cells, corpus_emb
             gate_kwargs = dict(
                 num_hashes=_NDS_HASHES, band_size=_NDS_BAND,
                 jaccard_threshold=_NDS_THRESHOLD, screens=("neardup",),
-                materialize_static=True, artifact_registry=arts,
+                stage=st,
             )
 
         corpus_side = None if absorb else docs.filter(F.col("doc_id") % _D_MOD != _D_REM)
@@ -282,9 +281,6 @@ def stream_row(spark, absorb: bool):
         tbl = spark.table(f"probe_{name}").filter(F.col("doc_id") >= 0)
         tbl.write.format("noop").mode("overwrite").save()
         lap("readback + noop")
-    finally:
-        for f in pinned + arts:
-            f.unpersist()
 
 
 def main():
