@@ -137,6 +137,7 @@ def main() -> None:
         timings: dict[str, float] = {}
         engine: dict[str, dict[str, int]] = {}
         floors: list[float | None] = []
+        setups: list[float | None] = []
         for i in range(k):
             with tempfile.NamedTemporaryFile(
                 mode="r", suffix=".json", delete=False
@@ -153,6 +154,7 @@ def main() -> None:
                 timings.update(part["timings"])
                 engine.update(part["engine"])
                 floors.append(part["floor_s"])
+                setups.append(part["setup_s"])
             except Exception as exc:
                 print(f"bench: chunk {i}/{k} unreadable (rc={rc}): {exc}",
                       file=sys.stderr)
@@ -161,12 +163,13 @@ def main() -> None:
                 for name in names[lo:hi]:
                     timings.setdefault(name, -1.0)
                 floors.append(None)
+                setups.append(None)
             finally:
                 try:
                     os.unlink(part_path)
                 except OSError:
                     pass
-        _emit(timings, engine, floors, sf, sf_dir)
+        _emit(timings, engine, floors, setups, sf, sf_dir)
         return
 
     i, k = (int(x) for x in chunk_arg.split(":"))
@@ -180,6 +183,10 @@ def main() -> None:
     from incubator_flink_old_spark import get_spark
 
     spark = get_spark("engine-bench")
+    # The chunk's set-up: process start -> get_spark -> a first action.
+    # Each chunk is a fresh JVM, so every run pays it once per chunk.
+    spark.range(1).write.format("noop").mode("overwrite").save()
+    setup_s = round(_since_process_start(), 4)
 
     # Warm the JVM + file listing once so per-query numbers measure steady
     # state (the driver compares against a steady-state baseline).
@@ -341,14 +348,28 @@ def main() -> None:
             print(f"bench: {name} FAILED: {exc}", file=sys.stderr)
 
     with open(out_path, "w") as f:
-        json.dump({"timings": timings, "engine": engine, "floor_s": floor_s}, f)
+        json.dump(
+            {"timings": timings, "engine": engine, "floor_s": floor_s, "setup_s": setup_s},
+            f,
+        )
     spark.stop()
+
+
+def _since_process_start() -> float:
+    """Seconds since this process was exec'd (clock-tick resolution)."""
+    with open("/proc/uptime") as f:
+        uptime = float(f.read().split()[0])
+    with open("/proc/self/stat") as f:
+        stat = f.read()
+    started = int(stat[stat.rindex(")") + 2 :].split()[19])
+    return uptime - started / os.sysconf("SC_CLK_TCK")
 
 
 def _emit(
     timings: dict[str, float],
     engine: dict[str, dict[str, int]],
     floors: list[float | None],
+    setups: list[float | None],
     sf: float,
     sf_dir: str,
 ) -> None:
@@ -382,6 +403,7 @@ def _emit(
                 "sf_dir": sf_dir,
                 # Per chunk, in chunk order (None: chunk unreadable).
                 "chunk_floor_s": floors,
+                "chunk_setup_s": setups,
                 "engine_metrics": engine,
             },
             f,

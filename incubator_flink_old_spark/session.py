@@ -16,8 +16,14 @@ Scale posture (tested on local[N], designed for a 1000-executor cluster):
 
 from __future__ import annotations
 
+import atexit
 import contextlib
+import glob
+import hashlib
 import os
+import re
+import shutil
+import subprocess
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -70,6 +76,20 @@ def get_spark(app_name: str = "incubator_flink_old_spark") -> SparkSession:
     runs under spark-submit with master/memory provided externally.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    memory = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
+    # The driver JVM maps Spark's classes from a class-data archive
+    # (ClassDataArchive) instead of loading ~16,000 of them from 287 jars.
+    # Set-up is mostly class loading: perfbench `tpch` setup_s read
+    # 8.26 -> 4.10 s with the archive (medians of 10 pairs), and curation
+    # and streaming halve too (PERF.md, "Session start: one class-data
+    # archive"). The first session of a JDK, heap mode and Spark class
+    # path writes the archive when its JVM exits: once per machine it
+    # pays ~+2 s set-up and ~+13 s of wall, most of it the dump. None
+    # when get_spark launches no JVM (one runs already) or cannot use an
+    # archive; the launch is then unchanged.
+    # Like the flags below, a session built outside the engine keeps its
+    # own JVM.
+    archive = ClassDataArchive.for_launch(memory)
     # UI off by default (saves a jetty server + listener overhead in tests);
     # bench sets SPARK_GRAFT_UI=1 to read per-stage engine metrics
     # (executorRunTime, shuffle bytes) back over the UI REST API.
@@ -78,7 +98,7 @@ def get_spark(app_name: str = "incubator_flink_old_spark") -> SparkSession:
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", memory)
         .config("spark.ui.enabled", "true" if ui else "false")
         .config("spark.sql.execution.pyspark.udf.faulthandler.enabled", "true")
         # DataFrame call-site capture off. With it on (PySpark's default),
@@ -155,12 +175,243 @@ def get_spark(app_name: str = "incubator_flink_old_spark") -> SparkSession:
         .config(
             "spark.driver.extraJavaOptions",
             "-XX:ReservedCodeCacheSize=2g -XX:+UseCodeCacheFlushing "
-            "-XX:-DontCompileHugeMethods",
+            "-XX:-DontCompileHugeMethods" + (archive.java_options if archive else ""),
         )
     )
-    spark = builder.getOrCreate()
+    with archive.launching() if archive else contextlib.nullcontext():
+        spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return prep_session(spark, shuffle_partitions=int(cpus))
+
+
+#: Seconds an exiting session waits for its JVM to write the archive
+#: (8-13 s for 136-165 MB measured).
+_DUMP_WAIT_S = 180
+#: CDS warns on stdout: a dump lists the ~500 classes it skips, and a
+#: rejected archive prints a line on every start.
+_CDS_QUIET = "-Xlog:cds=off,cds+dynamic=off"
+#: Set by the environment, these put a directory on the driver's class
+#: path, and JDK 17 neither writes nor maps an archive while a non-empty
+#: directory is on it. SPARK_CONF_DIR set by the user is one of them.
+_CLASS_PATH_VARS = ("SPARK_CONF_DIR", "HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")
+
+
+def cache_dir() -> str:
+    """Where the archive lives: per user and outside the repository. Not
+    under TMPDIR, which perfbench removes after every run."""
+    base = os.environ.get("XDG_CACHE_HOME") or os.path.join(os.path.expanduser("~"), ".cache")
+    return os.path.join(base, "incubator_flink_old_spark")
+
+
+def java_binary() -> str | None:
+    """The java that spark-class runs: $JAVA_HOME/bin/java, else the
+    first on PATH; resolved through its links."""
+    home = os.environ.get("JAVA_HOME")
+    java = os.path.join(home, "bin", "java") if home else shutil.which("java")
+    return os.path.realpath(java) if java and os.path.isfile(java) else None
+
+
+def heap_bytes(memory: str) -> int | None:
+    """A ``spark.driver.memory`` string in bytes (no unit means MiB)."""
+    m = re.fullmatch(r"(\d+)([kmgtp]?)b?", memory.strip().lower())
+    if m is None:
+        return None
+    unit = m.group(2)
+    return int(m.group(1)) << (10 + 10 * "kmgtp".index(unit) if unit else 20)
+
+
+def archive_key(java: str, spark_home: str, memory: str) -> str | None:
+    """The name of the archive for everything the JVM checks when it maps
+    one: the JDK (its binary and base archives), the compressed-oops mode
+    and the Spark jars (name, size, mtime). The JVM checks again and
+    falls back to the base archive on any mismatch."""
+    heap = heap_bytes(memory)
+    if heap is None:
+        return None
+    java_home = os.path.dirname(os.path.dirname(java))
+    digest = hashlib.sha256()
+    for path in [
+        java,
+        *sorted(glob.glob(os.path.join(java_home, "lib", "server", "*.jsa"))),
+        *sorted(glob.glob(os.path.join(spark_home, "jars", "*"))),
+    ]:
+        st = os.stat(path)
+        digest.update(f"{path}\0{st.st_size}\0{st.st_mtime_ns}\n".encode())
+    # Compressed oops are off from a 32 GiB heap (get_spark's default is
+    # 48g). An archive written with them on is refused with them off and
+    # the other way round; 2g and 8g heaps share one.
+    mode = "coops" if heap < 32 << 30 else "nocoops"
+    return f"{digest.hexdigest()[:16]}-{mode}"
+
+
+def _remove(path: str) -> None:
+    with contextlib.suppress(OSError):
+        os.remove(path)
+
+
+def _alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        pass
+    return True
+
+
+class ClassDataArchive:
+    """The JDK 17 dynamic AppCDS archive of the driver JVM that
+    :func:`get_spark` launches, one per :func:`archive_key` in
+    :func:`cache_dir`.
+
+    If the archive exists, the JVM maps it (``-XX:SharedArchiveFile``).
+    Otherwise the JVM writes ``<key>.<pid>.tmp`` when it exits
+    (``-XX:ArchiveClassesAtExit``), and at interpreter exit
+    :meth:`promote` renames the file to the archive, but only if the
+    JVM exited 0 and a JVM maps the file with ``-Xshare:on``. A JVM killed
+    mid-write leaves a truncated file, and mapping one crashes the JVM.
+
+    spark-class puts ``$SPARK_CONF_DIR`` (default ``$SPARK_HOME/conf``)
+    first on the class path. When that directory holds only
+    ``*.template`` files, spark-submit and log4j read nothing from it, so
+    the launch points ``SPARK_CONF_DIR`` at an empty directory of the
+    cache instead; the variable is set only while ``getOrCreate`` runs.
+    """
+
+    def __init__(self, cache: str, key: str, java: str, memory: str):
+        self.cache = cache
+        self.key = key
+        self.java = java
+        self.memory = memory
+        self.path = os.path.join(cache, f"{key}.jsa")
+        self.conf_dir = os.path.join(cache, "empty-conf")
+        #: The file the JVM writes at exit; None when it maps ``path``.
+        self.tmp: str | None = None
+
+    @classmethod
+    def for_launch(cls, memory: str) -> ClassDataArchive | None:
+        """The archive of the JVM that ``getOrCreate`` is about to launch,
+        or None to launch as without one: no JVM is launched (a gateway
+        exists, or ``PYSPARK_GATEWAY_PORT`` names one), the class path
+        would hold a directory with files in it, there is no java, or the
+        cache cannot be written. Creates the temp file when the archive
+        does not exist yet and deletes the temp files of dead processes."""
+        from pyspark import SparkContext
+        from pyspark.find_spark_home import _find_spark_home
+
+        if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
+            return None
+        if any(os.environ.get(var) for var in _CLASS_PATH_VARS):
+            return None
+        spark_home = _find_spark_home()
+        java = java_binary()
+        try:
+            conf = os.path.join(spark_home, "conf")
+            if os.path.isdir(conf) and not all(n.endswith(".template") for n in os.listdir(conf)):
+                return None
+            key = archive_key(java, spark_home, memory) if java else None
+            if key is None:
+                return None
+            archive = cls(cache_dir(), key, java, memory)
+            os.makedirs(archive.conf_dir, exist_ok=True)
+            if os.listdir(archive.conf_dir):
+                return None
+            for name in os.listdir(archive.cache):
+                parts = name.split(".")
+                if len(parts) == 3 and parts[2] == "tmp" and parts[1].isdigit() and not _alive(int(parts[1])):
+                    _remove(os.path.join(archive.cache, name))
+            if not os.path.isfile(archive.path):
+                archive.tmp = os.path.join(archive.cache, f"{key}.{os.getpid()}.tmp")
+                open(archive.tmp, "wb").close()
+        except OSError:
+            return None
+        return archive
+
+    @property
+    def java_options(self) -> str:
+        """The driver JVM flags, each with a leading space."""
+        if self.tmp:
+            return f" -XX:ArchiveClassesAtExit={self.tmp} {_CDS_QUIET}"
+        return f" -XX:SharedArchiveFile={self.path} {_CDS_QUIET}"
+
+    @contextlib.contextmanager
+    def launching(self):
+        """Scope of the ``getOrCreate`` that launches the JVM: pyspark
+        copies ``os.environ`` into it. A JVM that writes the archive gets
+        :meth:`promote` registered for interpreter exit."""
+        os.environ["SPARK_CONF_DIR"] = self.conf_dir
+        try:
+            yield
+        except BaseException:
+            if self.tmp:
+                _remove(self.tmp)
+            raise
+        finally:
+            del os.environ["SPARK_CONF_DIR"]
+        if self.tmp:
+            from pyspark import SparkContext
+
+            gateway = SparkContext._gateway
+            class_path = gateway.jvm.java.lang.System.getProperty("java.class.path")
+            atexit.register(self.promote, gateway.proc, class_path)
+
+    def promote(self, proc, class_path: str) -> bool:
+        """Let the JVM exit and write the temp file; make it the archive
+        if the JVM exited 0 and :meth:`maps` it, delete it otherwise. A
+        JVM still writing after ``_DUMP_WAIT_S`` leaves its file to a
+        later session, which deletes it. Also deletes the archives of
+        other JDKs and jar sets. Returns whether the file was promoted."""
+        from pyspark import SparkContext
+
+        try:
+            if proc.poll() is None:
+                # A context left running would see its JVM go: pyspark's
+                # accumulator server prints the EOF as an error.
+                if SparkContext._active_spark_context is not None:
+                    SparkContext._active_spark_context.stop()
+                proc.stdin.close()
+                proc.wait(timeout=_DUMP_WAIT_S)
+        except subprocess.TimeoutExpired:
+            return False
+        if proc.returncode != 0 or not self.maps(self.tmp, class_path):
+            _remove(self.tmp)
+            return False
+        try:
+            os.replace(self.tmp, self.path)
+            install = self.key.rsplit("-", 1)[0]
+            for name in os.listdir(self.cache):
+                if name.endswith(".jsa") and not name.startswith(f"{install}-"):
+                    _remove(os.path.join(self.cache, name))
+        except OSError:
+            return False
+        return True
+
+    def maps(self, path: str, class_path: str) -> bool:
+        """Whether a JVM of this heap mode starts with ``path`` mapped
+        (``-Xshare:on`` fails instead of falling back). A truncated file
+        crashes it; the crash report goes nowhere."""
+        cmd = [
+            self.java,
+            f"-Xmx{heap_bytes(self.memory) >> 20}m",
+            "-Xshare:on",
+            f"-XX:SharedArchiveFile={path}",
+            "-XX:ErrorFile=/dev/null",
+            "-XX:-CreateCoredumpOnCrash",
+            "-cp",
+            class_path,
+            "-version",
+        ]
+        try:
+            done = subprocess.run(
+                cmd,
+                stdin=subprocess.DEVNULL,
+                stdout=subprocess.DEVNULL,
+                stderr=subprocess.DEVNULL,
+                timeout=120,
+            )
+        except (OSError, subprocess.TimeoutExpired):
+            return False
+        return done.returncode == 0
 
 
 def release(df: DataFrame) -> None:

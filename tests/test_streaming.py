@@ -391,34 +391,70 @@ def test_idempotent_sink_drives_a_real_stream(spark, sf_dir, tmp_path, events_st
     assert read_committed(spark, out).count() == want
 
 
-def test_replay_row_leaves_no_temp_dir_or_view(spark, sf_dir):
+def test_replay_row_leaves_no_temp_dir_or_view(sf_dir, tmp_path):
     """Memory-sink rows clean up after themselves: two runs each of
     q_stream_hh_parity, q_statestore_read and q_stream_restart_recovery
     add no entry under the temp dir (the replay source and checkpoint
     dirs are removed) and no catalog view (the memory sinks' views are
     dropped), and each result still collects. A first run goes before
     the snapshot: the JVM unpacks its native libraries and creates its
-    session-wide temp dirs under the same temp dir on first use."""
+    session-wide temp dirs under the same temp dir on first use. The
+    session runs in a subprocess with a private temp dir (TMPDIR,
+    java.io.tmpdir and SPARK_LOCAL_DIRS, as perfbench isolates a run), so
+    another process's replay or memory-sink stream cannot show up in it."""
+    import json
     import os
-    import tempfile
+    import subprocess
+    import sys
 
-    from incubator_flink_old_spark.queries import QUERIES, load_all_queries
+    script = f"""
+import json, os, tempfile
+from incubator_flink_old_spark import get_spark
+from incubator_flink_old_spark.queries import QUERIES, load_all_queries
 
-    rows = (
-        "q_stream_hh_parity",
-        "q_statestore_read",
-        "q_stream_restart_recovery",
+rows = ("q_stream_hh_parity", "q_statestore_read", "q_stream_restart_recovery")
+load_all_queries()
+spark = get_spark("replay-cleanup")
+QUERIES["q_stream_hh_parity"](spark, {sf_dir!r}).count()
+tmp = tempfile.gettempdir()
+dirs = set(os.listdir(tmp))
+views = {{t.name for t in spark.catalog.listTables()}}
+counts = []
+for _ in range(2):
+    for name in rows:
+        counts.append((name, QUERIES[name](spark, {sf_dir!r}).count()))
+print(json.dumps({{
+    "tmp": tmp,
+    "added": sorted(set(os.listdir(tmp)) - dirs),
+    "left": sorted(os.listdir(tmp)),
+    "views": sorted({{t.name for t in spark.catalog.listTables()}} - views),
+    "counts": counts,
+}}))
+"""
+    tmp, local = tmp_path / "tmp", tmp_path / "local"
+    tmp.mkdir()
+    local.mkdir()
+    java_opts = os.environ.get("JAVA_TOOL_OPTIONS", "")
+    env = dict(
+        os.environ,
+        TMPDIR=str(tmp),
+        SPARK_LOCAL_DIRS=str(local),
+        JAVA_TOOL_OPTIONS=f"{java_opts} -Djava.io.tmpdir={tmp}".strip(),
+        SPARK_GRAFT_CPUS="2",
+        SPARK_GRAFT_DRIVER_MEM="1g",
     )
-    load_all_queries()
-    QUERIES["q_stream_hh_parity"](spark, sf_dir).count()
-    tmp = tempfile.gettempdir()
-    dirs = set(os.listdir(tmp))
-    views = {t.name for t in spark.catalog.listTables()}
-    for _ in range(2):
-        for name in rows:
-            assert QUERIES[name](spark, sf_dir).count() > 0, name
-    assert set(os.listdir(tmp)) - dirs == set()
-    assert {t.name for t in spark.catalog.listTables()} - views == set()
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    run = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=root, env=env, capture_output=True, text=True, timeout=900,
+    )
+    assert run.returncode == 0, run.stderr[-2000:]
+    out = json.loads(run.stdout.strip().splitlines()[-1])
+    assert out["tmp"] == str(tmp)
+    assert all(n > 0 for _, n in out["counts"]), out["counts"]
+    assert out["added"] == []
+    assert not [e for e in out["left"] if e.startswith(("stream_replay_", "temporary-"))]
+    assert out["views"] == []
 
 
 def test_replay_source_cleans_up_when_the_stream_fails(spark):
